@@ -435,7 +435,9 @@ def _svm_declared_sql(epochs: int = EPOCHS, lam: float = LAMBDA) -> str:
     """Unrolled 5-epoch SQL mirror of ``svm.svm_train_declared`` (M4):
     each epoch's margin/violation/gradient/decay CTEs chained on the
     previous epoch's weights. Margins rounded at 9 dp before the hinge
-    test on both engines (``svm.MARGIN_DP``)."""
+    test on both engines (``svm.MARGIN_DP``). The margin CTEs group by
+    ``doc_id``, so the mirror assumes unique ids; the operator treats
+    every row as its own sample."""
     def r9(e: str) -> str:
         return f"floor(({e}) * 1000000000.0 + 0.5) / 1000000000.0"
 

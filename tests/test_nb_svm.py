@@ -135,6 +135,45 @@ def test_svm_declared_fallback_no_driver_collect(train_df, monkeypatch):
         assert math.isclose(fallback[k], literal[k], rel_tol=1e-9, abs_tol=1e-12)
 
 
+def _svm_both_paths(docs, epochs=5):
+    literal = {r["word"]: r["weight"]
+               for r in SVM.svm_train_declared(docs, epochs=epochs).collect()}
+    fallback = {r["word"]: r["weight"] for r in SVM.svm_train_declared(
+        docs, epochs=epochs, literal_map_max=0).collect()}
+    return literal, fallback
+
+
+def _assert_paths_agree(literal, fallback):
+    assert fallback.keys() == literal.keys()
+    for k in literal:
+        assert math.isclose(fallback[k], literal[k], rel_tol=1e-9, abs_tol=1e-12), k
+
+
+def test_svm_declared_fallback_keeps_duplicate_ids_apart(spark):
+    """Two rows sharing a doc id are two samples on BOTH paths: the
+    fallback must not merge them into one sample with one label."""
+    docs = spark.createDataFrame(
+        [("1", 1, "good fun day"), ("1", 0, "bad sad day"),
+         ("2", 1, "good happy"), ("3", 0, "bad awful"),
+         ("4", 1, "fun times"), ("5", 0, "sad day")],
+        "doc_id string, label int, text string")
+    _assert_paths_agree(*_svm_both_paths(docs))
+
+
+def test_svm_declared_literal_map_escapes_tokens(spark):
+    """Tokens with quotes and backslashes survive the SQL-text weight
+    map unchanged: the literal path agrees with the fallback."""
+    docs = spark.createDataFrame(
+        [(1, "it's good", 1.0), (2, "c:\\dir good\\", 1.0),
+         (3, "don't \\' sad", 0.0), (4, "it's bad\\n", 0.0),
+         (5, "'' good fun", 1.0), (6, "bad \\\\ fun", 0.0)],
+        "doc_id long, text string, label double")
+    literal, fallback = _svm_both_paths(docs)
+    assert {"it's", "c:\\dir", "good\\", "\\'", "bad\\n", "''",
+            "\\\\"} <= literal.keys()
+    _assert_paths_agree(literal, fallback)
+
+
 def test_confusion_and_binary_metrics(spark):
     preds = spark.createDataFrame(
         [(1.0, 1.0)] * 3 + [(1.0, 0.0)] * 1 + [(0.0, 0.0)] * 4 + [(0.0, 1.0)] * 2,

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprtext import str_double_map_lit
 from ..functions.rounding import pround
 from ..functions.tokenize import explode_tokens, tokens_array
 
@@ -94,8 +95,8 @@ def svm_score(docs: DataFrame, weights: DataFrame, id_col: str = "doc_id",
     )
 
 
-def svm_train_declared(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", label_col: str = "label",
+def svm_train_declared(docs: DataFrame, text_col: str = "text",
+                       label_col: str = "label",
                        epochs: int = EPOCHS, lr: float = LR,
                        lam: float = LAMBDA,
                        literal_map_max: int = 4096) -> DataFrame:
@@ -112,8 +113,9 @@ def svm_train_declared(docs: DataFrame, id_col: str = "doc_id",
     first epoch (the epoch-1 gradient IS the vocabulary):
 
     - **Literal-map path** (vocab ≤ ``literal_map_max``): the weights
-      ride into each epoch as a plan-time ``create_map`` literal (the
-      same pattern as the IVF/PQ codebooks), so the margin is a
+      ride into each epoch as a plan-time ``map(...)`` literal built as
+      SQL text (``functions.exprtext``, the same pattern as the IVF/PQ
+      codebooks — one py4j call instead of 2·V), so the margin is a
       partition-local ``F.aggregate`` over each doc's cached token
       array — ZERO doc-side exchanges. The only shuffle per epoch is
       the word-grouped gradient aggregation over violating docs, with
@@ -121,7 +123,9 @@ def svm_train_declared(docs: DataFrame, id_col: str = "doc_id",
       count V; its vocabulary-sized result round-trips the driver
       (same class of tiny collect as the k-means/PQ codebooks).
     - **Distributed fallback** (large vocab): margin via broadcast
-      join + per-doc aggregation that carries the token list along,
+      join + per-row aggregation (keyed on a row id stored in the
+      cached frame, so rows sharing a doc id stay separate samples,
+      as on the literal path) that carries the token list along,
       so violating docs re-emit tokens via explode instead of a
       second corpus scan — two exchanges per epoch (doc, word), all
       models stay DataFrames, nothing driver-sized.
@@ -138,12 +142,15 @@ def svm_train_declared(docs: DataFrame, id_col: str = "doc_id",
 
     spark = docs.sparkSession
     y_expr = F.when(F.col(label_col) == 1.0, F.lit(1.0)).otherwise(F.lit(-1.0))
-    # doc-level token arrays, cached once: both the partition-local
+    # row-level token arrays, cached once: both the partition-local
     # margin and the gradient explode read this frame; the empty-text
-    # filter replicates explode_tokens' P5 guard.
+    # filter replicates explode_tokens' P5 guard. ``_rid`` is the
+    # fallback's sample key; each epoch's plan scans this frame once,
+    # so the ids only need to be unique within one scan.
     base = (
         docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(id_col, y_expr.alias("_y"),
+        .select(F.monotonically_increasing_id().alias("_rid"),
+                y_expr.alias("_y"),
                 tokens_array(F.col(text_col)).alias("_words"))
         .cache()
     )
@@ -168,13 +175,12 @@ def svm_train_declared(docs: DataFrame, id_col: str = "doc_id",
         weights = {r["word"]: r["weight"] for r in w1.collect()}
         for epoch in range(2, epochs + 1):
             eta = epoch_lr(epoch)
-            wmap = F.create_map(
-                *[F.lit(x) for kv in sorted(weights.items()) for x in kv])
             # try_element_at: missing token → NULL → 0 (ANSI-safe;
             # plain element_at raises under Spark 4's default ANSI mode)
-            dot = F.aggregate(F.col("_words"), F.lit(0.0),
-                              lambda acc, tok: acc
-                              + F.coalesce(F.try_element_at(wmap, tok), F.lit(0.0)))
+            dot = F.expr(
+                "aggregate(_words, 0.0D, (acc, tok) -> acc + coalesce("
+                f"try_element_at({str_double_map_lit(sorted(weights.items()))}, tok), "
+                "0.0D))")
             fused = (
                 base.filter((F.col("_y") * pround(dot, MARGIN_DP)) < 1.0)
                 .select("_y", F.explode(
@@ -204,14 +210,14 @@ def svm_train_declared(docs: DataFrame, id_col: str = "doc_id",
                           T.StructField("weight", T.DoubleType())]))
 
     # ---- distributed fallback: vocabulary too large for a plan literal
-    tokens = base.select(id_col, "_y", F.explode("_words").alias("word"))
+    tokens = base.select("_rid", "_y", F.explode("_words").alias("word"))
     weights_df = w1.localCheckpoint(eager=True)
     for epoch in range(2, epochs + 1):
         eta = epoch_lr(epoch)
         w = F.broadcast(weights_df)
         viol_tokens = (
             tokens.join(w, "word", "left")
-            .groupBy(id_col)
+            .groupBy("_rid")
             .agg(F.sum(F.coalesce(F.col("weight"), F.lit(0.0))).alias("_dot"),
                  F.first("_y").alias("_y"),
                  F.collect_list("word").alias("_words"))

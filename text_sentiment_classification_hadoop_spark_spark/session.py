@@ -16,6 +16,7 @@ chosen to also be the right default on a 1000-executor cluster reading
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -160,7 +161,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session. Honors ``SPARK_GRAFT_CPUS``."""
+    """Build (or fetch) the session. Honors ``SPARK_GRAFT_CPUS``.
+
+    Conf precedence, lowest first: the fixed confs below, then
+    ``extra_conf``, then ``SPARK_GRAFT_EXTRA_CONF`` (the env hook
+    overrides an explicit ``extra_conf`` key). All of them take full
+    effect only when this call starts the JVM. If a session is already
+    live, ``getOrCreate`` returns it and re-applies only the
+    runtime-modifiable SQL confs; static ones — the codegen cache size,
+    ``spark.driver.memory``, event-log settings, any static key in
+    ``extra_conf``/``SPARK_GRAFT_EXTRA_CONF`` — are dropped, and a
+    warning lists the requested extra keys that did not take effect.
+    """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
@@ -181,10 +193,18 @@ def get_spark(
         # events table) unless they are surfaced as raw longs; the
         # events loader converts ns-longs back to timestamps.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # The generated-class cache is one size-bounded LRU per JVM, and
+        # Spark's default holds 100 classes. One tweets pipeline pass
+        # (nb-compat + svm-strict) generates ~126 distinct classes and
+        # the 18-query perfbench registry pass ~360, so with 100 slots a
+        # repeated pass evicts each class before its reuse: a warm tweets
+        # pass recompiled ~118 classes and the JIT re-profiled each new
+        # one. With 2000 slots it compiles 6 (NB's corpus-specific
+        # literals), and its CPU fell from 6.8 to 5.2 s (local[2], 4-core
+        # VM). Static conf: read once per JVM, executors included.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            b = b.config(k, v)
+    requested = dict(extra_conf or {})
     # scale/deployment-dependent conf overrides WITHOUT code edits
     # (guide §9 experiments stay parameterized: local defaults above
     # are the measured-best for the driver's local[N] bench; cluster
@@ -193,8 +213,19 @@ def get_spark(
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for kv in filter(None, env_conf.split(";")):
         k, _, v = kv.partition("=")
-        b = b.config(k.strip(), v.strip())
+        requested[k.strip()] = v.strip()
+    for k, v in requested.items():
+        b = b.config(k, v)
+    live = SparkSession._instantiatedSession
+    was_live = live is not None and live._sc._jsc is not None
     spark = b.getOrCreate()
+    if was_live and requested:
+        dropped = sorted(k for k, v in requested.items()
+                         if spark.conf.get(k, None) != v)
+        if dropped:
+            logging.getLogger(__name__).warning(
+                "get_spark: a session was already active, so these "
+                "requested confs did not take effect: %s", ", ".join(dropped))
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -5,7 +5,10 @@ wall-clock per stage, summed task time, input/shuffle-read/shuffle-write
 bytes and records, and the first line of the stage's callsite — so the
 "where does the time go" question is answered from Spark's own metrics
 (the UI is disabled in this sandbox; the event log carries the same
-numbers).
+numbers). Around the query runs it also reads the JVM's per-thread CPU
+from ``/proc/<jvm pid>/task/*/stat`` and prints it per thread group —
+C2 and C1 JIT compilers, GC, executor task threads, other — next to the
+codegen line, so JIT cost shows without a re-run.
 
 Usage:
     python tools/profile_query.py <query> [--sf DIR] [--noop] [--repeat N]
@@ -26,6 +29,44 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+CLK_TCK = os.sysconf("SC_CLK_TCK")
+# JVM thread groups by thread-name prefix (/proc keeps 15 characters)
+THREAD_GROUPS = (("C2", ("C2 CompilerThre",)), ("C1", ("C1 CompilerThre",)),
+                 ("GC", ("GC Thread", "G1 ")), ("task", ("Executor task l",)))
+
+
+def _cpu_ticks(stat_path: str) -> tuple[str, int]:
+    """(name, user + system ticks) from a /proc stat file."""
+    with open(stat_path) as f:
+        raw = f.read()
+    rest = raw.rsplit(")", 1)[1].split()
+    return raw[raw.index("(") + 1:raw.rindex(")")], int(rest[11]) + int(rest[12])
+
+
+def jvm_thread_ticks(pid: int) -> tuple[int, dict[int, tuple[str, int]]]:
+    """(process CPU ticks, {tid: (thread name, CPU ticks)}) of the JVM."""
+    threads = {}
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            threads[int(tid)] = _cpu_ticks(f"/proc/{pid}/task/{tid}/stat")
+        except OSError:
+            pass  # the thread ended while we looked
+    return _cpu_ticks(f"/proc/{pid}/stat")[1], threads
+
+
+def thread_group_cpu_s(before, after) -> dict[str, float]:
+    """CPU seconds per thread group between two :func:`jvm_thread_ticks`
+    snapshots. ``other`` is the process's CPU minus the named groups, so
+    it also holds the CPU of threads that ended in between."""
+    groups = {g: 0 for g, _ in THREAD_GROUPS}
+    for tid, (name, ticks) in after[1].items():
+        for g, prefixes in THREAD_GROUPS:
+            if name.startswith(prefixes):
+                groups[g] += ticks - before[1].get(tid, ("", 0))[1]
+                break
+    groups["other"] = after[0] - before[0] - sum(groups.values())
+    return {g: t / CLK_TCK for g, t in groups.items()}
 
 
 def main() -> int:
@@ -56,6 +97,8 @@ def main() -> int:
     local_frame(spark, [(0, "w")], "i int, s string").count()
 
     fn = entry.queries()[args.query]
+    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    ticks0 = jvm_thread_ticks(jvm_pid)
     walls = []
     for i in range(args.repeat):
         spark.sparkContext.setJobDescription(f"{args.query} run{i}")
@@ -68,6 +111,10 @@ def main() -> int:
             rows = df.count()
         walls.append(time.perf_counter() - t0)
         spark.sparkContext.setJobDescription(None)
+    cpu = thread_group_cpu_s(ticks0, jvm_thread_ticks(jvm_pid))
+    jvm_cpu = ("jvm cpu over the query runs: "
+               + ", ".join(f"{g} {s:.2f}s" for g, s in cpu.items())
+               + f" (total {sum(cpu.values()):.2f}s)")
     app_id = spark.sparkContext.applicationId
     # janino compile cost for the whole app (warmup + query): if this
     # rivals the query wall, fresh-JVM medians are codegen-bound, not
@@ -162,6 +209,7 @@ def main() -> int:
     print(f"stages={len(stages)} sum(stage wall)={total_wall:.2f}s "
           f"sum(task time)={total_task:.2f}s")
     print(codegen)
+    print(jvm_cpu)
     hdr = (f"{'stg':>4} {'job':>4} {'wall_s':>7} {'task_s':>7} {'tasks':>5} "
            f"{'in_mb':>8} {'sr_mb':>8} {'sw_mb':>8} {'sw_rec':>9} "
            f"{'gc_s':>5} name")
