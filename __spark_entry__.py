@@ -57,9 +57,11 @@ from text_sentiment_classification_hadoop_spark_spark.operators import (
 from text_sentiment_classification_hadoop_spark_spark.operators.svm import (
     EPOCHS,
     LAMBDA,
+    LR,
     epoch_lr,
 )
-from text_sentiment_classification_hadoop_spark_spark.sources.tables import load_table
+from text_sentiment_classification_hadoop_spark_spark.reuse import reused
+from text_sentiment_classification_hadoop_spark_spark.sources.tables import load_table, table_path
 from text_sentiment_classification_hadoop_spark_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
@@ -1278,18 +1280,14 @@ def _augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionAll(near)
 
 
-# three dedup queries (signature dump, LSH pairs, verified jaccard)
-# consume the identical signature table over the augmented corpus —
-# memoize one localCheckpoint per (application, sf_dir)
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _aug_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIG_CACHE:
-        _SIG_CACHE[key] = D.minhash_signatures(
-            _augmented_docs(spark, sf_dir)).localCheckpoint(eager=False)
-    return _SIG_CACHE[key]
+    """MinHash signatures over the augmented corpus, one lazy
+    localCheckpoint per session: three dedup queries (signature dump,
+    LSH pairs, verified jaccard) consume the same table."""
+    return S.documents_reused(
+        spark, sf_dir, "minhash_signatures",
+        lambda: D.minhash_signatures(
+            _augmented_docs(spark, sf_dir)).localCheckpoint(eager=False))
 
 
 def _minhash_long(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1617,8 +1615,7 @@ def _pack_sequences_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seq_id, offset) order — pytest-pinned)."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
     docs = load_table(spark, "documents", sf_dir)
-    merges = [p for p, _ in BPE.bpe_train(BPE.word_freqs(docs), BPE_MERGES)]
-    budgets = BPE.bpe_doc_token_counts(docs, merges)
+    budgets = BPE.bpe_doc_token_counts(docs, _bpe_merge_pairs(spark, sf_dir))
     return TA.pack_sequences_ffd(
         budgets, budget=PACK_FFD_BUDGET,
         docs_per_bucket=PACK_FFD_DOCS_PER_BUCKET,
@@ -2013,41 +2010,24 @@ def _salted_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("c_mktsegment"))
 
 
-_COPURCHASE_REL_CACHE: dict = {}
-
-
 def _copurchase_rel(spark: SparkSession, sf_dir: str):
     """The orders×lineitem co-purchase relation ``(cust, supp, w)``,
-    materialized ONCE per (session, sf_dir) and shared by the four
-    graph queries (components / BFS / PageRank ×2) — each used to
+    materialized ONCE per session and shared by the graph queries
+    (components / BFS / PageRank ×2 / co-occurrence) — each used to
     rebuild the same self-join from scratch (~20 s of the registry
-    bench recomputing one frame four times; VERDICT r6 ask #2). The
-    cache is keyed on applicationId so a localCheckpoint never leaks
-    across sessions, and every query stays independently callable:
-    a cold cache just computes the frame exactly as before, so
-    results (and hashes) are unchanged. BOUNDED: one entry per app —
-    switching sf_dir frees the previous entry's checkpoint blocks via
-    the JVM-side RDD handle (``queryExecution().logical().rdd()`` —
-    the Python-side ``df.rdd`` is a derived wrapper whose unpersist
-    would be a no-op), with dereference + ContextCleaner GC as the
-    fallback, so a long-lived session iterating many sf dirs never
-    accumulates unreleased storage."""
+    bench recomputing one frame four times; VERDICT r6 ask #2). Every
+    query stays independently callable: a cold context computes the
+    frame exactly as before, so results (and hashes) are unchanged;
+    eviction frees the checkpoint blocks (``reuse.py``)."""
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    rel = _COPURCHASE_REL_CACHE.get(key)
-    if rel is None:
-        for stale_key in [k for k in _COPURCHASE_REL_CACHE if k[0] == app]:
-            stale = _COPURCHASE_REL_CACHE.pop(stale_key)
-            try:
-                stale._jdf.queryExecution().logical().rdd().unpersist(False)
-            except Exception:
-                pass  # dropped reference still frees via ContextCleaner
+
+    def build():
         orders = load_table(spark, "orders", sf_dir)
         li = load_table(spark, "lineitem", sf_dir)
-        rel = G.copurchase_rel(orders, li).localCheckpoint(eager=True)
-        _COPURCHASE_REL_CACHE[key] = rel
-    return rel
+        return G.copurchase_rel(orders, li).localCheckpoint(eager=True)
+    return reused(spark, "copurchase_rel",
+                  [table_path("orders", sf_dir), table_path("lineitem", sf_dir)],
+                  (), build)
 
 
 def _copurchase_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2153,10 +2133,11 @@ def _copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct over 2×|rel| rows (1.17M at sf0.1, profiled as 2 of the
     # query's hottest stages). The relation is pair-DISTINCT by
     # construction (it is a (cust, supp) groupBy output) and already
-    # oriented id_a < id_b (supplier ids ride the disjoint
-    # SUPP_OFFSET id space above every customer id — the documented
-    # graph-module invariant), and connected_components symmetrizes
-    # internally, so the pair SET the CC loop sees is identical.
+    # oriented id_a < id_b: supplier ids ride the SUPP_OFFSET id space
+    # above every customer id. That holds while o_custkey < SUPP_OFFSET
+    # (TPC-H SF <= ~6); copurchase_rel fails the query above it. And
+    # connected_components symmetrizes internally, so the pair SET the
+    # CC loop sees is identical.
     # local[32] tuning only: ~16k nodes, so per-round task latency
     # dominates — 8 partitions, not 32
     return D.connected_components(pairs, algorithm="alternating",
@@ -2238,6 +2219,19 @@ def _sequential_patterns3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return EV.sequential_patterns3(spark, sf_dir, k=20)
 
 
+def _unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unigram-LM vocab at the module defaults, trained once per
+    session: ``unigram_lm_vocab`` returns it and
+    ``unigram_token_counts`` applies it."""
+    from text_sentiment_classification_hadoop_spark_spark.operators import unigram as UG
+    params = (UG.MAX_PIECE_LEN, UG.MAX_WORD_LEN, UG.SEED_MULTI,
+              UG.VOCAB_MULTI, UG.EM_ITERS)
+    return S.documents_reused(
+        spark, sf_dir, "unigram_vocab",
+        lambda: UG.unigram_train_df(load_table(spark, "documents", sf_dir)),
+        params)
+
+
 def _unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM (SentencePiece-style) tokenizer vocab learned over
     the documents corpus — hard-EM over a substring candidate lattice
@@ -2245,9 +2239,7 @@ def _unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling, Kudo 2018). Oracle: ``_unigram_lm_sql`` unrolls the
     forward/backward segmentation DP per character position and both
     EM iterations in pure SQL."""
-    from text_sentiment_classification_hadoop_spark_spark.operators import unigram as UG
-    docs = load_table(spark, "documents", sf_dir)
-    return UG.unigram_train_df(docs)
+    return _unigram_vocab(spark, sf_dir)
 
 
 def _unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2262,7 +2254,26 @@ def _unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-lexicographic forward DP per character position."""
     from text_sentiment_classification_hadoop_spark_spark.operators import unigram as UG
     docs = load_table(spark, "documents", sf_dir)
-    return UG.unigram_token_counts(docs, UG.unigram_train_df(docs))
+    return UG.unigram_token_counts(docs, _unigram_vocab(spark, sf_dir))
+
+
+def _bpe_trained(spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES,
+                 batch_k: int = 1, headroom: int = 4) -> list[tuple[str, int]]:
+    """``bpe_train``'s ``[(pair, freq), ...]`` over the documents
+    corpus, trained once per session for each parameter set: seven
+    registry queries apply the default 8-merge list."""
+    from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
+    return S.documents_reused(
+        spark, sf_dir, "bpe_merges",
+        lambda: BPE.bpe_train(
+            BPE.word_freqs(load_table(spark, "documents", sf_dir)),
+            n_merges, batch_k=batch_k, headroom=headroom),
+        (n_merges, batch_k, headroom))
+
+
+def _bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> list[str]:
+    """The default merge list's pairs, in merge order."""
+    return [p for p, _ in _bpe_trained(spark, sf_dir)]
 
 
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2270,8 +2281,7 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed-tokenizer-training artifact. Oracle: the unrolled CTE
     chain ``_bpe_merges_sql`` (pure BIGINT + replace semantics)."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
-    docs = load_table(spark, "documents", sf_dir)
-    return BPE.bpe_merges_df(docs, n_merges=BPE_MERGES)
+    return BPE.merges_frame(spark, _bpe_trained(spark, sf_dir)).orderBy("merge_rank")
 
 
 def _bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2283,8 +2293,8 @@ def _bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: ``_bpe_merges_batched_sql`` re-derives the greedy
     selection as a per-round recursive CTE."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
-    docs = load_table(spark, "documents", sf_dir)
-    return BPE.bpe_merges_df(docs, n_merges=BPE_MERGES, batch_k=BPE_BATCH_K)
+    return BPE.merges_frame(spark, _bpe_trained(
+        spark, sf_dir, BPE_MERGES, batch_k=BPE_BATCH_K)).orderBy("merge_rank")
 
 
 def _bpe_merges_headroom16(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2306,10 +2316,9 @@ def _bpe_merges_headroom16(spark: SparkSession, sf_dir: str) -> DataFrame:
     headroom=16)`` — the same recursive-CTE greedy selection with the
     candidate LIMIT parameterized identically."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
-    docs = load_table(spark, "documents", sf_dir)
-    return BPE.bpe_merges_df(docs, n_merges=BPE_H16_MERGES,
-                             batch_k=BPE_H16_BATCH_K,
-                             headroom=BPE_H16_HEADROOM)
+    return BPE.merges_frame(spark, _bpe_trained(
+        spark, sf_dir, BPE_H16_MERGES, batch_k=BPE_H16_BATCH_K,
+        headroom=BPE_H16_HEADROOM)).orderBy("merge_rank")
 
 
 def _bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2317,24 +2326,24 @@ def _bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     after BPE_MERGES learned merges."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
     docs = load_table(spark, "documents", sf_dir)
-    merges = [p for p, _ in BPE.bpe_train(BPE.word_freqs(docs), BPE_MERGES)]
-    return BPE.bpe_segment_counts(docs, merges).orderBy("token")
+    return BPE.bpe_segment_counts(
+        docs, _bpe_merge_pairs(spark, sf_dir)).orderBy("token")
 
 
 def _bpe_vocab_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 coverage curve of the learned subword vocabulary."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
     docs = load_table(spark, "documents", sf_dir)
-    merges = [p for p, _ in BPE.bpe_train(BPE.word_freqs(docs), BPE_MERGES)]
-    return BPE.vocab_coverage_curve(docs, merges, top=20)
+    return BPE.vocab_coverage_curve(docs, _bpe_merge_pairs(spark, sf_dir),
+                                    top=20)
 
 
 def _bpe_doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document subword token budget under the learned merges."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
     docs = load_table(spark, "documents", sf_dir)
-    merges = [p for p, _ in BPE.bpe_train(BPE.word_freqs(docs), BPE_MERGES)]
-    return BPE.bpe_doc_token_counts(docs, merges).orderBy("doc_id")
+    return BPE.bpe_doc_token_counts(
+        docs, _bpe_merge_pairs(spark, sf_dir)).orderBy("doc_id")
 
 
 def _orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2368,8 +2377,11 @@ def _svm_declared_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from text_sentiment_classification_hadoop_spark_spark.functions.rounding import pround
     from text_sentiment_classification_hadoop_spark_spark.operators.svm import svm_train_declared
-    train, _ = S.train_test(S.labeled_documents(spark, sf_dir))
-    w = svm_train_declared(train)
+    def build():
+        train, _ = S.train_test(S.labeled_documents(spark, sf_dir))
+        return svm_train_declared(train)
+    w = S.documents_reused(spark, sf_dir, "svm_declared_weights", build,
+                           (EPOCHS, LR, LAMBDA))
     return w.select("word", pround(F.col("weight"), 6).alias("weight")).orderBy("word")
 
 
@@ -3548,8 +3560,7 @@ def _bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-lingual tokenizer-equity metric."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
     docs = load_table(spark, "documents", sf_dir)
-    merges = [p for p, _ in BPE.bpe_train(BPE.word_freqs(docs), BPE_MERGES)]
-    return BPE.fertility_by_group(docs, merges)
+    return BPE.fertility_by_group(docs, _bpe_merge_pairs(spark, sf_dir))
 
 
 def _source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4271,17 +4282,9 @@ def _bpe_merges_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
-    docs = load_table(spark, "documents", sf_dir)
     path = os.path.join(_store_scratch(sf_dir, "bpemerges"), "merges")
-    merges = BPE.bpe_train(BPE.word_freqs(docs), BPE_MERGES)
-    BPE.save_merges(spark, merges, path)
-    loaded = BPE.load_merges(spark, path)
-    rows = [(i + 1, p, p.replace(" ", ""), f)
-            for i, (p, f) in enumerate(loaded)]
-    return local_frame(
-        spark, rows,
-        "merge_rank int, pair string, merged string, freq bigint"
-    ).orderBy("merge_rank")
+    BPE.save_merges(spark, _bpe_trained(spark, sf_dir), path)
+    return BPE.merges_frame(spark, BPE.load_merges(spark, path)).orderBy("merge_rank")
 
 
 def _band_index_store_contents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -254,25 +254,36 @@ def build_inline_line(base: dict, timings: dict, core: list[str],
     slowest-first for whatever budget remains. If core+pinned alone
     would overflow, the display precision drops 3 → 2 decimals (a
     reporting fallback only; bench_result.json always carries the full
-    3-decimal medians)."""
+    3-decimal medians). If they still overflow at 2 decimals, the line
+    carries ``"truncated": N``, the number of core+pinned names left
+    out, so a reader can tell budget truncation from a removed query."""
     core = [n for n in core if n in timings]
     pinned = [n for n in pinned if n in timings and n not in core]
     by_cost = sorted((n for n in timings
                       if n not in core and n not in pinned),
                      key=lambda n: -timings[n])
     must_show = core + pinned
-    for prec in (3, 2):
+
+    def fill(head: dict, prec: int) -> dict[str, float]:
         shown: dict[str, float] = {}
         for name in must_show + by_cost:
-            trial = dict(base, queries=dict(
+            trial = dict(head, queries=dict(
                 shown, **{name: round(timings[name], prec)}))
             if len(json.dumps(trial, separators=(",", ":"))) > budget:
                 break
             shown[name] = round(timings[name], prec)
-        if all(n in shown for n in must_show) or prec == 2:
+        return shown
+
+    for prec in (3, 2):
+        shown = fill(base, prec)
+        if all(n in shown for n in must_show):
             return json.dumps(dict(base, queries=shown),
                               separators=(",", ":"))
-    raise AssertionError("unreachable")  # prec==2 branch always returns
+    # reserve the marker's widest value, then fill in the real count
+    head = dict(base, truncated=len(must_show))
+    shown = fill(head, 2)
+    head["truncated"] = sum(n not in shown for n in must_show)
+    return json.dumps(dict(head, queries=shown), separators=(",", ":"))
 
 
 def main() -> None:

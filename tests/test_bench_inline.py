@@ -61,3 +61,19 @@ def test_previous_inline_names_reads_latest_artifact(tmp_path):
         {"queries": {"bare_q": 2.0}}))
     assert bench.previous_inline_names(str(tmp_path)) == ["bare_q"]
     assert bench.previous_inline_names(str(tmp_path / "nope")) == []
+
+
+def test_truncation_at_two_decimals_is_marked():
+    # the same overflowing pin set: names that do not fit even at 2
+    # decimals are counted in a "truncated" field inside the budget
+    timings = {f"an_extremely_long_query_name_padding_{i:04d}": 123.456
+               for i in range(150)}
+    pinned = sorted(timings)
+    line = bench.build_inline_line(BASE, timings, [], pinned)
+    assert len(line) <= 1900
+    out = json.loads(line)
+    assert out["truncated"] == 150 - len(out["queries"]) > 0
+    # a line that fits carries no marker
+    small = {n: timings[n] for n in pinned[:3]}
+    assert "truncated" not in json.loads(
+        bench.build_inline_line(BASE, small, [], sorted(small)))

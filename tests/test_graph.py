@@ -2,6 +2,7 @@
 determinism under repartitioning, and mass-conservation bounds.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
@@ -55,6 +56,17 @@ def test_copurchase_edges_symmetric(spark, sf_dir):
     n = pr.count()
     total = pr.agg(F.sum("rank_micro")).collect()[0][0]
     assert n * G.RESET_MICRO <= total <= n * G.SCALE
+
+
+def test_copurchase_rel_rejects_custkeys_in_the_supplier_id_space(spark):
+    orders = spark.createDataFrame(
+        [(1, 7), (2, G.SUPP_OFFSET)], "o_orderkey long, o_custkey long")
+    li = spark.createDataFrame([(1, 3), (2, 3)], "l_orderkey long, l_suppkey long")
+    with pytest.raises(Exception, match="SUPP_OFFSET"):
+        G.copurchase_rel(orders, li).collect()
+    below = orders.filter(F.col("o_custkey") < G.SUPP_OFFSET)
+    assert [tuple(r) for r in G.copurchase_rel(below, li).collect()] == [
+        (7, 3 + G.SUPP_OFFSET, 1)]
 
 
 def test_triangle_counts_hand_graph(spark):

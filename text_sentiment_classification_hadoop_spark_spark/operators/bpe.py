@@ -196,36 +196,21 @@ def bpe_train(words: DataFrame, n_merges: int = 8,
     return merges
 
 
-def bpe_merges_df(df: DataFrame, n_merges: int = 8,
-                  text_col: str = "text", batch_k: int = 1,
-                  headroom: int = 4) -> DataFrame:
-    """End-to-end train -> merge table ``(merge_rank, pair, merged,
-    freq)`` — the driver-checkable learned-tokenizer artifact.
-    ``headroom`` passes through to :func:`bpe_train` (only meaningful
-    with ``batch_k > 1``); the headroom-16 configuration the scale
-    probe recommends (SCALE.md §26) is registry-checked by
-    ``bpe_merges_headroom16`` against its own parameterized oracle."""
-    spark = df.sparkSession
-    merges = bpe_train(word_freqs(df, text_col), n_merges,
-                       batch_k=batch_k, headroom=headroom)
-    rows = [(i + 1, p, p.replace(" ", ""), f)
-            for i, (p, f) in enumerate(merges)]
+def merges_frame(spark, merges: list[tuple[str, int]]) -> DataFrame:
+    """A :func:`bpe_train` merge list as the merge-table frame
+    ``(merge_rank, pair, merged, freq)``."""
     return local_frame(
         spark,
-        rows, "merge_rank int, pair string, merged string, freq bigint"
-    ).orderBy("merge_rank")
+        [(i + 1, p, p.replace(" ", ""), f)
+         for i, (p, f) in enumerate(merges)],
+        "merge_rank int, pair string, merged string, freq bigint")
 
 
 def save_merges(spark, merges: list[tuple[str, int]], path: str) -> None:
     """Persist a learned merge list as the parquet artifact the
     ``tokenize-train`` CLI writes: ``(merge_rank, pair, merged, freq)``,
     single file (merge tables are tokenizer-sized)."""
-    local_frame(
-        spark,
-        [(i + 1, p, p.replace(" ", ""), f)
-         for i, (p, f) in enumerate(merges)],
-        "merge_rank int, pair string, merged string, freq bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    merges_frame(spark, merges).coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def load_merges(spark, path: str) -> list[tuple[str, int]]:

@@ -393,12 +393,12 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     edges = edges.union(labels.select(F.col("node").alias("src"),
                                       F.col("node").alias("dst")))
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    # GEOMETRIC probe schedule 1, 1, 2, 4, 4, ...: near-dup graphs are
-    # shallow (converge in 2-3 rounds), so the first two batches keep
-    # the old round-exact exit — a fixed batch of 4 was measured to
-    # OVERSHOOT shallow graphs (8 rounds of edge joins instead of 3,
+    # GEOMETRIC probe schedule 1, 1, 1, 2, 4, 4, ...: near-dup graphs
+    # are shallow (converge in 2-3 rounds), so the first three batches
+    # keep the old round-exact exit — a fixed batch of 4 was measured
+    # to OVERSHOOT shallow graphs (8 rounds of edge joins instead of 3,
     # +44% task time on dedup_canonical at sf0.1); only a loop that
-    # has already survived 2 rounds (deep components — the adversarial
+    # has already survived 3 rounds (deep components — the adversarial
     # 100 TB case) escalates to fused 2- then 4-round batches, where
     # the per-round checkpoint + probe barrier is the dominant cost.
     batch_sizes = [1, 1, 1, 2]

@@ -41,7 +41,9 @@ DAMP_NUM, DAMP_DEN = 17, 20
 RESET_MICRO = SCALE * (DAMP_DEN - DAMP_NUM) // DAMP_DEN
 
 # offset distinguishing supplier nodes from customer nodes in the
-# co-purchase graph (disjoint id spaces).
+# co-purchase graph. The id spaces are disjoint only while every
+# customer key is below it (TPC-H SF <= ~6); copurchase_rel fails the
+# query above that instead of merging customer and supplier nodes.
 SUPP_OFFSET = 1_000_000
 
 
@@ -52,9 +54,20 @@ def copurchase_rel(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     aggregate that EVERY co-purchase graph view derives from; compute
     it once (and ``localCheckpoint`` it) when several graph queries run
     in one session — the weighted and unweighted edge lists are both
-    narrow projections of it."""
+    narrow projections of it.
+
+    Raises (inside the plan, so no extra job) when an ``o_custkey`` is
+    ``>= SUPP_OFFSET``: that customer node would collide with a
+    supplier node."""
+    custkey = F.when(
+        F.col("o_custkey") >= SUPP_OFFSET,
+        F.raise_error(F.concat(
+            F.lit(f"copurchase_rel: o_custkey >= SUPP_OFFSET ({SUPP_OFFSET}) "
+                  "would collide with supplier node ids: "),
+            F.col("o_custkey").cast("string")))
+    ).otherwise(F.col("o_custkey"))
     return (
-        orders.select("o_orderkey", "o_custkey")
+        orders.select("o_orderkey", custkey.alias("o_custkey"))
         .join(lineitem.select("l_orderkey", "l_suppkey"),
               F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy(F.col("o_custkey").alias("cust"),

@@ -26,18 +26,20 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import clean_chain_a
 from ..functions.rounding import pround
+from ..reuse import reused
 from ..session import local_frame, widen
 from . import metrics as M
 from . import nb as NB
 from . import svm as SVM
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
 
 
-# ~15 driver queries start from the identical cleaned+labeled corpus;
-# memoize its localCheckpoint per (application, sf_dir) so the regex
-# chain and scan run once per session instead of once per query. Lazy
-# (eager=False): materialized by the first query that acts on it.
-_DOCS_CACHE: dict[tuple[str, str], DataFrame] = {}
+def documents_reused(spark: SparkSession, sf_dir: str, kind: str, build,
+                     params=()):
+    """``build()`` once per session for the current ``documents`` table
+    of ``sf_dir`` and ``params`` (see :mod:`..reuse`)."""
+    return reused(spark, kind, [table_path("documents", sf_dir)], params,
+                  build)
 
 
 def labeled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -45,17 +47,17 @@ def labeled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Widened before the regex chain: the chain is the CPU-heavy narrow
     stage of every sentiment pipeline, and the testdata parquet is a
-    single row group (one scan task); see ``session.widen``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DOCS_CACHE:
+    single row group (one scan task); see ``session.widen``. ~15 registry
+    queries start from this corpus, so it is one lazy localCheckpoint
+    per session, materialized by the first query that acts on it."""
+    def build():
         d = widen(load_table(spark, "documents", sf_dir).select("doc_id", "text"))
-        out = d.select(
+        return d.select(
             "doc_id",
             clean_chain_a(F.col("text")).alias("text"),
             F.when(F.col("doc_id") % 2 == 1, F.lit(1.0)).otherwise(F.lit(0.0)).alias("label"),
-        )
-        _DOCS_CACHE[key] = out.localCheckpoint(eager=False)
-    return _DOCS_CACHE[key]
+        ).localCheckpoint(eager=False)
+    return documents_reused(spark, sf_dir, "labeled_documents", build)
 
 
 def train_test(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -63,47 +65,32 @@ def train_test(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return docs.filter(~is_test), docs.filter(is_test)
 
 
-# The driver invokes each query independently, and four of them (model,
-# stats, predictions, confusion) train the identical NB model on the
-# identical split. Memoize per (application, sf_dir): the model is a
-# checkpointed vocabulary-sized DataFrame, so holding it is cheap and
-# recomputation-free. Keyed on applicationId so a new session never sees
-# a stale handle.
-_NB_CACHE: dict[tuple[str, str], tuple[DataFrame, object]] = {}
-
-
 def _nb_trained(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NB_CACHE:
+    """The NB model and stats on the training split. Four registry
+    queries (model, stats, predictions, confusion) use the same model;
+    it is a checkpointed vocabulary-sized frame, cheap to hold."""
+    def build():
         train, _ = train_test(labeled_documents(spark, sf_dir))
-        _NB_CACHE[key] = NB.nb_train(train)
-    return _NB_CACHE[key]
+        return NB.nb_train(train)
+    return documents_reused(spark, sf_dir, "nb_model", build)
 
 
 # predictions/confusion/metrics all act on the identical scored test
-# split (3 driver queries per algorithm) — memoize the scored DF like
-# the model: checkpointed, test-split-sized, recomputation-free.
-_SCORED_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# split (3 registry queries per algorithm): one lazy checkpoint each.
 def nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "nb")
-    if key not in _SCORED_CACHE:
+    def build():
         _, test = train_test(labeled_documents(spark, sf_dir))
         model, stats = _nb_trained(spark, sf_dir)
-        _SCORED_CACHE[key] = NB.nb_score(test, model, stats) \
-            .localCheckpoint(eager=False)
-    return _SCORED_CACHE[key]
+        return NB.nb_score(test, model, stats).localCheckpoint(eager=False)
+    return documents_reused(spark, sf_dir, "nb_scored", build)
 
 
 def svm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "svm")
-    if key not in _SCORED_CACHE:
+    def build():
         train, test = train_test(labeled_documents(spark, sf_dir))
         w = SVM.svm_effective_train(train)
-        _SCORED_CACHE[key] = SVM.svm_score(test, w) \
-            .localCheckpoint(eager=False)
-    return _SCORED_CACHE[key]
+        return SVM.svm_score(test, w).localCheckpoint(eager=False)
+    return documents_reused(spark, sf_dir, "svm_scored", build)
 
 
 def nb_model_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -45,11 +45,14 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def table_path(name: str, sf_dir: str | None = None) -> str:
+    return f"{sf_dir or DEFAULT_SF_DIR}/{name}.parquet"
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     from ..session import ensure_engine_confs
     ensure_engine_confs(spark)  # caller-provided sessions included
-    sf_dir = sf_dir or DEFAULT_SF_DIR
-    return normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return normalize_ts(spark.read.parquet(table_path(name, sf_dir)))
 
 
 def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:

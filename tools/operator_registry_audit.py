@@ -71,7 +71,7 @@ WAIVERS: dict[str, str] = {
                           "the registry path (tweets_clean_chain_b)",
     # convenience compositions of two registry-covered functions
     # (edges_from_rel[_weighted] ∘ copurchase_rel); the registry builds
-    # the same plan through its memoized _copurchase_rel cache
+    # the same plan through its session-reused _copurchase_rel
     "copurchase_edges": "alias for edges_from_rel(copurchase_rel(...))",
     "copurchase_edges_weighted":
         "alias for edges_from_rel_weighted(copurchase_rel(...))",

@@ -8,7 +8,10 @@ bytes and records, and the first line of the stage's callsite — so the
 numbers). Around the query runs it also reads the JVM's per-thread CPU
 from ``/proc/<jvm pid>/task/*/stat`` and prints it per thread group —
 C2 and C1 JIT compilers, GC, executor task threads, other — next to the
-codegen line, so JIT cost shows without a re-run.
+codegen line, so JIT cost shows without a re-run. A ``reuse:`` line
+gives the query's hits and misses per artifact kind in the session's
+reuse context (``reuse.py``): whether it built a trained artifact or
+reused one.
 
 Usage:
     python tools/profile_query.py <query> [--sf DIR] [--noop] [--repeat N]
@@ -112,6 +115,12 @@ def main() -> int:
         walls.append(time.perf_counter() - t0)
         spark.sparkContext.setJobDescription(None)
     cpu = thread_group_cpu_s(ticks0, jvm_thread_ticks(jvm_pid))
+    # the session is this process's own, so its counts are the query's
+    from text_sentiment_classification_hadoop_spark_spark.reuse import reuse_context
+    reuse = "reuse: " + (", ".join(
+        f"{kind} {hits} hit/{misses} miss"
+        for kind, (hits, misses) in reuse_context(spark).counts().items())
+        or "none")
     jvm_cpu = ("jvm cpu over the query runs: "
                + ", ".join(f"{g} {s:.2f}s" for g, s in cpu.items())
                + f" (total {sum(cpu.values()):.2f}s)")
@@ -210,6 +219,7 @@ def main() -> int:
           f"sum(task time)={total_task:.2f}s")
     print(codegen)
     print(jvm_cpu)
+    print(reuse)
     hdr = (f"{'stg':>4} {'job':>4} {'wall_s':>7} {'task_s':>7} {'tasks':>5} "
            f"{'in_mb':>8} {'sr_mb':>8} {'sw_mb':>8} {'sw_rec':>9} "
            f"{'gc_s':>5} name")
