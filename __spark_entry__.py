@@ -26,7 +26,6 @@ parts"):
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
@@ -4445,65 +4444,64 @@ def entry(spark: SparkSession) -> DataFrame:
     return S.nb_confusion_query(spark, "/root/testdata/sf0.001")
 
 
-def _staleness_order(keys: list[str]) -> list[str]:
-    """Driver-shard ordering, derived from the committed
-    ``CORRECTNESS_r*.json`` records instead of a hand-maintained list
-    (rounds 4/5 kept a ``_R5_FRONT``-style literal that had to be
-    re-derived by hand every round): never-driver-checked queries
-    first (registration order), then ascending by the round of the
-    most recent driver datapoint, registration order within a round.
-    A newly registered query therefore queues itself for the next
-    driver shard automatically, and evidence age rotates without any
-    bookkeeping. Missing/corrupt record files are skipped — worst
-    case the order degrades to registration order, never an error."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last: dict[str, int] = {}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rec, dict):
-            for q in rec:
-                last[q] = max(last.get(q, 0), rnd)
-    pos = {k: i for i, k in enumerate(keys)}
-    return sorted(keys, key=lambda k: (last.get(k, 0), pos[k]))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDER MATTERS for the driver's correctness gate: it checks a
-    # 50-query prefix shard per round. The prefix is computed by
-    # _staleness_order from the committed CORRECTNESS_r*.json records:
-    # never-checked queries first, then least-recently-checked. The
-    # dict literal below keeps its historical grouping for
-    # readability; the return reorders it.
-    impls = {
-        # --- never driver-checked (16): events window family + streaming ---
-        "user_running_stats": E.user_running_stats,
-        # new in round 6: SCD2 history build (run-collapse + validity
-        # intervals), the generic as-of join's registry datapoint, and
-        # first-occurrence n-gram novelty scoring
+    # 50-query prefix shard, so the literal's order is the shard order.
+    # Register a new query at the top so the next shard checks it.
+    return {
+        "approx_quantile_bounds": R.approx_quantile_bounds,
         "user_state_scd2": E.user_state_scd2,
         "events_asof_enrich": E.events_asof_enrich,
-        # new in round 7: table-maintenance round trips get their
-        # registry datapoints (VERDICT r6 ask #4) — schema-evolution
-        # merged read and small-files compaction, both write→read-back
-        # against a base-table oracle
+        "copurchase_communities_deep": _copurchase_communities_deep,
+        "ngram_novelty": _ngram_novelty,
+        "label_silhouette": _label_silhouette,
+        "orders_merge_upsert": R.orders_merge_upsert,
+        "small_quantity_revenue": R.small_quantity_revenue,
+        "orders_cdc_apply": R.orders_cdc_apply,
+        "exact_median_price": R.exact_median_price,
+        "temperature_mixture_plan": _temperature_mixture_plan,
+        "stream_asof_enrich": _stream_asof_enrich,
+        "cuped_ab_lift": E.cuped_ab_lift,
+        "theilsen_trend": E.theilsen_trend,
+        "ks_price_shift": R.ks_price_shift,
+        "nb_auc": _nb_auc,
+        "copurchase_ppr": _copurchase_ppr,
+        "copurchase_ppr_weighted": _copurchase_ppr_weighted,
+        "revenue_by_region": R.revenue_by_region,
+        "distinct_parts_per_supplier": R.distinct_parts_per_supplier,
+        "conditional_counts": R.conditional_counts,
+        "union_paths": R.union_paths,
+        "global_sort_orders": R.global_sort_orders,
+        "customer_order_totals": R.customer_order_totals,
+        "above_avg_lineitems": R.above_avg_lineitems,
+        "filtered_projection": R.filtered_projection,
+        "top_parts_per_brand": R.top_parts_per_brand,
+        "rollup_order_stats": R.rollup_order_stats,
+        "semi_anti_join_counts": R.semi_anti_join_counts,
+        "orders_by_month": R.orders_by_month,
+        "cube_order_stats": R.cube_order_stats,
+        "grouping_sets_order_stats": R.grouping_sets_order_stats,
+        "intersect_except_customers": R.intersect_except_customers,
+        "quantity_band_totals": R.quantity_band_totals,
+        "top_orders_per_customer": R.top_orders_per_customer,
+        "orders_above_global_avg": R.orders_above_global_avg,
+        "order_stats_unpivot": R.order_stats_unpivot,
+        "price_quantiles": R.price_quantiles,
+        "price_quantity_corr": R.price_quantity_corr,
+        "tweets_parse_naive": _tweets_parse("nb"),
+        "tweets_parse_svm": _tweets_parse("svm"),
+        "tweets_parse_strict": _tweets_parse_strict,
+        "tweets_clean_chain_b": _tweets_clean_chain_b,
+        "tokens_exploded": _tokens_exploded,
+        "word_counts": _word_counts,
+        "nb_model": S.nb_model_query,
+        "nb_stats": S.nb_stats_query,
+        "bloom_decontaminate": _bloom_decontaminate,
+        "containment_pairs": _containment_pairs,
+        "mllib_nb_confusion": _mllib_confusion("nb"),
+        "mllib_svm_confusion": _mllib_confusion("svm"),
         "evolved_union_read": _evolved_union_read,
         "compaction_identity": _compaction_identity,
-        # new in round 7: six more canonical TPC-H plan shapes (Q6
-        # pure-pushdown scan, Q7 disjunctive two-nation trade, Q8
-        # fraction-of-total market share, Q12 fact⋈fact conditional
-        # counts, Q14 promo share, Q19 OR-of-ANDs residual join, Q22
-        # scalar-subquery + anti-join rollup)
         "forecast_revenue_change": R.forecast_revenue_change,
         "volume_shipping": R.volume_shipping,
         "market_share": R.market_share,
@@ -4511,52 +4509,68 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "promo_revenue_share": R.promo_revenue_share,
         "disjunctive_band_revenue": R.disjunctive_band_revenue,
         "dormant_customers": R.dormant_customers,
-        # new in round 7 (batch 2): Q9 profit rollup, Q13 double
-        # aggregation with zero-bucket LEFT join, Q15 view + scalar-max
-        # pattern, and the per-dimension embedding drift monitor
+        "revenue_trend_ols": E.revenue_trend_ols,
+        "holdout_ab_lift": E.holdout_ab_lift,
+        "weekly_active_users": E.weekly_active_users,
+        "events_range_join": E.busy_window_profile,
+        "source_quality_report": _source_quality_report,
+        "bitext_mined_pairs": _bitext_mined_pairs,
+        "stream_range_join": _stream_range_join,
+        "shipping_priority": R.shipping_priority,
+        "local_supplier_volume": R.local_supplier_volume,
+        "order_priority_counts": R.order_priority_counts,
+        "returned_item_report": R.returned_item_report,
+        "large_volume_customers": R.large_volume_customers,
+        "part_entity_resolution": _part_entity_resolution,
+        "unigram_lm_vocab": _unigram_lm_vocab,
+        "copurchase_bfs_depths": _copurchase_bfs_depths,
+        "tfidf_long": _tfidf_long,
+        "doc_repetition": _doc_repetition,
+        "pii_scrub": _pii_scrub,
+        "dedup_canonical": _dedup_canonical,
+        "curation_pipeline": _curation_pipeline,
+        "mixture_sample": _mixture_sample,
+        "corpus_report": _corpus_report,
+        "corpus_diff": _corpus_diff,
+        "bm25_search": _bm25_search,
+        "nb_predictions": S.nb_predictions_query,
+        "nb_confusion": S.nb_confusion_query,
+        "svm_weights": S.svm_weights_query,
+        "svm_predictions": S.svm_predictions_query,
+        "svm_confusion": S.svm_confusion_query,
+        "svm_declared_weights": _svm_declared_weights,
+        "nb_metrics": _classifier_metrics("nb"),
+        "svm_metrics": _classifier_metrics("svm"),
+        "word_counts_salted": _word_counts_salted,
+        "dedup_exact": _dedup_exact,
+        "decontaminate_train": _decontaminate_train,
+        "hash_sample_docs": _hash_sample_docs,
+        "minhash_signatures": _minhash_long,
+        "simhash_fingerprints": _simhash,
+        "near_dup_pairs": _near_dup_pairs,
+        "ngram_jaccard": _ngram_jaccard,
+        "cosine_topk": _cosine_topk,
+        "user_running_stats": E.user_running_stats,
         "nation_profit": R.nation_profit,
         "customer_order_distribution": R.customer_order_distribution,
         "top_supplier_revenue": R.top_supplier_revenue,
         "embedding_drift_report": _embedding_drift_report,
-        # new in round 7 (batch 3): delta-merge incremental MV
-        # maintenance, the k-anonymity governance census, and graded
-        # ANN ranking quality (nDCG@10, integer-weight discounts)
         "incremental_agg_maintenance": R.incremental_agg_maintenance,
         "k_anonymity_report": R.k_anonymity_report,
         "ann_ndcg_at10": _ann_ndcg_at10,
-        # new in round 7 (batch 4): market-basket co-occurrence
-        # similarity and fixed-band RFM segmentation
         "supplier_cooccurrence": _supplier_cooccurrence,
         "events_rfm_segments": E.rfm_segments,
-        # new in round 7 (batch 4): the exact median generalized to
-        # per-group with ZERO driver scalars (both probes become joins)
         "brand_median_price": R.brand_median_price,
-        # new in round 7 (batch 5): the last five TPC-H plan shapes —
-        # the registry now carries all 22 — Q2 correlated-min via
-        # aggregate-then-rejoin, Q11 scalar-fraction threshold, Q16
-        # anti-join + COUNT(DISTINCT), Q20 flattened semi-join chain,
-        # Q21 EXISTS/NOT-EXISTS collapsed to one order-keyed aggregate
         "min_cost_supplier": R.min_cost_supplier,
         "important_part_value": R.important_part_value,
         "parts_supplier_counts": R.parts_supplier_counts,
         "excess_stock_suppliers": R.excess_stock_suppliers,
         "waiting_suppliers": R.waiting_suppliers,
-        # new in round 7 (batch 6): per-label embedding outlier pruning,
-        # the cross-source content-overlap (syndication) matrix, and the
-        # streaming top-k two-stage pattern (incremental windowed counts
-        # in the stream, rank on the finalized windows)
         "embedding_outliers": _embedding_outliers,
         "source_overlap": _source_overlap,
         "stream_trending_topk": _stream_trending_topk,
-        # new in round 7 (batch 7): sort-free corpus diagnostics — the
-        # distributed-CDF exact percentile (histogram + bounded window
-        # + broadcast join back; replaces a corpus-wide cume_dist) and
-        # the histogram-form Gini length-inequality coefficient
         "length_percentile_docs": _length_percentile_docs,
         "doc_length_gini": _doc_length_gini,
-        # round 7 (batch 8): integer-exact analytics — Benford digit
-        # audit, MoM revenue ratio, CUSUM change point, log2 gap
-        # histogram, lexical diversity, weighted Bellman-Ford
         "benford_prices": _benford_prices,
         "revenue_mom_growth": _revenue_mom_growth,
         "cusum_changepoint": E.cusum_changepoint,
@@ -4578,79 +4592,66 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "revenue_bootstrap_ci": R.revenue_bootstrap_ci,
         "jaccard_prefix_pairs": _jaccard_prefix_pairs,
         "revenue_mad_outliers": R.revenue_mad_outliers,
+        "band_index_store_contents": _band_index_store_contents,
+        "active_learning_batch": _active_learning_batch,
+        "unigram_token_counts": _unigram_token_counts,
+        "bpe_merges_roundtrip": _bpe_merges_roundtrip,
+        "inverted_index": _inverted_index,
+        "cms_token_counts": _cms_token_counts,
+        "lm_quality_score": _lm_quality_score,
+        "salted_segment_revenue": _salted_segment_revenue,
         "nation_trend_ols": R.nation_trend_ols,
         "source_diversity": _source_diversity,
         "pricing_rollup": R.pricing_rollup,
         "events_unpivot": E.user_event_unpivot,
         "neardup_cluster_sizes": _neardup_cluster_sizes,
         "bpe_fertility": _bpe_fertility,
-        # new in round 9: community detection (weight-mode LPA — a
-        # different fixpoint than min-label CC) and sequence mining
-        # (gap-allowed A-then-B rules — order-sensitive, unlike basket
-        # rules; non-consecutive, unlike event_transitions)
         "copurchase_communities": _copurchase_communities,
-        "copurchase_communities_deep": _copurchase_communities_deep,
-        "sequential_rules": _sequential_rules,
-        "sequential_patterns3": _sequential_patterns3,
-        "ngram_novelty": _ngram_novelty,
-        "label_silhouette": _label_silhouette,
-        "orders_merge_upsert": R.orders_merge_upsert,
-        "small_quantity_revenue": R.small_quantity_revenue,
-        "orders_cdc_apply": R.orders_cdc_apply,
-        "exact_median_price": R.exact_median_price,
-        "temperature_mixture_plan": _temperature_mixture_plan,
-        "stream_asof_enrich": _stream_asof_enrich,
-        "revenue_trend_ols": E.revenue_trend_ols,
-        "holdout_ab_lift": E.holdout_ab_lift,
-        "cuped_ab_lift": E.cuped_ab_lift,
-        "theilsen_trend": E.theilsen_trend,
-        "ks_price_shift": R.ks_price_shift,
-        "weekly_active_users": E.weekly_active_users,
         "purchase_attribution": E.purchase_attribution,
         "interval_pair_counts": E.interval_pair_counts,
-        # new in round 5: binned range join (interval containment with
-        # no equi key — theta join in the oracle, bin-bucketed equi
-        # join here; see operators/events.range_join_binned)
-        "events_range_join": E.busy_window_profile,
-        # new in round 5: per-source governance rollup (cross-source
-        # exact-dup attribution + modal language)
-        "source_quality_report": _source_quality_report,
-        # new in round 5: cross-lingual parallel-pair mining (bitext):
-        # bipartite banded sign-LSH candidates + mutual-best alignment
-        "bitext_mined_pairs": _bitext_mined_pairs,
-        # new in round 5: the binned rewrite makes the range join
-        # STREAMABLE (stateless stream-static equi join on the bin)
-        "stream_range_join": _stream_range_join,
-        # new in round 5: TPC-H Q3 shape (selective 3-way star join,
-        # pushed date predicates, exact-decimal revenue, TakeOrdered)
-        "shipping_priority": R.shipping_priority,
-        # new in round 6: four more canonical TPC-H plan shapes —
-        # Q5 (dimension-cycle nation correlation, all dims broadcast),
-        # Q4 (EXISTS → left-semi with non-equi residual),
-        # Q10 (scan-pruned fact join + customer-keyed top-k),
-        # Q18 (aggregate-before-join with HAVING prune)
-        "local_supplier_volume": R.local_supplier_volume,
-        "order_priority_counts": R.order_priority_counts,
-        "returned_item_report": R.returned_item_report,
-        "large_volume_customers": R.large_volume_customers,
         "funnel_conversion": E.funnel_conversion,
         "cohort_retention": E.cohort_retention,
         "events_json_props": E.json_props_extract,
         "bloom_prefilter_join": _bloom_prefilter_join,
-        "approx_distinct_users": _approx_distinct_users,
-        # structured streaming (north star) — incremental plan, batch oracle
         "events_tumbling_stream": _events_tumbling_stream,
         "events_sliding_stream": _events_sliding_stream,
         "events_sessionize_stream": _events_sessionize_stream,
         "stream_dedup_docs": _stream_dedup_docs,
         "stream_dedup_native": _stream_dedup_native,
-        "stream_dedup_watermarked": _stream_dedup_watermarked,
         "stream_stream_join": _stream_stream_join,
-        # --- new this round: stream-static broadcast enrichment ---
-        "stream_static_enrich": _stream_static_enrich,
-        # --- new this round: stateless at-ingest fingerprinting ---
-        "stream_winnow_fingerprints": _stream_winnow_fingerprints,
-        # --- new in the round-4 continuation: training-data prep ---
+        "packed_shards_readback": _packed_shards_readback,
+        "stream_doc_repetition": _stream_doc_repetition,
+        "stream_curation_gates": _stream_curation_gates,
+        "events_tumbling": E.tumbling_counts,
+        "events_sessionize": E.sessionize,
+        "events_json_roundtrip": _events_json_roundtrip,
+        "next_click_attribution": E.next_click_attribution,
+        "dedup_canonical_alternating": _dedup_canonical_alternating,
+        "nb_model_kv_roundtrip": _nb_model_kv_roundtrip,
+        "zorder_keys": _zorder_keys,
+        "ann_multiprobe_topk": _ann_multiprobe_topk,
+        "doc_bigram_ppl": _doc_bigram_ppl,
+        "dq_orders_report": _dq_orders_report,
+        "bpe_merges_headroom16": _bpe_merges_headroom16,
+        "c4_clean_docs": _c4_clean_docs,
+        "random_projection": _random_projection,
+        "rp_ann_topk": _rp_ann_topk,
+        "pq_codes": _pq_codes,
+        "pq_adc_topk": _pq_adc_topk,
+        "pq_trained_codes": _pq_trained_codes,
+        "pack_sequences": _pack_sequences,
+        "pack_sequences_ffd": _pack_sequences_ffd,
+        "token_freq_histogram": _token_freq_histogram,
+        "top_tokens": _top_tokens,
+        "zipf_fit": _zipf_fit,
+        "bigram_lm": _bigram_lm,
+        "heaps_fit": _heaps_fit,
+        "ann_recall_at10": _ann_recall_at10,
+        "lang_centroids": _lang_centroids,
+        "simhash_near_dups": _simhash_near_dups,
+        "stratified_sample_docs": _stratified_sample_docs,
+        "sequential_rules": _sequential_rules,
+        "approx_distinct_users": _approx_distinct_users,
         "dsir_scores": _dsir_scores,
         "shuffle_split_docs": _shuffle_split_docs,
         "quota_select_docs": _quota_select_docs,
@@ -4661,9 +4662,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "training_manifest": _training_manifest,
         "count_store_contents": _count_store_contents,
         "dedup_store_contents": _dedup_store_contents,
-        "band_index_store_contents": _band_index_store_contents,
         "training_shards_readback": _training_shards_readback,
-        "packed_shards_readback": _packed_shards_readback,
         "mmr_rerank": _mmr_rerank,
         "ctfidf_keywords": _ctfidf_keywords,
         "ann_rbo_at10": _ann_rbo_at10,
@@ -4676,9 +4675,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_gap_interp": _events_gap_interp,
         "events_anomalies": _events_anomalies,
         "nb_pr_curve": _nb_pr_curve,
-        "nb_auc": _nb_auc,
-        "active_learning_batch": _active_learning_batch,
         "lang_id_confusion": _lang_id_confusion,
+        "pps_sample_docs": _pps_sample_docs,
+        "dedup_canonical_best": _dedup_canonical_best,
+        "event_transitions": E.event_transition_matrix,
+        "fuzzy_part_names": _fuzzy_part_names,
+        "dup_kgram_stats": _dup_kgram_stats,
+        "ivf_cells_two_level": _ivf_cells_two_level,
+        "semdedup_hier": _semdedup_hier,
+        "events_sliding": E.sliding_counts,
+        "events_pivot": E.user_event_pivot,
+        "events_session_window_native": E.session_window_native,
+        "order_rank_stats": R.order_rank_stats,
+        "rolling_revenue": R.rolling_revenue,
+        "knn_batch": _knn_batch,
+        "ann_lsh_topk": _ann_lsh_topk,
+        "ivf_topk": _ivf_topk,
+        "kmeans_cells": _kmeans_cells,
+        "embedding_near_dups": _embedding_near_dups,
+        "mm_image_features": _mm_image_features,
+        "mm_frame_samples": _mm_frame_samples,
+        "mm_audio_features": _mm_audio_features,
+        "mm_frame_dedup": _mm_frame_dedup,
+        "lang_id": _lang_id,
+        "quality_score": _quality,
+        "token_counts": _token_counts,
+        "sequential_patterns3": _sequential_patterns3,
+        "stream_dedup_watermarked": _stream_dedup_watermarked,
+        "stream_static_enrich": _stream_static_enrich,
+        "stream_winnow_fingerprints": _stream_winnow_fingerprints,
         "knn_graph": _knn_graph,
         "pareto_orders": R.pareto_orders,
         "weighted_sample_docs": _weighted_sample_docs,
@@ -4693,79 +4718,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pmi_collocations": _pmi_collocations,
         "textrank_keywords": _textrank_keywords,
         "ivf_probe_sweep": _ivf_probe_sweep,
-        "stream_doc_repetition": _stream_doc_repetition,
-        "stream_curation_gates": _stream_curation_gates,
-        # --- red in r02 (TIMESTAMP_NTZ regression; fixed) ---
-        "events_tumbling": E.tumbling_counts,
-        "events_sessionize": E.sessionize,
-        "events_json_roundtrip": _events_json_roundtrip,
-        "next_click_attribution": E.next_click_attribution,
         "multitouch_attribution": E.multitouch_attribution,
         "orc_roundtrip": _orc_roundtrip,
-        # --- r1 rows-match / hash-mismatch, re-verify ---
         "sql_pricing_summary": _sql_pricing_summary,
-        # --- new this round: alternating-CC twin, shares dedup_canonical's oracle ---
-        "dedup_canonical_alternating": _dedup_canonical_alternating,
-        # text-KV export -> Python Data Source read-back; shares nb_model's oracle
-        "nb_model_kv_roundtrip": _nb_model_kv_roundtrip,
-        # Morton-key layout clustering (write_zordered's sort key)
-        "zorder_keys": _zorder_keys,
-        # multi-probe LSH (query bucket + Hamming-1 neighbors)
-        "ann_multiprobe_topk": _ann_multiprobe_topk,
-        # interpolated bigram LM document scoring (n-gram ppl filter)
-        "doc_bigram_ppl": _doc_bigram_ppl,
-        # middle-band perplexity pruning (new this round)
         "ppl_band_docs": _ppl_band_docs,
-        # one-pass data-quality expectation report
-        "dq_orders_report": _dq_orders_report,
-        # deterministic PPS systematic sampling (distributed prefix sum)
-        "pps_sample_docs": _pps_sample_docs,
-        # keep-best (longest) dedup resolution
-        "dedup_canonical_best": _dedup_canonical_best,
-        # per-user event-type Markov transitions
-        "event_transitions": E.event_transition_matrix,
-        # banded Levenshtein fuzzy part-name matching
-        "fuzzy_part_names": _fuzzy_part_names,
-        "part_entity_resolution": _part_entity_resolution,
-        # duplicated-k-gram coverage (exact-substring-dedup signal)
-        "dup_kgram_stats": _dup_kgram_stats,
-        # exact-substring dedup, removal form (Lee et al. 2022)
         "dedup_span_removal": _dedup_span_removal,
-        # semantic dedup via embedding clusters (Abbas et al. 2023)
         "semdedup": _semdedup,
-        # --- round 15: hierarchical two-level codebook (§30 lever) ---
-        "ivf_cells_two_level": _ivf_cells_two_level,
-        "semdedup_hier": _semdedup_hier,
-        # --- new this round: distributed BPE tokenizer training ---
-        "unigram_lm_vocab": _unigram_lm_vocab,
-        "unigram_token_counts": _unigram_token_counts,
         "bpe_merges": _bpe_merges,
-        "bpe_merges_roundtrip": _bpe_merges_roundtrip,
         "bpe_merges_batched": _bpe_merges_batched,
-        "bpe_merges_headroom16": _bpe_merges_headroom16,
         "bpe_token_counts": _bpe_token_counts,
         "bpe_doc_token_counts": _bpe_doc_token_counts,
         "bpe_vocab_curve": _bpe_vocab_curve,
-        # --- new this round: fixed-point PageRank (graph analytics) ---
-        "copurchase_bfs_depths": _copurchase_bfs_depths,
         "copurchase_pagerank": _copurchase_pagerank,
-        "copurchase_ppr": _copurchase_ppr,
-        "copurchase_ppr_weighted": _copurchase_ppr_weighted,
         "copurchase_pagerank_weighted": _copurchase_pagerank_weighted,
         "copurchase_components": _copurchase_components,
-        # --- green in r02 ---
-        "events_sliding": E.sliding_counts,
-        "events_pivot": E.user_event_pivot,
-        "events_session_window_native": E.session_window_native,
-        "order_rank_stats": R.order_rank_stats,
-        "rolling_revenue": R.rolling_revenue,
-        # similarity search (north star)
-        "knn_batch": _knn_batch,
-        "ann_lsh_topk": _ann_lsh_topk,
-        "ivf_topk": _ivf_topk,
-        "kmeans_cells": _kmeans_cells,
         "kmeans_quality": _kmeans_quality,
-        "embedding_near_dups": _embedding_near_dups,
         "decontaminate_embeddings": _decontaminate_embeddings,
         "neardup_triangles": _neardup_triangles,
         "neardup_kcore": _neardup_kcore,
@@ -4780,111 +4747,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_threshold_sweep": _dedup_threshold_sweep,
         "sq8_codes": _sq8_codes,
         "sq8_recall_at10": _sq8_recall_at10,
-        # multimodal columns (north star; deterministic fake decode)
-        "mm_image_features": _mm_image_features,
-        "mm_frame_samples": _mm_frame_samples,
-        "mm_audio_features": _mm_audio_features,
-        "mm_frame_dedup": _mm_frame_dedup,
-        # text analysis (north star)
-        "lang_id": _lang_id,
-        "quality_score": _quality,
-        "token_counts": _token_counts,
         "doc_fingerprints": _fingerprints,
-        "tfidf_long": _tfidf_long,
-        "doc_repetition": _doc_repetition,
-        "pii_scrub": _pii_scrub,
-        "dedup_canonical": _dedup_canonical,
-        "curation_pipeline": _curation_pipeline,
-        "mixture_sample": _mixture_sample,
-        "corpus_report": _corpus_report,
-        "corpus_diff": _corpus_diff,
-        "bm25_search": _bm25_search,
-        "inverted_index": _inverted_index,
-        "cms_token_counts": _cms_token_counts,
-        "lm_quality_score": _lm_quality_score,
-        "c4_clean_docs": _c4_clean_docs,
-        "random_projection": _random_projection,
-        "rp_ann_topk": _rp_ann_topk,
-        "pq_codes": _pq_codes,
-        "pq_adc_topk": _pq_adc_topk,
-        "pq_trained_codes": _pq_trained_codes,
-        "pack_sequences": _pack_sequences,
-        "pack_sequences_ffd": _pack_sequences_ffd,
         "chunk_documents": _chunk_documents,
-        "token_freq_histogram": _token_freq_histogram,
-        "top_tokens": _top_tokens,
-        "zipf_fit": _zipf_fit,
-        "bigram_lm": _bigram_lm,
-        "heaps_fit": _heaps_fit,
-        "ann_recall_at10": _ann_recall_at10,
-        "lang_centroids": _lang_centroids,
-        "simhash_near_dups": _simhash_near_dups,
-        "stratified_sample_docs": _stratified_sample_docs,
-        # --- round-1-green queries (48) ---
-        # relational parity (SURVEY §2.1-2.8)
         "pricing_summary": R.pricing_summary,
-        "revenue_by_region": R.revenue_by_region,
-        "distinct_parts_per_supplier": R.distinct_parts_per_supplier,
-        "conditional_counts": R.conditional_counts,
-        "union_paths": R.union_paths,
-        "global_sort_orders": R.global_sort_orders,
-        "customer_order_totals": R.customer_order_totals,
-        "above_avg_lineitems": R.above_avg_lineitems,
-        "filtered_projection": R.filtered_projection,
-        "top_parts_per_brand": R.top_parts_per_brand,
-        "rollup_order_stats": R.rollup_order_stats,
-        "semi_anti_join_counts": R.semi_anti_join_counts,
-        "orders_by_month": R.orders_by_month,
-        "cube_order_stats": R.cube_order_stats,
-        "grouping_sets_order_stats": R.grouping_sets_order_stats,
-        "intersect_except_customers": R.intersect_except_customers,
-        "quantity_band_totals": R.quantity_band_totals,
-        "top_orders_per_customer": R.top_orders_per_customer,
-        "orders_above_global_avg": R.orders_above_global_avg,
-        "order_stats_unpivot": R.order_stats_unpivot,
-        "price_quantiles": R.price_quantiles,
-        "approx_quantile_bounds": R.approx_quantile_bounds,
-        "price_quantity_corr": R.price_quantity_corr,
-        # tweets-CSV compat ingestion on the committed quirk fixture
-        # (P1-P4: naive split, comma-erasing stitch, SVM truncate+filter)
-        "tweets_parse_naive": _tweets_parse("nb"),
-        "tweets_parse_svm": _tweets_parse("svm"),
-        "tweets_parse_strict": _tweets_parse_strict,
-        "tweets_clean_chain_b": _tweets_clean_chain_b,
-        # sentiment pipelines (SURVEY §2.2-2.6, §2.9)
-        "tokens_exploded": _tokens_exploded,
-        "word_counts": _word_counts,
-        "nb_model": S.nb_model_query,
-        "nb_stats": S.nb_stats_query,
-        "nb_predictions": S.nb_predictions_query,
-        "nb_confusion": S.nb_confusion_query,
-        "svm_weights": S.svm_weights_query,
-        "svm_predictions": S.svm_predictions_query,
-        "svm_confusion": S.svm_confusion_query,
-        "svm_declared_weights": _svm_declared_weights,
-        "nb_metrics": _classifier_metrics("nb"),
-        "svm_metrics": _classifier_metrics("svm"),
-        # skew demonstration (result-identical oracle); the SQL-layer
-        # twin sql_pricing_summary is registered once, near the top
-        "word_counts_salted": _word_counts_salted,
-        "salted_segment_revenue": _salted_segment_revenue,
-        # dedup (north star)
-        "dedup_exact": _dedup_exact,
-        "decontaminate_train": _decontaminate_train,
-        "bloom_decontaminate": _bloom_decontaminate,
-        "containment_pairs": _containment_pairs,
-        "hash_sample_docs": _hash_sample_docs,
-        "minhash_signatures": _minhash_long,
-        "simhash_fingerprints": _simhash,
-        "near_dup_pairs": _near_dup_pairs,
-        "ngram_jaccard": _ngram_jaccard,
-        "cosine_topk": _cosine_topk,
-        # --- rows-only by declared contract: engine-specific values
-        # (MLlib hashing/fits), golden-pinned by pytest at sf0.01 ---
-        "mllib_nb_confusion": _mllib_confusion("nb"),
-        "mllib_svm_confusion": _mllib_confusion("svm"),
     }
-    return {k: impls[k] for k in _staleness_order(list(impls))}
 
 
 def _ivf_sql(n_probe: int = 2) -> str:

@@ -134,114 +134,24 @@ HEADLINE_QUERIES = [
     "packed_shards_readback",
 ]
 
-#: Registry queries deliberately absent from the headline set, each
-#: with its reason (VERDICT r12 ask #2: the full registry must be
-#: partitioned between HEADLINE_QUERIES and this dict — enforced by
-#: ``tools/roundclose.py``, which fails on ANY registry query in
-#: neither, not just new-since-last-round ones). Shared rationale for
-#: every entry below: in-bench median < 2 s at sf0.1, so a fresh-JVM
-#: isolated trial is startup/first-scan-dominated and the isolated
-#: median carries no round-over-round plan signal; they remain
-#: covered by the per-round BENCH_r{N} in-bench medians and the
-#: three-scale correctness selfchecks. Anything that grows past ~2 s
-#: in-bench gets promoted (the r13 sweep promoted the 12 then-heaviest
-#: plus the full reference-parity set regardless of cost).
-_SUB2S = "sub-2s in-bench; isolated trial is JVM-startup-dominated"
-HEADLINE_EXCLUDED: dict[str, str] = dict.fromkeys([
-    # relational / TPC-H shapes (sub-second scans + one shuffle)
-    "above_avg_lineitems", "benford_prices", "brand_price_deciles",
-    "cube_order_stats", "customer_order_distribution",
-    "disjunctive_band_revenue", "dormant_customers", "exact_median_price",
-    "excess_stock_suppliers", "grouping_sets_order_stats",
-    "important_part_value", "intersect_except_customers", "join_key_skew",
-    "large_volume_customers", "local_supplier_volume", "market_share",
-    "min_cost_supplier", "nation_profit", "order_priority_counts",
-    "order_stats_unpivot", "orders_by_month", "parts_supplier_counts",
-    "price_quantiles", "price_quantity_corr", "pricing_rollup",
-    "promo_revenue_share", "quantity_band_totals", "referential_integrity",
-    "returned_item_report", "rollup_order_stats", "semi_anti_join_counts",
-    "ship_delay_priority", "shipping_priority", "small_quantity_revenue",
-    "top_parts_per_brand", "top_supplier_revenue", "volume_shipping",
-    "waiting_suppliers", "winsorized_revenue",
-    # events / time-series (narrow windows over the events table)
-    "concurrent_sessions", "conversion_lifetable", "cusum_changepoint",
-    "events_asof_enrich", "events_range_join", "events_rfm_segments",
-    "events_unpivot", "events_value_drift", "forecast_revenue_change",
-    "holdout_ab_lift", "incremental_agg_maintenance", "interarrival_hist",
-    "nation_trend_ols", "revenue_bootstrap_ci", "revenue_mom_growth",
-    "revenue_trend_ols", "sequential_patterns3", "sequential_rules",
-    "user_state_scd2", "weekly_active_users",
-    # corpus stats / curation reports (doc-table-sized aggregates)
-    "doc_length_gini", "doc_lexical_stats", "k_anonymity_report",
-    "l_diversity_report", "length_percentile_docs", "nb_calibration",
-    "source_diversity", "source_overlap", "source_quality_report",
-    "temperature_mixture_plan",
-    # similarity / embeddings (small fixed-k probes)
-    "ann_ndcg_at10", "bitext_mined_pairs", "embedding_drift_report",
-    "embedding_outliers", "label_silhouette",
-], _SUB2S)
-# graph / tokenizer / storage seams whose heavy siblings ARE headline:
-# the sibling's isolated median carries the plan signal, and these
-# variants are ALSO sub-2s in-bench, so an isolated trial would be
-# startup-dominated on top of redundant
-_HEAVY_SIBLING = {
-    "bpe_merges_batched": "headline siblings bpe_merges (sequential) + "
-                          "bpe_merges_headroom16 (widened batch) bracket "
-                          "it; also " + _SUB2S,
-    "copurchase_communities": "headline sibling copurchase_communities_"
-                              "deep runs the same LPA plan for more "
-                              "rounds; also " + _SUB2S,
-    "compaction_identity": "storage-maintenance identity check; the "
-                           "write-path cost is carried by the headline "
-                           "training-shard/CDC pipelines; also " + _SUB2S,
-    "count_store_contents": "foreachBatch store drive; headline sibling "
-                            "band_index_store_contents exercises the "
-                            "same store machinery; also " + _SUB2S,
-    "dedup_store_contents": "foreachBatch store drive; headline sibling "
-                            "band_index_store_contents exercises the "
-                            "same store machinery; also " + _SUB2S,
-    "evolved_union_read": "schema-evolution read seam (two tiny "
-                          "parquet snapshots); also " + _SUB2S,
-    "orders_cdc_apply": "CDC merge twin of orders_merge_upsert; both "
-                        "are one broadcast-window pass; also " + _SUB2S,
-    "orders_merge_upsert": "upsert twin of orders_cdc_apply; also "
-                           + _SUB2S,
-    "training_shards_readback": "shard-writer readback identity; the "
-                                "heavy packing/manifest stages are "
-                                "headline (pack_sequences_ffd, "
-                                "training_manifest); also " + _SUB2S,
-    # streaming micro-topologies: wall time is dominated by per-query
-    # stream session setup + trigger latency, not the plan under test,
-    # so an isolated median measures harness overhead
-    "stream_range_join": "stream-session setup + trigger latency "
-                         "dominate the micro-topology; plan signal "
-                         "lives in the batch twin events_range_join",
-    "stream_trending_topk": "stream-session setup + trigger latency "
-                            "dominate the micro-topology; no batch-side "
-                            "cost to isolate",
-}
-HEADLINE_EXCLUDED.update(_HEAVY_SIBLING)
-
 
 def previous_inline_names(repo_dir: str) -> list[str]:
     """Names shown by the most recent committed ``BENCH_r{N}.json``'s
     one-line ``queries`` dict (the driver's PERF comparison surface) —
     the pin set for :func:`build_inline_line`. Empty when no previous
-    artifact exists (first round / fresh checkout)."""
+    artifact exists (first round / fresh checkout); a corrupt newest
+    artifact raises rather than silently emptying the pin set."""
     import glob
     import re
-    try:
-        arts = sorted(
-            (p for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-             if re.search(r"BENCH_r(\d+)\.json$", p)),
-            key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)))
-        if not arts:
-            return []
-        with open(arts[-1]) as fh:
-            prev = json.load(fh)
-        return list((prev.get("parsed") or prev).get("queries") or {})
-    except Exception:
+    arts = sorted(
+        (p for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
+         if re.search(r"BENCH_r(\d+)\.json$", p)),
+        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)))
+    if not arts:
         return []
+    with open(arts[-1]) as fh:
+        prev = json.load(fh)
+    return list((prev.get("parsed") or prev).get("queries") or {})
 
 
 def build_inline_line(base: dict, timings: dict, core: list[str],

@@ -1,8 +1,11 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, so a copy of the repo tests its
+# own code
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from hypothesis import HealthCheck, settings  # noqa: E402
 

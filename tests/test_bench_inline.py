@@ -7,6 +7,8 @@ drops were that round's own wins falling out because they got faster.
 
 import json
 
+import pytest
+
 import bench
 
 
@@ -61,6 +63,10 @@ def test_previous_inline_names_reads_latest_artifact(tmp_path):
         {"queries": {"bare_q": 2.0}}))
     assert bench.previous_inline_names(str(tmp_path)) == ["bare_q"]
     assert bench.previous_inline_names(str(tmp_path / "nope")) == []
+    # a corrupt newest artifact fails loudly instead of emptying the pins
+    (tmp_path / "BENCH_r14.json").write_text('{"queries": {"bare_q": 2.')
+    with pytest.raises(ValueError):
+        bench.previous_inline_names(str(tmp_path))
 
 
 def test_truncation_at_two_decimals_is_marked():

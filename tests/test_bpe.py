@@ -6,6 +6,8 @@ Reference context: the reference tokenizes by whitespace only
 (Sennrich et al. 2016).
 """
 
+from pathlib import Path
+
 import pytest
 
 from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
@@ -87,7 +89,7 @@ def test_entry_oracle_parity_sf0001(spark):
     # as a spurious duckdb "Too many open files".
     script = (
         "import json, sys, duckdb\n"
-        "sys.path.insert(0, '/root/repo')\n"
+        f"sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})\n"
         "import __spark_entry__ as entry\n"
         "con = duckdb.connect()\n"
         f"con.execute(\"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'\")\n"

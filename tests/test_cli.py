@@ -12,6 +12,7 @@ were ~136 s of the suite, almost all of it Spark startup).
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 from text_sentiment_classification_hadoop_spark_spark.__main__ import main
 
@@ -29,7 +30,8 @@ def test_nb_compat_cli_golden():
     out = subprocess.run(
         [sys.executable, "-m", "text_sentiment_classification_hadoop_spark_spark", "nb-compat",
          "--train", "fixtures/tweets_fixture.csv"],
-        cwd="/root/repo", capture_output=True, text=True, timeout=300)
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
     got = _kv(out.stdout)
     # the golden confusion from test_fixture_e2e, via the CLI surface

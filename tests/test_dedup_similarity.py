@@ -402,23 +402,27 @@ def test_cc_alternating_chain_round_count(spark):
     assert comp == {i: 0 for i in range(65)}
 
 
-def test_cc_alternating_warns_when_truncated(spark):
-    """max_iters exhausted before the edge-set fixpoint must surface a
+@pytest.mark.parametrize("algorithm,short,enough", [
+    ("alternating", 1, 10),
+    ("label_prop", 3, 80),
+], ids=["alternating", "label_prop"])
+def test_cc_warns_when_truncated(spark, algorithm, short, enough):
+    """max_iters exhausted before the fixpoint must surface a
     RuntimeWarning (labels may split components) instead of silently
-    returning a collapsed min-agg."""
+    returning a truncated answer — under either algorithm."""
     import warnings
 
     from text_sentiment_classification_hadoop_spark_spark.operators import dedup as D
     pairs = spark.createDataFrame([(i, i + 1) for i in range(64)],
                                   "id_a long, id_b long")
     with pytest.warns(RuntimeWarning, match="fixpoint not reached"):
-        D.connected_components(pairs, max_iters=1,
-                               algorithm="alternating").collect()
+        D.connected_components(pairs, max_iters=short,
+                               algorithm=algorithm).collect()
     # converged runs stay silent
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
-        D.connected_components(pairs, max_iters=10,
-                               algorithm="alternating").collect()
+        D.connected_components(pairs, max_iters=enough,
+                               algorithm=algorithm).collect()
 
 
 def test_semdedup_clusters_and_canonicals(spark):
@@ -1171,9 +1175,7 @@ def test_neardup_cluster_sizes_consistent_with_assignment(spark, sf_dir):
     Σ(n_clusters·cluster_size) = n_docs column = docs in non-singleton
     clusters, and every cluster size is >= 2."""
     import collections
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as em
     census = em.queries()["neardup_cluster_sizes"](spark, sf_dir).collect()
     assign = em.queries()["dedup_canonical"](spark, sf_dir).collect()

@@ -8,6 +8,8 @@ Goldens were computed once from the committed fixture
 derived from the code under test at runtime.
 """
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,7 +19,8 @@ from text_sentiment_classification_hadoop_spark_spark.operators import nb as NB
 from text_sentiment_classification_hadoop_spark_spark.operators import svm as SVM
 from text_sentiment_classification_hadoop_spark_spark.sources.tweets import label_col, read_tweets_naive
 
-FIXTURE = "/root/repo/fixtures/tweets_fixture.csv"
+REPO = Path(__file__).resolve().parents[1]
+FIXTURE = str(REPO / "fixtures" / "tweets_fixture.csv")
 
 
 @pytest.fixture(scope="module")
@@ -61,12 +64,10 @@ def test_bench_headline_names_resolve_in_registry():
     """Every bench headline name must be a live queries() key — a
     registry rename must fail HERE, not in the driver's bench run."""
     import importlib.util
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
     spec = importlib.util.spec_from_file_location(
-        "bench_mod", "/root/repo/bench.py")
+        "bench_mod", REPO / "bench.py")
     bench_mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench_mod)
     qs = set(entry.queries())

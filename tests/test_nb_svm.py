@@ -305,8 +305,6 @@ def test_nb_pr_curve_monotonicity(spark):
     """Raising the threshold can only trade recall for precision mass:
     tp and fp are non-increasing in the threshold, fn non-decreasing,
     and tp+fn (the positive count) is constant."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
     rows = entry.queries()["nb_pr_curve"](
         spark, "/root/testdata/sf0.001").orderBy("thr_idx").collect()

@@ -1,6 +1,8 @@
 """The pandas_udf escape hatch agrees with the native chains, and the
 plan shows Arrow evaluation (not row-at-a-time python)."""
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from text_sentiment_classification_hadoop_spark_spark.functions.cleaning import clean_chain_a, clean_chain_b
@@ -11,7 +13,7 @@ from text_sentiment_classification_hadoop_spark_spark.functions.udf_compat impor
 from text_sentiment_classification_hadoop_spark_spark.plans.explain import plan_string
 from text_sentiment_classification_hadoop_spark_spark.sources.tweets import read_tweets_naive
 
-FIXTURE = "/root/repo/fixtures/tweets_fixture.csv"
+FIXTURE = str(Path(__file__).resolve().parents[1] / "fixtures" / "tweets_fixture.csv")
 
 
 def test_pudf_chains_agree_with_native(spark):

@@ -153,8 +153,7 @@ def bpe_train(words: DataFrame, n_merges: int = 8,
 
     ``round_sizes`` (optional, caller-owned list): appended with the
     number of merges selected each round — the batch-FILL trace, i.e.
-    whether symbol-disjoint selection starves as the vocab saturates
-    (the failure mode probed by ``tools/bpe_scale_probe.py``).
+    whether symbol-disjoint selection starves as the vocab saturates.
 
     ``headroom``: the per-round driver read is ``headroom·k`` ranked
     candidate rows (``k=1`` always reads exactly 1); greedy

@@ -403,6 +403,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     # the per-round checkpoint + probe barrier is the dominant cost.
     batch_sizes = [1, 1, 1, 2]
     done = 0
+    converged = False
     while done < max_iters:
         probe_every = batch_sizes.pop(0) if batch_sizes else 4
         for _ in range(min(probe_every, max_iters - done)):
@@ -415,9 +416,22 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
         labels = labels.localCheckpoint(eager=True)
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
+            converged = True
             break
         prev_sum = cur_sum
+    if not converged:
+        _warn_cc_truncated("label_prop", max_iters)
     return labels.select("node", F.col("label").alias("component"))
+
+
+def _warn_cc_truncated(algorithm: str, max_iters: int) -> None:
+    """A truncated CC run can emit labels that are NOT component minima
+    (split components): surface it instead of returning silently."""
+    import warnings
+    warnings.warn(
+        f"connected_components(algorithm={algorithm!r}): fixpoint not "
+        f"reached within max_iters={max_iters}; component labels may be "
+        "split. Raise max_iters.", RuntimeWarning, stacklevel=3)
 
 
 def _cc_alternating(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
@@ -491,14 +505,7 @@ def _cc_alternating(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
             break
         prev = cur
     if not converged:
-        # a truncated run can emit labels that are NOT component minima
-        # (split components) — surface it instead of silently collapsing
-        import warnings
-        warnings.warn(
-            f"_cc_alternating: edge-set fixpoint not reached within "
-            f"max_iters={max_iters}; component labels may be split. "
-            "Raise max_iters or use cc_algorithm='label_prop'.",
-            RuntimeWarning, stacklevel=2)
+        _warn_cc_truncated("alternating", max_iters)
     # fixpoint edge set is (node → component-min) for every non-root;
     # the min-agg is a no-op on a converged star forest and a safe
     # collapse if max_iters cut the loop short of the fixpoint

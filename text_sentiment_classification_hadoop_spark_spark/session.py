@@ -207,8 +207,10 @@ def get_spark(
     requested = dict(extra_conf or {})
     # scale/deployment-dependent conf overrides WITHOUT code edits
     # (guide §9 experiments stay parameterized: local defaults above
-    # are the measured-best for the driver's local[N] bench; cluster
-    # values are justified per-experiment in OPTIMIZATION_r16.md):
+    # are the measured-best for the driver's local[N] bench; zstd
+    # shuffle I/O, shuffled-hash joins and a 64m AQE advisory size did
+    # not separate from noise at sf1 on local[32], so cluster values
+    # stay a per-deployment choice, not a default):
     #   SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for kv in filter(None, env_conf.split(";")):

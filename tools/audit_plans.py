@@ -6,17 +6,19 @@ regressions are visible as a diff, not an anecdote.
 Queries whose *construction* runs driver-side loops (iterative training
 / scalar-probe collects) are built like any other; their audited plan is
 the final returned DataFrame's (the loop's internals are covered by
-PLANS.md and tests/test_plans.py).
+tools/dump_plans.py and tests/test_plans.py).
 
-Usage: python tools/audit_plans.py  (writes /root/repo/PLANAUDIT.md)
+Usage: python tools/audit_plans.py  (writes PLANAUDIT.md at the repo root)
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 from text_sentiment_classification_hadoop_spark_spark.session import get_spark  # noqa: E402
@@ -98,7 +100,7 @@ def main() -> None:
             f"{len([1 for _, c in rows if c['exch'] == 0])} exchange-free; "
             f"cartesian products: {len(carts)}"
             + (f" ({', '.join(carts)})" if carts else "") + ".**"]
-    with open("/root/repo/PLANAUDIT.md", "w") as f:
+    with open(os.path.join(REPO, "PLANAUDIT.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANAUDIT.md ({len(rows)} queries, {len(failures)} failures)")
     spark.stop()

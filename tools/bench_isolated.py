@@ -1,66 +1,44 @@
 """Isolated per-query benchmark: fresh-JVM medians for the expensive tail.
 
 SCALE.md §16 measured ±20% ambient spread on identical-code HEADLINE
-totals, so round-over-round regress/win claims need a better signal:
-each named query timed in its OWN fresh Spark session (new subprocess →
+totals, so per-query regress/win claims need a better signal: each
+named query timed in its OWN fresh Spark session (new subprocess →
 new JVM, no relation cache, no memoized per-session relations, no heap
 pressure inherited from 270 earlier queries), repeated ``--repeat``
 times, reported as the median (VERDICT r8 ask #3).
 
 Default query list: the top ``--top`` (20) most expensive registry
 entries by the committed ``bench_result.json`` per-query medians.
-``--headline`` instead covers EVERY ``bench.HEADLINE_QUERIES`` entry —
-since round 11 this full-coverage run is the committed
-``BENCH_ISOLATED_r{N}.json``, and round-over-round perf deltas are
-read from it; the in-bench ``BENCH_r{N}.json`` is the driver-contract
-number only (VERDICT r10 ask #2: the in-bench total moved ±20-25% on
-identical code twice, while these isolated medians moved the other
-way).
+``--headline`` instead covers EVERY ``bench.HEADLINE_QUERIES`` entry.
 
 Usage:
-    python tools/bench_isolated.py --headline --json BENCH_ISOLATED_r11.json
-    python tools/bench_isolated.py --json BENCH_ISOLATED_r9.json   # top-20
+    python tools/bench_isolated.py --headline --json isolated.json
+    python tools/bench_isolated.py --json isolated.json   # top-20
     python tools/bench_isolated.py --names jaccard_prefix_pairs --repeat 3
     python tools/bench_isolated.py --worker jaccard_prefix_pairs   # internal
 
-The artifact maps name -> {median, samples, rows}; compare the medians
-across rounds — they carry the isolation guarantees the headline total
-cannot.
-
-Round 15 additions (VERDICT r14 asks #2/#3 + ADVICE):
+The output maps name -> {median, samples, rows}.
 
 * ``--roundrobin`` collects trials in PASSES over the whole query list
   (one fresh-JVM sample per query per pass) instead of back-to-back
   repeats per query.  Two properties the back-to-back order lacks:
-  a run truncated at the round boundary has ONE sample for every query
-  (full coverage) rather than three samples for a prefix; and a
-  transient ambient burst (another process, GC storm) contaminates at
-  most one of each query's samples — which the median then rejects —
-  instead of landing all three trials of the queries unlucky enough to
-  run inside it.
-* ``--resume`` now seeds SAMPLES (not just medians) and intersects the
-  carried-over keys with the current run's name selection, so a
-  narrower ``--names``/``--top`` rerun cannot silently mix medians from
-  a different query set into the rewritten artifact (ADVICE r14).
-  Queries resume until they hold ``--repeat`` samples.
+  a truncated run has ONE sample for every query (full coverage)
+  rather than three samples for a prefix; and a transient ambient
+  burst (another process, GC storm) contaminates at most one of each
+  query's samples — which the median then rejects — instead of
+  landing all three trials of the queries unlucky enough to run
+  inside it.
+* ``--resume`` seeds SAMPLES from an existing ``--json`` file and
+  intersects the carried-over keys with the current run's name
+  selection, so a narrower ``--names``/``--top`` rerun cannot silently
+  mix medians from a different query set into the rewritten file
+  (ADVICE r14). Queries resume until they hold ``--repeat`` samples.
+
 Known measurement asymmetry (ADVICE r15, documented rather than
 "fixed"): the worker warms the Arrow local-relation class-load out of
-the timed region, but NOT the Python-worker-daemon startup that the
-pre-r15 pickled ``createDataFrame`` path paid inside its timed query —
-so interleaved A/B runs against a pre-r15 pinned worktree can overstate
-per-query speedups by that one-time daemon cost. Deliberately left
-asymmetric: adding a pickled-path warmup NOW would shift daemon startup
-out of the timed region for the queries that still carry designed
-Python stages (multimodal ``mm_*``, the refmodel readback) and
-manufacture a phantom round-over-round win against every committed
-artifact measured without it.
-
-* The §34 re-measure rule is now a POST-PASS in this tool, not a
-  hand-applied convention: after the main loop, any query whose median
-  exceeds ``REMEASURE_RATIO``× its median in the previous committed
-  round artifact and holds fewer than ``--repeat`` samples is
-  automatically topped up to ``--repeat`` samples (VERDICT r14 found 7
-  qualifying rows hand-skipped in r14's artifact).
+the timed region, but NOT the Python-worker-daemon startup, so the
+queries that carry designed Python stages (multimodal ``mm_*``, the
+refmodel readback) pay daemon startup inside their timed query.
 """
 
 from __future__ import annotations
@@ -75,34 +53,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-#: §34 rule: a median landing above this ratio of its previous-round
-#: median is re-measured to full ``--repeat`` depth before the artifact
-#: is considered final (single ambient draws are not trustworthy 2×
-#: "regressions" — VERDICT r13/r14).
-REMEASURE_RATIO = 2.0
-
-
-def _prev_round_medians(current_json: str | None) -> dict[str, float]:
-    """Medians from the most recent committed round artifact that is not
-    the file this run is writing (the §34 comparison baseline)."""
-    import glob
-    import re
-
-    arts = sorted(
-        (p for p in glob.glob(os.path.join(REPO, "BENCH_ISOLATED_r*.json"))
-         if re.search(r"_r(\d+)\.json$", p)),
-        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)))
-    cur = os.path.abspath(current_json) if current_json else None
-    for p in reversed(arts):
-        if cur and os.path.abspath(p) == cur:
-            continue
-        with open(p) as f:
-            q = json.load(f)["queries"]
-        return {k: v["median"] for k, v in q.items()
-                if v.get("median") is not None}
-    return {}
-
 
 def run_worker(name: str, sf_dir: str) -> None:
     """Time ONE query in THIS (fresh) process and print a JSON line."""
@@ -152,8 +102,7 @@ def main() -> int:
     ap.add_argument("--names", default=None,
                     help="comma list; default = --top by bench_result.json")
     ap.add_argument("--headline", action="store_true",
-                    help="cover every bench.HEADLINE_QUERIES entry "
-                         "(the committed per-round artifact)")
+                    help="cover every bench.HEADLINE_QUERIES entry")
     ap.add_argument("--top", type=int, default=20)
     ap.add_argument("--repeat", type=int, default=3)
     ap.add_argument("--sf", default=os.environ.get(
@@ -172,9 +121,6 @@ def main() -> int:
                          "back-to-back repeats per query — truncation "
                          "leaves full 1-sample coverage and ambient "
                          "bursts touch at most one sample per query")
-    ap.add_argument("--no-remeasure", action="store_true",
-                    help="skip the §34 >2x-vs-previous-round automatic "
-                         "re-measure post-pass")
     args = ap.parse_args()
 
     if args.worker:
@@ -184,25 +130,8 @@ def main() -> int:
     if args.names:
         names = args.names.split(",")
     elif args.headline:
-        import glob
-        import re
-
         import bench
         names = list(bench.HEADLINE_QUERIES)
-        # queries with no median in the most recent committed artifact
-        # run FIRST: a run truncated by the round boundary still covers
-        # the entries that have never had an isolated median (the same
-        # failure the r12 headline-drift check exists to prevent)
-        # only digit-suffixed artifacts (a stray BENCH_ISOLATED_rerun.json
-        # must be skipped, not crash the --headline path — ADVICE r12)
-        arts = sorted(
-            (p for p in glob.glob(os.path.join(REPO, "BENCH_ISOLATED_r*.json"))
-             if re.search(r"_r(\d+)\.json$", p)),
-            key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)))
-        if arts:
-            with open(arts[-1]) as f:
-                prev = set(json.load(f)["queries"])
-            names.sort(key=lambda n: (n in prev))  # stable: new first
     else:
         names = default_names(args.top)
     results: dict[str, dict] = {}
@@ -282,32 +211,6 @@ def main() -> int:
             results.setdefault(name, ent)
             print(f"{name}: median {ent['median']}s over {ent['samples']} "
                   f"({ent['rows']} rows)", flush=True)
-
-    # §34 post-pass (VERDICT r14 ask #2): any median landing above
-    # REMEASURE_RATIO x its previous-round median with fewer than
-    # --repeat samples is topped up automatically — the rule lives in
-    # the instrument so it cannot be hand-skipped again.
-    if not args.no_remeasure:
-        prev = _prev_round_medians(args.json)
-        flagged = [n for n, ent in sorted(results.items())
-                   if ent.get("median") is not None
-                   and prev.get(n)
-                   and ent["median"] > REMEASURE_RATIO * prev[n]
-                   and len(ent["samples"]) < args.repeat]
-        if flagged:
-            print(f"§34 re-measure: {len(flagged)} rows >"
-                  f"{REMEASURE_RATIO}x previous-round median with "
-                  f"<{args.repeat} samples: {flagged}", flush=True)
-        for name in flagged:
-            while len(results[name]["samples"]) < args.repeat:
-                trial = len(results[name]["samples"])
-                out = one_trial(name, trial)
-                record(name, out)
-                if out is None:
-                    break
-            ent = results[name]
-            print(f"§34 {name}: median {ent['median']}s over "
-                  f"{ent['samples']}", flush=True)
 
     if args.json:
         _write(args.json, args, results)

@@ -12,13 +12,15 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 from datetime import date, datetime
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from text_sentiment_classification_hadoop_spark_spark.session import get_spark  # noqa: E402
@@ -99,9 +101,7 @@ def main():
     ap.add_argument("--only", default=None)
     ap.add_argument("-v", "--verbose", action="store_true")
     ap.add_argument("--json", default=None, metavar="PATH",
-                    help="write a per-query result record (the committed "
-                         "SELFCHECK_r{N}.json artifact: full-registry "
-                         "self-verification each round, VERDICT r6 ask #1)")
+                    help="write a per-query result record as JSON")
     args = ap.parse_args()
 
     con = duckdb.connect()
@@ -171,8 +171,8 @@ def main():
             n_pass += 1
     skip_note = f", {n_skip} sf-pinned-skip" if n_skip else ""
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} no-oracle{skip_note}")
-    # pin the artifact to the registry: a full (non --only) run MUST
-    # have covered every queries() entry — a SELFCHECK generated before
+    # pin the record to the registry: a full (non --only) run MUST
+    # have covered every queries() entry, so a record generated before
     # a trailing commit added queries can't silently strand them
     # (VERDICT r7 ask #2).
     n_covered = n_pass + n_fail + n_noracle + n_skip

@@ -3,14 +3,16 @@ queries, as evidence the plans are the intended ones (broadcasts where
 expected, pushdown reaching parquet, partial aggregation, no stray
 exchanges, Arrow-batched Python only where designed).
 
-Usage: python tools/dump_plans.py  (writes /root/repo/PLANS.md)
+Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 from text_sentiment_classification_hadoop_spark_spark.session import get_spark  # noqa: E402
@@ -225,7 +227,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         out += [f"## {name}", "", f"*{why}*", "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

@@ -1,5 +1,5 @@
 """Public-operator registry audit — VERDICT r12 ask #1 (second half):
-``unigram_token_counts`` shipped post-roundclose with pytest-only
+``unigram_token_counts`` once shipped with pytest-only
 coverage because nothing enforced that a public operator function is
 exercised by the driver-checkable registry. This gate makes that
 structural: every PUBLIC function defined in the engine package must
@@ -30,7 +30,7 @@ enough to catch the observed failure mode — a leaf capability whose
 only consumers are tests.
 
 Run: ``python tools/operator_registry_audit.py`` (exit 1 on findings);
-wired into ``tools/roundclose.py`` and ``tests/test_roundclose.py``.
+``tests/test_operator_registry_audit.py`` runs it in Tier-1.
 """
 
 from __future__ import annotations

@@ -22,10 +22,12 @@ from __future__ import annotations
 import argparse
 import json
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 from text_sentiment_classification_hadoop_spark_spark.session import get_spark  # noqa: E402
@@ -46,7 +48,7 @@ def main() -> None:
     if args.names:
         names = args.names.split(",")
     else:
-        with open("/root/repo/bench_result.json") as fh:
+        with open(os.path.join(REPO, "bench_result.json")) as fh:
             q = json.load(fh)["queries"]
         names = [n for n, _ in sorted(q.items(), key=lambda kv: -kv[1])[:args.top]]
 
