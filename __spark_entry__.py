@@ -603,7 +603,7 @@ def _bpe_merges_sql(n_merges: int = BPE_MERGES) -> str:
 
 BPE_BATCH_K = 4
 
-# the headroom-16 registry configuration (VERDICT r13 ask #1): batch
+# the headroom-16 registry configuration: batch
 # and merge count sized so the widened candidate window is actually
 # consulted at oracle scales — see _bpe_merges_headroom16's docstring
 BPE_H16_MERGES = 32
@@ -628,10 +628,9 @@ def _bpe_merges_batched_sql(n_merges: int = BPE_MERGES,
     the worst case (one merge per round, ``n_merges`` rounds);
     exhausted-quota rounds degrade to no-ops exactly like the Spark
     loop's exit. ``headroom`` parameterizes the candidate-window
-    width exactly as ``bpe_train(headroom=...)`` does (VERDICT r13
-    ask #1: the headroom-16 configuration the §26 probe recommends
-    is driver-checked by ``bpe_merges_headroom16`` through this same
-    oracle text)."""
+    width exactly as ``bpe_train(headroom=...)`` does (the headroom-16
+    configuration the §26 probe recommends is driver-checked by
+    ``bpe_merges_headroom16`` through this same oracle text)."""
     from text_sentiment_classification_hadoop_spark_spark.operators.bpe import REPLACE_PASSES
     parts = [
         """wf AS MATERIALIZED (
@@ -815,7 +814,7 @@ def _unigram_token_counts_sql() -> str:
     NULL ``n_pieces``/``cost_micro`` for exactly the words the Spark
     side reports as unsegmentable (longer than max_word_len — no
     lattice row at all — or unreachable at pos=len), never dropping a
-    word (ADVICE r12 NULL contract)."""
+    word (the NULL contract)."""
     parts, em, W = _unigram_parts()
     parts.append(f"""lA AS MATERIALIZED (
   SELECT e.word, e.len, e.i, e.j, v.cost_micro AS cost
@@ -1601,8 +1600,8 @@ PACK_FFD_DOCS_PER_BUCKET = 500
 
 
 def _pack_sequences_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-doc first-fit-decreasing sequence packing (VERDICT r13
-    ask #5 — the last standard LLM-data-prep step): budgets are the
+    """Whole-doc first-fit-decreasing sequence packing (the last
+    standard LLM-data-prep step): budgets are the
     LEARNED-tokenizer per-doc counts (``bpe_doc_token_counts`` under
     the standard 8 registry merges), salted into
     ``ceil(n_docs / PACK_FFD_DOCS_PER_BUCKET)`` independent packing
@@ -2014,7 +2013,7 @@ def _copurchase_rel(spark: SparkSession, sf_dir: str):
     materialized ONCE per session and shared by the graph queries
     (components / BFS / PageRank ×2 / co-occurrence) — each used to
     rebuild the same self-join from scratch (~20 s of the registry
-    bench recomputing one frame four times; VERDICT r6 ask #2). Every
+    bench recomputing one frame four times). Every
     query stays independently callable: a cold context computes the
     frame exactly as before, so results (and hashes) are unchanged;
     eviction frees the checkpoint blocks (``reuse.py``)."""
@@ -2034,22 +2033,16 @@ def _copurchase_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the co-purchase graph — the frontier-loop graph primitive
     (operators/graph.bfs_depths); recursive-CTE oracle."""
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    from text_sentiment_classification_hadoop_spark_spark.session import scoped_shuffle_partitions
-    with scoped_shuffle_partitions(spark, 8):
-        return G.bfs_depths(G.edges_from_rel(_copurchase_rel(spark, sf_dir)),
-                            source=1, max_rounds=4)
+    return G.bfs_depths(G.edges_from_rel(_copurchase_rel(spark, sf_dir)),
+                        source=1, max_rounds=4)
 
 
 def _copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-iteration fixed-point PageRank over the customer<->supplier
     co-purchase graph — bit-exact BIGINT ranks (operators/graph.py)."""
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    from text_sentiment_classification_hadoop_spark_spark.session import scoped_shuffle_partitions
-    # local[32] tuning: per-iteration checkpoints on a small graph —
-    # task latency, not data, dominates at 32 partitions
-    with scoped_shuffle_partitions(spark, 8):
-        ranks = G.pagerank_fixed_point(
-            G.edges_from_rel(_copurchase_rel(spark, sf_dir)), iters=3)
+    ranks = G.pagerank_fixed_point(
+        G.edges_from_rel(_copurchase_rel(spark, sf_dir)), iters=3)
     return ranks.orderBy("node")
 
 
@@ -2057,11 +2050,9 @@ def _copurchase_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame
     """Weight-proportional variant: edges carry co-purchase
     multiplicities, contributions split as (rank·w) div sum_w."""
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    from text_sentiment_classification_hadoop_spark_spark.session import scoped_shuffle_partitions
-    with scoped_shuffle_partitions(spark, 8):
-        ranks = G.pagerank_fixed_point(
-            G.edges_from_rel_weighted(_copurchase_rel(spark, sf_dir)),
-            iters=3, weight_col="w")
+    ranks = G.pagerank_fixed_point(
+        G.edges_from_rel_weighted(_copurchase_rel(spark, sf_dir)),
+        iters=3, weight_col="w")
     return ranks.orderBy("node")
 
 
@@ -2074,19 +2065,16 @@ def _copurchase_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    from text_sentiment_classification_hadoop_spark_spark.session import scoped_shuffle_partitions
     edges = G.edges_from_rel(_copurchase_rel(spark, sf_dir))
     # 3-row collect = the J4 scalar-broadcast pattern; smallest ids are
     # deterministic at every sf (the oracle derives the same set in SQL)
     seeds = [r["node"] for r in
              edges.select(F.col("src").alias("node"))
              .distinct().orderBy("node").limit(3).collect()]
-    with scoped_shuffle_partitions(spark, 8):
-        # seeds come from the graph's own node set two lines up —
-        # pre-validated by construction, so skip the anti-join
-        # validation job (ADVICE r12)
-        ranks = G.pagerank_personalized(edges, seeds, iters=3,
-                                        validate_seeds=False)
+    # seeds come from the graph's own node set two lines up —
+    # pre-validated by construction, so skip the anti-join validation job
+    ranks = G.pagerank_personalized(edges, seeds, iters=3,
+                                    validate_seeds=False)
     return ranks.orderBy("node")
 
 
@@ -2098,16 +2086,14 @@ def _copurchase_ppr_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    from text_sentiment_classification_hadoop_spark_spark.session import scoped_shuffle_partitions
     edges = G.edges_from_rel_weighted(_copurchase_rel(spark, sf_dir))
     seeds = [r["node"] for r in
              edges.select(F.col("src").alias("node"))
              .distinct().orderBy("node").limit(3).collect()]
-    with scoped_shuffle_partitions(spark, 8):
-        # seeds derived from the node set above — pre-validated (ADVICE r12)
-        ranks = G.pagerank_personalized(edges, seeds, iters=3,
-                                        weight_col="w",
-                                        validate_seeds=False)
+    # seeds derived from the node set above — pre-validated
+    ranks = G.pagerank_personalized(edges, seeds, iters=3,
+                                    weight_col="w",
+                                    validate_seeds=False)
     return ranks.orderBy("node")
 
 
@@ -2137,10 +2123,8 @@ def _copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (TPC-H SF <= ~6); copurchase_rel fails the query above it. And
     # connected_components symmetrizes internally, so the pair SET the
     # CC loop sees is identical.
-    # local[32] tuning only: ~16k nodes, so per-round task latency
-    # dominates — 8 partitions, not 32
-    return D.connected_components(pairs, algorithm="alternating",
-                                  shuffle_partitions=8).orderBy("node")
+    return D.connected_components(pairs, algorithm="alternating") \
+        .orderBy("node")
 
 
 def _supplier_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2169,12 +2153,9 @@ def _copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     label per connected component. Shares the memoized co-purchase
     relation with the five other graph queries."""
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    # No scoped_shuffle_partitions here (ADVICE r9: the r9 scope was a
-    # no-op — lpa_communities returns a lazy plan whose round shuffles
-    # run at collection time under session confs). Measured at sf0.1
-    # the lazy AQE-fused plan at session defaults is also the FASTEST
-    # variant (~1.7 s warm vs ~3-4 s for eager-materialized at 8/16/32
-    # partitions), so the no-op scope is removed rather than enforced.
+    # Left lazy: measured at sf0.1 the AQE-fused plan at session
+    # defaults is the FASTEST variant (~1.7 s warm vs ~3-4 s for
+    # eager-materialized at 8/16/32 shuffle partitions).
     labels = G.lpa_communities(
         G.edges_from_rel_weighted(_copurchase_rel(spark, sf_dir)),
         rounds=3)
@@ -2185,7 +2166,7 @@ def _copurchase_communities_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted synchronous LPA at rounds=6 — same contract as
     ``copurchase_communities`` but deep enough to cross the operator's
     every-4-rounds lineage checkpoint (``graph.lpa_communities``,
-    ``r % 4 == 3`` with rounds remaining; VERDICT r10 ask #3): rounds
+    ``r % 4 == 3`` with rounds remaining): rounds
     4-6 resume from the materialized round-3 label table, so the
     checkpoint branch itself is driver-hash-verified against the
     6-round unrolled-SQL oracle. Measured plan effect is in the
@@ -2242,7 +2223,7 @@ def _unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """APPLY side of the unigram-LM tokenizer (VERDICT r12 ask #1):
+    """APPLY side of the unigram-LM tokenizer:
     train the vocab over documents, then Viterbi-segment every corpus
     word → per-word ``(freq, n_pieces, cost_micro)`` token budgets —
     the sequence-packing/token-accounting number, the
@@ -2285,7 +2266,7 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCHED BPE training (``batch_k=4`` — the 100 TB job-count
-    lever, VERDICT r9 ask #3): each round selects up to 4
+    lever): each round selects up to 4
     symbol-disjoint pairs (over inputs AND merged outputs, so the
     round's rewrites commute) from one ranked pair count and applies
     them in one rewrite — job count drops ~4-fold vs sequential BPE.
@@ -2298,7 +2279,7 @@ def _bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_merges_headroom16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched BPE training at the PRODUCTION candidate-window
-    configuration (VERDICT r13 ask #1): ``headroom=16``, the setting
+    configuration: ``headroom=16``, the setting
     the §26 scale probe measured at fill 0.17→0.47, rounds 46→17,
     wall −27% on the real tweet corpus — SCALE.md §17's production
     arithmetic assumes it, so the driver contract must check it.
@@ -2426,8 +2407,8 @@ def _ivf_cells_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with the hierarchical two-level assignment (VERDICT r14
-    ask #1): same augmented corpus, k=32 cells, threshold 0.9 as
+    """SemDeDup with the hierarchical two-level assignment: same
+    augmented corpus, k=32 cells, threshold 0.9 as
     ``semdedup`` — only the assignment stage differs (G=6 group probe
     then the routed group's members instead of all 32 cells)."""
     emb = _augmented_embeddings(spark, sf_dir)
@@ -2521,12 +2502,9 @@ def _neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    from text_sentiment_classification_hadoop_spark_spark.session import scoped_shuffle_partitions
     edges = _near_dup_pairs(spark, sf_dir).select(
         F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    with scoped_shuffle_partitions(spark, 8):
-        core = G.kcore_peel(edges, k=2, rounds=3)
-    return core.orderBy("node")
+    return G.kcore_peel(edges, k=2, rounds=3).orderBy("node")
 
 
 def _mm_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2620,8 +2598,8 @@ def _mllib_confusion(algorithm: str):
 # fully fix — a 1-ulp weight flip exactly at a decision boundary would
 # flake this pin. Never observed across r1–r5 driver runs + three
 # configs; if it ever fires, re-derive the pin, don't loosen the hash.
-# Keyed by sf tag so BOTH selfcheck scales compare instead of skipping
-# (VERDICT r8 ask #2). Every pin was derived twice — local[32]/32 and
+# Keyed by sf tag so BOTH selfcheck scales compare instead of
+# skipping. Every pin was derived twice — local[32]/32 and
 # local[7]/13 shuffle partitions — and came out bit-identical, same
 # protocol as the original sf0.01 derivation. ``oracle_sql()`` ships the
 # sf0.01 entry (the driver's scale); ``tools/check_correctness.py``
@@ -2638,7 +2616,7 @@ _MLLIB_GOLDENS = {
                 (1.0, 1.0, 38)],
     },
     # derived at the bench scale so the sf0.1 full-registry selfcheck
-    # (VERDICT r10 ask #1) runs with ZERO sf-pinned skips; reproduced
+    # runs with ZERO sf-pinned skips; reproduced
     # twice back-to-back before pinning (the 8-partition doc_id-sorted
     # pre-split layout makes the counts session-config-invariant)
     "sf0.1": {
@@ -3302,7 +3280,7 @@ def _nb_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _active_learning_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-example mining for the sentiment task (VERDICT r12 ask #7)
+    """Hard-example mining for the sentiment task
     — the standard active-learning batch-selection loop, composing
     three registry families in ONE driver-checkable plan:
 
@@ -3361,7 +3339,7 @@ def _nb_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     2·n_pos·n_neg ≈ 9e18, i.e. ~2e9 test rows per class); the single
     division is the final ``sql_ir38``. The ascending tier cumulative
     runs the two-phase distributed prefix sum (``ranged_cumsum``, the
-    ``ks_price_shift`` form — VERDICT r11 ask #5): range exchange on
+    ``ks_price_shift`` form): range exchange on
     the margin, in-partition window, per-partition offsets re-lit, so
     the tier frame never crosses a SinglePartition window even when
     margins barely tie and tiers ≈ test rows."""
@@ -3660,12 +3638,10 @@ def _copurchase_cheapest_paths(spark: SparkSession,
     from pyspark.sql import functions as F
 
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    from text_sentiment_classification_hadoop_spark_spark.session import scoped_shuffle_partitions
     edges = (G.edges_from_rel_weighted(_copurchase_rel(spark, sf_dir))
              .select("src", "dst",
                      F.expr("CAST(1000000 DIV w AS LONG)").alias("cost")))
-    with scoped_shuffle_partitions(spark, 8):
-        return G.bellman_ford_costs(edges, source=1, rounds=4)
+    return G.bellman_ford_costs(edges, source=1, rounds=4)
 
 
 def _brand_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3715,9 +3691,7 @@ def _basket_rules_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.association_rules_topk); shares the memoized
     orders×lineitem relation with the graph family."""
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
-    from text_sentiment_classification_hadoop_spark_spark.session import scoped_shuffle_partitions
-    with scoped_shuffle_partitions(spark, 8):
-        return G.association_rules_topk(_copurchase_rel(spark, sf_dir))
+    return G.association_rules_topk(_copurchase_rel(spark, sf_dir))
 
 
 def _embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3865,7 +3839,7 @@ def _evolved_union_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the write → evolved-read → aggregate path is lossless,
     including the NULL backfill accounting (``n_legacy`` counts rows
     whose file predates the column). Registry datapoint for
-    sources/layout.py (VERDICT r6 ask #4). At 100 TB this is the whole
+    sources/layout.py. At 100 TB this is the whole
     point: adding a column is a metadata event, never a backfill job —
     the read plan pays one footer merge per file group."""
     from pyspark.sql import functions as F
@@ -3901,7 +3875,7 @@ def _compaction_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. The file-count reduction itself (64 → size-derived,
     driver-side metadata walk) is asserted by
     ``tests/test_bucketing.py::test_compact_files_identity_and_count``.
-    Registry datapoint for sources/layout.py (VERDICT r6 ask #4)."""
+    Registry datapoint for sources/layout.py."""
     from pyspark.sql import functions as F
 
     from text_sentiment_classification_hadoop_spark_spark.functions.hashing import portable_hash64
@@ -4150,7 +4124,7 @@ def _mixture_token_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _store_scratch_path(sf_dir: str, tag: str, pid: int | None = None) -> str:
     """Pure path derivation for a store drive's scratch base (split out
     so the hygiene pytest asserts against THIS function instead of a
-    hand-copied string format — ADVICE r10 #4)."""
+    hand-copied string format)."""
     import os
     import tempfile
     return os.path.join(
@@ -4165,7 +4139,7 @@ def _store_scratch(sf_dir: str, tag: str) -> str:
     re-runs, a different sf) rebuild the store from the sf tables
     instead of replaying a stale checkpoint onto stale contents.
 
-    The path is keyed by the driver PID (ADVICE r9): two concurrent
+    The path is keyed by the driver PID: two concurrent
     sessions running the same store drive (bench + correctness check),
     or two sf dirs sharing a basename, get disjoint directories instead
     of racing on the rmtree/rebuild mid-stream. Within one process the
@@ -4173,7 +4147,7 @@ def _store_scratch(sf_dir: str, tag: str) -> str:
     the wipe-and-rebuild contract the hygiene pytest pins.
 
     Entry also best-effort prunes sibling dirs left by driver processes
-    that are no longer alive (ADVICE r10 #3: pid-keying made the
+    that are no longer alive (pid-keying made the
     rmtree-on-entry per-process, so dead processes' store dirs — which
     hold real parquet data — accumulated across bench/correctness runs
     as a slow disk leak). Only dirs whose trailing ``_<pid>`` names a
@@ -7490,7 +7464,7 @@ SELECT q.doc_id, q.grp AS lang, q.score AS n_chars, q.rk,
 FROM q JOIN ds USING (doc_id) JOIN sp USING (doc_id)
 ORDER BY q.doc_id
 """
-    # Persistent-store drives (r8 ask #5): final store contents are
+    # Persistent-store drives: final store contents are
     # batch-order-invariant, so the oracles are plain batch recomputes.
     out["count_store_contents"] = """
 SELECT word, CAST(count(*) AS BIGINT) AS cnt
@@ -9955,7 +9929,7 @@ FROM l{rounds} ORDER BY node
 
     out["copurchase_communities"] = _lpa_sql(3)
     # rounds=6 crosses lpa_communities' every-4-rounds lineage
-    # checkpoint (graph.py; VERDICT r10 ask #3) — the post-checkpoint
+    # checkpoint (graph.py) — the post-checkpoint
     # rounds resume from a materialized label table, and THIS query
     # puts that branch under the driver's hash gate, not just pytest
     out["copurchase_communities_deep"] = _lpa_sql(6)

@@ -89,7 +89,7 @@ HEADLINE_QUERIES = [
         "copurchase_pagerank_weighted", "copurchase_components",
         "neardup_triangles",
         "neardup_kcore",
-        # round-11 additions (VERDICT r11 ask #1: every new registry
+        # round-11 additions (every new registry
         # query joins the headline set the round it lands, so the
         # isolated fresh-JVM bench covers it from its first round)
         "cuped_ab_lift", "copurchase_ppr", "copurchase_ppr_weighted",
@@ -101,12 +101,12 @@ HEADLINE_QUERIES = [
         "basket_rules_topk", "jaccard_prefix_pairs",
         "mllib_svm_confusion", "part_entity_resolution",
         # round-13 additions (+ the pre-existing M7 headline hole,
-        # VERDICT r12 ask #2: mllib_nb_confusion's SVM sibling was
+        # mllib_nb_confusion's SVM sibling was
         # promoted in r11 but M7 itself never was)
         "mllib_nb_confusion", "active_learning_batch",
         "salted_segment_revenue", "bpe_merges_roundtrip",
         "band_index_store_contents",
-        # r13 one-time sweep (VERDICT r12 ask #2): every reference-
+        # r13 one-time sweep: every reference-
         # parity query gets a first-class isolated median — the M7
         # hole must be structurally impossible for the parity set
         "tweets_parse_naive", "tweets_parse_svm", "tweets_parse_strict",
@@ -129,7 +129,7 @@ HEADLINE_QUERIES = [
         "stream_winnow_fingerprints",
         "stream_doc_repetition", "stream_curation_gates",
         "stream_neardup_candidates", "stream_hourly_profile",
-    # round-14 additions (VERDICT r13 asks #1 and #5)
+    # round-14 additions
     "bpe_merges_headroom16", "pack_sequences_ffd",
     "packed_shards_readback",
 ]
@@ -157,7 +157,7 @@ def previous_inline_names(repo_dir: str) -> list[str]:
 def build_inline_line(base: dict, timings: dict, core: list[str],
                       pinned: list[str], budget: int = 1900) -> str:
     """The ONE stdout JSON line, sized to the driver's 2000-char capture
-    buffer. Inclusion is deterministic (VERDICT r15 ask #6): ``core``
+    buffer. Inclusion is deterministic: ``core``
     (the reference-workload set), then ``pinned`` (every name the
     previous round's line showed — so the round-over-round comparable
     set only ever GROWS while names stay in the registry), then
@@ -245,8 +245,8 @@ def main() -> None:
     # round-over-round movers can be judged against measured noise.
     import statistics
 
-    # Ambient-pressure hygiene + instrumentation (VERDICT r7 ask #3:
-    # the 217-query common subtotal drifted +16% r6→r7 with no plan
+    # Ambient-pressure hygiene + instrumentation (the
+    # 217-query common subtotal drifted +16% r6→r7 with no plan
     # changes — consistent with JVM heap/GC pressure accumulating over
     # a longer single-process run). Between passes: drop the SQL
     # relation cache and prompt a full GC so ContextCleaner releases

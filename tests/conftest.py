@@ -11,7 +11,7 @@ from hypothesis import HealthCheck, settings  # noqa: E402
 
 from text_sentiment_classification_hadoop_spark_spark.session import get_spark  # noqa: E402
 
-# Hypothesis example budget (VERDICT r10 ask #6: property tests are the
+# Hypothesis example budget (property tests are the
 # suite's top cost — every @given example that touches Spark pays a
 # createDataFrame+collect round-trip, so example counts ARE suite
 # seconds). Tests inherit max_examples from the active profile instead
@@ -41,8 +41,8 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    # core count env-overridable for suite-time experiments (SCALE.md
-    # §32: 8 vs 4 measured only ~4% on the heaviest files — the suite
+    # core count env-overridable for suite-time experiments (8 vs 4
+    # measured only ~4% on the heaviest files — the suite
     # is per-job-overhead-bound, not CPU-bound, so the knob stays at a
     # mild 8); shuffle_partitions stays pinned at 4 so plan-shape
     # tests (AQE skew, occupancy, bucket fan-out) see the same

@@ -1,5 +1,5 @@
 """The one-line bench JSON's inline ``queries`` dict must be a
-DETERMINISTIC, additions-only surface (VERDICT r15 ask #6): the
+DETERMINISTIC, additions-only surface: the
 driver's PERF comparison reads it, and the old cost-ordered fill
 manufactured "dropped" queries every round — 5 of r15's 9 phantom
 drops were that round's own wins falling out because they got faster.

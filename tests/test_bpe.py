@@ -215,8 +215,8 @@ def test_fertility_by_group_bounds_and_consistency(spark):
 def test_bpe_batch_k1_is_sequential_semantics(spark):
     """batch_k=1 must degenerate bit-exactly to sequential BPE: the
     Sennrich worked example's merge list is pinned above; the batched
-    code path with k=1 must reproduce it (VERDICT r8 ask #4 contract —
-    the registry's bpe_merges hash rides on this)."""
+    code path with k=1 must reproduce it (the
+    registry's bpe_merges hash rides on this)."""
     texts = (["low"] * 5) + (["lower"] * 2) + (["newest"] * 6) + (["widest"] * 3)
     wf = BPE.word_freqs(_docs(spark, [" ".join(texts)]))
     assert BPE.bpe_train(wf, n_merges=4, batch_k=1) == [
@@ -249,7 +249,7 @@ def test_bpe_batched_rounds_select_symbol_disjoint_pairs(spark):
 
 
 def test_bpe_batch_selection_defers_output_input_collisions():
-    """ADVICE r9 (medium): a candidate whose INPUT equals an earlier-
+    """A candidate whose INPUT equals an earlier-
     selected pair's merged OUTPUT must defer ('th e' after 't h' →
     output 'th'), else the round's chained rewrites merge occurrences
     created mid-round that were never counted. The reverse direction
@@ -265,7 +265,7 @@ def test_bpe_batch_selection_defers_output_input_collisions():
 
 
 def test_bpe_headroom_lifts_starved_fill(spark):
-    """VERDICT r13 ask #1: the candidate window (``headroom·k`` driver
+    """The candidate window (``headroom·k`` driver
     rows) is what a starved round is limited by. Corpus built so the
     top of the ranking is symbol-entangled ('a b'/'b </w>'/'a c' all
     collide) while disjoint candidates sit just below the narrow

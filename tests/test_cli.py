@@ -5,7 +5,7 @@ One test (the nb-compat golden) drives the REAL ``python -m`` surface in
 a subprocess — entrypoint wiring, arg parsing, exit code, its own Spark
 lifecycle. The rest call ``main(argv, spark=...)`` in-process against
 the suite's shared session: same code path from argparse down, without
-paying a fresh JVM per command (r8 ask #6 — the seven subprocess tests
+paying a fresh JVM per command (the seven subprocess tests
 were ~136 s of the suite, almost all of it Spark startup).
 """
 

@@ -301,9 +301,8 @@ def test_lpa_matches_python_simulation(spark):
     the documented rule (Σw argmax, ties → smallest label) on a
     pseudo-random weighted graph, at three round counts — rounds=6
     crosses the every-4-rounds lineage checkpoint (``r % 4 == 3``
-    fires at r=3 with more rounds remaining; VERDICT r10 ask #3: the
-    branch had never executed), so the post-checkpoint rounds are
-    verified to resume from the materialized label table with
+    fires at r=3 with more rounds remaining), so the post-checkpoint
+    rounds are verified to resume from the materialized label table with
     identical results."""
     import random
     rng = random.Random(13)
@@ -435,7 +434,7 @@ def test_ppr_frontier_plan_is_bit_identical(spark):
 
 
 def test_ppr_rejects_seed_without_out_edges(spark):
-    """ADVICE r11: a seed absent from the out-degree table would
+    """A seed absent from the out-degree table would
     silently lose its restart mass — validate_seeds (default) raises;
     the opt-out keeps the previous silent-drop behavior for callers
     that pre-validate."""

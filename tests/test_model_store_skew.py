@@ -64,7 +64,7 @@ def test_salted_join_equals_naive(spark, sf_dir):
 
 
 def test_aqe_skew_join_engages_on_zipf_word_key(spark):
-    """SCALE.md §8 closing the loop (VERDICT r4 stretch): the skew
+    """SCALE.md §8 closing the loop: the skew
     story claims AQE's runtime skew-join split handles the Zipfian hot
     keys a word-keyed shuffle join produces. Demonstrate it: a corpus
     where one word ("the") carries 90% of rows, shuffle-joined to a

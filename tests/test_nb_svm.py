@@ -225,13 +225,13 @@ def test_mllib_confusion_goldens_sf001(spark):
     the two can never drift apart."""
     import __spark_entry__ as em
 
-    # sf0.001 only (VERDICT r13 ask #6): the sf0.01 fits used to run
+    # sf0.001 only: the sf0.01 fits used to run
     # here too (~13 s of suite), but their pins are enforced every
     # round by the sf0.01 selfcheck/driver hash against the same
     # _MLLIB_GOLDENS literals — the replacement gate. This pytest
     # keeps the fast-scale fit + the majority-class backstop; the
-    # sf0.01 loop is back as the opt-in nightly test below (ADVICE
-    # r14), so full-suite runs can still cover it in-process.
+    # sf0.01 loop is back as the opt-in nightly test below, so
+    # full-suite runs can still cover it in-process.
     for sf_tag, goldens in [("sf0.001", em._MLLIB_GOLDENS["sf0.001"])]:
       for alg, expected in goldens.items():
         df = em.queries()[f"mllib_{alg}_confusion"](
@@ -239,7 +239,7 @@ def test_mllib_confusion_goldens_sf001(spark):
         rows = [tuple(r) for r in df.collect()]
         assert rows == expected, (sf_tag, alg)
         # Semantic backstop independent of the exact per-cell pin (the
-        # pin is a regression guard, not an oracle — r5 ADVICE): the
+        # pin is a regression guard, not an oracle): the
         # fit must beat the majority class on its own eval split. If
         # the pin ever flakes on a treeAggregate ulp, this is the
         # assertion that distinguishes "re-derive the pin" from "the
@@ -254,7 +254,7 @@ def test_mllib_confusion_goldens_sf001(spark):
 
 @pytest.mark.nightly
 def test_mllib_confusion_goldens_sf001_nightly(spark):
-    """Opt-in (ADVICE r14): the sf0.01 MLlib confusion pins, trimmed
+    """Opt-in: the sf0.01 MLlib confusion pins, trimmed
     from the default suite for wall budget in r14 (replacement gate:
     the sf0.01 selfcheck/driver hash checks the same ``_MLLIB_GOLDENS``
     literals every round). ``SPARK_GRAFT_NIGHTLY=1 pytest -m nightly``

@@ -8,7 +8,7 @@ TOOL = Path(__file__).resolve().parents[1] / "tools" / "operator_registry_audit.
 
 
 def test_operator_registry_audit_is_clean_and_detects_orphans(tmp_path):
-    """The public-operator audit (VERDICT r12 ask #1): HEAD must carry
+    """The public-operator audit: HEAD must carry
     zero unwaived uncovered public functions, and a synthetic orphan
     module must be flagged."""
     spec2 = importlib.util.spec_from_file_location(

@@ -357,14 +357,14 @@ def test_tpch_q21_is_single_fact_pass(spark, sf_dir):
 def test_referential_integrity_single_fact_scan(spark, sf_dir):
     """The FK audit's three lineitem edges must SHARE one fact scan
     (membership flags off one pass), never three anti-join passes —
-    the 100 TB shape (VERDICT r7 ask #6)."""
+    the 100 TB shape."""
     plan = plan_string(R.referential_integrity_report(spark, sf_dir))
     assert plan.count("lineitem.parquet") <= 1
     assert "CartesianProduct" not in plan
 
 
 def test_rank_stat_queries_have_no_partition_less_window(spark, sf_dir):
-    """VERDICT r11 ask #5: nb_auc's tier cumulative and
+    """nb_auc's tier cumulative and
     theilsen_trend's two rank selections must run the two-phase
     distributed prefix sum — a partition-less Window would serialize
     the frame through one task. (A bare ``SinglePartition`` check is

@@ -1,6 +1,6 @@
 """The shared two-phase prefix-sum helper (functions/prefix.py) —
-the scale-safe replacement for partition-less windows (VERDICT r11
-ask #5) — plus the degenerate-input guards it enabled (ADVICE r11)."""
+the scale-safe replacement for partition-less windows — plus the
+degenerate-input guards it enabled."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,7 +45,7 @@ def test_ranged_cumsum_matches_global_window(spark):
 
 def test_ranged_cumsum_empty_input_is_typed_and_zero(spark):
     """The empty frame must NOT build an empty map() literal (an
-    analysis error — the ADVICE r11 ks_price_shift degenerate); it
+    analysis error — the ks_price_shift degenerate); it
     returns typed zero columns and zero totals."""
     df = spark.createDataFrame([], "k long, a long")
     cum, totals = ranged_cumsum(df, ["k"], ["a"])
@@ -69,7 +69,7 @@ def test_ranged_cumsum_order_statistic_deterministic_on_ties(spark):
 
 
 def test_ks_price_shift_degenerate_inputs_raise(spark, tmp_path):
-    """ADVICE r11: empty lineitem / one-class returnflag must fail
+    """Empty lineitem / one-class returnflag must fail
     fast with a clear error, not an ill-typed map literal or a silent
     NULL ks."""
     from text_sentiment_classification_hadoop_spark_spark.operators import relational as R

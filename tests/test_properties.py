@@ -19,7 +19,7 @@ TEXTS = st.text(
     min_size=0, max_size=80)
 
 # max_examples inherits the conftest hypothesis profile ("suite"=8;
-# HYPOTHESIS_PROFILE=thorough for deep sweeps) — VERDICT r10 ask #6
+# HYPOTHESIS_PROFILE=thorough for deep sweeps)
 SETTINGS = dict(deadline=None,
                 suppress_health_check=[HealthCheck.too_slow])
 

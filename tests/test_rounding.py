@@ -1,5 +1,5 @@
 """Cross-engine rounding helpers (functions/rounding.py): the half-up
-mean must be EXACT past the 2^53 double cliff (ADVICE r4: the pre-r5
+mean must be EXACT past the 2^53 double cliff (the pre-r5
 form cast the integer numerator to double before dividing, so quantity
 sums around TPC-H sf30+ reopened the nondeterminism window the helper
 exists to close)."""

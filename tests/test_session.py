@@ -1,9 +1,17 @@
-"""Session-level behaviour of ``session.get_spark``: the generated-class
-cache size and the conf-precedence warning on an already-live session."""
+"""Session-level behaviour of ``session.get_spark`` (the generated-class
+cache size and the dropped-conf warning on an already-live session) and
+of ``session.local_frame``'s Arrow and pickled paths."""
 
+import datetime
+import decimal
 import logging
 
+import pytest
+from pyspark.errors import ParseException
+from pyspark.sql import types as T
+
 from text_sentiment_classification_hadoop_spark_spark import session as S
+from text_sentiment_classification_hadoop_spark_spark.plans.explain import plan_string
 
 
 def _compiles(spark) -> int:
@@ -46,3 +54,45 @@ def test_get_spark_warns_when_live_session_drops_conf(spark, caplog):
     with caplog.at_level(logging.WARNING, logger=S.__name__):
         S.get_spark(shuffle_partitions=parts)
     assert not [r for r in caplog.records if r.name == S.__name__]
+
+
+def _local_scan(df) -> bool:
+    return "LocalTableScan" in plan_string(df, "simple")
+
+
+def test_local_frame_nested_rows_plan_as_local_table_scan(spark):
+    ddl = ("id long, tags array<string>, attrs map<string, int>, "
+           "pt struct<x: double, ys: array<long>>, price decimal(10,2)")
+    rows = [(1, ["a", None], {"k": 1, "z": None}, (1.5, [1, 2]),
+             decimal.Decimal("3.10")),
+            (2, [], {}, None, None),
+            (3, None, None, (None, None), decimal.Decimal("-0.01"))]
+    # a generator: the rows are materialized once, so the frame is full
+    df = S.local_frame(spark, iter(rows), ddl)
+    assert _local_scan(df)
+    assert df.collect() == spark.createDataFrame(rows, ddl).collect()
+
+
+@pytest.mark.parametrize("ddl,rows", [
+    # no Arrow mapping for timestamps in local_frame
+    ("id long, t timestamp",
+     [(1, datetime.datetime(2024, 1, 2, 3, 4, 5)), (2, None)]),
+    # Spark reads a NULL struct-keyed Arrow map back as {}
+    ("m map<struct<a: int>, int>", [({(1,): 1},), (None,)]),
+], ids=["timestamp", "struct_key_map"])
+def test_local_frame_falls_back_to_pickled_rows(spark, ddl, rows):
+    df = S.local_frame(spark, rows, ddl)
+    assert not _local_scan(df)
+    assert df.collect() == spark.createDataFrame(rows, ddl).collect()
+
+
+def test_local_frame_zero_rows_keep_declared_schema(spark):
+    ddl = "n long, s string, xs array<double>"
+    df = S.local_frame(spark, [], ddl)
+    assert df.schema == T.StructType.fromDDL(ddl)
+    assert df.collect() == []
+
+
+def test_local_frame_rejects_a_bad_ddl(spark):
+    with pytest.raises(ParseException):
+        S.local_frame(spark, [(1,)], "a long,,")

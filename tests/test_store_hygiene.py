@@ -1,5 +1,5 @@
 """Post-invocation state hygiene for the persistent-store drive
-queries (VERDICT r9 ask #5): the three store drives run streaming jobs
+queries: the three store drives run streaming jobs
 *inside* ``queries()``, and bench invokes each query 3x in one session
 — so a leaked query handle or a replay onto stale store contents would
 silently corrupt every invocation after the first. Pin the contract:
@@ -32,7 +32,7 @@ STORE_DRIVES = {
 
 
 def _scratch_base(tag: str) -> str:
-    # the REAL path derivation (ADVICE r10 #4: a hand-copied mirror of
+    # the REAL path derivation (a hand-copied mirror of
     # the string format drifts silently; pytest runs in-process, so the
     # default pid matches the drive's)
     return entry._store_scratch_path(SF, tag)
@@ -63,7 +63,7 @@ def test_store_drive_state_hygiene(spark, name, tag):
 
 
 def test_store_scratch_prunes_dead_pid_siblings():
-    """ADVICE r10 #3: dirs keyed to a driver pid that has exited must
+    """Dirs keyed to a driver pid that has exited must
     be reaped on the next _store_scratch entry (any tag), while dirs
     belonging to a LIVE process are left alone."""
     # a pid guaranteed dead: a subprocess that has already been waited

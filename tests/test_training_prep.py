@@ -238,7 +238,7 @@ def test_mixture_token_plan_proportionality(docs):
 
 
 def test_mixture_token_plan_missing_language_renormalizes(spark):
-    """ADVICE r4 (medium): a weighted language absent from the corpus
+    """A weighted language absent from the corpus
     must not break the exact-budget invariant. With the static-Σw
     divisor, the inner join dropping 'zh' left leftover ≈ budget·w_zh/Σw
     ≫ row count, every surviving row took +1, and the targets summed to
@@ -537,7 +537,7 @@ def test_dsir_resample_favors_target_domain(docs):
 
 
 def test_dsir_resample_saturation_proof(docs):
-    """ADVICE r4: with the direct A-ES key -ln(u)/exp(s/tau), scores
+    """With the direct A-ES key -ln(u)/exp(s/tau), scores
     beyond ~±709 nats saturate exp() to +inf/0 and every saturated key
     collapses to the same value, degrading selection to doc_id order.
     The log-space key ln(-ln u) - s/tau is monotone-identical but never

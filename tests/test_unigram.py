@@ -149,7 +149,7 @@ def test_unigram_token_counts_matches_python_viterbi(spark):
     assert all(1 <= got[w][0] <= len(w) for w in wf)
 
 def test_unigram_token_counts_null_contract_foreign_corpus(spark):
-    """ADVICE r12: applying a vocab to a corpus it does not char-cover
+    """Applying a vocab to a corpus it does not char-cover
     must yield NULL n_pieces/cost_micro rows (never wrong numbers,
     never silent drops) — for (a) words with NO vocab-known piece at
     all (lattice emptied by the join), (b) words PARTIALLY covered
@@ -176,7 +176,7 @@ def test_unigram_token_counts_null_contract_foreign_corpus(spark):
 
 
 def test_ranged_cumsum_null_sum_values(spark):
-    """ADVICE r12: NULLs in a sum column contribute 0 in BOTH phases —
+    """NULLs in a sum column contribute 0 in BOTH phases —
     an all-NULL partition must not raise int(None), and row-level
     NULLs must leave the cumulative sums consistent with the grand
     totals."""

@@ -871,7 +871,7 @@ def test_hourly_anomalies_planted_spike(spark, sf_dir):
 
 
 def test_hourly_anomalies_dense_wall_clock_baseline(spark):
-    """ADVICE r4: the trailing frame must be 24 WALL-CLOCK hours, not 24
+    """The trailing frame must be 24 WALL-CLOCK hours, not 24
     observed rows. A series with a 3-day quiet gap gets explicit zero
     rows for the empty hours, the slot after the gap is scored against
     the zeros (not against observations from days earlier), and the
@@ -1053,7 +1053,7 @@ def test_range_join_binned_plan_is_equi_not_nested_loop(spark, sf_dir):
 
 
 def test_range_join_binned_survives_burst_skew(spark):
-    """SCALE.md §7's claim, demonstrated (VERDICT r5 ask #7): a
+    """SCALE.md §7's claim, demonstrated: a
     pathological burst — EVERY interval overlapping one hot bin, 90% of
     points inside it — is plain equi-join skew on the bin key, so (a)
     the pair set still equals the naive theta join exactly, and (b)
@@ -1853,7 +1853,7 @@ def test_approx_quantile_bounds_contract_and_plan(spark, sf_dir):
 
 
 def test_approx_quantile_bounds_duplicate_heavy(spark, tmp_path):
-    """ADVICE r10 #1 regression: when the data is one repeated value,
+    """Regression: when the data is one repeated value,
     the returned element's UPPER rank count(<= v) is n at EVERY
     quantile — a single-rank check against q·n would flip false for
     small q even though the sketch output is legal (its admissible

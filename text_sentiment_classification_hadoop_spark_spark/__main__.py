@@ -214,7 +214,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             p.error("--query <registry name> is required for explain")
         # the registry lives next to the package dir (repo root), not
         # at a fixed path — derive it so the CLI works from any
-        # checkout location or installed layout (ADVICE r4)
+        # checkout location or installed layout
         import sys as _sys
         from pathlib import Path
         _sys.path.insert(0, str(Path(__file__).resolve().parents[1]))

@@ -50,10 +50,10 @@ def ranged_cumsum(df: DataFrame, order_cols: list[str],
 
     An EMPTY input short-circuits: the literal ``map()`` would be
     ill-typed (``map<null,null>`` vs bigint keys — an analysis error,
-    the ADVICE r11 ks_price_shift degenerate), so the empty frame gets
+    the ks_price_shift degenerate), so the empty frame gets
     correctly-typed zero columns instead and totals are all 0.
 
-    NULL contract (ADVICE r12): a NULL in a ``sum_cols`` value
+    NULL contract: a NULL in a ``sum_cols`` value
     contributes 0 — consistently in BOTH phases (the window ``sum``
     skips NULLs; the per-partition subtotal is coalesced to 0, so an
     all-NULL partition no longer raises ``int(None)``). ``order_cols``

@@ -130,7 +130,7 @@ def bpe_train(words: DataFrame, n_merges: int = 8,
     scale). Each round: one distributed pair-count aggregation, one
     bounded driver read, one narrow rewrite + localCheckpoint.
 
-    ``batch_k`` is the 100 TB scale lever (VERDICT r8 ask #4). With the
+    ``batch_k`` is the 100 TB scale lever. With the
     default ``batch_k=1`` every round selects exactly the single most
     frequent pair — textbook sequential BPE, one job per merge: exact,
     but a 30k-round driver loop at a production vocabulary. With
@@ -162,7 +162,7 @@ def bpe_train(words: DataFrame, n_merges: int = 8,
     real tweet corpus) can be candidate-LIMITED rather than
     conflict-limited — more headroom trades driver-read rows for
     fill. The default 4 is what every registry oracle pins; the knob
-    exists for the off-registry scale probe (VERDICT r12 ask #6) and
+    exists for the off-registry scale probe and
     changes WHICH pairs are visible to selection, so promoting a
     non-default value into a registry query requires a new oracle.
     """

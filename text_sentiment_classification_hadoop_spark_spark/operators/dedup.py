@@ -300,8 +300,7 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text",
 
 
 def connected_components(pairs: DataFrame, max_iters: int = 25,
-                         algorithm: str = "label_prop",
-                         shuffle_partitions: int | None = None) -> DataFrame:
+                         algorithm: str = "label_prop") -> DataFrame:
     """Connected components over a near-dup pair graph →
     ``(node, component)`` where ``component`` is the smallest id
     reachable from ``node``.
@@ -316,8 +315,8 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     2-4 rounds in practice.
 
     Rounds run in LAZY BATCHES on a geometric 1, 1, 1, 2, 4, 4, ...
-    probe schedule (guide §2.4/§5, the r15 PageRank lesson; VERDICT
-    r15 ask #3): each batch is one AQE-fused multi-round plan, then
+    probe schedule (guide §2.4/§5, the PageRank lesson): each
+    batch is one AQE-fused multi-round plan, then
     ONE ``localCheckpoint`` + ONE scalar convergence probe. The first
     three batches keep the old round-exact exit — near-dup graphs are
     shallow, and a fixed 4-round batch was measured to OVERSHOOT them
@@ -346,26 +345,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     The driver-side loop reads ONE scalar fingerprint per round (count
     + label sum, both monotone under contraction — same pattern as the
     SVM epoch loop); every round ``localCheckpoint``s to cut lineage.
-
-    ``shuffle_partitions``: scope ``spark.sql.shuffle.partitions`` for
-    the duration of the loop (restored on exit; the returned frame is
-    already materialized via the final checkpoint, so the scope
-    genuinely covers every round). Min-aggregation results are
-    partitioning-independent, so this is pure overhead tuning: an
-    iterative loop on a SMALL graph pays per-round task-scheduling
-    latency ∝ partition count — measured 6.9 s → 4.8 s at sf0.1 for
-    the co-purchase giant component going 32 → 4. Leave ``None`` at
-    real scale (size to edge volume instead).
     """
-    if shuffle_partitions is not None:
-        spark = pairs.sparkSession
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(int(shuffle_partitions)))
-        try:
-            return connected_components(pairs, max_iters, algorithm, None)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
     if algorithm == "alternating":
         return _cc_alternating(pairs, max_iters)
     if algorithm != "label_prop":
@@ -636,8 +616,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     fingerprint at ``max_df²`` (the winnow skew-guard pattern,
     :func:`winnow_near_dups`).
 
-    Shape (round 14 — VERDICT r13 ask #4; pre-guard hardened round
-    15 per ADVICE): GROUPED-POSTING pair emission instead of a
+    Shape: GROUPED-POSTING pair emission instead of a
     fingerprint self-join. A map-side-combinable COUNT aggregate drops
     hot fingerprints (df > ``max_df``) via a semi-join BEFORE any
     posting array is materialized — no aggregation buffer ever holds
@@ -661,7 +640,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     # 60-bit fingerprint collision between two distinct shingles in one
     # doc must collapse to ONE (doc_id, shash) row, matching the
     # oracle's SELECT DISTINCT and the countDistinct discipline of
-    # decontaminate/bloom_decontaminate (ADVICE r11) — collision odds
+    # decontaminate/bloom_decontaminate — collision odds
     # approach the birthday bound near ~1e9 corpus shingles.
     sh = (df.select(
         F.col(id_col),
@@ -669,13 +648,13 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
         .alias("_sh"))
         .select(F.col(id_col), portable_hash64(F.col("_sh")).alias("shash"))
         .distinct())
-    # DF PRE-GUARD before any posting materialization (ADVICE r14,
-    # re-planned r15): a degenerate hot fingerprint (boilerplate
-    # shingle present in millions of docs) must never accumulate into a
-    # collect_list buffer, where ONE aggregation buffer would hold an
-    # unbounded array. The r14 form (count-agg → semi-join → groupBy)
-    # achieved that but evaluated the corpus-sized shingle+hash+distinct
-    # pipeline TWICE (once per side of the semi-join) — measured +53%
+    # DF PRE-GUARD before any posting materialization: a degenerate
+    # hot fingerprint (boilerplate shingle present in millions of docs)
+    # must never accumulate into a collect_list buffer, where ONE
+    # aggregation buffer would hold an unbounded array. The earlier
+    # form (count-agg → semi-join → groupBy) achieved that but
+    # evaluated the corpus-sized shingle+hash+distinct pipeline TWICE
+    # (once per side of the semi-join) — measured +53%
     # on the isolated query. One windowed count over the same shash
     # partitioning gives the identical kept set in a SINGLE pass:
     # WindowExec buffers a hot fingerprint's group in a SPILLABLE
@@ -1133,7 +1112,7 @@ def semdedup(emb: DataFrame, centroids: DataFrame | None = None,
                 norm_expr(F.col(vec_col)).alias("_n"))
         .localCheckpoint(eager=True))
 
-    # GIANT-CELL SKEW GUARD (guide §2.5; VERDICT r15 ask #4): the
+    # GIANT-CELL SKEW GUARD (guide §2.5): the
     # within-cell self-join's per-key work is |cell|², so one fat cell
     # (the planted-duplicate mass here; any hot semantic cluster in
     # production) becomes the single straggler task AQE's skew-join

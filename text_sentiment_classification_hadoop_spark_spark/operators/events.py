@@ -688,7 +688,7 @@ def hourly_anomalies(events: DataFrame, window_slots: int = 24,
     (traffic spikes, pipeline stalls) on the same engine as the batch
     analytics.
 
-    The series is DENSIFIED first (ADVICE r4): each type's hourly grid
+    The series is DENSIFIED first: each type's hourly grid
     runs from its first to its last observed slot with empty hours as
     explicit zero rows — so ``window_slots`` preceding ROWS is exactly
     ``window_slots`` wall-clock hours. Over observed slots only, the
@@ -1164,7 +1164,7 @@ def theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     70-day fixture → 2.4k pairs; even a decade of days is ~6.7M
     pairs). Both rank selections run the two-phase distributed prefix
     sum (:func:`~..functions.prefix.ranged_cumsum`) — no partition-less
-    window anywhere (VERDICT r11 ask #5), so even a pathological
+    window anywhere, so even a pathological
     pair frame never serializes through one task; the k-th order
     statistic comes from a range-partitioned cumulative count. At
     100 TB the daily rollup remains the only exchange that sees data

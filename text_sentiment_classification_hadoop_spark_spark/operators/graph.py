@@ -295,7 +295,7 @@ def pagerank_personalized(edges: DataFrame, seeds: list[int],
     and its restart mass would silently vanish. ``validate_seeds``
     (default on) raises on such seeds — one broadcast anti-join
     against the node-sized ``deg`` table, resolved once before the
-    loop (ADVICE r11)."""
+    loop."""
     sess = edges.sparkSession
     if weight_col is None:
         edges = edges.select("src", "dst", F.lit(1).cast("long").alias("_w"))
@@ -552,19 +552,17 @@ def lpa_communities(edges: DataFrame, rounds: int = 3) -> DataFrame:
     skew absorbed map-side exactly like PageRank's contribution sum.
     Nothing driver-sided; the label table never exceeds |V| rows.
 
-    Materialization discipline (ADVICE r9): the returned plan is LAZY —
-    the rounds' shuffles run at collection time under the session's
-    then-current confs, so do NOT wrap the call in a partition scope
-    expecting it to apply (the r9 call site did; the scope was a no-op
-    and has been removed — measured at sf0.1, the lazy AQE-fused plan
-    at session defaults beats any eager-barrier variant ~2x: eager
+    Materialization discipline: the returned plan is LAZY — the
+    rounds' shuffles run at collection time under the session's
+    then-current confs, so a conf set around the call does not reach
+    them. Measured at sf0.1, the lazy AQE-fused plan at session
+    defaults beats any eager-barrier variant ~2x: eager
     ``localCheckpoint`` pays row materialization + read-back that a
-    fused 6-shuffle count never does). For larger round counts an
+    fused 6-shuffle count never does. For larger round counts an
     intermediate checkpoint every 4 rounds bounds lineage depth while
-    keeping the common shallow case barrier-free. Measured plan effect
-    (VERDICT r10 ask #3): at rounds=6 the checkpoint after round 3
-    truncates the final plan to 7 exchanges over a materialized label
-    RDD, vs 12 exchanges of un-truncated lineage at rounds=4 — the
+    keeping the common shallow case barrier-free. Measured plan effect:
+    at rounds=6 the checkpoint after round 3 truncates the final plan
+    to 7 exchanges over a materialized label RDD, vs 12 exchanges of un-truncated lineage at rounds=4 — the
     post-checkpoint plan depth is per-residual-round, not per-total-
     round (python-simulation parity at rounds=6 pinned in
     ``tests/test_graph.py::test_lpa_matches_python_simulation``)."""

@@ -2078,7 +2078,7 @@ def revenue_mad_outliers(spark: SparkSession, sf_dir: str,
     if n == 0:
         # one (0, NULL, NULL, 0) row — the oracle's scalar subqueries
         # produce exactly this on an empty table, and the bootstrap-CI
-        # twin uses the same in-plan convention (r8 ADVICE)
+        # twin uses the same in-plan convention
         return local_frame(
             spark, [(0, None, None, 0)],
             "n_rows long, median_price double, mad double, "
@@ -2213,7 +2213,7 @@ def approx_quantile_bounds(spark: SparkSession, sf_dir: str,
     boolean asserting the GK guarantee, verified with exact BIGINT
     arithmetic in micro-units scaled by ``accuracy`` (no division).
 
-    Rank semantics (ADVICE r10 #1): with duplicate-heavy values a
+    Rank semantics: with duplicate-heavy values a
     returned element does not have ONE rank — any rank in the
     admissible interval ``[count(< v) + 1, count(<= v)]`` is a valid
     position for ``v`` in sorted order, and GK only promises SOME rank
@@ -2226,7 +2226,7 @@ def approx_quantile_bounds(spark: SparkSession, sf_dir: str,
 
     Scale shape: exactly TWO fact passes, both one-shuffle aggregates —
     (1) count + exact percentiles + the sketch in one agg, COLLECTED to
-    the driver (1 row — ADVICE r10 #2: re-embedding this subtree via
+    the driver (1 row — re-embedding this subtree via
     crossJoin planned the fact scan + percentile sort a second time,
     and the two sketch evaluations could in principle disagree; the
     collected values are re-lit as literals so the sketch runs exactly
@@ -2302,7 +2302,7 @@ def ks_price_shift(spark: SparkSession, sf_dir: str,
     The corpus never serializes through a global window; the only
     full-width stage is the tier aggregate.
 
-    Degenerate inputs fail FAST (ADVICE r11): an empty lineitem or an
+    Degenerate inputs fail FAST: an empty lineitem or an
     all-one-class returnflag has no two-sample statistic — previously
     the empty offset-map literal was an analysis error and a zero
     ``n_a·n_b`` denominator a silent NULL ``ks``."""

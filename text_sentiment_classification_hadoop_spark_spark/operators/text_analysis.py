@@ -627,7 +627,7 @@ def pack_sequences_ffd(budgets: DataFrame, budget: int = 2048,
     padding waste, the standard LLM pretraining packer).
 
     Input is a per-doc token-budget table — ``bpe.bpe_doc_token_counts``
-    or ``unigram.unigram_token_counts`` output (VERDICT r13 ask #5),
+    or ``unigram.unigram_token_counts`` output,
     i.e. doc METADATA (two integers per doc), never the corpus text.
 
     Semantics (deterministic, integer-exact in both engines): docs are

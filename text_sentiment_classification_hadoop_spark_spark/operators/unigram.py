@@ -198,8 +198,7 @@ def unigram_train_df(docs: DataFrame, text_col: str = "text",
 #: codegen NPE on field access — and the sentinel propagates
 #: monotonically (INF + cost ≥ INF, no overflow: ≤ max_word_len
 #: additions of 1e15 ≪ 2^63), so an unsegmentable word ends ≥ INF
-#: and is reported as NULL by the caller, never as a wrong number
-#: (ADVICE r12).
+#: and is reported as NULL by the caller, never as a wrong number.
 _UNREACHABLE = 10 ** 15
 
 _FWD_COUNT = f"""aggregate(
@@ -232,7 +231,7 @@ def unigram_token_counts(docs: DataFrame, vocab: DataFrame,
     corpus appears once in ``word_freqs``; the lattice join and the
     one-projection DP run on the dictionary.
 
-    NULL contract (ADVICE r12): ``n_pieces``/``cost_micro`` are NULL
+    NULL contract: ``n_pieces``/``cost_micro`` are NULL
     exactly when the word is NOT segmentable under this vocab — it is
     longer than ``max_word_len`` (excluded from training statistics),
     or the vocab does not char-cover it (possible when applying a
@@ -261,7 +260,7 @@ def unigram_token_counts(docs: DataFrame, vocab: DataFrame,
         F.when(reachable, F.col("_best.c")).alias("cost_micro"))
     # long words AND short words whose every lattice edge was dropped
     # by the vocab join (no char coverage at all) — both re-attached
-    # as NULL rows so no word is silently lost (ADVICE r12)
+    # as NULL rows so no word is silently lost
     unsegmented = (wf.join(lat.select("word"), "word", "left_anti")
                    .select("word", F.col("freq").cast("long").alias("freq"),
                            F.lit(None).cast("long").alias("n_pieces"),

@@ -19,6 +19,7 @@ from __future__ import annotations
 import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 
@@ -44,7 +45,7 @@ def ensure_engine_confs(spark: SparkSession) -> None:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except AnalysisException:
             pass  # non-settable on this build: keep going, reads may still work
 
 
@@ -84,26 +85,18 @@ def local_frame(spark: SparkSession, rows, schema):
     so the win is the same boundary removal, not a local quirk.
 
     Results are bit-identical: the Arrow schema is derived from the
-    Spark schema (``to_arrow_schema``), so values round-trip through
-    exactly the declared types. Any row/type shape the Arrow path can't
-    express falls back to plain ``createDataFrame``.
+    Spark schema, so values round-trip through exactly the declared
+    types. A type with no Arrow mapping here (``TimestampType``, …) or
+    a row Arrow rejects falls back to plain ``createDataFrame``.
     """
+    import pyarrow as pa
     from pyspark.sql import types as T
-    # materialize ONCE up front (ADVICE r15): the Arrow attempt below
-    # iterates `rows`, and its blanket-except fallback iterates again —
-    # a generator argument would silently yield an empty/partial frame
-    # on the second pass
+    # materialize ONCE up front: the Arrow attempt below iterates
+    # `rows`, and its fallback iterates again — a generator argument
+    # would silently yield an empty/partial frame on the second pass
     rows = list(rows)
-    if isinstance(schema, str):
-        try:
-            st = T.StructType.fromDDL(schema)
-        except Exception:
-            return spark.createDataFrame(rows, schema)
-    else:
-        st = schema
+    st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
     try:
-        import pyarrow as pa
-
         # local Spark→Arrow type mapping: pyspark's to_arrow_schema
         # lives in pyspark.sql.pandas.* whose import pulls in pandas
         # (~1.5 s per fresh process — measured as a +1–2 s regression
@@ -122,6 +115,10 @@ def local_frame(spark: SparkSession, rows, schema):
             if isinstance(dt, T.ArrayType):
                 return pa.list_(atype(dt.elementType))
             if isinstance(dt, T.MapType):
+                # Spark reads a NULL struct-keyed Arrow map back as an
+                # empty map, so those maps take the pickled path
+                if isinstance(dt.keyType, T.StructType):
+                    raise TypeError(f"no exact arrow mapping for {dt}")
                 return pa.map_(atype(dt.keyType), atype(dt.valueType))
             if isinstance(dt, T.StructType):
                 return pa.struct([pa.field(f.name, atype(f.dataType))
@@ -140,9 +137,6 @@ def local_frame(spark: SparkSession, rows, schema):
             if isinstance(dt, T.ArrayType):
                 return [conv(x, dt.elementType) for x in v]
             if isinstance(dt, T.MapType):
-                # keys need conversion too (ADVICE r15): a struct/array
-                # key left unconverted would silently fall back to the
-                # pickled path
                 return {conv(k, dt.keyType): conv(x, dt.valueType)
                         for k, x in dict(v).items()}
             return v
@@ -151,7 +145,7 @@ def local_frame(spark: SparkSession, rows, schema):
                 for f, x in zip(st.fields, tuple(r))} for r in rows]
         tbl = pa.Table.from_pylist(pyl, schema=arrow_schema)
         return spark.createDataFrame(tbl, schema=st)
-    except Exception:
+    except (TypeError, pa.ArrowException):
         return spark.createDataFrame(rows, st)
 
 
@@ -163,15 +157,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session. Honors ``SPARK_GRAFT_CPUS``.
 
-    Conf precedence, lowest first: the fixed confs below, then
-    ``extra_conf``, then ``SPARK_GRAFT_EXTRA_CONF`` (the env hook
-    overrides an explicit ``extra_conf`` key). All of them take full
-    effect only when this call starts the JVM. If a session is already
-    live, ``getOrCreate`` returns it and re-applies only the
+    ``extra_conf`` keys override the fixed confs below. All of them take
+    full effect only when this call starts the JVM. If a session is
+    already live, ``getOrCreate`` returns it and re-applies only the
     runtime-modifiable SQL confs; static ones — the codegen cache size,
     ``spark.driver.memory``, event-log settings, any static key in
-    ``extra_conf``/``SPARK_GRAFT_EXTRA_CONF`` — are dropped, and a
-    warning lists the requested extra keys that did not take effect.
+    ``extra_conf`` — are dropped, and a warning lists the requested
+    extra keys that did not take effect.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     master = master or f"local[{cpus}]"
@@ -204,18 +196,7 @@ def get_spark(
         # VM). Static conf: read once per JVM, executors included.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
-    requested = dict(extra_conf or {})
-    # scale/deployment-dependent conf overrides WITHOUT code edits
-    # (guide §9 experiments stay parameterized: local defaults above
-    # are the measured-best for the driver's local[N] bench; zstd
-    # shuffle I/O, shuffled-hash joins and a 64m AQE advisory size did
-    # not separate from noise at sf1 on local[32], so cluster values
-    # stay a per-deployment choice, not a default):
-    #   SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in filter(None, env_conf.split(";")):
-        k, _, v = kv.partition("=")
-        requested[k.strip()] = v.strip()
+    requested = extra_conf or {}
     for k, v in requested.items():
         b = b.config(k, v)
     live = SparkSession._instantiatedSession
@@ -230,26 +211,3 @@ def get_spark(
                 "requested confs did not take effect: %s", ", ".join(dropped))
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Scope ``spark.sql.shuffle.partitions`` around an ITERATIVE loop
-    over a small table (CC, PageRank, k-core, BPE): each round's jobs
-    pay task-scheduling latency proportional to the partition count,
-    which dominates when per-partition data is tiny — measured ~30%
-    off the co-purchase CC at sf0.1 going 32 → 8. Only valid around
-    operators whose results are partitioning-independent (the integer
-    discipline guarantees it); restored on exit, so plans the caller
-    materializes later use the session default. The streaming twin is
-    ``streaming.pipeline.stream_shuffle_partitions`` (state-store
-    sizing, a different concern)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -86,7 +86,7 @@ def main() -> None:
     if failures:
         out += ["", "## Build failures", ""]
         out += [f"- {n}: {m}" for n, m in failures]
-    # pin the artifact to the registry (VERDICT r7 ask #2): every
+    # pin the artifact to the registry: every
     # queries() entry must be accounted for — audited or an explicit
     # build failure — so a PLANAUDIT generated before a trailing commit
     # can't silently strand new queries.

@@ -118,8 +118,8 @@ def main():
     # differs because the corpus differs, not because the query
     # drifted). `oracle_sql()` ships the driver's sf0.01 pin; for any
     # other sf with a derived golden we substitute the matching
-    # per-sf oracle so both selfcheck scales compare for real
-    # (VERDICT r8 ask #2). Only an sf with NO derived golden skips.
+    # per-sf oracle so both selfcheck scales compare for real.
+    # Only an sf with NO derived golden skips.
     sf_tag = args.sf.rstrip("/").rsplit("/", 1)[-1]
     sf_pinned = {"mllib_nb_confusion": "nb", "mllib_svm_confusion": "svm"}
     oracle_override = {}
@@ -174,7 +174,6 @@ def main():
     # pin the record to the registry: a full (non --only) run MUST
     # have covered every queries() entry, so a record generated before
     # a trailing commit added queries can't silently strand them
-    # (VERDICT r7 ask #2).
     n_covered = n_pass + n_fail + n_noracle + n_skip
     if not only:
         assert n_covered == len(qs), (

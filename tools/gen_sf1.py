@@ -1,5 +1,5 @@
 """Synthesize an sf1-SHAPED dataset (10x sf0.1) for scale-curve
-timing — VERDICT r11 ask #2: the 100 TB design story extrapolated from
+timing: the 100 TB design story extrapolated from
 sf0.1; this buys one more measured decade.
 
 NOT driver data (the driver's generator is not in this repo and
@@ -16,13 +16,13 @@ that govern plan cost at scale —
 - documents: 10 replicas, doc_id offset; replicas > 0 get a
   DETERMINISTIC per-doc word permutation (seeded by replica, doc_id),
   which preserves document lengths and language labels while
-  destroying cross-replica k-gram overlap, PLUS (round 13, VERDICT
-  r12 ask #3) Heaps'-law vocabulary growth: each token independently
-  (prob. ``MUT_PROB``) becomes a suffixed variant ``word + 'x' +
-  base26(z)`` with ``z ~ Zipf(2.0)`` — a Zipf token-type draw gives
-  the classic Heaps exponent ``V(N) ∝ N^(1/s) = N^0.5`` without any
-  hand-tuned vocabulary list, landing sf1 at ~38k types (the real
-  25k-tweet reference corpus has 36.6k). The driver's own 31-word
+  destroying cross-replica k-gram overlap, PLUS Heaps'-law vocabulary
+  growth: each token independently (prob. ``MUT_PROB``) becomes a
+  suffixed variant ``word + 'x' + base26(z)`` with ``z ~ Zipf(2.0)``
+  — a Zipf token-type draw gives the classic Heaps exponent
+  ``V(N) ∝ N^(1/s) = N^0.5`` without any hand-tuned vocabulary list,
+  landing sf1 at ~38k types (the real 25k-tweet reference corpus has
+  36.6k). The driver's own 31-word
   fixture vocabulary SATURATES every shingle/posting universe
   (jaccard_prefix_pairs measured α=+1.56 at sf1 from that alone,
   §20), so without this the similarity-family curves measure fixture

@@ -1,4 +1,4 @@
-"""Public-operator registry audit — VERDICT r12 ask #1 (second half):
+"""Public-operator registry audit:
 ``unigram_token_counts`` once shipped with pytest-only
 coverage because nothing enforced that a public operator function is
 exercised by the driver-checkable registry. This gate makes that
@@ -12,7 +12,7 @@ Coverage definition (a finding = none of these hold):
 
 1. referenced by AST ``Name``/``Attribute`` in ANOTHER package module —
    a real cross-module consumer (docstring/comment mentions do NOT
-   count; ADVICE r13 tightened this from the original textual match);
+   count);
    or
 2. referenced textually (``\\b<name>\\b``) in ``__spark_entry__.py`` or
    ``bench.py`` — these two are string-keyed registries (query names in
@@ -49,7 +49,6 @@ PKG = os.path.join(REPO, "text_sentiment_classification_hadoop_spark_spark")
 WAIVERS: dict[str, str] = {
     # session/config plumbing — exercised by every query implicitly
     "get_spark": "session factory; every registry query runs through it",
-    "scoped_shuffle_partitions": "config scope used across registry queries",
     # CLI surface (tests/test_cli.py drives it end-to-end)
     "main": "CLI entry (__main__.py / module mains); subprocess-tested",
     # plan-inspection helpers (used by tests + tools, not data paths)

@@ -131,7 +131,7 @@ def main() -> int:
     try:
         cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
         comp = cm.METRIC_COMPILATION_TIME()
-        # snapshot-mean × count is an ESTIMATE (ADVICE r15): the
+        # snapshot-mean × count is an ESTIMATE: the
         # Dropwizard histogram is a sampled reservoir, so for many
         # compilations the product can be materially off; exact when
         # count ≤ reservoir size (1028), so sum the raw values then

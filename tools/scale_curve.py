@@ -10,11 +10,11 @@ signal — at sf0.001 nearly every query is pure overhead.
 
 Usage: python tools/scale_curve.py [--top N] [--names a,b,c]
                                    [--sfs dir1,dir2,...]
-Writes a markdown table to stdout (paste into SCALE.md §scale-curve).
+Writes a markdown table to stdout (protocol: SCALE.md §11).
 
 ``--sfs`` overrides the probed scale dirs — e.g. append the
-synthesized sf1 fixture (tools/gen_sf1.py) to measure one more decade
-(VERDICT r11 ask #2). Column headers derive from the dir basenames.
+synthesized sf1 fixture (tools/gen_sf1.py) to measure one more decade.
+Column headers derive from the dir basenames.
 """
 
 from __future__ import annotations
