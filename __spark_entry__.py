@@ -3695,13 +3695,7 @@ def _basket_rules_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry datapoint runs the 100 TB Gram strategy (per-partition
-    partial Grams via mapInPandas, |partitions|*dims^2 shuffle rows);
-    tests/test_similarity.py proves it bit-identical to the
-    oracle-mirrored selfjoin form."""
-    return SIM.pca_power_top_component(
-        load_table(spark, "embeddings", sf_dir),
-        strategy="partial_gram")
+    return SIM.pca_power_top_component(load_table(spark, "embeddings", sf_dir))
 
 
 def _bitext_mined_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4042,7 +4036,7 @@ def _cluster_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     docs = load_table(spark, "documents", sf_dir)
     books = SIM.kmeans_books(SIM.kmeans_fit(emb, k=8, iters=2))
-    assign = (SIM.ivf_assign_cells(emb, books, n_centroids=8)
+    assign = (SIM.ivf_assign_cells(emb, books)
               .select(F.col("vec_id").alias("doc_id"),
                       F.col("cell").cast("int").alias("cell")))
     dc = docs.join(assign, "doc_id").select("cell", "text")

@@ -328,7 +328,7 @@ def test_ivf_bucketed_layout_prunes_probe_scan(spark, sf_dir):
     emb = load_table(spark, "embeddings", sf_dir)
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec"))
-    assigned = ivf_assign_cells(emb, cents, n_centroids=8)
+    assigned = ivf_assign_cells(emb, cents)
     write_bucketed(assigned, "ivf_index_test", "cell", 8)
     # autoBucketedScan drops the bucketed layout when no join/agg wants
     # its distribution — which also forfeits bucket PRUNING; a probe

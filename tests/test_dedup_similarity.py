@@ -179,40 +179,34 @@ def test_kmeans_codebook_improves_on_seed(spark, sf_dir):
     assert mean_best_cos(trained) >= mean_best_cos(seed) - 1e-6
 
 
-def test_large_codebook_broadcast_path_identical(spark, sf_dir):
-    """The broadcast-codebook fallback (plan-size scale path for large
-    k) must be bit-identical to the literal path — same expression
-    text, different array source. Forced both ways at k=64 for
-    kmeans/IVF and 4×32 codewords for PQ."""
+def test_kmeans_codebook_above_old_literal_cap(spark, sf_dir):
+    """k=128, twice the size at which codebooks used to leave the
+    plan-time literal path: kmeans_fit still gives k×dims rows, and
+    ivf_assign_cells against those centroids puts every vector in the
+    cell with the highest 6-dp cosine (ties → lowest id), checked
+    against the driver-side ``_py_cos6`` mirror of the Spark fold."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    force_lit = dict(literal_codebook_max=10**6)
-    force_bc = dict(literal_codebook_max=0)
+    fitted = SIM.kmeans_fit(emb, k=128, iters=1)
+    by_cell = {}
+    for r in fitted.collect():
+        by_cell.setdefault(int(r["cell_id"]), {})[int(r["d"])] = \
+            float(r["centroid"])
+    assert sum(len(dv) for dv in by_cell.values()) == 128 * 64
+    first = [int(r["vec_id"])
+             for r in emb.orderBy("vec_id").limit(128).collect()]
+    assert sorted(by_cell) == first
+    cents = [(c, [dv[d] for d in range(64)])
+             for c, dv in sorted(by_cell.items())]
 
-    lit = SIM.kmeans_fit(emb, k=64, iters=1, **force_lit).collect()
-    bc = SIM.kmeans_fit(emb, k=64, iters=1, **force_bc).collect()
-    assert sorted(map(tuple, lit)) == sorted(map(tuple, bc))
-
-    cents = emb.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec"))
-    a_lit = SIM.ivf_assign_cells(emb, cents, **force_lit) \
-        .select("vec_id", "cell").collect()
-    a_bc = SIM.ivf_assign_cells(emb, cents, **force_bc) \
-        .select("vec_id", "cell").collect()
-    assert sorted(map(tuple, a_lit)) == sorted(map(tuple, a_bc))
-    # the CORPUS side stays shuffle-free: the only exchange allowed is
-    # the centroid-sized SinglePartition gather feeding collect_list
-    plan = SIM.ivf_assign_cells(emb, cents, **force_bc) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
-    assert "BroadcastNestedLoopJoin" in plan
-
-    c_lit = SIM.pq_encode(emb, n_codes=32, **force_lit).collect()
-    c_bc = SIM.pq_encode(emb, n_codes=32, **force_bc).collect()
-    assert sorted(map(tuple, c_lit)) == sorted(map(tuple, c_bc))
-
-    b_lit = SIM.pq_train_books(emb, n_codes=32, iters=1, **force_lit)
-    b_bc = SIM.pq_train_books(emb, n_codes=32, iters=1, **force_bc)
-    assert b_lit == b_bc
+    got = {r["vec_id"]: r["cell"] for r in
+           SIM.ivf_assign_cells(emb, SIM.kmeans_books(fitted))
+           .select("vec_id", "cell").collect()}
+    vecs = [(r["vec_id"], [float(x) for x in r["embedding"]])
+            for r in emb.collect()]
+    assert len(got) == len(vecs)
+    for vid, v in vecs:
+        best = max(cents, key=lambda c: (SIM._py_cos6(v, c[1]), -c[0]))
+        assert got[vid] == best[0], vid
 
 
 def test_two_level_assignment_structure_and_paths(spark, sf_dir):
@@ -221,7 +215,6 @@ def test_two_level_assignment_structure_and_paths(spark, sf_dir):
     - ``two_level_books`` partitions the flat codebook into
       G = ceil(sqrt(k)) groups whose member lists cover every codeword
       exactly once, each seed landing in its own group;
-    - the literal and broadcast riding paths are bit-identical;
     - the assignment provably DIVERGES from the flat argmax (it is the
       approximate route; identical output would mean the hierarchy is
       dead code) while every assigned cell is a member of the routed
@@ -240,15 +233,12 @@ def test_two_level_assignment_structure_and_paths(spark, sf_dir):
 
     lit = SIM.ivf_assign_cells_two_level(emb, cents) \
         .select("vec_id", "grp", "cell").collect()
-    bc = SIM.ivf_assign_cells_two_level(emb, cents, literal_codebook_max=0) \
-        .select("vec_id", "grp", "cell").collect()
-    assert sorted(map(tuple, lit)) == sorted(map(tuple, bc))
 
     member_of = {g: {cid for cid, _ in sub} for g, _v, sub in groups}
     for r in lit:
         assert r["cell"] in member_of[r["grp"]]
     flat = {r["vec_id"]: r["cell"]
-            for r in SIM.ivf_assign_cells(emb, cents, n_centroids=k)
+            for r in SIM.ivf_assign_cells(emb, cents)
             .select("vec_id", "cell").collect()}
     assert any(flat[r["vec_id"]] != r["cell"] for r in lit)
 
@@ -256,8 +246,8 @@ def test_two_level_assignment_structure_and_paths(spark, sf_dir):
 def test_two_level_duplicate_seed_empty_group_excluded(spark):
     """A duplicated seed collapses its group into the earlier one
     (tie → lowest grp), leaving an EMPTY group: it must be excluded
-    from routing (no vector may land in it) on both riding paths, and
-    the placeholder sub-book slot must never surface."""
+    from routing (no vector may land in it), and the placeholder
+    sub-book slot must never surface."""
     rows = [(i, [float(i == j) for j in range(8)]) for i in range(4)]
     rows[1] = (1, list(rows[0][1]))  # seed 1 duplicates seed 0
     cents = spark.createDataFrame(
@@ -268,12 +258,10 @@ def test_two_level_duplicate_seed_empty_group_excluded(spark):
         [(100 + i, [float((i + j) % 3) for j in range(8)])
          for i in range(12)] + [(200, list(rows[0][1]))],
         "vec_id long, embedding array<double>")
-    for lim in (10**6, 0):
-        out = SIM.ivf_assign_cells_two_level(
-            emb, cents, literal_codebook_max=lim).collect()
-        assert len(out) == 13
-        assert all(r["grp"] == 0 for r in out)
-        assert all(r["cell"] in {0, 1, 2, 3} for r in out)
+    out = SIM.ivf_assign_cells_two_level(emb, cents).collect()
+    assert len(out) == 13
+    assert all(r["grp"] == 0 for r in out)
+    assert all(r["cell"] in {0, 1, 2, 3} for r in out)
 
 
 def test_simhash_near_dups_exact_recall(spark, sf_dir):
@@ -952,7 +940,7 @@ def test_knn_graph_neighbors_are_cell_exact(spark, sf_dir):
              .select(F.col("vec_id").cast("long").alias("cell_id"),
                      F.col("embedding").alias("cell_vec")))
     assign = {r["vec_id"]: r["cell"] for r in
-              ivf_assign_cells(emb, seeds, n_centroids=4).collect()}
+              ivf_assign_cells(emb, seeds).collect()}
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
             for r in emb.collect()}
     import collections
@@ -1112,13 +1100,11 @@ def test_pca_power_finds_dominant_axis(spark):
     assert cos > 0.999, (cos, v)
 
 
-def test_pca_power_partial_gram_strategy_identical(spark):
-    """The 100 TB Gram path (per-partition partial Grams via
-    mapInPandas + exact DECIMAL reduce) must produce LOADINGS
-    IDENTICAL to the oracle-mirrored self-join form — both are
-    integer-exact over the same micro-quantized input, so the power
-    iteration sees bit-equal Gram matrices. Input spread over several
-    partitions so multiple partial Grams actually reduce."""
+def test_pca_power_matches_exact_python_power_iteration(spark):
+    """The per-partition partial Grams (mapInPandas + exact DECIMAL
+    reduce) over 7 partitions give the same loadings as an exact
+    pure-Python Gram and integer power iteration over the same
+    micro-quantized rows."""
     import random
 
     from text_sentiment_classification_hadoop_spark_spark.operators.similarity import (
@@ -1127,13 +1113,34 @@ def test_pca_power_partial_gram_strategy_identical(spark):
     rows = [(i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(200)]
     emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>").repartition(7)
-    a = sorted((r["d"], r["loading_micro"]) for r in
-               pca_power_top_component(emb, iters=6,
-                                       strategy="selfjoin").collect())
-    b = sorted((r["d"], r["loading_micro"]) for r in
-               pca_power_top_component(emb, iters=6,
-                                       strategy="partial_gram").collect())
-    assert a == b and len(a) == 6
+    got = sorted((r["d"], r["loading_micro"]) for r in
+                 pca_power_top_component(emb, iters=6).collect())
+
+    # the float32 values Spark stores, quantized to integer micro-units
+    xu = [[math.floor(float(x) * 1000000.0 + 0.5) for x in r["embedding"]]
+          for r in emb.collect()]
+    n, dims = len(xu), 6
+    su = [sum(row[i] for row in xu) for i in range(dims)]
+    gram = [[sum(row[i] * row[j] for row in xu) for j in range(dims)]
+            for i in range(dims)]
+    c = [[n * gram[i][j] - su[i] * su[j] for j in range(dims)]
+         for i in range(dims)]
+    v = [1_000_000] * dims
+    for _ in range(6):
+        w = [sum(c[i][j] * v[j] for j in range(dims)) for i in range(dims)]
+        m = max(abs(x) for x in w)
+        v = [(-1 if x < 0 else 1) * (abs(x) * 1_000_000 // m) for x in w]
+    assert got == list(enumerate(v))
+
+
+@pytest.mark.parametrize("fn", ["kmeans_fit", "pq_train_books", "pq_encode",
+                                "pca_power_top_component"])
+def test_empty_embeddings_raise_named_value_error(spark, fn):
+    """An empty embeddings frame fails with one ValueError naming the
+    function, not an IndexError or an analyzer error on a VOID array."""
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=fn):
+        getattr(SIM, fn)(emb)
 
 
 def test_jaccard_prefix_pairs_matches_brute_force(spark):

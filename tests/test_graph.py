@@ -408,31 +408,6 @@ def test_ppr_weighted_shifts_mass_toward_heavy_edge(spark):
     assert a == b
 
 
-def test_ppr_frontier_plan_is_bit_identical(spark):
-    """frontier=True restricts each iteration's contribution join to
-    rank>0 nodes; zero-rank sources contribute exactly 0 mass, so the
-    output must be BIT-identical to the uniform plan — on a dense
-    random graph, on a long chain where most nodes stay at rank 0
-    through every iteration, and with weights."""
-    pairs = [(i, (i * 7 + 3) % 23) for i in range(23)
-             if i != (i * 7 + 3) % 23]
-    chain = [(i, i + 1) for i in range(40)]
-    for topo, seeds in ((pairs, [0, 1, 2]), (chain, [0])):
-        edges = _edges(spark, topo)
-        uni = sorted(map(tuple, G.pagerank_personalized(
-            edges, seeds, iters=3).collect()))
-        fro = sorted(map(tuple, G.pagerank_personalized(
-            edges, seeds, iters=3, frontier=True).collect()))
-        assert uni == fro
-    w = spark.createDataFrame(
-        [(0, 1, 9), (1, 0, 9), (0, 2, 1), (2, 0, 1)],
-        "src long, dst long, w long")
-    assert sorted(map(tuple, G.pagerank_personalized(
-        w, [0], iters=2, weight_col="w").collect())) == \
-        sorted(map(tuple, G.pagerank_personalized(
-            w, [0], iters=2, weight_col="w", frontier=True).collect()))
-
-
 def test_ppr_rejects_seed_without_out_edges(spark):
     """A seed absent from the out-degree table would
     silently lose its restart mass — validate_seeds (default) raises;

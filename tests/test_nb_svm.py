@@ -114,8 +114,10 @@ def test_svm_declared_fallback_no_driver_collect(train_df, monkeypatch):
     """The large-vocab path must never materialize the vocabulary on
     the driver — the path DECISION is a limit(N+1).count() probe and
     the epoch loop is collect-free (all models stay DataFrames). A
-    spy on DataFrame.collect proves it structurally, not by timing."""
-    from pyspark.sql import DataFrame
+    spy on DataFrame.collect proves it structurally, not by timing.
+    The spy goes on the classic DataFrame class, whose collect
+    overrides the one on ``pyspark.sql.DataFrame``."""
+    from pyspark.sql.classic.dataframe import DataFrame
 
     literal = {r["word"]: r["weight"]
                for r in SVM.svm_train_declared(train_df, epochs=3).collect()}
@@ -124,8 +126,9 @@ def test_svm_declared_fallback_no_driver_collect(train_df, monkeypatch):
     calls = []
     monkeypatch.setattr(DataFrame, "collect",
                         lambda self: calls.append(self) or real_collect(self))
-    # literal_map_max=0 forces the distributed fallback for any vocab
-    w = SVM.svm_train_declared(train_df, epochs=3, literal_map_max=0)
+    # LITERAL_MAP_MAX=0 forces the distributed fallback for any vocab
+    monkeypatch.setattr(SVM, "LITERAL_MAP_MAX", 0)
+    w = SVM.svm_train_declared(train_df, epochs=3)
     assert calls == [], "fallback training path called DataFrame.collect"
     monkeypatch.undo()
 
@@ -135,11 +138,13 @@ def test_svm_declared_fallback_no_driver_collect(train_df, monkeypatch):
         assert math.isclose(fallback[k], literal[k], rel_tol=1e-9, abs_tol=1e-12)
 
 
-def _svm_both_paths(docs, epochs=5):
+def _svm_both_paths(docs, monkeypatch, epochs=5):
     literal = {r["word"]: r["weight"]
                for r in SVM.svm_train_declared(docs, epochs=epochs).collect()}
-    fallback = {r["word"]: r["weight"] for r in SVM.svm_train_declared(
-        docs, epochs=epochs, literal_map_max=0).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(SVM, "LITERAL_MAP_MAX", 0)
+        fallback = {r["word"]: r["weight"] for r in SVM.svm_train_declared(
+            docs, epochs=epochs).collect()}
     return literal, fallback
 
 
@@ -149,7 +154,7 @@ def _assert_paths_agree(literal, fallback):
         assert math.isclose(fallback[k], literal[k], rel_tol=1e-9, abs_tol=1e-12), k
 
 
-def test_svm_declared_fallback_keeps_duplicate_ids_apart(spark):
+def test_svm_declared_fallback_keeps_duplicate_ids_apart(spark, monkeypatch):
     """Two rows sharing a doc id are two samples on BOTH paths: the
     fallback must not merge them into one sample with one label."""
     docs = spark.createDataFrame(
@@ -157,10 +162,10 @@ def test_svm_declared_fallback_keeps_duplicate_ids_apart(spark):
          ("2", 1, "good happy"), ("3", 0, "bad awful"),
          ("4", 1, "fun times"), ("5", 0, "sad day")],
         "doc_id string, label int, text string")
-    _assert_paths_agree(*_svm_both_paths(docs))
+    _assert_paths_agree(*_svm_both_paths(docs, monkeypatch))
 
 
-def test_svm_declared_literal_map_escapes_tokens(spark):
+def test_svm_declared_literal_map_escapes_tokens(spark, monkeypatch):
     """Tokens with quotes and backslashes survive the SQL-text weight
     map unchanged: the literal path agrees with the fallback."""
     docs = spark.createDataFrame(
@@ -168,7 +173,7 @@ def test_svm_declared_literal_map_escapes_tokens(spark):
          (3, "don't \\' sad", 0.0), (4, "it's bad\\n", 0.0),
          (5, "'' good fun", 1.0), (6, "bad \\\\ fun", 0.0)],
         "doc_id long, text string, label double")
-    literal, fallback = _svm_both_paths(docs)
+    literal, fallback = _svm_both_paths(docs, monkeypatch)
     assert {"it's", "c:\\dir", "good\\", "\\'", "bad\\n", "''",
             "\\\\"} <= literal.keys()
     _assert_paths_agree(literal, fallback)

@@ -101,28 +101,29 @@ def test_whole_stage_codegen_active(spark, sf_dir):
     assert "* HashAggregate" in plan or "* Sort" in plan
 
 
-def test_ivf_assignment_is_narrow(spark, sf_dir):
-    """IVF cell assignment must be a zero-exchange plan: the codebook is
-    plan-time literals and the argmax is a per-row array expression —
-    never a Window.partitionBy(vec_id) shuffle of the corpus."""
-    from text_sentiment_classification_hadoop_spark_spark.operators.similarity import ivf_assign_cells
+@pytest.mark.parametrize("case", ["flat", "two_level", "pq"])
+def test_ivf_assignment_is_narrow(spark, sf_dir, case):
+    """Codebook assignment (flat IVF, two-level IVF, PQ encode) rides
+    plan-time literals and a per-row array argmax: never a hash or
+    range shuffle of the corpus (the old Window.partitionBy(vec_id)
+    form) and never a nested-loop join against a codebook row. Flat
+    IVF reads its input as is, so its plan has no exchange at all; the
+    other two allow only widen()'s round-robin fan-out (a no-op at
+    scale)."""
+    from text_sentiment_classification_hadoop_spark_spark.operators import similarity as SIM
     from text_sentiment_classification_hadoop_spark_spark.sources.tables import load_table
     emb = load_table(spark, "embeddings", sf_dir)
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec"))
-    assert_no_exchange(ivf_assign_cells(emb, centroids))
-
-
-def test_pq_encode_is_narrow(spark, sf_dir):
-    """PQ encode (text-built literal codebooks) must stay shuffle-free
-    apart from widen()'s round-robin fan-out (a no-op at scale): no
-    hash or range partitioning anywhere in the plan."""
-    from text_sentiment_classification_hadoop_spark_spark.operators.similarity import pq_encode
-    from text_sentiment_classification_hadoop_spark_spark.sources.tables import load_table
-    emb = load_table(spark, "embeddings", sf_dir)
-    plan = plan_string(pq_encode(emb))
-    assert "hashpartitioning" not in plan
-    assert "rangepartitioning" not in plan
+    df = {"flat": lambda: SIM.ivf_assign_cells(emb, centroids),
+          "two_level": lambda: SIM.ivf_assign_cells_two_level(emb, centroids),
+          "pq": lambda: SIM.pq_encode(emb)}[case]()
+    plan = plan_string(df)
+    for banned in ("hashpartitioning", "rangepartitioning",
+                   "BroadcastNestedLoopJoin"):
+        assert banned not in plan, f"{banned} in plan:\n{plan}"
+    if case == "flat":
+        assert_no_exchange(df)
 
 
 def test_exprtext_matches_column_build(spark, sf_dir):

@@ -88,10 +88,9 @@ def pround_txt(e: str, n: int) -> str:
 
 def nearest_cell_over_txt(vec: str, books_expr: str) -> str:
     """Nearest centroid by 6-dp-rounded cosine, ties → LOWEST cell id,
-    over ANY ``array<struct<i,v>>`` expression — a :func:`books_lit`
-    literal (small codebooks) or a broadcast-joined column (large ones;
-    see ``similarity._codebook_df``). Identical ops either way, so both
-    paths are bit-identical and share one oracle.
+    over an ``array<struct<i,v>>`` expression — a :func:`books_lit`
+    literal, or one :func:`subbooks_lit` sub-book picked per row by
+    ``element_at`` (the two-level assignment).
 
     ``array_max`` over ``struct(cosine, -id)`` (struct ordering is
     lexicographic, so the negated id turns max-tie into min-id) —
@@ -121,23 +120,17 @@ def subbooks_lit(groups) -> str:
         for _g, gv, sub in groups) + ")"
 
 
-def pq_seg_cell_over_txt(vec: str, books_expr: str, s: int,
-                         seg_len: int) -> str:
+def pq_seg_cell_txt(vec: str, book, s: int, seg_len: int) -> str:
     """Nearest codeword for PQ segment ``s`` by 6-dp-rounded squared
     L2, ties → lowest code id (``array_min`` over struct(dist, id)),
-    over ANY ``array<struct<i,v>>`` expression (literal or column)."""
+    over a plan-time ``[(id, subvector)]`` codebook literal."""
     sub = f"slice({vec}, {s * seg_len + 1}, {seg_len})"
     dist6 = pround_txt(
         f"aggregate(zip_with({sub}, p.v, "
         "(x, c) -> (CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)), "
         "0.0D, (acc, v) -> acc + v)", 6)
-    return (f"(array_min(transform({books_expr}, "
+    return (f"(array_min(transform({books_lit(book)}, "
             f"p -> named_struct('d', {dist6}, 'i', p.i))).i)")
-
-
-def pq_seg_cell_txt(vec: str, book, s: int, seg_len: int) -> str:
-    """:func:`pq_seg_cell_over_txt` over a plan-time codebook literal."""
-    return pq_seg_cell_over_txt(vec, books_lit(book), s, seg_len)
 
 
 def sign_lsh_bucket_txt(vec: str, planes) -> str:
@@ -168,9 +161,8 @@ def nearest_cell_with_cos_txt(vec: str, cents) -> str:
     """Like :func:`nearest_cell_txt` but returns
     ``struct(cell, cos)`` — the assignment AND its 6-dp-rounded cosine,
     for cluster-quality aggregation. The argmax struct is evaluated
-    twice (once per output field); at codebook sizes where the literal
-    path applies (k ≤ LITERAL_CODEBOOK_MAX) that is a constant-factor
-    cost on an already-narrow expression."""
+    twice (once per output field), a constant-factor cost on an
+    already-narrow expression."""
     cos6 = pround_txt(cos_txt(vec, "p.v"), 6)
     best = (f"array_max(transform({books_lit(cents)}, "
             f"p -> named_struct('c', {cos6}, 'i', -p.i)))")

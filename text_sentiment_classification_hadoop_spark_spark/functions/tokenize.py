@@ -35,16 +35,13 @@ def explode_tokens(
     text_col: str = "text",
     out_col: str = "word",
     keep: list[str] | None = None,
-    drop_empty_text: bool = True,
 ) -> DataFrame:
     """T4: one row per token occurrence (``NB.java:94-95``).
 
-    ``drop_empty_text`` replicates the empty-text guard (P5,
-    ``NB.java:90``): tweets whose cleaned text is blank emit no words.
-    Runs as generate+project — narrow, no shuffle, scales linearly.
+    Replicates the empty-text guard (P5, ``NB.java:90``): tweets whose
+    cleaned text is blank emit no words. Runs as generate+project —
+    narrow, no shuffle, scales linearly.
     """
     keep = keep if keep is not None else [c for c in df.columns if c != text_col]
-    out = df
-    if drop_empty_text:
-        out = out.filter(F.length(F.trim(F.col(text_col))) > 0)
-    return out.select(*keep, F.explode(tokens_array(F.col(text_col))).alias(out_col))
+    return (df.filter(F.length(F.trim(F.col(text_col))) > 0)
+            .select(*keep, F.explode(tokens_array(F.col(text_col))).alias(out_col)))

@@ -1088,12 +1088,10 @@ def semdedup(emb: DataFrame, centroids: DataFrame | None = None,
                              ivf_assign_cells_two_level, norm_expr)
 
     emb = widen(emb)
-    cents, n_cents = centroids, None
-    if cents is None:
-        cents = emb.filter(F.col(id_col) < n_cells).select(
+    if centroids is None:
+        centroids = emb.filter(F.col(id_col) < n_cells).select(
             F.col(id_col).alias("cell_id"),
             F.col(vec_col).alias("cell_vec"))
-        n_cents = n_cells
     # materialize the assigned+normed corpus ONCE before the pair
     # self-join: the per-row nearest-cell argmax is the expensive
     # expression here (higher-order functions evaluate interpreted,
@@ -1103,9 +1101,9 @@ def semdedup(emb: DataFrame, centroids: DataFrame | None = None,
     # also sidesteps Spark 4's self-join attribute dedup bug on local
     # relations (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
     assigned = (
-        ivf_assign_cells_two_level(emb, cents, id_col, vec_col)
+        ivf_assign_cells_two_level(emb, centroids, id_col, vec_col)
         if two_level else
-        ivf_assign_cells(emb, cents, id_col, vec_col, n_centroids=n_cents))
+        ivf_assign_cells(emb, centroids, id_col, vec_col))
     base = (
         assigned
         .select(F.col(id_col), F.col("cell"), F.col(vec_col),

@@ -257,7 +257,6 @@ def pagerank_fixed_point(edges: DataFrame, iters: int = 3,
 def pagerank_personalized(edges: DataFrame, seeds: list[int],
                           iters: int = 3,
                           weight_col: str | None = None,
-                          frontier: bool = False,
                           validate_seeds: bool = True) -> DataFrame:
     """``iters`` power iterations of PERSONALIZED PageRank (random walk
     with restart: the teleport lands on the ``seeds`` set instead of
@@ -276,19 +275,6 @@ def pagerank_personalized(edges: DataFrame, seeds: list[int],
     driver-provided seed list, resolved once before the loop), so the
     per-iteration plan is IDENTICAL to the global variant: one
     edge×rank join, one dst aggregate, one node-sized left join.
-
-    Scale note: early iterations have rank 0 on most nodes — the
-    uniform plan's contribution join still touches every edge but
-    contributes nothing. ``frontier=True`` restricts each iteration's
-    share table to ``rank_micro > 0`` nodes (the :func:`bfs_depths`
-    frontier discipline): zero-rank sources contribute exactly 0 mass
-    (``(0·w) div sum_w = 0``), so the two plans are BIT-IDENTICAL in
-    output (pytest-pinned) while the frontier join is frontier×degree-
-    sized instead of edge-sized — it wins when seeds are sparse and
-    ``iters`` ≪ diameter (mass hasn't reached most of the graph); on
-    small-diameter graphs saturated by iteration 2 the extra filter
-    buys nothing, so the uniform plan stays the default (measured
-    crossover: SCALE.md §21).
 
     Seeds MUST be source nodes: the node table derives from out-degree
     (``deg``), so a seed with no out-edges is not a row of ``nodes``
@@ -325,13 +311,11 @@ def pagerank_personalized(edges: DataFrame, seeds: list[int],
         "node",
         (F.col("_seed") * SCALE).cast("long").alias("rank_micro"))
     for it in range(iters):
-        active = ranks.filter(F.col("rank_micro") > 0) if frontier \
-            else ranks
         # string-key (USING) joins for the same ambiguous-self-join
         # reason as pagerank_fixed_point: the lazy multi-round lineage
         # re-joins deg/nodes-derived frames against themselves
         share = (
-            active.join(deg.withColumnRenamed("src", "node"), "node")
+            ranks.join(deg.withColumnRenamed("src", "node"), "node")
             .select(F.col("node").alias("src"), "rank_micro", "sum_w")
         )
         contrib = (

@@ -230,77 +230,28 @@ def pairwise_topk_join(emb: DataFrame, queries: DataFrame, k: int = 5,
     )
 
 
-# Codebooks ride into the assignment expression one of two ways, chosen
-# by codeword count (the same two-path pattern as the SVM epoch loop):
-#
-# - ≤ LITERAL_CODEBOOK_MAX codewords: plan-time literals (the J4
-#   scalar-broadcast pattern) — zero exchanges, but plan text grows
-#   O(k·dims) and would hit codegen/plan-size limits near k ≈ 10³;
-# - above it: the SAME expression over a broadcast ONE-ROW DataFrame
-#   holding the codebook as an array<struct<i,v>> column — the
-#   BroadcastNestedLoopJoin against one row is still narrow (no
-#   shuffle), plan size is O(1) in k, and because the expression text
-#   is identical apart from where the array comes from, both paths are
-#   bit-identical and share one oracle.
-LITERAL_CODEBOOK_MAX = 64
-
-
-def _one_row_book(spark, book):
-    """The broadcast-codebook relation: one row, one array column."""
-    return local_frame(
-        spark, [([(int(i), [float(x) for x in v]) for i, v in book],)],
-        "_cb array<struct<i: bigint, v: array<double>>>")
-
-
-def _one_row_books(spark, books):
-    """Per-segment codebooks (PQ) as one nested-array row."""
-    return local_frame(
-        spark, [([[(int(i), [float(x) for x in v]) for i, v in b]
-                  for b in books],)],
-        "_cbs array<array<struct<i: bigint, v: array<double>>>>")
-
-
 def ivf_assign_cells(emb: DataFrame, centroids: DataFrame,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     literal_codebook_max: int | None = None,
-                     n_centroids: int | None = None) -> DataFrame:
+                     id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> DataFrame:
     """IVF coarse quantization: assign every vector to its nearest
     centroid by cosine (rounded 6 dp; ties -> lowest centroid id) →
     ``(vec_id, embedding, cell)``.
 
-    Small codebooks are collected to PLAN-TIME LITERALS and the per-row
+    The codebook is collected to PLAN-TIME LITERALS and the per-row
     argmax is a narrow array expression — ZERO exchanges (the round-1
     form windowed over the unique ``vec_id`` key, which hash-shuffled
-    the whole corpus just to reduce 8 candidate rows per vector). Above
-    ``literal_codebook_max`` cells the codebook instead arrives as a
-    broadcast one-row array column (never collected to the driver at
-    all on this path — a ``limit(N+1).count()`` probe decides, and the
-    array is built by a Spark-side ``collect_list``), same expression,
-    same numerics. At 100 TB the assigned table is written
-    partitioned/bucketed by ``cell`` so probes prune to n_probe cells.
+    the whole corpus just to reduce 8 candidate rows per vector). The
+    literal codebook stays practical well past registry sizes
+    (k=1024 measured in SCALE.md §4). At 100 TB the assigned table is
+    written partitioned/bucketed by ``cell`` so probes prune to
+    n_probe cells.
     """
-    lim = LITERAL_CODEBOOK_MAX if literal_codebook_max is None \
-        else literal_codebook_max
-    # callers that constructed the codebook know its size — passing
-    # n_centroids skips the limit(N+1).count() probe job entirely
-    n_cents = (centroids.limit(lim + 1).count()
-               if n_centroids is None else n_centroids)
-    if n_cents <= lim:
-        cents = sorted(
-            [(int(r["cell_id"]), [float(x) for x in r["cell_vec"]])
-             for r in centroids.select("cell_id", "cell_vec").collect()])
-        return emb.select(
-            F.col(id_col), F.col(vec_col),
-            F.expr(X.nearest_cell_txt(vec_col, cents)).alias("cell"))
-    book = (
-        centroids.select(
-            F.struct(F.col("cell_id").cast("long").alias("i"),
-                     F.col("cell_vec").alias("v")).alias("_s"))
-        .agg(F.array_sort(F.collect_list("_s")).alias("_cb")))
-    return (
-        emb.crossJoin(F.broadcast(book))
-        .select(F.col(id_col), F.col(vec_col),
-                F.expr(X.nearest_cell_over_txt(vec_col, "_cb")).alias("cell")))
+    cents = sorted(
+        [(int(r["cell_id"]), [float(x) for x in r["cell_vec"]])
+         for r in centroids.select("cell_id", "cell_vec").collect()])
+    return emb.select(
+        F.col(id_col), F.col(vec_col),
+        F.expr(X.nearest_cell_txt(vec_col, cents)).alias("cell"))
 
 
 # nearest-centroid / nearest-codeword argmaxes are emitted as single
@@ -400,9 +351,7 @@ def two_level_books(centroids: DataFrame,
 def ivf_assign_cells_two_level(emb: DataFrame, centroids: DataFrame,
                                id_col: str = "vec_id",
                                vec_col: str = "embedding",
-                               n_groups: int | None = None,
-                               literal_codebook_max: int | None = None
-                               ) -> DataFrame:
+                               n_groups: int | None = None) -> DataFrame:
     """Two-level (hierarchical IVF) cell assignment — the §30-named
     lever replacing the flat O(n·k·d) argmax of
     :func:`ivf_assign_cells` with O(n·2√k·d): route each vector to the
@@ -420,48 +369,25 @@ def ivf_assign_cells_two_level(emb: DataFrame, centroids: DataFrame,
     6-dp-rounded cosine with ties → lowest id, so the whole two-level
     argmax unrolls into the DuckDB oracle CTE chain.
 
-    Same two riding paths as the flat assignment: ≤
-    ``literal_codebook_max`` total codewords → plan-time literals
-    (group book + per-group sub-books indexed by ``element_at``);
-    above → one broadcast one-row frame carrying both arrays —
-    identical expressions, bit-identical results, one oracle. The
-    routing argmax is projected in its OWN select before the sub-book
-    argmax, so each evaluates once per row."""
-    lim = LITERAL_CODEBOOK_MAX if literal_codebook_max is None \
-        else literal_codebook_max
+    Both codebooks are plan-time literals, as in the flat assignment:
+    the group book, and the per-group sub-books indexed by
+    ``element_at``. The routing argmax is projected in its OWN select
+    before the sub-book argmax, so each evaluates once per row."""
     groups = two_level_books(centroids, n_groups)
-    k = sum(len(sub) for _g, _v, sub in groups)
     gbook = [(g, gvec) for g, gvec, sub in groups if sub]
-    if k <= lim:
-        routed = widen(emb).select(
-            F.col(id_col), F.col(vec_col),
-            F.expr(X.nearest_cell_txt(vec_col, gbook)).alias("grp"))
-        sub_expr = (f"element_at({X.subbooks_lit(groups)}, "
-                    "CAST(grp AS INT) + 1)")
-        return routed.select(
-            F.col(id_col), F.col(vec_col), F.col("grp"),
-            F.expr(X.nearest_cell_over_txt(vec_col, sub_expr)).alias("cell"))
-    spark = emb.sparkSession
-    book_row = local_frame(
-        spark, [([(int(g), [float(x) for x in v]) for g, v, sub in groups if sub],
-          [[(int(i), [float(x) for x in vv]) for i, vv in sub] or
-           [(int(groups[g][0]), [float(x) for x in groups[g][1]])]
-           for g, (_gid, _gv, sub) in enumerate(groups)])],
-        "_gb array<struct<i: bigint, v: array<double>>>, "
-        "_sb array<array<struct<i: bigint, v: array<double>>>>")
-    routed = (widen(emb).crossJoin(F.broadcast(book_row))
-              .select(F.col(id_col), F.col(vec_col), F.col("_sb"),
-                      F.expr(X.nearest_cell_over_txt(vec_col, "_gb"))
-                      .alias("grp")))
+    routed = widen(emb).select(
+        F.col(id_col), F.col(vec_col),
+        F.expr(X.nearest_cell_txt(vec_col, gbook)).alias("grp"))
+    sub_expr = (f"element_at({X.subbooks_lit(groups)}, "
+                "CAST(grp AS INT) + 1)")
     return routed.select(
         F.col(id_col), F.col(vec_col), F.col("grp"),
-        F.expr(X.nearest_cell_over_txt(
-            vec_col, "element_at(_sb, CAST(grp AS INT) + 1)")).alias("cell"))
+        F.expr(X.nearest_cell_over_txt(vec_col, sub_expr)).alias("cell"))
 
 
 def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 2,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               literal_codebook_max: int | None = None) -> DataFrame:
+               id_col: str = "vec_id", vec_col: str = "embedding"
+               ) -> DataFrame:
     """Deterministic distributed Lloyd's k-means (the trained codebook
     :func:`ivf_topk`'s docstring promises) → long-form
     ``(cell_id, d, centroid)``, k×dims rows.
@@ -482,36 +408,22 @@ def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 2,
     Determinism contract (cross-engine, mirrors the unrolled-SQL
     oracle): init = the first ``k`` vectors by id; cosine assignment
     rounded 6 dp with ties → lowest cell; means rounded 6 dp; an empty
-    cell keeps its previous centroid.
-
-    Above ``literal_codebook_max`` cells the per-iteration codebook
-    rides as a broadcast one-row array column instead of plan-text
-    literals (identical expression, O(1) plan size — see
-    ``LITERAL_CODEBOOK_MAX``). The k×dims means still round-trip the
-    driver between iterations on both paths: at k=10³, dims=64 that is
-    ~0.5 MB — driver traffic was never the scale problem, plan text
-    was."""
-    lim = LITERAL_CODEBOOK_MAX if literal_codebook_max is None \
-        else literal_codebook_max
-    spark = emb.sparkSession
+    cell keeps its previous centroid. At k=10³, dims=64 the driver
+    round-trip is ~0.5 MB per iteration."""
     first = emb.orderBy(F.col(id_col)).limit(k) \
         .select(F.col(id_col), F.col(vec_col)).collect()
+    if not first:
+        raise ValueError("kmeans_fit: empty embeddings frame")
     cents = [(int(r[id_col]), [float(x) for x in r[vec_col]]) for r in first]
     dims = len(cents[0][1])
     for _ in range(iters):
-        if k <= lim:
-            src = widen(emb)
-            cell = F.expr(X.nearest_cell_txt(vec_col, cents))
-        else:
-            src = widen(emb).crossJoin(
-                F.broadcast(_one_row_book(spark, cents)))
-            cell = F.expr(X.nearest_cell_over_txt(vec_col, "_cb"))
+        cell = F.expr(X.nearest_cell_txt(vec_col, cents))
         # the argmax MUST be projected before the posexplode: a sibling
         # expression of a generator lands in the Generate's own project
         # list and is re-evaluated per exploded element — dims× the
         # k·dims argmax per row (measured 18× slower at k=64, d=64).
         # As the generator child's projection it runs once per row.
-        assigned = src.select(cell.alias("cell"), F.col(vec_col))
+        assigned = widen(emb).select(cell.alias("cell"), F.col(vec_col))
         long_form = assigned.select(
             "cell",
             F.posexplode(F.transform(F.col(vec_col),
@@ -551,8 +463,7 @@ def ivf_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
     """
     centroids = emb.filter(F.col(id_col) < n_cells).select(
         F.col(id_col).alias("cell_id"), F.col(vec_col).alias("cell_vec"))
-    assigned = ivf_assign_cells(widen(emb), centroids, id_col, vec_col,
-                                n_centroids=n_cells)
+    assigned = ivf_assign_cells(widen(emb), centroids, id_col, vec_col)
 
     qtxt = X.vec_lit([float(x) for x in query_vec])
     probe = (centroids
@@ -687,8 +598,7 @@ def group_centroids(emb: DataFrame, labels: DataFrame, label_col: str,
 
 def pq_encode(emb: DataFrame, n_segments: int = 4, n_codes: int = 8,
               dims: int = 64, id_col: str = "vec_id",
-              vec_col: str = "embedding", books=None,
-              literal_codebook_max: int | None = None) -> DataFrame:
+              vec_col: str = "embedding", books=None) -> DataFrame:
     """Product quantization encode → long-form ``(vec_id, segment,
     code)``: split each vector into ``n_segments`` contiguous
     sub-vectors and snap each to its nearest codeword by squared L2
@@ -703,24 +613,14 @@ def pq_encode(emb: DataFrame, n_segments: int = 4, n_codes: int = 8,
     billion-scale ANN fit in memory (ADC scans the codes, not the
     floats)."""
     seg_len = dims // n_segments
-    lim = LITERAL_CODEBOOK_MAX if literal_codebook_max is None \
-        else literal_codebook_max
     if books is None:
         books = _pq_codebooks(emb, n_segments, n_codes, seg_len, id_col, vec_col)
-    if n_segments * n_codes <= lim:
-        cells_txt = "array(" + ", ".join(
-            X.pq_seg_cell_txt(vec_col, book, s, seg_len)
-            for s, book in enumerate(books)) + ")"
-        src = widen(emb)
-    else:
-        # large total codeword count: same expression over the
-        # broadcast nested-array column (O(1) plan size)
-        cells_txt = "array(" + ", ".join(
-            X.pq_seg_cell_over_txt(vec_col, f"_cbs[{s}]", s, seg_len)
-            for s in range(n_segments)) + ")"
-        src = widen(emb).crossJoin(
-            F.broadcast(_one_row_books(emb.sparkSession, books)))
-    return src.select(
+    if not books[0]:
+        raise ValueError("pq_encode: empty codebooks (empty embeddings frame)")
+    cells_txt = "array(" + ", ".join(
+        X.pq_seg_cell_txt(vec_col, book, s, seg_len)
+        for s, book in enumerate(books)) + ")"
+    return widen(emb).select(
         F.col(id_col),
         F.posexplode(F.expr(cells_txt)).alias("segment", "code"))
 
@@ -741,8 +641,7 @@ def _pq_codebooks(emb: DataFrame, n_segments: int, n_codes: int,
 
 def pq_train_books(emb: DataFrame, n_segments: int = 4, n_codes: int = 8,
                    iters: int = 2, dims: int = 64, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   literal_codebook_max: int | None = None):
+                   vec_col: str = "embedding"):
     """Per-segment Lloyd's k-means over PQ sub-vectors (squared-L2) —
     the trained codebooks :func:`pq_encode`'s docstring promises.
 
@@ -760,25 +659,18 @@ def pq_train_books(emb: DataFrame, n_segments: int = 4, n_codes: int = 8,
     6 dp; assignment ties → lowest code; an empty cell keeps its
     previous codeword."""
     seg_len = dims // n_segments
-    lim = LITERAL_CODEBOOK_MAX if literal_codebook_max is None \
-        else literal_codebook_max
     books = _pq_codebooks(emb, n_segments, n_codes, seg_len, id_col, vec_col)
+    if not books[0]:
+        raise ValueError(
+            "pq_train_books: empty codebooks (empty embeddings frame)")
     for _ in range(iters):
-        if n_segments * n_codes <= lim:
-            src = widen(emb)
-            cells = F.expr("array(" + ", ".join(
-                X.pq_seg_cell_txt(vec_col, books[s], s, seg_len)
-                for s in range(n_segments)) + ")")
-        else:
-            src = widen(emb).crossJoin(
-                F.broadcast(_one_row_books(emb.sparkSession, books)))
-            cells = F.expr("array(" + ", ".join(
-                X.pq_seg_cell_over_txt(vec_col, f"_cbs[{s}]", s, seg_len)
-                for s in range(n_segments)) + ")")
+        cells = F.expr("array(" + ", ".join(
+            X.pq_seg_cell_txt(vec_col, books[s], s, seg_len)
+            for s in range(n_segments)) + ")")
         # project the n_segments argmaxes BEFORE the posexplode (same
         # generator-sibling hazard as kmeans_fit: a sibling of the
         # generator re-evaluates per exploded element, dims× per row)
-        assigned = src.select(cells.alias("_cells"), F.col(vec_col))
+        assigned = widen(emb).select(cells.alias("_cells"), F.col(vec_col))
         lf = assigned.select(
             "_cells",
             F.posexplode(F.transform(
@@ -1160,7 +1052,7 @@ def knn_graph(emb: DataFrame, k: int = 5, n_cells: int = 8,
              .select(F.col(id_col).cast("long").alias("cell_id"),
                      F.col(vec_col).alias("cell_vec")))
     assigned = ivf_assign_cells(widen(emb), seeds, id_col=id_col,
-                                vec_col=vec_col, n_centroids=n_cells)
+                                vec_col=vec_col)
     base = assigned.select(F.col(id_col), F.col(vec_col), "cell",
                            norm_expr(F.col(vec_col)).alias("_nrm"))
     a = base.select(F.col(id_col).alias("src"), F.col(vec_col).alias("va"),
@@ -1404,9 +1296,7 @@ def embedding_outliers(emb: DataFrame, id_col: str = "vec_id",
 
 
 def pca_power_top_component(emb: DataFrame, vec_col: str = "embedding",
-                            id_col: str = "vec_id",
-                            iters: int = 8,
-                            strategy: str = "selfjoin") -> DataFrame:
+                            iters: int = 8) -> DataFrame:
     """Top principal component of the embedding cloud via fixed-round
     power iteration → ``(d, loading_micro)`` — one signed integer
     micro-unit loading per dimension, max-normalized to ±1e6. The
@@ -1416,9 +1306,8 @@ def pca_power_top_component(emb: DataFrame, vec_col: str = "embedding",
     Engine-stable end to end, NO floating point after the per-row
     quantization: components quantize to INTEGER micro-units (the
     ``embedding_dim_stats`` discipline), the Gram matrix G[i,j] =
-    Σ xuᵢ·xuⱼ accumulates exactly in DECIMAL(38,0) via ONE
-    vec_id-keyed self-join + (i,j) aggregate (dims² output rows), and
-    the centered matrix C = n·G − su·suᵀ with ``iters`` rounds of
+    Σ xuᵢ·xuⱼ accumulates exactly (dims² output rows), and the centered
+    matrix C = n·G − su·suᵀ with ``iters`` rounds of
     v ← C·v, renormalized each round by max-|component| INTEGER
     division (sign·(|w|·1e6 DIV max|w|)) runs in exact arbitrary-
     precision driver arithmetic on the collected dims×dims matrix —
@@ -1426,89 +1315,71 @@ def pca_power_top_component(emb: DataFrame, vec_col: str = "embedding",
     same class as the k-means centroid collect. The oracle mirrors
     every round in HUGEINT CTEs; magnitudes stay ≤ ~1e34 ≪ int128.
 
-    Gram strategies (both integer-exact, identical downstream plan —
-    ``strategy=``):
-
-    - ``"selfjoin"`` (default, the oracle-mirrored form): ONE
-      vec_id-keyed self-join + (i,j) aggregate. dims²-wide per row
-      (n·dims² shuffle intermediate) — fine to mid scale, visible in
-      the plan as one shuffle.
-    - ``"partial_gram"`` (the 100 TB path): per-PARTITION dims×dims
-      partial Grams via ``mapInPandas`` — each task matmuls its own
-      quantized rows (int64 chunks sized so no product sum can
-      overflow, accumulated into arbitrary-precision Python ints) and
-      emits dims² rows; one exact DECIMAL(38,0) reduce sums the
-      partials. Shuffle volume collapses from n·dims² rows to
-      |partitions|·dims² — the Gram cost rides the scan.
+    The Gram is built from per-PARTITION dims×dims partial Grams via
+    ``mapInPandas``: each task matmuls its own quantized rows (int64
+    chunks sized so no product sum can overflow, accumulated into
+    arbitrary-precision Python ints) and emits dims² rows; one exact
+    DECIMAL(38,0) reduce sums the partials. The shuffle carries
+    |partitions|·dims² rows, never n·dims² — the Gram cost rides the
+    scan.
 
     Fixed v₀ = all-ones pins the eigenvector sign."""
-    if strategy not in ("selfjoin", "partial_gram"):
-        raise ValueError(f"unknown Gram strategy: {strategy!r}")
     xu_lambda = lambda x: F.floor(  # noqa: E731
         x.cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-    xu_col = F.posexplode(F.transform(F.col(vec_col), xu_lambda))
-    # widen BEFORE the dims²-fan-out self-join: a single-row-group
-    # parquet input would run the CPU-heavy Gram stage on one task
-    au = widen(emb).select(F.col(id_col).alias("_v"),
-                           xu_col.alias("d", "xu"))
-    if strategy == "selfjoin":
-        a = au.select(F.col("_v"), F.col("d").alias("i"),
-                      F.col("xu").alias("_xi"))
-        b = au.select(F.col("_v"), F.col("d").alias("j"),
-                      F.col("xu").alias("_xj"))
-        gram = (a.join(b, "_v")
-                .groupBy("i", "j")
-                .agg(F.sum((F.col("_xi") * F.col("_xj"))
-                           .cast("decimal(38,0)")).alias("g")))
-    else:
-        qvec = widen(emb).select(
-            F.transform(F.col(vec_col), xu_lambda).alias("_xu"))
+    # widen BEFORE the Gram: a single-row-group parquet input would
+    # run the CPU-heavy partial-Gram stage on one task
+    src = widen(emb)
+    qvec = src.select(F.transform(F.col(vec_col), xu_lambda).alias("_xu"))
+    au = src.select(
+        F.posexplode(F.transform(F.col(vec_col), xu_lambda)).alias("d", "xu"))
 
-        def _partial_grams(batches):
-            import numpy as np
-            import pandas as pd
-            G = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(pdf["_xu"].tolist(), dtype=np.int64)
-                if G is None:
-                    G = np.zeros((X.shape[1], X.shape[1]), dtype=object)
-                # Chunk rows so no int64 Gram entry can overflow:
-                # |Σ xuᵢ·xuⱼ| over a chunk ≤ chunk·mx², so keep
-                # chunk·mx² ≤ 2⁶². For unit-norm embeddings quantized
-                # at 1e6 (mx ≈ 1e6) that allows chunks of thousands of
-                # rows; wilder magnitudes shrink the chunk, and if even
-                # a single row would overflow (mx² > 2⁶²) the matmul
-                # runs in Python bigints outright. Exactness always
-                # lands in the object-dtype (bigint) accumulator.
-                mx = int(np.abs(X).max())
-                if mx and mx * mx > (1 << 62):
-                    Xo = X.astype(object)
-                    G += Xo.T @ Xo
-                else:
-                    chunk = 512 if mx == 0 else max(
-                        1, min(512, (1 << 62) // (mx * mx)))
-                    for s in range(0, len(X), chunk):
-                        ch = X[s:s + chunk]
-                        G += (ch.T @ ch).astype(object)
+    def _partial_grams(batches):
+        import numpy as np
+        import pandas as pd
+        G = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.array(pdf["_xu"].tolist(), dtype=np.int64)
             if G is None:
-                return
-            d = G.shape[0]
-            ii, jj = np.indices((d, d))
-            from decimal import Decimal
-            yield pd.DataFrame({
-                "i": ii.ravel().astype("int32"),
-                "j": jj.ravel().astype("int32"),
-                "g": [Decimal(int(x)) for x in G.ravel()],
-            })
+                G = np.zeros((X.shape[1], X.shape[1]), dtype=object)
+            # Chunk rows so no int64 Gram entry can overflow:
+            # |Σ xuᵢ·xuⱼ| over a chunk ≤ chunk·mx², so keep
+            # chunk·mx² ≤ 2⁶². For unit-norm embeddings quantized
+            # at 1e6 (mx ≈ 1e6) that allows chunks of thousands of
+            # rows; wilder magnitudes shrink the chunk, and if even
+            # a single row would overflow (mx² > 2⁶²) the matmul
+            # runs in Python bigints outright. Exactness always
+            # lands in the object-dtype (bigint) accumulator.
+            mx = int(np.abs(X).max())
+            if mx and mx * mx > (1 << 62):
+                Xo = X.astype(object)
+                G += Xo.T @ Xo
+            else:
+                chunk = 512 if mx == 0 else max(
+                    1, min(512, (1 << 62) // (mx * mx)))
+                for s in range(0, len(X), chunk):
+                    ch = X[s:s + chunk]
+                    G += (ch.T @ ch).astype(object)
+        if G is None:
+            return
+        d = G.shape[0]
+        ii, jj = np.indices((d, d))
+        from decimal import Decimal
+        yield pd.DataFrame({
+            "i": ii.ravel().astype("int32"),
+            "j": jj.ravel().astype("int32"),
+            "g": [Decimal(int(x)) for x in G.ravel()],
+        })
 
-        partials = qvec.mapInPandas(
-            _partial_grams, "i int, j int, g decimal(38,0)")
-        gram = (partials.groupBy("i", "j")
-                .agg(F.sum("g").cast("decimal(38,0)").alias("g")))
+    partials = qvec.mapInPandas(
+        _partial_grams, "i int, j int, g decimal(38,0)")
+    gram = (partials.groupBy("i", "j")
+            .agg(F.sum("g").cast("decimal(38,0)").alias("g")))
     su = au.groupBy("d").agg(F.sum("xu").alias("s"))
     n = emb.count()
+    if n == 0:
+        raise ValueError("pca_power_top_component: empty embeddings frame")
     g_rows = {(r["i"], r["j"]): int(r["g"]) for r in gram.collect()}
     s_rows = {r["d"]: int(r["s"]) for r in su.collect()}
     dims = len(s_rows)

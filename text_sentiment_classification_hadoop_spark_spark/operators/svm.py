@@ -43,6 +43,10 @@ EPOCHS = 5
 LR = 0.1
 LAMBDA = 0.01
 
+# svm_train_declared keeps the weights as a plan-time map literal up to
+# this vocabulary size and switches to the distributed path above it.
+LITERAL_MAP_MAX = 4096
+
 # Pseudo-token used by the fused per-epoch aggregation in
 # svm_train_declared to carry the violation count through the same
 # word-grouped shuffle as the gradients. NUL never survives the
@@ -98,8 +102,7 @@ def svm_score(docs: DataFrame, weights: DataFrame, id_col: str = "doc_id",
 def svm_train_declared(docs: DataFrame, text_col: str = "text",
                        label_col: str = "label",
                        epochs: int = EPOCHS, lr: float = LR,
-                       lam: float = LAMBDA,
-                       literal_map_max: int = 4096) -> DataFrame:
+                       lam: float = LAMBDA) -> DataFrame:
     """M4 strict training with the epoch chain actually wired up
     (the fix for the reference's load-path bug).
 
@@ -112,7 +115,7 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
     Execution shape — two paths, chosen by vocabulary size after the
     first epoch (the epoch-1 gradient IS the vocabulary):
 
-    - **Literal-map path** (vocab ≤ ``literal_map_max``): the weights
+    - **Literal-map path** (vocab ≤ ``LITERAL_MAP_MAX``): the weights
       ride into each epoch as a plan-time ``map(...)`` literal built as
       SQL text (``functions.exprtext``, the same pattern as the IVF/PQ
       codebooks — one py4j call instead of 2·V), so the margin is a
@@ -170,8 +173,8 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
     # a limit(N+1).count() probe is executor-side and returns a scalar,
     # so at 100× vocab the decision itself can never OOM the driver —
     # only a probe that comes back under the threshold earns a collect.
-    probe = w1.limit(literal_map_max + 1).count()
-    if probe <= literal_map_max:
+    probe = w1.limit(LITERAL_MAP_MAX + 1).count()
+    if probe <= LITERAL_MAP_MAX:
         weights = {r["word"]: r["weight"] for r in w1.collect()}
         for epoch in range(2, epochs + 1):
             eta = epoch_lr(epoch)
