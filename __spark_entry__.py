@@ -2644,25 +2644,20 @@ def _events_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     an availableNow file stream + memory sink; the batch ``events_tumbling``
     oracle checks it (same logical agg, incremental execution)."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         events_raw_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
         tumbling_counts_stream,
     )
     # the events table is a single parquet FILE; the file-stream source
     # needs a directory, so stream the sf dir with a glob filter; ts is
     # encoding-normalized inside events_raw_stream.
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(tumbling_counts_stream(raw, minutes=5),
-                                 "events_tumbling_stream", output_mode="complete")
-    q.stop()
-    return (spark.table("events_tumbling_stream")
-            .select("window_start", "event_type", "n",
-                    F.col("total_value").cast("double").alias("total_value"))
+    out = run_stream(tumbling_counts_stream(events_raw_stream(spark, sf_dir),
+                                            minutes=5),
+                     "events_tumbling_stream", "complete")
+    return (out.select("window_start", "event_type", "n",
+                       F.col("total_value").cast("double").alias("total_value"))
             .orderBy("window_start", "event_type"))
 
 
@@ -2672,23 +2667,18 @@ def _events_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifted tumblings) checks it — same logical agg, incremental
     execution, 2× overlap state bounded by the watermark."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         events_raw_stream,
-        run_stream_to_memory,
+        run_stream,
         sliding_counts_stream,
-        stream_shuffle_partitions,
     )
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(
-            sliding_counts_stream(raw, minutes=10, slide_minutes=5),
-            "events_sliding_stream", output_mode="complete")
-    q.stop()
-    return (spark.table("events_sliding_stream")
-            .select("window_start", "event_type", "n",
-                    F.col("total_value").cast("double").alias("total_value"))
+    out = run_stream(
+        sliding_counts_stream(events_raw_stream(spark, sf_dir), minutes=10,
+                              slide_minutes=5),
+        "events_sliding_stream", "complete")
+    return (out.select("window_start", "event_type", "n",
+                       F.col("total_value").cast("double").alias("total_value"))
             .orderBy("window_start", "event_type"))
 
 
@@ -2696,22 +2686,13 @@ def _events_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-store session windows (``F.session_window``) checked against
     the batch gap-sessionization oracle (identical boundaries: merge iff
     gap < 30 min; no exact-boundary ties exist in the testdata)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         events_raw_stream,
-        run_stream_to_memory,
+        run_stream,
         sessionize_stream,
-        stream_shuffle_partitions,
     )
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(sessionize_stream(raw),
-                                 "events_sessionize_stream",
-                                 output_mode="complete")
-    q.stop()
-    return (spark.table("events_sessionize_stream")
+    return (run_stream(sessionize_stream(events_raw_stream(spark, sf_dir)),
+                       "events_sessionize_stream", "complete")
             .select("user_id", "session_start", "session_end", "n_events")
             .orderBy("user_id", "session_start"))
 
@@ -2723,22 +2704,27 @@ def _stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow batch makes the emitted set = every distinct stage a
     user reached (ascending) — the DISTINCT oracle; multi-batch state
     carry is pytest-covered (tests/test_events_streaming.py)."""
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         events_raw_stream,
         funnel_stage_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
-    ensure_engine_confs(spark)
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(funnel_stage_stream(raw),
-                                 "stream_funnel_stages",
-                                 output_mode="append")
-    q.stop()
-    return (spark.table("stream_funnel_stages")
+    return (run_stream(funnel_stage_stream(events_raw_stream(spark, sf_dir)),
+                       "stream_funnel_stages", "append")
             .orderBy("user_id", "stage_idx"))
+
+
+def _doubled_doc_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The document stream with every row sent twice, as content
+    hashes: the duplicated feed both streaming dedups must collapse."""
+    from pyspark.sql import functions as F
+
+    from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
+        documents_stream,
+    )
+    return (documents_stream(spark, sf_dir)
+            .withColumn("_copy", F.explode(F.array(F.lit(0), F.lit(1))))
+            .select(F.md5("text").alias("text_hash")))
 
 
 def _stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2746,32 +2732,13 @@ def _stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``applyInPandasWithState``): a deliberately duplicated document
     stream must emit each content hash exactly once — the incremental
     twin of ``dedup_exact``, oracle = distinct md5 over the table."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         dedup_first_seen_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
-    doc_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
-    ensure_engine_confs(spark)
-    raw = (spark.readStream.schema(doc_schema).format("parquet")
-           .option("pathGlobFilter", "documents.parquet").load(sf_dir))
-    dup = raw.withColumn("_copy", F.explode(F.array(F.lit(0), F.lit(1)))) \
-        .select(F.md5("text").alias("text_hash"))
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(dedup_first_seen_stream(dup),
-                                 "stream_dedup_docs", output_mode="append")
-    q.stop()
-    return spark.table("stream_dedup_docs").orderBy("text_hash")
+    return (run_stream(dedup_first_seen_stream(_doubled_doc_hashes(spark, sf_dir)),
+                       "stream_dedup_docs", "append")
+            .orderBy("text_hash"))
 
 
 def _stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2785,18 +2752,14 @@ def _stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         dedup_watermarked_stream,
         events_raw_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
-    raw = events_raw_stream(spark, sf_dir)
-    dup = (raw.withColumn("_copy", F.explode(F.array(F.lit(0), F.lit(1))))
+    dup = (events_raw_stream(spark, sf_dir)
+           .withColumn("_copy", F.explode(F.array(F.lit(0), F.lit(1))))
            .select("event_id", "user_id", "event_type", "ts"))
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(
-            dedup_watermarked_stream(dup, ["event_id"], delay="10 minutes"),
-            "stream_dedup_watermarked", output_mode="append")
-    q.stop()
-    return (spark.table("stream_dedup_watermarked")
+    return (run_stream(
+                dedup_watermarked_stream(dup, ["event_id"], delay="10 minutes"),
+                "stream_dedup_watermarked", "append")
             .select("event_id", "user_id", "event_type")
             .orderBy("event_id"))
 
@@ -2835,31 +2798,19 @@ def _stream_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch `doc_repetition` SQL. This is the deployment shape for
     continuous ingest: screens run per-file as data lands, dedup runs
     in the nightly batch pass."""
-    from pyspark.sql import types as T
-
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
-        run_stream_to_memory,
+        documents_stream,
+        run_stream,
     )
-    ensure_engine_confs(spark)
-    doc_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    raw = (spark.readStream.schema(doc_schema).format("parquet")
-           .option("pathGlobFilter", "documents.parquet").load(sf_dir))
     # the single-row-group file scans as ONE task per micro-batch and
     # the screen is expression-heavy (O(distinct×n) per row): widen()
     # can't probe a stream's partitioning, so repartition explicitly —
     # the same tiny round-robin exchange, applied per batch
-    wide = raw.repartition(spark.sparkContext.defaultParallelism)
-    q = run_stream_to_memory(TA.repetition_stats(wide),
-                             "stream_doc_repetition", output_mode="append")
-    q.stop()
-    return spark.table("stream_doc_repetition").orderBy("doc_id")
+    wide = documents_stream(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism)
+    return (run_stream(TA.repetition_stats(wide), "stream_doc_repetition",
+                       "append")
+            .orderBy("doc_id"))
 
 
 def _stream_curation_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2868,28 +2819,15 @@ def _stream_curation_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     `extra`-column pass-through selects — no join, no state, so the
     composed screen streams append-mode exactly like a single gate.
     Oracle: the batch SQL composition of the three gate oracles."""
-    from pyspark.sql import types as T
-
     from text_sentiment_classification_hadoop_spark_spark.operators.curation import narrow_verdict
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
-        run_stream_to_memory,
+        documents_stream,
+        run_stream,
     )
-    ensure_engine_confs(spark)
-    doc_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    raw = (spark.readStream.schema(doc_schema).format("parquet")
-           .option("pathGlobFilter", "documents.parquet").load(sf_dir))
-    wide = raw.repartition(spark.sparkContext.defaultParallelism)
-    q = run_stream_to_memory(narrow_verdict(wide),
-                             "stream_curation_gates", output_mode="append")
-    q.stop()
-    return spark.table("stream_curation_gates").orderBy("doc_id")
+    wide = documents_stream(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism)
+    return (run_stream(narrow_verdict(wide), "stream_curation_gates", "append")
+            .orderBy("doc_id"))
 
 
 def _stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2901,21 +2839,16 @@ def _stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         enrich_stream_static,
         events_raw_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
     cust = load_table(spark, "customer", sf_dir).select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"))
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(enrich_stream_static(raw, cust),
-                                 "stream_static_enrich",
-                                 output_mode="complete")
-    q.stop()
-    return (spark.table("stream_static_enrich")
-            .select("segment", "event_type", "n",
-                    F.col("total_value").cast("double").alias("total_value"))
+    out = run_stream(enrich_stream_static(events_raw_stream(spark, sf_dir),
+                                          cust),
+                     "stream_static_enrich", "complete")
+    return (out.select("segment", "event_type", "n",
+                       F.col("total_value").cast("double").alias("total_value"))
             .orderBy("segment", "event_type"))
 
 
@@ -2926,28 +2859,15 @@ def _stream_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint before the batch dedup joins. Oracle: the batch
     winnow_fingerprints SQL (same logical computation, incremental
     execution)."""
-    from pyspark.sql import types as T
-
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
-        run_stream_to_memory,
+        documents_stream,
+        run_stream,
     )
-    ensure_engine_confs(spark)
-    doc_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    raw = (spark.readStream.schema(doc_schema).format("parquet")
-           .option("pathGlobFilter", "documents.parquet").load(sf_dir)
-           .select("doc_id", "text"))
-    wide = raw.repartition(spark.sparkContext.defaultParallelism)
-    q = run_stream_to_memory(D.winnow_fingerprints(wide),
-                             "stream_winnow_fps", output_mode="append")
-    q.stop()
-    return spark.table("stream_winnow_fps").orderBy("doc_id", "fp")
+    wide = (documents_stream(spark, sf_dir).select("doc_id", "text")
+            .repartition(spark.sparkContext.defaultParallelism))
+    return (run_stream(D.winnow_fingerprints(wide), "stream_winnow_fps",
+                       "append")
+            .orderBy("doc_id", "fp"))
 
 
 def _stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2955,22 +2875,14 @@ def _stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user, click within the 5 minutes at-or-before the purchase) — the
     two-source join Structured Streaming state-stores; batch theta-join
     oracle."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         events_raw_stream,
         purchase_click_join_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(purchase_click_join_stream(raw),
-                                 "purchase_click_join_stream",
-                                 output_mode="append")
-    q.stop()
-    return (spark.table("purchase_click_join_stream")
+    return (run_stream(
+                purchase_click_join_stream(events_raw_stream(spark, sf_dir)),
+                "purchase_click_join_stream", "append")
             .orderBy("purchase_id", "click_id"))
 
 
@@ -2979,32 +2891,13 @@ def _stream_dedup_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     same duplicated feed — the production path; the custom
     applyInPandasWithState query above is the extension-point twin.
     Same oracle: distinct md5 over the table."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         dedup_native_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
-    doc_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    ensure_engine_confs(spark)
-    raw = (spark.readStream.schema(doc_schema).format("parquet")
-           .option("pathGlobFilter", "documents.parquet").load(sf_dir))
-    dup = raw.withColumn("_copy", F.explode(F.array(F.lit(0), F.lit(1)))) \
-        .select(F.md5("text").alias("text_hash"))
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(dedup_native_stream(dup),
-                                 "stream_dedup_native", output_mode="append")
-    q.stop()
-    return spark.table("stream_dedup_native").orderBy("text_hash")
+    return (run_stream(dedup_native_stream(_doubled_doc_hashes(spark, sf_dir)),
+                       "stream_dedup_native", "append")
+            .orderBy("text_hash"))
 
 
 def _tfidf_long(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3584,20 +3477,15 @@ def _stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         events_raw_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
         tumbling_counts_stream,
     )
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(tumbling_counts_stream(raw, minutes=60),
-                                 "stream_trending_topk",
-                                 output_mode="complete")
-    q.stop()
+    counts = run_stream(
+        tumbling_counts_stream(events_raw_stream(spark, sf_dir), minutes=60),
+        "stream_trending_topk", "complete")
     w = Window.partitionBy("window_start").orderBy(
         F.col("n").desc(), F.col("event_type").asc())
-    return (spark.table("stream_trending_topk")
-            .withColumn("rnk", F.row_number().over(w))
+    return (counts.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= 3)
             .select("window_start", "event_type",
                     F.col("n").cast("long").alias("n"),
@@ -3756,8 +3644,7 @@ def _stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         asof_enrich_stream,
         events_raw_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
     e = load_table(spark, "events", sf_dir)
     purchases = e.filter(F.col("event_type") == "purchase") \
@@ -3767,15 +3654,11 @@ def _stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # preserves the backward-asof semantics over zero rows
     hi_cap = (mx + timedelta(seconds=1)) if mx is not None \
         else datetime(2100, 1, 1)
-    raw = events_raw_stream(spark, sf_dir)
-    views = raw.filter(F.col("event_type") == "view") \
+    views = events_raw_stream(spark, sf_dir) \
+        .filter(F.col("event_type") == "view") \
         .select("user_id", "ts", "event_id")
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(
-            asof_enrich_stream(views, purchases, hi_cap),
-            "stream_asof_enrich", output_mode="append")
-    q.stop()
-    return (spark.table("stream_asof_enrich")
+    return (run_stream(asof_enrich_stream(views, purchases, hi_cap),
+                       "stream_asof_enrich", "append")
             .select("user_id", "event_id", "ts", "last_purchase_id",
                     "gap_us")
             .orderBy("user_id", "event_id"))
@@ -3793,19 +3676,13 @@ def _stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         events_raw_stream,
         range_join_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
     wins = busy_windows(spark, sf_dir)
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(range_join_stream(raw, wins),
-                                 "stream_range_join",
-                                 output_mode="complete")
-    q.stop()
-    return (spark.table("stream_range_join")
-            .select("w_type", "w_lo", "n_events",
-                    F.col("total_value").cast("double").alias("total_value"))
+    out = run_stream(range_join_stream(events_raw_stream(spark, sf_dir), wins),
+                     "stream_range_join", "complete")
+    return (out.select("w_type", "w_lo", "n_events",
+                       F.col("total_value").cast("double").alias("total_value"))
             .orderBy("w_type", "w_lo"))
 
 
@@ -3912,22 +3789,16 @@ def _stream_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         events_raw_stream,
         hourly_profile_stream,
-        run_stream_to_memory,
-        stream_shuffle_partitions,
+        run_stream,
     )
-    raw = events_raw_stream(spark, sf_dir)
-    with stream_shuffle_partitions(spark):
-        q = run_stream_to_memory(hourly_profile_stream(raw),
-                                 "stream_hourly_profile",
-                                 output_mode="complete")
-    q.stop()
+    out = run_stream(hourly_profile_stream(events_raw_stream(spark, sf_dir)),
+                     "stream_hourly_profile", "complete")
     # integer-exact mean off the final decimal totals (pround_avg2 form)
-    return (spark.table("stream_hourly_profile")
-            .select("event_type", "hour", F.col("n").cast("long").alias("n"),
-                    (F.floor((F.lit(2000000) * F.col("_tot") + F.col("n"))
-                             .cast("double")
-                             / (F.lit(2) * F.col("n")).cast("double"))
-                     / F.lit(1000000.0)).alias("mean_value"))
+    return (out.select("event_type", "hour", F.col("n").cast("long").alias("n"),
+                       (F.floor((F.lit(2000000) * F.col("_tot") + F.col("n"))
+                                .cast("double")
+                                / (F.lit(2) * F.col("n")).cast("double"))
+                        / F.lit(1000000.0)).alias("mean_value"))
             .orderBy("event_type", "hour"))
 
 
@@ -4168,6 +4039,27 @@ def _store_scratch(sf_dir: str, tag: str) -> str:
     return base
 
 
+def _two_batch_doc_stream(spark: SparkSession, sf_dir: str, tag: str,
+                          whole_second: bool = False):
+    """The documents table as a two-micro-batch ``(doc_id, text)``
+    stream for the persistent-store drives → ``(stream, store_dir)``:
+    batch 1 is the doc_id-even half, batch 2 the odd half (or, with
+    ``whole_second``, the WHOLE table), one file each, read with
+    maxFilesPerTrigger=1 from a pid-keyed scratch dir."""
+    from pyspark.sql import functions as F
+
+    base = _store_scratch(sf_dir, tag)
+    in_dir = os.path.join(base, "in")
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
+        .write.mode("overwrite").parquet(in_dir)
+    second = docs if whole_second else docs.filter(F.col("doc_id") % 2 == 1)
+    second.coalesce(1).write.mode("append").parquet(in_dir)
+    raw = (spark.readStream.schema("doc_id long, text string")
+           .option("maxFilesPerTrigger", "1").parquet(in_dir))
+    return raw, os.path.join(base, "store")
+
+
 def _count_store_contents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once persistent COUNT store (streaming/pipeline.
     incremental_counts_to_store) driven end-to-end: the documents
@@ -4176,31 +4068,17 @@ def _count_store_contents(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned parquet store per batch; the query returns the latest
     committed version. Final totals are batch-order-invariant, so the
     oracle is the plain batch word count over the whole table."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         incremental_counts_to_store,
         read_count_store,
-        stream_shuffle_partitions,
     )
-    ensure_engine_confs(spark)
-    base = _store_scratch(sf_dir, "counts")
-    in_dir, store = os.path.join(base, "in"), os.path.join(base, "store")
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.mode("overwrite").parquet(in_dir)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1) \
-        .write.mode("append").parquet(in_dir)
-    raw = (spark.readStream.schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", "1").parquet(in_dir))
+    raw, store = _two_batch_doc_stream(spark, sf_dir, "counts")
     words = raw.select(F.explode(F.regexp_extract_all(
         F.lower(F.col("text")), F.lit("[a-z]+"), 0)).alias("word"))
-    with stream_shuffle_partitions(spark):
-        incremental_counts_to_store(words, store, key_col="word",
-                                    query_name="count_store_drive")
+    incremental_counts_to_store(words, store, key_col="word",
+                                query_name="count_store_drive")
     return read_count_store(spark, store).orderBy("word")
 
 
@@ -4212,28 +4090,16 @@ def _dedup_store_contents(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppressed by the store anti-join, while odd-doc hashes append.
     The query reads the store back WITHOUT dedup, so any suppression
     failure shows up as extra rows against the distinct-md5 oracle."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         incremental_dedup_to_store,
-        stream_shuffle_partitions,
     )
-    ensure_engine_confs(spark)
-    base = _store_scratch(sf_dir, "dedup")
-    in_dir, store = os.path.join(base, "in"), os.path.join(base, "store")
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.mode("overwrite").parquet(in_dir)
-    docs.coalesce(1).write.mode("append").parquet(in_dir)
-    raw = (spark.readStream.schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", "1").parquet(in_dir))
-    hashed = raw.select(F.md5(F.col("text")).alias("text_hash"))
-    with stream_shuffle_partitions(spark):
-        incremental_dedup_to_store(hashed, store, key_col="text_hash",
-                                   query_name="dedup_store_drive")
+    raw, store = _two_batch_doc_stream(spark, sf_dir, "dedup",
+                                       whole_second=True)
+    incremental_dedup_to_store(raw.select(F.md5(F.col("text")).alias("text_hash")),
+                               store, key_col="text_hash",
+                               query_name="dedup_store_drive")
     return (spark.read.parquet(store)
             .select("text_hash").orderBy("text_hash"))
 
@@ -4264,28 +4130,13 @@ def _band_index_store_contents(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the whole store back; final contents are batch-order-
     invariant, so the oracle is the plain batch banding over the full
     table (the stream_neardup_candidates bands CTE)."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
         incremental_band_index_to_store,
-        stream_shuffle_partitions,
     )
-    ensure_engine_confs(spark)
-    base = _store_scratch(sf_dir, "bandidx")
-    in_dir, store = os.path.join(base, "in"), os.path.join(base, "store")
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.mode("overwrite").parquet(in_dir)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1) \
-        .write.mode("append").parquet(in_dir)
-    raw = (spark.readStream.schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", "1").parquet(in_dir))
-    with stream_shuffle_partitions(spark):
-        incremental_band_index_to_store(raw, store,
-                                        query_name="band_index_drive")
+    raw, store = _two_batch_doc_stream(spark, sf_dir, "bandidx")
+    incremental_band_index_to_store(raw, store, query_name="band_index_drive")
     return (spark.read.parquet(store)
             .select("doc_id", F.col("band").cast("int").alias("band"),
                     "bucket")
@@ -4366,36 +4217,22 @@ def _stream_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch index of the same corpus. Oracle: the batch band self-join
     over the augmented corpus, ordered pairs."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from text_sentiment_classification_hadoop_spark_spark.session import ensure_engine_confs
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
+        documents_stream,
         neardup_candidates_stream,
-        run_stream_to_memory,
+        run_stream,
     )
-    ensure_engine_confs(spark)
-    doc_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    raw = (spark.readStream.schema(doc_schema).format("parquet")
-           .option("pathGlobFilter", "documents.parquet").load(sf_dir)
-           .select("doc_id", "text"))
-    aug = (raw.repartition(spark.sparkContext.defaultParallelism)
+    aug = (documents_stream(spark, sf_dir).select("doc_id", "text")
+           .repartition(spark.sparkContext.defaultParallelism)
            .select(F.explode(F.array(
                F.struct(F.col("doc_id"), F.col("text")),
                F.struct((F.col("doc_id") + 1000000).alias("doc_id"),
                         F.concat(F.col("text"), F.lit(" zzz")).alias("text")),
            )).alias("r")).select("r.doc_id", "r.text"))
     index = D.band_signatures(_aug_sigs(spark, sf_dir))
-    q = run_stream_to_memory(
-        neardup_candidates_stream(aug, index),
-        "stream_neardup_cands", output_mode="append")
-    q.stop()
-    return (spark.table("stream_neardup_cands")
+    return (run_stream(neardup_candidates_stream(aug, index),
+                       "stream_neardup_cands", "append")
             .select("doc_id", F.col("band").cast("int").alias("band"),
                     "cand_id")
             .orderBy("doc_id", "band", "cand_id"))

@@ -632,6 +632,23 @@ def test_pq_adc_query_is_own_best_match(spark, sf_dir):
     assert [r["rank"] for r in rows] == list(range(1, 11))
 
 
+def test_pq_adc_collects_codebooks_once(spark, sf_dir, monkeypatch):
+    """Building the ADC query collects the first-``n_codes`` codebooks
+    once and hands them to the encoder: one driver collect, not two.
+    The spy goes on the classic DataFrame class, whose collect
+    overrides the one on ``pyspark.sql.DataFrame``."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = list(emb.filter(F.col("vec_id") == 0).head()["embedding"])
+    real_collect = DataFrame.collect
+    calls = []
+    monkeypatch.setattr(DataFrame, "collect",
+                        lambda self: calls.append(self) or real_collect(self))
+    SIM.pq_adc_topk(emb, q, k=10)
+    assert len(calls) == 1
+
+
 def test_pq_training_reduces_quantization_error(spark, sf_dir):
     """Lloyd iterations can only shrink (never grow) the summed
     squared-L2 between sub-vectors and their assigned codewords."""

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from text_sentiment_classification_hadoop_spark_spark.operators import events as E
 from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
     events_stream_from_files,
-    run_stream_to_memory,
+    run_stream,
     tumbling_counts_stream,
 )
 
@@ -58,12 +58,11 @@ def test_tumbling_golden(spark, events_path, monkeypatch):
 def test_streaming_tumbling_matches_batch(spark, events_path):
     stream = events_stream_from_files(spark, events_path)
     assert stream.isStreaming
-    q = run_stream_to_memory(
+    out = run_stream(
         tumbling_counts_stream(stream, minutes=5, watermark="10 minutes"),
-        "tumbling_test", output_mode="complete")
+        "tumbling_test", "complete")
     got = {(r["window_start"], r["event_type"]): (r["n"], r["total_value"])
-           for r in spark.sql("select * from tumbling_test").collect()}
-    q.stop()
+           for r in out.collect()}
     batch = spark.read.parquet(events_path).groupBy(
         F.window("ts", "5 minutes").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
@@ -74,12 +73,11 @@ def test_streaming_tumbling_matches_batch(spark, events_path):
 def test_streaming_sliding_matches_batch(spark, events_path):
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import sliding_counts_stream
     stream = events_stream_from_files(spark, events_path)
-    q = run_stream_to_memory(
+    out = run_stream(
         sliding_counts_stream(stream, minutes=10, slide_minutes=5),
-        "sliding_test", output_mode="complete")
+        "sliding_test", "complete")
     got = {(r["window_start"], r["event_type"]): (r["n"], r["total_value"])
-           for r in spark.sql("select * from sliding_test").collect()}
-    q.stop()
+           for r in out.collect()}
     batch = spark.read.parquet(events_path).groupBy(
         F.window("ts", "10 minutes", "5 minutes").alias("w"),
         "event_type").agg(
@@ -99,11 +97,10 @@ def test_streaming_sessionize_matches_batch(spark, events_path, monkeypatch):
     # early events as late-beyond-watermark — not what this test checks
     stream = events_stream_from_files(spark, events_path,
                                       max_files_per_trigger=100)
-    q = run_stream_to_memory(sessionize_stream(stream, gap_minutes=30),
-                             "sess_test", output_mode="complete")
+    out = run_stream(sessionize_stream(stream, gap_minutes=30),
+                     "sess_test", "complete")
     got = sorted((r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-                 for r in spark.table("sess_test").collect())
-    q.stop()
+                 for r in out.collect())
     import text_sentiment_classification_hadoop_spark_spark.operators.events as ev
     monkeypatch.setattr(ev, "load_table", lambda s, n, d: s.read.parquet(events_path))
     want = sorted((r["user_id"], r["session_start"], r["session_end"], r["n_events"])
@@ -122,10 +119,8 @@ def test_stateful_dedup_stream_first_seen_only(spark, tmp_path_factory):
     stream = (spark.readStream
               .schema("doc_id long, text string").parquet(p)
               .select(F.md5("text").alias("text_hash")))
-    q = run_stream_to_memory(dedup_first_seen_stream(stream), "dd_test",
-                             output_mode="append")
-    got = sorted(r["text_hash"] for r in spark.table("dd_test").collect())
-    q.stop()
+    out = run_stream(dedup_first_seen_stream(stream), "dd_test", "append")
+    got = sorted(r["text_hash"] for r in out.collect())
     want = sorted({r["h"] for r in spark.read.parquet(p)
                    .select(F.md5("text").alias("h")).collect()})
     assert got == want and len(got) == 7
@@ -142,10 +137,8 @@ def test_native_dedup_stream_matches_custom(spark, tmp_path_factory):
     stream = (spark.readStream
               .schema("doc_id long, text string").parquet(p)
               .select(F.md5("text").alias("text_hash")))
-    q = run_stream_to_memory(dedup_native_stream(stream), "ddn_test",
-                             output_mode="append")
-    got = sorted(r["text_hash"] for r in spark.table("ddn_test").collect())
-    q.stop()
+    out = run_stream(dedup_native_stream(stream), "ddn_test", "append")
+    got = sorted(r["text_hash"] for r in out.collect())
     want = sorted({r["h"] for r in spark.read.parquet(p)
                    .select(F.md5("text").alias("h")).collect()})
     assert got == want and len(got) == 9
@@ -168,11 +161,9 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
         events_raw_stream, purchase_click_join_stream)
     from text_sentiment_classification_hadoop_spark_spark.sources.tables import load_table
     raw = events_raw_stream(spark, sf_dir)
-    q = run_stream_to_memory(purchase_click_join_stream(raw), "ssj_test",
-                             output_mode="append")
+    out = run_stream(purchase_click_join_stream(raw), "ssj_test", "append")
     got = sorted((r["purchase_id"], r["click_id"], r["gap_us"])
-                 for r in spark.table("ssj_test").collect())
-    q.stop()
+                 for r in out.collect())
     e = load_table(spark, "events", sf_dir)
     c = e.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), F.col("user_id").alias("cu"),
@@ -242,14 +233,20 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     _mk_events(spark, [(100, 1, "click", 10.0), (3500, 1, "click", 20.0)]) \
         .coalesce(1).write.mode("append").parquet(p)
     stream = events_stream_from_files(spark, p, max_files_per_trigger=1)
-    q = run_stream_to_memory(
-        tumbling_counts_stream(stream, minutes=5, watermark="10 minutes"),
-        "late_test", output_mode="append")
+    # started here rather than through run_stream: the assertion reads
+    # the query's recentProgress
+    q = (tumbling_counts_stream(stream, minutes=5, watermark="10 minutes")
+         .writeStream.format("memory").queryName("late_test")
+         .outputMode("append").trigger(availableNow=True).start())
+    try:
+        finished = q.awaitTermination(60)
+    finally:
+        q.stop()
+    assert finished
     dropped = sum(pr["stateOperators"][0]["numRowsDroppedByWatermark"]
                   for pr in q.recentProgress if pr["stateOperators"])
     got = {(r["window_start"], r["event_type"]): r["n"]
            for r in spark.sql("select * from late_test").collect()}
-    q.stop()
     assert dropped == 1
     # the only finalized window is [T0, T0+5min): n=1, late row excluded
     assert got == {(T0, "click"): 1}
@@ -321,13 +318,10 @@ def test_dedup_watermarked_stream_bounds_state(spark, tmp_path):
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1)
               .parquet(src + "/*/"))
-    with P.stream_shuffle_partitions(spark):
-        q = P.run_stream_to_memory(
-            P.dedup_watermarked_stream(stream, ["k"], delay="10 minutes"),
-            "dedup_wm_state", output_mode="append")
-    q.stop()
-    got = sorted((r["k"], str(r["ts"])) for r in
-                 spark.table("dedup_wm_state").collect())
+    out = P.run_stream(
+        P.dedup_watermarked_stream(stream, ["k"], delay="10 minutes"),
+        "dedup_wm_state", "append")
+    got = sorted((r["k"], str(r["ts"])) for r in out.collect())
     assert [k for k, _ in got] == ["A", "A", "F", "G"]
 
 
@@ -364,12 +358,10 @@ def test_stream_static_enrich_matches_batch(spark, events_path):
     dim = spark.createDataFrame(
         [(1, "GOLD")], "user_id long, segment string")  # user 2 -> UNKNOWN
     stream = events_stream_from_files(spark, events_path)
-    q = run_stream_to_memory(
-        enrich_stream_static(stream, dim),
-        "enrich_test", output_mode="complete")
+    out = run_stream(enrich_stream_static(stream, dim), "enrich_test",
+                     "complete")
     got = {(r["segment"], r["event_type"]): (r["n"], float(r["total_value"]))
-           for r in spark.sql("select * from enrich_test").collect()}
-    q.stop()
+           for r in out.collect()}
     assert got == {
         ("GOLD", "click"): (3, 7.0),
         ("GOLD", "view"): (1, 3.0),
@@ -415,12 +407,9 @@ def test_incremental_band_index_store(spark, tmp_path):
     # each other's candidates deterministically
     idx = spark.read.parquet(store).select("doc_id", "band", "bucket")
     stream = spark.readStream.schema(schema).parquet(src)
-    q = P.run_stream_to_memory(
+    cands = {(r["doc_id"], r["cand_id"]) for r in P.run_stream(
         P.neardup_candidates_stream(stream, idx),
-        "band_store_lookup", output_mode="append")
-    q.stop()
-    cands = {(r["doc_id"], r["cand_id"])
-             for r in spark.table("band_store_lookup").collect()}
+        "band_store_lookup", "append").collect()}
     assert (1, 2) in cands and (2, 1) in cands
 
 
@@ -487,11 +476,9 @@ def test_funnel_stage_stream_monotone_state_across_batches(
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1)
               .parquet(base + "/f*"))
-    q = run_stream_to_memory(funnel_stage_stream(stream), "funnel_test",
-                             output_mode="append")
-    rows = sorted((r["user_id"], r["stage_idx"], r["stage"])
-                  for r in spark.table("funnel_test").collect())
-    q.stop()
+    rows = sorted((r["user_id"], r["stage_idx"], r["stage"]) for r in
+                  run_stream(funnel_stage_stream(stream), "funnel_test",
+                             "append").collect())
     assert rows == [
         (1, 1, "view"), (1, 2, "click"),
         (2, 3, "purchase"),
@@ -559,3 +546,43 @@ def test_funnel_stage_stream_ttl_evicts_idle_state(spark, tmp_path_factory):
         (2, 1, "view"), (2, 2, "click"),
         (9, 1, "view"),
     ]
+
+
+def test_run_stream_raises_when_out_of_time(spark, events_path, monkeypatch):
+    """A stream that has not processed all its input when the wait runs
+    out is stopped and raises: the memory sink as it stands would be a
+    silently truncated table."""
+    from text_sentiment_classification_hadoop_spark_spark.streaming import pipeline as P
+    monkeypatch.setattr(P, "_TIMEOUT_S", 0.001)
+    stream = events_stream_from_files(spark, events_path)
+    with pytest.raises(TimeoutError, match="timeout_tumbling"):
+        run_stream(tumbling_counts_stream(stream), "timeout_tumbling",
+                   "complete")
+    assert spark.streams.active == []
+
+
+def test_store_writer_raises_when_out_of_time(spark, tmp_path, monkeypatch):
+    """The store writers wait through the same bound: out of time, the
+    query is stopped (none left active) and the writer raises."""
+    from text_sentiment_classification_hadoop_spark_spark.streaming import pipeline as P
+    src = str(tmp_path / "src")
+    spark.createDataFrame([("a",), ("b",)], "word string") \
+        .write.mode("append").parquet(src)
+    monkeypatch.setattr(P, "_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="ic_timeout"):
+        P.incremental_counts_to_store(
+            spark.readStream.schema("word string").parquet(src),
+            str(tmp_path / "store"), key_col="word", query_name="ic_timeout")
+    assert spark.streams.active == []
+
+
+def test_read_count_store_without_committed_version_raises(spark, tmp_path):
+    """A count store with only a torn (unmarked) version has nothing
+    committed to read: a named ValueError, not an IndexError."""
+    import os
+
+    from text_sentiment_classification_hadoop_spark_spark.streaming import pipeline as P
+    store = str(tmp_path / "store")
+    os.makedirs(os.path.join(store, "v0000000000"))
+    with pytest.raises(ValueError, match="no committed version"):
+        P.read_count_store(spark, store)

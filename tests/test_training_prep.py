@@ -174,8 +174,9 @@ def test_stream_neardup_candidates_match_batch_band_join(spark, sf_dir):
     batch band self-join (ordered pairs, no self-matches)."""
     from text_sentiment_classification_hadoop_spark_spark.operators import dedup as D
     from text_sentiment_classification_hadoop_spark_spark.streaming.pipeline import (
+        documents_stream,
         neardup_candidates_stream,
-        run_stream_to_memory,
+        run_stream,
     )
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
@@ -192,21 +193,15 @@ def test_stream_neardup_candidates_match_batch_band_join(spark, sf_dir):
         .select(F.col("a.doc_id"), F.col("a.band").cast("long"),
                 F.col("b.doc_id")).collect()))
 
-    doc_schema = "doc_id long, text string, lang string, source string, n_chars long"
-    raw = (spark.readStream.schema(doc_schema).format("parquet")
-           .option("pathGlobFilter", "documents.parquet").load(sf_dir)
-           .select("doc_id", "text"))
+    raw = documents_stream(spark, sf_dir).select("doc_id", "text")
     aug_stream = raw.select(F.explode(F.array(
         F.struct(F.col("doc_id"), F.col("text")),
         F.struct((F.col("doc_id") + 1000000).alias("doc_id"),
                  F.concat(F.col("text"), F.lit(" zzz")).alias("text")),
     )).alias("r")).select("r.doc_id", "r.text")
-    q = run_stream_to_memory(
-        neardup_candidates_stream(aug_stream, banded),
-        "t_neardup_cands", output_mode="append")
-    q.stop()
     got = sorted(map(tuple,
-        spark.table("t_neardup_cands")
+        run_stream(neardup_candidates_stream(aug_stream, banded),
+                   "t_neardup_cands", "append")
         .select("doc_id", F.col("band").cast("long"), "cand_id").collect()))
     assert got == batch
 

@@ -209,7 +209,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
     if args.command == "explain":
         # developer tool: the formatted physical plan of any registry
-        # query — what PLANAUDIT/PLANS automate, one query at a time
+        # query — what PLANAUDIT automates, one query at a time
         if not args.query:
             p.error("--query <registry name> is required for explain")
         # the registry lives next to the package dir (repo root), not

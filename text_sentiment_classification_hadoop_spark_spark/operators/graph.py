@@ -199,21 +199,40 @@ def pagerank_fixed_point(edges: DataFrame, iters: int = 3,
     split is weight-proportional and STILL exact 64-bit arithmetic —
     overflow headroom: ``rank·w < 2^63`` needs ``n·SCALE·w_max``
     < 9.2e18, i.e. w_max ≲ 9e12/n at SCALE 1e6.
+
+    This is :func:`pagerank_personalized` with every node a seed; the
+    shared loop takes the seed flag as the constant 1, so the global
+    path adds no seed table, probe or node checkpoint.
     """
+    edges, deg = _pagerank_inputs(edges, weight_col)
+    return _pagerank_loop(edges, deg, deg.select(F.col("src").alias("node")),
+                          F.lit(1), iters)
+
+
+def _pagerank_inputs(edges: DataFrame, weight_col: str | None):
+    """``(src, dst, _w)`` edges and the per-source weight mass
+    ``(src, sum_w)``, both materialized once: the edge list feeds the
+    mass table and every iteration's contribution join, and a lazy
+    plan (orders x lineitem here) would be recomputed iters+1 times."""
     if weight_col is None:
         edges = edges.select("src", "dst", F.lit(1).cast("long").alias("_w"))
     else:
         edges = edges.select("src", "dst",
                              F.col(weight_col).cast("long").alias("_w"))
-    # materialize the edge list once — it feeds the weight-mass table
-    # and every iteration's contribution join; a lazy plan (orders x
-    # lineitem here) would be recomputed iters+1 times.
     edges = edges.localCheckpoint(eager=True)
     deg = edges.groupBy("src").agg(
         F.sum("_w").alias("sum_w")).localCheckpoint(eager=True)
-    nodes = deg.select(F.col("src").alias("node"))
+    return edges, deg
+
+
+def _pagerank_loop(edges: DataFrame, deg: DataFrame, nodes: DataFrame,
+                   seed, iters: int) -> DataFrame:
+    """The power iterations shared by both PageRank variants: start at
+    ``seed·SCALE``, and each round reset to ``seed·RESET_MICRO`` plus
+    the damped incoming mass. ``seed`` is a column of ``nodes`` (0/1)
+    or the literal 1 (every node a seed)."""
     ranks = nodes.select(
-        "node", F.lit(SCALE).cast("long").alias("rank_micro"))
+        "node", (seed * SCALE).cast("long").alias("rank_micro"))
     for it in range(iters):
         # per-node (rank, sum_w) first (node-sized join), THEN the one
         # edge-sized join — the per-edge division needs the edge's own
@@ -237,7 +256,7 @@ def pagerank_fixed_point(edges: DataFrame, iters: int = 3,
             nodes.join(contrib, "node", "left")
             .select(
                 "node",
-                (F.lit(RESET_MICRO)
+                (seed * RESET_MICRO
                  + F.expr(f"(coalesce(mass, 0) * {DAMP_NUM}) div {DAMP_DEN}")
                  ).cast("long").alias("rank_micro"),
             )
@@ -282,16 +301,9 @@ def pagerank_personalized(edges: DataFrame, seeds: list[int],
     (default on) raises on such seeds — one broadcast anti-join
     against the node-sized ``deg`` table, resolved once before the
     loop."""
-    sess = edges.sparkSession
-    if weight_col is None:
-        edges = edges.select("src", "dst", F.lit(1).cast("long").alias("_w"))
-    else:
-        edges = edges.select("src", "dst",
-                             F.col(weight_col).cast("long").alias("_w"))
-    edges = edges.localCheckpoint(eager=True)
-    deg = edges.groupBy("src").agg(
-        F.sum("_w").alias("sum_w")).localCheckpoint(eager=True)
-    seed_df = local_frame(sess, [(int(s),) for s in sorted(set(seeds))],
+    edges, deg = _pagerank_inputs(edges, weight_col)
+    seed_df = local_frame(edges.sparkSession,
+                          [(int(s),) for s in sorted(set(seeds))],
                           "node long")
     if validate_seeds:
         missing = (seed_df.join(deg.select(F.col("src").alias("node")),
@@ -307,37 +319,7 @@ def pagerank_personalized(edges: DataFrame, seeds: list[int],
                    "node", "left")
              .select("node", F.coalesce("_is", F.lit(0)).alias("_seed"))
              .localCheckpoint(eager=True))
-    ranks = nodes.select(
-        "node",
-        (F.col("_seed") * SCALE).cast("long").alias("rank_micro"))
-    for it in range(iters):
-        # string-key (USING) joins for the same ambiguous-self-join
-        # reason as pagerank_fixed_point: the lazy multi-round lineage
-        # re-joins deg/nodes-derived frames against themselves
-        share = (
-            ranks.join(deg.withColumnRenamed("src", "node"), "node")
-            .select(F.col("node").alias("src"), "rank_micro", "sum_w")
-        )
-        contrib = (
-            edges.join(share, "src")
-            .select("dst", F.expr("(rank_micro * _w) div sum_w").alias("c"))
-            .groupBy("dst").agg(F.sum("c").alias("mass"))
-            .withColumnRenamed("dst", "node")
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (F.col("_seed") * RESET_MICRO
-                 + F.expr(f"(coalesce(mass, 0) * {DAMP_NUM}) div {DAMP_DEN}")
-                 ).cast("long").alias("rank_micro"),
-            )
-        )
-        # every-4th-round lineage checkpoint, as in pagerank_fixed_point
-        # (the lpa_communities lazy-vs-eager measurement)
-        if it % 4 == 3 and it != iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", "rank_micro")
+    return _pagerank_loop(edges, deg, nodes, F.col("_seed"), iters)
 
 
 def bfs_depths(edges: DataFrame, source: int,

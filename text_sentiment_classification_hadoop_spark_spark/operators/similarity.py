@@ -741,7 +741,8 @@ def pq_adc_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
     map_txt = "map(" + ", ".join(f"{k}, {v}L" for k, v in entries) + ")"
     lut = F.expr(f"try_element_at({map_txt}, "
                  f"CAST(segment * {n_codes} + code AS INT))")
-    codes = pq_encode(emb, n_segments, n_codes, dims, id_col, vec_col)
+    codes = pq_encode(emb, n_segments, n_codes, dims, id_col, vec_col,
+                      books=books)
     scored = (codes.select(F.col(id_col), lut.alias("du"))
               .groupBy(id_col)
               .agg(F.sum("du").alias("su"))

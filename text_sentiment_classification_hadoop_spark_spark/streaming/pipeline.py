@@ -17,6 +17,7 @@ Design:
 
 from __future__ import annotations
 
+import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -62,6 +63,23 @@ def events_raw_stream(spark: SparkSession, sf_dir: str,
     raw = (spark.readStream.schema(footer).format("parquet")
            .option("pathGlobFilter", glob).load(sf_dir))
     return normalize_ts(raw)
+
+
+def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File stream over the driver's ``documents.parquet`` in
+    ``sf_dir`` (the sf dir with a glob filter: the file-stream source
+    needs a directory), under the engine's runtime confs.
+
+    The schema is declared, so no footer-read job runs: the documents
+    table is ``doc_id``/``n_chars`` int64 and the rest strings in every
+    sf dir — unlike the events table, whose ``ts`` encoding varies."""
+    from ..session import ensure_engine_confs
+    ensure_engine_confs(spark)
+    return (spark.readStream
+            .schema("doc_id long, text string, lang string, source string,"
+                    " n_chars long")
+            .format("parquet")
+            .option("pathGlobFilter", "documents.parquet").load(sf_dir))
 
 
 def tumbling_counts_stream(events: DataFrame, minutes: int = 5,
@@ -186,20 +204,92 @@ def enrich_stream_static(events: DataFrame, dim: DataFrame,
     )
 
 
-def run_stream_to_memory(stream_df: DataFrame, query_name: str,
-                         output_mode: str = "update",
-                         timeout_s: float = 60.0):
-    """Test helper: run a streaming query to a memory sink until all
-    available input is processed; returns the StreamingQuery."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+#: Shuffle partitions every stream starts with. Streaming instantiates
+#: one state-store instance per shuffle partition per stateful
+#: operator, and the count is PINNED into the checkpoint at first
+#: start — so it is sized to the state volume, not inherited from the
+#: batch default. At small state the per-instance overhead dominates
+#: wall-clock (measured 11s → 3s on the sf0.1 stream-stream join going
+#: 32 → 8); a deployment with large state raises this constant before
+#: the FIRST start of its query. Batch queries in the same session are
+#: unaffected (the conf is restored once the stream has finished, and
+#: already-started streams keep their pinned value).
+_STATE_PARTITIONS = 8
+
+#: How long a stream may take to process all available input — far
+#: above any registry stream, each of which takes seconds at sf0.1 on
+#: 4 cores. A stream that runs out of time is stopped and raises:
+#: returning the sink as it stands would be a silently truncated answer.
+_TIMEOUT_S = 120.0
+
+
+@contextmanager
+def _state_partitions(spark: SparkSession):
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _run_to_completion(writer, spark: SparkSession, name: str) -> None:
+    """Start ``writer`` as an ``availableNow`` query named ``name``,
+    wait until it has processed all available input, and stop it.
+    Raises ``TimeoutError`` (after stopping it) when the wait runs out.
+    The state-partition scope spans the start and the wait, so every
+    micro-batch plans under it."""
+    with _state_partitions(spark):
+        q = writer.queryName(name).trigger(availableNow=True).start()
+        try:
+            done = q.awaitTermination(_TIMEOUT_S)
+        finally:
+            q.stop()
+    if not done:
+        raise TimeoutError(
+            f"stream {name!r} did not finish within {_TIMEOUT_S:g} s")
+
+
+def run_stream(stream_df: DataFrame, name: str,
+               output_mode: str) -> DataFrame:
+    """Run a streaming query to a memory sink until all available input
+    is processed → the sink table ``name``. Raises ``TimeoutError``
+    when the stream does not finish in time."""
+    _run_to_completion(
+        stream_df.writeStream.format("memory").outputMode(output_mode),
+        stream_df.sparkSession, name)
+    return stream_df.sparkSession.table(name)
+
+
+def _run_foreach_batch(stream_df: DataFrame, write_batch, store_dir: str,
+                       name: str) -> None:
+    """Run ``write_batch`` over every micro-batch of ``stream_df``,
+    checkpointed next to ``store_dir`` (the store writers' sink)."""
+    _run_to_completion(
+        stream_df.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", store_dir + "_ckpt"),
+        stream_df.sparkSession, name)
+
+
+def _append_once(rows: DataFrame, store_dir: str, batch_id: int,
+                 anti_key: str | None = None) -> None:
+    """Append ``rows``, stamped with ``batch_id``, to an append-only
+    parquet store exactly once: a replayed batch whose ``batch_id`` the
+    store already holds is a no-op (read-filter guard — the
+    parquet-level equivalent of the "skip if batchId committed"
+    transaction a table format would provide). With ``anti_key``, rows
+    whose key the store already holds are dropped first."""
+    if os.path.isdir(store_dir) and any(
+            f.endswith(".parquet") for f in os.listdir(store_dir)):
+        seen = rows.sparkSession.read.parquet(store_dir)
+        if (seen.filter(F.col("batch_id") == batch_id).limit(1)
+                .count() > 0):
+            return  # batch already committed — replay is a no-op
+        if anti_key is not None:
+            rows = rows.join(seen.select(anti_key), anti_key, "left_anti")
+    (rows.withColumn("batch_id", F.lit(batch_id))
+     .write.mode("append").parquet(store_dir))
+
 
 def dedup_native_stream(df: DataFrame, key_col: str = "text_hash") -> DataFrame:
     """Production streaming exact-dedup: Spark's native ``dropDuplicates``
@@ -280,51 +370,13 @@ def incremental_dedup_to_store(stream_df: DataFrame, store_dir: str,
 
     At 100 TB the seen-store is a bucketed-by-key table so the
     anti-join is exchange-free on the store side; here it is plain
-    parquet. Returns the finished StreamingQuery."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    parquet. Raises ``TimeoutError`` when the stream does not finish
+    in time."""
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        novel = batch_df.select(key_col).dropDuplicates([key_col])
-        if os.path.isdir(store_dir) and any(
-                f.endswith(".parquet") for f in os.listdir(store_dir)):
-            seen = spark.read.parquet(store_dir)
-            if (seen.filter(F.col("batch_id") == batch_id).limit(1)
-                    .count() > 0):
-                return  # batch already committed — replay is a no-op
-            novel = novel.join(seen.select(key_col), key_col, "left_anti")
-        (novel.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(store_dir))
+        _append_once(batch_df.select(key_col).dropDuplicates([key_col]),
+                     store_dir, batch_id, anti_key=key_col)
 
-    q = (stream_df.writeStream.foreachBatch(write_batch)
-         .queryName(query_name)
-         .option("checkpointLocation", store_dir + "_ckpt")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120.0)
-    return q
-
-
-@contextmanager
-def stream_shuffle_partitions(spark, n: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` around a streaming query
-    start. Streaming instantiates one state-store instance per shuffle
-    partition per stateful operator, and the partition count is PINNED
-    into the checkpoint at first start — so it must be sized to the
-    state volume, not inherited from the batch default. At small state
-    the per-instance overhead dominates wall-clock (measured 11s → 3s
-    on the sf0.1 stream-stream join going 32 → 8); at large state,
-    raise ``n`` before the FIRST start of the query. Batch queries in
-    the same session are unaffected (the conf is restored on exit and
-    already-started streams keep their pinned value)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    _run_foreach_batch(stream_df, write_batch, store_dir, query_name)
 
 
 def incremental_counts_to_store(stream_df: DataFrame, store_dir: str,
@@ -349,25 +401,12 @@ def incremental_counts_to_store(stream_df: DataFrame, store_dir: str,
     of an append guard because counts MERGE rather than union).
     Readers likewise only see ``_SUCCESS``-committed versions. At
     scale, old versions are the time-travel history; compact/expire
-    them like any table-format checkpoint. Returns the finished
-    StreamingQuery."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    def _versions() -> list[str]:
-        """Committed (``_SUCCESS``-marked) versions only."""
-        if not os.path.isdir(store_dir):
-            return []
-        return sorted(
-            d for d in os.listdir(store_dir)
-            if d.startswith("v") and d[1:].isdigit()
-            and os.path.exists(os.path.join(store_dir, d, "_SUCCESS")))
-
+    them like any table-format checkpoint. Raises ``TimeoutError`` when
+    the stream does not finish in time."""
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         vname = f"v{batch_id:010d}"
-        vs = _versions()
+        vs = _committed_versions(store_dir)
         if vname in vs:
             return  # batch already committed — replay is a no-op
         # not committed: a partial dir from a crashed attempt may
@@ -386,23 +425,28 @@ def incremental_counts_to_store(stream_df: DataFrame, store_dir: str,
         merged.write.mode("overwrite").parquet(
             os.path.join(store_dir, vname))
 
-    q = (stream_df.writeStream.foreachBatch(write_batch)
-         .queryName(query_name)
-         .option("checkpointLocation", store_dir + "_ckpt")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120.0)
-    return q
+    _run_foreach_batch(stream_df, write_batch, store_dir, query_name)
+
+
+def _committed_versions(store_dir: str) -> list[str]:
+    """A count store's committed (``_SUCCESS``-marked) versions, oldest
+    first."""
+    if not os.path.isdir(store_dir):
+        return []
+    return sorted(
+        d for d in os.listdir(store_dir)
+        if d.startswith("v") and d[1:].isdigit()
+        and os.path.exists(os.path.join(store_dir, d, "_SUCCESS")))
 
 
 def read_count_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Latest committed (``_SUCCESS``-marked) version of an
-    :func:`incremental_counts_to_store` store (raises if none yet)."""
-    import os
-    versions = sorted(
-        d for d in os.listdir(store_dir)
-        if d.startswith("v") and d[1:].isdigit()
-        and os.path.exists(os.path.join(store_dir, d, "_SUCCESS")))
+    :func:`incremental_counts_to_store` store. Raises ``ValueError``
+    when the store has no committed version yet."""
+    versions = _committed_versions(store_dir)
+    if not versions:
+        raise ValueError(
+            f"read_count_store: no committed version in {store_dir!r}")
     return spark.read.parquet(os.path.join(store_dir, versions[-1]))
 
 
@@ -477,30 +521,13 @@ def incremental_band_index_to_store(doc_stream: DataFrame, store_dir: str,
     ``batch_id`` already appears in the store is a no-op. At scale the
     store is bucketed by ``bucket`` so the candidate probe join is
     exchange-free on the index side; compaction rewrites old batch
-    files without touching the guard column. Returns the finished
-    StreamingQuery."""
-    import os
-
+    files without touching the guard column. Raises ``TimeoutError``
+    when the stream does not finish in time."""
     banded = band_stream(doc_stream, k, num_perm, bands, id_col, text_col)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if os.path.isdir(store_dir) and any(
-                f.endswith(".parquet") for f in os.listdir(store_dir)):
-            seen = spark.read.parquet(store_dir)
-            if (seen.filter(F.col("batch_id") == batch_id).limit(1)
-                    .count() > 0):
-                return  # replay of a committed batch — no-op
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(store_dir))
-
-    q = (banded.writeStream.foreachBatch(write_batch)
-         .queryName(query_name)
-         .option("checkpointLocation", store_dir + "_ckpt")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120.0)
-    return q
+    _run_foreach_batch(
+        banded, lambda batch_df, batch_id: _append_once(
+            batch_df, store_dir, batch_id),
+        store_dir, query_name)
 
 
 def hourly_profile_stream(events: DataFrame) -> DataFrame:

@@ -6,7 +6,7 @@ regressions are visible as a diff, not an anecdote.
 Queries whose *construction* runs driver-side loops (iterative training
 / scalar-probe collects) are built like any other; their audited plan is
 the final returned DataFrame's (the loop's internals are covered by
-tools/dump_plans.py and tests/test_plans.py).
+tests/test_plans.py).
 
 Usage: python tools/audit_plans.py  (writes PLANAUDIT.md at the repo root)
 """
