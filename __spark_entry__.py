@@ -1253,8 +1253,6 @@ au AS (
 # ---------------------------------------------------------------------------
 
 def _tokens_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from text_sentiment_classification_hadoop_spark_spark.functions.tokenize import explode_tokens
     docs = S.labeled_documents(spark, sf_dir).select("doc_id", "text")
     return explode_tokens(docs, text_col="text").orderBy("doc_id", "word")
@@ -1413,7 +1411,6 @@ def _dedup_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
     docs = _augmented_docs(spark, sf_dir)
     pairs = D.lsh_candidate_pairs(_aug_sigs(spark, sf_dir))
     # jaccard = |A∩B| / |A∪B| over identical int operands — bit-identical
@@ -1957,8 +1954,6 @@ def _classifier_metrics(kind: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from text_sentiment_classification_hadoop_spark_spark.functions.rounding import py_pround
         from text_sentiment_classification_hadoop_spark_spark.operators import metrics as M
-        from text_sentiment_classification_hadoop_spark_spark.operators import nb as NB
-        from text_sentiment_classification_hadoop_spark_spark.operators import svm as SVM
 
         scored = (S.nb_scored if kind == "nb" else S.svm_scored)(
             spark, sf_dir)
@@ -1979,8 +1974,6 @@ def _classifier_metrics(kind: str):
 def _word_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same result as ``word_counts`` via the salted two-phase
     aggregation (hash-checked against the identical oracle)."""
-    from pyspark.sql import functions as F
-
     from text_sentiment_classification_hadoop_spark_spark.operators.skew import salted_count
     toks = _tokens_exploded(spark, sf_dir).select("word")
     return salted_count(toks, "word", n_salts=8).orderBy("word")

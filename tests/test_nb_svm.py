@@ -2,8 +2,9 @@
 4-document corpus, including the reference's quirks: Laplace smoothing,
 prior-only scoring, multinomial repetition, and both tie rules."""
 
-import os
 import math
+import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -110,73 +111,131 @@ def test_svm_declared_differs_and_converges(train_df):
     assert got3 != got  # epochs actually chain (reference bug fixed)
 
 
-def test_svm_declared_fallback_no_driver_collect(train_df, monkeypatch):
-    """The large-vocab path must never materialize the vocabulary on
-    the driver — the path DECISION is a limit(N+1).count() probe and
-    the epoch loop is collect-free (all models stay DataFrames). A
-    spy on DataFrame.collect proves it structurally, not by timing.
-    The spy goes on the classic DataFrame class, whose collect
-    overrides the one on ``pyspark.sql.DataFrame``."""
-    from pyspark.sql.classic.dataframe import DataFrame
+def _pround(x, n):
+    m = float(10 ** n)
+    return math.floor(x * m + 0.5) / m
 
-    literal = {r["word"]: r["weight"]
-               for r in SVM.svm_train_declared(train_df, epochs=3).collect()}
+
+def _reference_weights(rows, epochs=SVM.EPOCHS):
+    """Pure-Python M4 over ``(label, text)`` rows: the loop the docstring
+    of ``svm_train_declared`` describes, one sample per non-blank row,
+    one token per single-space piece, margins rounded at MARGIN_DP."""
+    base = [(1.0 if y == 1.0 else -1.0, t.split(" "))
+            for y, t in rows if t.strip(" ")]
+    eta = SVM.epoch_lr(1)
+    weights = {}
+    for y, ws in base:
+        for w in ws:
+            weights[w] = weights.get(w, 0.0) + y
+    weights = {w: eta * s for w, s in weights.items()}
+    for epoch in range(2, epochs + 1):
+        eta = SVM.epoch_lr(epoch)
+        nv, sy = 0, {}
+        for y, ws in base:
+            dot = 0.0
+            for w in ws:
+                dot += weights[w]
+            if y * _pround(dot, SVM.MARGIN_DP) < 1.0:
+                nv += 1
+                for w in ws:
+                    sy[w] = sy.get(w, 0.0) + y
+        decay = 1.0 - eta * SVM.LAMBDA * nv
+        weights = {w: v * decay for w, v in weights.items()}
+        for w, s in sy.items():
+            weights[w] += eta * s
+    return weights
+
+
+def _train_counting_collects(docs, epochs=SVM.EPOCHS):
+    """Declared weights plus the number of ``DataFrame.collect`` calls
+    the train made. The spy goes on the classic DataFrame class, whose
+    collect overrides the one on ``pyspark.sql.DataFrame``."""
+    from pyspark.sql.classic.dataframe import DataFrame
 
     real_collect = DataFrame.collect
     calls = []
-    monkeypatch.setattr(DataFrame, "collect",
-                        lambda self: calls.append(self) or real_collect(self))
-    # LITERAL_MAP_MAX=0 forces the distributed fallback for any vocab
-    monkeypatch.setattr(SVM, "LITERAL_MAP_MAX", 0)
-    w = SVM.svm_train_declared(train_df, epochs=3)
-    assert calls == [], "fallback training path called DataFrame.collect"
-    monkeypatch.undo()
-
-    fallback = {r["word"]: r["weight"] for r in w.collect()}
-    assert fallback.keys() == literal.keys()
-    for k in literal:
-        assert math.isclose(fallback[k], literal[k], rel_tol=1e-9, abs_tol=1e-12)
+    DataFrame.collect = lambda self: calls.append(self) or real_collect(self)
+    try:
+        w = SVM.svm_train_declared(docs, epochs=epochs)
+    finally:
+        DataFrame.collect = real_collect
+    assert w.columns == ["word", "weight"]
+    return {r["word"]: r["weight"] for r in w.collect()}, len(calls)
 
 
-def _svm_both_paths(docs, monkeypatch, epochs=5):
-    literal = {r["word"]: r["weight"]
-               for r in SVM.svm_train_declared(docs, epochs=epochs).collect()}
-    with monkeypatch.context() as m:
-        m.setattr(SVM, "LITERAL_MAP_MAX", 0)
-        fallback = {r["word"]: r["weight"] for r in SVM.svm_train_declared(
-            docs, epochs=epochs).collect()}
-    return literal, fallback
+def _assert_matches_reference(docs, epochs=SVM.EPOCHS):
+    """Declared weights (checked against the reference) and the train's
+    collect count."""
+    got, n_collects = _train_counting_collects(docs, epochs)
+    want = _reference_weights(
+        [(r["label"], r["text"]) for r in docs.select("label", "text").collect()],
+        epochs)
+    assert got.keys() == want.keys()
+    for k in want:
+        assert math.isclose(got[k], want[k], rel_tol=1e-9, abs_tol=1e-12), k
+    return got, n_collects
 
 
-def _assert_paths_agree(literal, fallback):
-    assert fallback.keys() == literal.keys()
-    for k in literal:
-        assert math.isclose(fallback[k], literal[k], rel_tol=1e-9, abs_tol=1e-12), k
-
-
-def test_svm_declared_fallback_keeps_duplicate_ids_apart(spark, monkeypatch):
-    """Two rows sharing a doc id are two samples on BOTH paths: the
-    fallback must not merge them into one sample with one label."""
+def test_svm_declared_keeps_duplicate_ids_apart(spark):
+    """Two rows sharing a doc id are two samples with two labels, not
+    one merged sample."""
     docs = spark.createDataFrame(
         [("1", 1, "good fun day"), ("1", 0, "bad sad day"),
          ("2", 1, "good happy"), ("3", 0, "bad awful"),
          ("4", 1, "fun times"), ("5", 0, "sad day")],
         "doc_id string, label int, text string")
-    _assert_paths_agree(*_svm_both_paths(docs, monkeypatch))
+    _assert_matches_reference(docs)
 
 
-def test_svm_declared_literal_map_escapes_tokens(spark, monkeypatch):
-    """Tokens with quotes and backslashes survive the SQL-text weight
-    map unchanged: the literal path agrees with the fallback."""
+def test_svm_declared_keeps_quoted_tokens(spark):
+    """Tokens with quotes and backslashes keep their own weights."""
     docs = spark.createDataFrame(
         [(1, "it's good", 1.0), (2, "c:\\dir good\\", 1.0),
          (3, "don't \\' sad", 0.0), (4, "it's bad\\n", 0.0),
          (5, "'' good fun", 1.0), (6, "bad \\\\ fun", 0.0)],
         "doc_id long, text string, label double")
-    literal, fallback = _svm_both_paths(docs, monkeypatch)
+    got, _ = _assert_matches_reference(docs)
     assert {"it's", "c:\\dir", "good\\", "\\'", "bad\\n", "''",
-            "\\\\"} <= literal.keys()
-    _assert_paths_agree(literal, fallback)
+            "\\\\"} <= got.keys()
+
+
+@pytest.mark.parametrize("rows,vocab", [
+    ([], 0),
+    ([(1, "", 1.0), (2, "   ", 0.0), (3, " ", 1.0)], 0),
+    ([(1, "good fun", 1.0), (2, "good  day", 1.0), (3, "fun", 1.0)], 4),
+], ids=["empty", "all_blank", "single_class"])
+def test_svm_declared_degenerate_inputs(spark, rows, vocab):
+    """An empty corpus and all-blank text give an empty (word, weight)
+    frame; a single class still trains (and keeps the empty token that
+    a double space makes)."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string, label double")
+    assert len(_assert_matches_reference(docs)[0]) == vocab
+
+
+def _seeded_corpus(spark, n_words, n_rows, seed):
+    rng = random.Random(seed)
+    pool = [f"w{i}" for i in range(n_words)]
+    rows = []
+    for i in range(n_rows):
+        label = float(i % 2)
+        words = rng.choices(pool, k=rng.randint(3, 12))
+        words.append("good" if label == 1.0 and rng.random() < 0.7 else "bad")
+        rows.append((i, " ".join(words), label))
+    return spark.createDataFrame(rows, "doc_id long, text string, label double")
+
+
+@pytest.mark.parametrize("n_words,n_rows", [(43, 300), (15000, 1800)],
+                         ids=["V45", "V9k"])
+def test_svm_declared_one_collect_per_epoch(spark, n_words, n_rows):
+    """One train is ``epochs`` driver collects (the vocabulary, then one
+    sparse gradient per later epoch) at any vocabulary size, and its
+    weights match the pure-Python reference."""
+    docs = _seeded_corpus(spark, n_words, n_rows, seed=n_words)
+    got, n_collects = _assert_matches_reference(docs)
+    lo, hi = (45, 45) if n_words < 100 else (8000, 10000)
+    assert lo <= len(got) <= hi
+    assert n_collects == SVM.EPOCHS
+    assert _train_counting_collects(docs, epochs=2)[1] == 2
 
 
 def test_confusion_and_binary_metrics(spark):

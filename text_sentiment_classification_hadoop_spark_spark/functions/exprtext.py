@@ -34,20 +34,6 @@ def dlit(x: float) -> str:
     return f"{v!r}D"
 
 
-def slit(x: str) -> str:
-    """Exact string literal: ``'...'`` with ``\\`` and ``'`` escaped
-    (Spark's default, non-legacy string-literal unescaping)."""
-    return "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def str_double_map_lit(items) -> str:
-    """``map('<k>', <d>, ...)`` literal for ``[(str, float)]`` pairs; an
-    empty map is still typed ``map<string,double>``."""
-    if not items:
-        return "CAST(map() AS MAP<STRING, DOUBLE>)"
-    return "map(" + ", ".join(f"{slit(k)}, {dlit(v)}" for k, v in items) + ")"
-
-
 def vec_lit(vals) -> str:
     """``array(<d>, ...)`` literal for a float vector."""
     return "array(" + ", ".join(dlit(x) for x in vals) + ")"

@@ -233,7 +233,6 @@ def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time functions (north-star gap §2.11): month truncation +
     extraction over order dates. One shuffle keyed on month — ~84
     groups regardless of scale."""
-    from ..functions.rounding import pround
     from ..sources.tables import load_table
     o = load_table(spark, "orders", sf_dir)
     return (
@@ -473,7 +472,6 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets (north-star gap §2.11): all 4 grouping
     combinations of (status, priority) in one pass — Spark expands to a
     single shuffle with a grouping-id column."""
-    from ..functions.rounding import pround
     from ..sources.tables import load_table
     o = load_table(spark, "orders", sf_dir)
     return (

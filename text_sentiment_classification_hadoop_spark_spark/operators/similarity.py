@@ -24,7 +24,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exprtext as X
-from ..functions.hashing import portable_hash64
 from ..functions.rounding import pround
 from ..session import local_frame, widen
 

@@ -14,10 +14,12 @@ Reference semantics (SURVEY.md §2.9 M4-M6):
   mini-batch SGD: per violating sample (``y·(w·x) < 1``,
   ``SVM.java:86``) emit ``+η·y`` per token plus L2 decay ``−η·λ·w_j``
   for ALL weights (``SVM.java:87-94``); reducer sums deltas into the
-  next model. Rebuilt as a driver loop of DataFrame jobs with the
-  weights broadcast each epoch — the exact workload class where the
-  report measured Spark 21× over MR (report §4.2 p.23) because the
-  epoch loop stays in memory instead of round-tripping HDFS.
+  next model. Rebuilt as a driver loop of one DataFrame job per epoch
+  over cached per-row token-id arrays, with the weights shipped as one
+  dense ``array<double>`` value each epoch — the exact workload class
+  where the report measured Spark 21× over MR (report §4.2 p.23)
+  because the epoch loop stays in memory instead of round-tripping
+  HDFS.
 - **Scoring** (``SVM.java:139-144``): ``score = Σ_token w[token]``
   (missing → 0), ``pred = score ≥ 0 ? +1 : −1`` — tie → POSITIVE
   (opposite of NB's tie rule).
@@ -30,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exprtext import str_double_map_lit
 from ..functions.rounding import pround
 from ..functions.tokenize import explode_tokens, tokens_array
 
@@ -42,16 +43,6 @@ MARGIN_DP = 9
 EPOCHS = 5
 LR = 0.1
 LAMBDA = 0.01
-
-# svm_train_declared keeps the weights as a plan-time map literal up to
-# this vocabulary size and switches to the distributed path above it.
-LITERAL_MAP_MAX = 4096
-
-# Pseudo-token used by the fused per-epoch aggregation in
-# svm_train_declared to carry the violation count through the same
-# word-grouped shuffle as the gradients. NUL never survives the
-# whitespace tokenizer, so it cannot collide with a real token.
-_NV_SENTINEL = "\x00__nv__"
 
 
 def epoch_lr(epoch: int) -> float:
@@ -101,8 +92,7 @@ def svm_score(docs: DataFrame, weights: DataFrame, id_col: str = "doc_id",
 
 def svm_train_declared(docs: DataFrame, text_col: str = "text",
                        label_col: str = "label",
-                       epochs: int = EPOCHS, lr: float = LR,
-                       lam: float = LAMBDA) -> DataFrame:
+                       epochs: int = EPOCHS, lam: float = LAMBDA) -> DataFrame:
     """M4 strict training with the epoch chain actually wired up
     (the fix for the reference's load-path bug).
 
@@ -112,32 +102,38 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
     ``−η·λ·V·w_j`` with V = violation count; new weights = old + deltas
     (``SVM.java:87-106``).
 
-    Execution shape — two paths, chosen by vocabulary size after the
-    first epoch (the epoch-1 gradient IS the vocabulary):
+    Execution shape — one path for every vocabulary size, the per-tweet
+    map step against a broadcast model of *Large Scale Sentiment
+    Analysis on Twitter with Spark* (EDBT 2016) with integer token ids
+    in place of words:
 
-    - **Literal-map path** (vocab ≤ ``LITERAL_MAP_MAX``): the weights
-      ride into each epoch as a plan-time ``map(...)`` literal built as
-      SQL text (``functions.exprtext``, the same pattern as the IVF/PQ
-      codebooks — one py4j call instead of 2·V), so the margin is a
-      partition-local ``F.aggregate`` over each doc's cached token
-      array — ZERO doc-side exchanges. The only shuffle per epoch is
-      the word-grouped gradient aggregation over violating docs, with
-      a sentinel pseudo-token riding along to carry the violation
-      count V; its vocabulary-sized result round-trips the driver
-      (same class of tiny collect as the k-means/PQ codebooks).
-    - **Distributed fallback** (large vocab): margin via broadcast
-      join + per-row aggregation (keyed on a row id stored in the
-      cached frame, so rows sharing a doc id stay separate samples,
-      as on the literal path) that carries the token list along,
-      so violating docs re-emit tokens via explode instead of a
-      second corpus scan — two exchanges per epoch (doc, word), all
-      models stay DataFrames, nothing driver-sized.
+    - **Once per train.** Epoch 1 (w = 0: every sample violates, nothing
+      decays) is one word-grouped aggregation; its collected result is
+      the vocabulary, and a word's id is its position in the sorted
+      vocabulary. The exploded tokens broadcast-join a ``(word, id)``
+      local frame and regroup by row into a cached ``(_y, _ids)`` frame
+      with the ids in token order — the only corpus shuffle outside the
+      epochs.
+    - **Each later epoch.** The driver holds the weights as a dense
+      list and ships them as one ``array<double>`` value ``_W`` (a
+      one-row local frame read as a scalar subquery, projected as a
+      column because lambdas reject subqueries); the margin is a
+      row-local ``aggregate`` of ``get(_W, id)`` over the row's ids.
+      Violating rows explode their ids plus the sentinel id ``-1``, so
+      the gradient and the violation count V come back in one
+      id-grouped shuffle and one collect.
 
-    Both paths share the cached doc-level token-array frame (built
-    once), the MARGIN_DP rounding that pins the violation set across
-    engines, and bit-identical update arithmetic — the in-memory epoch
-    iteration the reference's own report credits for Spark's 21×
-    speedup over MR (report §4.2 p.23).
+    The driver therefore holds 8 bytes per vocabulary word and collects
+    a sparse gradient each epoch: ``epochs`` collects per train. The
+    former distributed fallback kept every model in DataFrames so that
+    nothing vocabulary-sized reached the driver, but it cost about 43
+    jobs per train and this path was still faster at V≈78k (SCALE.md
+    §2). Margins sum in token order and are rounded at ``MARGIN_DP``
+    before the ``< 1`` test, and the update keeps the association
+    ``v·(1 − η·λ·V) + η·Σy``, so the weights match the SQL oracle and
+    the pure-Python reference — the in-memory epoch iteration the
+    reference's own report credits for Spark's 21× speedup over MR
+    (report §4.2 p.23).
     """
     from pyspark.sql import types as T
 
@@ -145,11 +141,11 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
 
     spark = docs.sparkSession
     y_expr = F.when(F.col(label_col) == 1.0, F.lit(1.0)).otherwise(F.lit(-1.0))
-    # row-level token arrays, cached once: both the partition-local
-    # margin and the gradient explode read this frame; the empty-text
-    # filter replicates explode_tokens' P5 guard. ``_rid`` is the
-    # fallback's sample key; each epoch's plan scans this frame once,
-    # so the ids only need to be unique within one scan.
+    # row-level token arrays, cached once: the epoch-1 gradient and the
+    # id join both read this frame; the empty-text filter replicates
+    # explode_tokens' P5 guard. ``_rid`` keeps rows that share a doc id
+    # apart as separate samples; the id join scans this frame once, so
+    # the ids only need to be unique within one scan.
     base = (
         docs.filter(F.length(F.trim(F.col(text_col))) > 0)
         .select(F.monotonically_increasing_id().alias("_rid"),
@@ -159,109 +155,56 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
     )
 
     # epoch 1: w = 0 ⇒ every sample violates and there is nothing to
-    # decay — the gradient is one word-grouped aggregation.
+    # decay — the gradient is one word-grouped aggregation, and its
+    # words are the vocabulary.
     eta1 = epoch_lr(1)
-    w1 = (
+    first = sorted(
+        (r["word"], r["weight"]) for r in
         base.select("_y", F.explode("_words").alias("word"))
         .groupBy("word")
         .agg((F.lit(eta1) * F.sum("_y")).alias("weight"))
+        .collect())
+    vocab = [w for w, _ in first]
+    weights = [v for _, v in first]
+
+    word_ids = local_frame(spark, [(w, i) for i, w in enumerate(vocab)],
+                           "word string, _id int")
+    # sorting on the token position keeps each row's ids in token order,
+    # so margins sum in the same order as the reference's loop
+    rows = (
+        base.select("_rid", "_y", F.posexplode("_words").alias("_pos", "word"))
+        .join(F.broadcast(word_ids), "word")
+        .groupBy("_rid", "_y")
+        .agg(F.array_sort(F.collect_list(F.struct("_pos", "_id"))).alias("_p"))
+        .select("_y", F.transform("_p", lambda p: p["_id"]).alias("_ids"))
+        .cache()
     )
-    if epochs <= 1:
-        return w1
-
-    # Path decision WITHOUT materializing the vocabulary on the driver:
-    # a limit(N+1).count() probe is executor-side and returns a scalar,
-    # so at 100× vocab the decision itself can never OOM the driver —
-    # only a probe that comes back under the threshold earns a collect.
-    probe = w1.limit(LITERAL_MAP_MAX + 1).count()
-    if probe <= LITERAL_MAP_MAX:
-        weights = {r["word"]: r["weight"] for r in w1.collect()}
-        for epoch in range(2, epochs + 1):
-            eta = epoch_lr(epoch)
-            # try_element_at: missing token → NULL → 0 (ANSI-safe;
-            # plain element_at raises under Spark 4's default ANSI mode)
-            dot = F.expr(
-                "aggregate(_words, 0.0D, (acc, tok) -> acc + coalesce("
-                f"try_element_at({str_double_map_lit(sorted(weights.items()))}, tok), "
-                "0.0D))")
-            fused = (
-                base.filter((F.col("_y") * pround(dot, MARGIN_DP)) < 1.0)
-                .select("_y", F.explode(
-                    F.concat(F.col("_words"),
-                             F.array(F.lit(_NV_SENTINEL)))).alias("word"))
-                .groupBy("word")
-                .agg(F.sum("_y").alias("_sy"), F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            nv = 0
-            deltas: dict[str, float] = {}
-            for r in fused:
-                if r["word"] == _NV_SENTINEL:
-                    nv = r["_n"]
-                else:
-                    deltas[r["word"]] = eta * r["_sy"]
-            # same association as the SQL oracle: (η·λ)·V
-            decay = 1.0 - eta * lam * nv
-            new_weights = {w: v * decay for w, v in weights.items()}
-            for word, d in deltas.items():
-                new_weights[word] = new_weights.get(word, 0.0) + d
-            weights = new_weights
-        base.unpersist()
-        return local_frame(
-            spark, sorted(weights.items()),
-            T.StructType([T.StructField("word", T.StringType()),
-                          T.StructField("weight", T.DoubleType())]))
-
-    # ---- distributed fallback: vocabulary too large for a plan literal
-    tokens = base.select("_rid", "_y", F.explode("_words").alias("word"))
-    weights_df = w1.localCheckpoint(eager=True)
     for epoch in range(2, epochs + 1):
         eta = epoch_lr(epoch)
-        w = F.broadcast(weights_df)
-        viol_tokens = (
-            tokens.join(w, "word", "left")
-            .groupBy("_rid")
-            .agg(F.sum(F.coalesce(F.col("weight"), F.lit(0.0))).alias("_dot"),
-                 F.first("_y").alias("_y"),
-                 F.collect_list("word").alias("_words"))
-            .filter((F.col("_y") * pround(F.col("_dot"), MARGIN_DP)) < 1.0)
-            .select("_y", F.explode(
-                F.concat(F.col("_words"),
-                         F.array(F.lit(_NV_SENTINEL)))).alias("word"))
-        )
-        # vocabulary-sized; materialized once for its two consumers
-        fused = (
-            viol_tokens.groupBy("word")
-            .agg(F.sum("_y").alias("_sy"), F.count(F.lit(1)).alias("_n"))
-            .localCheckpoint(eager=True)
-        )
+        w_col = local_frame(spark, [(weights,)], "_W array<double>").scalar()
+        dot = F.expr("aggregate(_ids, 0.0D, (acc, i) -> acc + get(_W, i))")
         grads = (
-            fused.filter(F.col("word") != _NV_SENTINEL)
-            .select("word", (F.lit(eta) * F.col("_sy")).alias("delta"))
+            rows.withColumn("_W", w_col)
+            .filter((F.col("_y") * pround(dot, MARGIN_DP)) < 1.0)
+            .select("_y", F.explode(
+                F.concat(F.col("_ids"), F.array(F.lit(-1)))).alias("_id"))
+            .groupBy("_id")
+            .agg(F.sum("_y").alias("_sy"), F.count(F.lit(1)).alias("_n"))
+            .collect()
         )
-        # global agg (not filter) so zero violations still yields the
-        # one row the decay cross-join needs; stays in-plan, no driver
-        # round-trip on this path.
-        nv_df = fused.agg(F.coalesce(
-            F.sum(F.when(F.col("word") == _NV_SENTINEL, F.col("_n"))),
-            F.lit(0).cast("long")).alias("_v"))
-        decayed = weights_df.crossJoin(F.broadcast(nv_df)).select(
-            "word",
-            (F.col("weight")
-             * (F.lit(1.0) - F.lit(eta) * F.lit(lam) * F.col("_v"))).alias("weight"),
-        )
-        new_weights_df = (
-            decayed.join(grads, "word", "outer")
-            .select("word",
-                    (F.coalesce(F.col("weight"), F.lit(0.0))
-                     + F.coalesce(F.col("delta"), F.lit(0.0))).alias("weight"))
-        )
-        # materialize the (vocabulary-sized) model each epoch to cut
-        # the lineage — the columnar analog of the reference's
-        # per-epoch model_epoch_{e} files, but in memory.
-        weights_df = new_weights_df.localCheckpoint(eager=True)
+        nv = next((r["_n"] for r in grads if r["_id"] == -1), 0)
+        # same association as the SQL oracle: (η·λ)·V
+        decay = 1.0 - eta * lam * nv
+        weights = [v * decay for v in weights]
+        for r in grads:
+            if r["_id"] >= 0:
+                weights[r["_id"]] += eta * r["_sy"]
+    rows.unpersist()
     base.unpersist()
-    return weights_df
+    return local_frame(
+        spark, list(zip(vocab, weights)),
+        T.StructType([T.StructField("word", T.StringType()),
+                      T.StructField("weight", T.DoubleType())]))
 
 
 def mllib_pipeline(docs: DataFrame, algorithm: str = "nb", text_col: str = "text",
