@@ -14,9 +14,12 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 from text_sentiment_classification_hadoop_spark_spark.__main__ import main
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
+TWEETS = str(Path(__file__).resolve().parents[1] / "fixtures" / "tweets_fixture.csv")
 
 
 def _kv(stdout: str) -> dict:
@@ -115,3 +118,33 @@ def test_cli_injected_session_survives(spark):
     # the seam contract: an injected session is NOT stopped by main()
     main(["explain", "--query", "pricing_summary"], spark=spark)
     assert spark.range(1).count() == 1
+
+
+def _stored_rdds(spark) -> set:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_compat_commands_release_their_storage(spark, capsys):
+    """Each compat command parses its file once, caches it while it
+    trains and scores, and leaves no cached or checkpointed data behind
+    in the caller's session."""
+    before = _stored_rdds(spark)
+    for cmd in ("nb-compat", "svm-compat", "svm-strict"):
+        assert main([cmd, "--train", TWEETS], spark=spark) == 0
+        assert _stored_rdds(spark) <= before, cmd
+    assert "True Positives" in capsys.readouterr().out
+
+
+@pytest.mark.parametrize("cmd", ["nb-compat", "svm-strict"])
+def test_compat_rows_sharing_an_id_are_scored_apart(spark, tmp_path, capsys, cmd):
+    """A positive and a negative tweet that share a tweet id are two
+    tweets: both are classified right."""
+    train, test = tmp_path / "train.csv", tmp_path / "test.csv"
+    train.write_text("".join(
+        f"{i},1,src,love great happy day\n{i + 1},0,src,hate awful sad day\n"
+        for i in range(1, 13, 2)))
+    test.write_text("9,1,src,love great happy\n9,0,src,hate awful sad\n")
+    assert main([cmd, "--train", str(train), "--test", str(test)], spark=spark) == 0
+    got = _kv(capsys.readouterr().out)
+    assert (got["True Positives"], got["False Positives"],
+            got["True Negatives"], got["False Negatives"]) == ("1", "0", "1", "0")

@@ -19,13 +19,58 @@ def test_revenue_joins_are_broadcast(spark, sf_dir):
     assert_broadcast_join(R.revenue_by_region(spark, sf_dir))
 
 
-def test_nb_score_join_is_broadcast(spark, sf_dir):
-    # assert on the uncached pipeline: the query-facing function serves
-    # a localCheckpointed scored DF whose plan hides the join
+def _zipf_split(spark):
+    """A 1,500-row train/test split whose words are Zipf(1.0) draws
+    over 2^14 ranks: a vocabulary of a few thousand words."""
+    import random
+    rng = random.Random(11)
+    ranks = range(1, 1 << 14)
+    weights = [1.0 / r for r in ranks]
+    rows = [(i, " ".join(f"w{r}" for r in rng.choices(ranks, weights, k=8)),
+             float(i % 2)) for i in range(1500)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, label double")
+    return S.train_test(docs)
+
+
+def _project_outputs(plan) -> list[str]:
+    """Names of the columns every Project node of a logical plan outputs."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Project":
+            out = node.output()
+            names += [out.apply(i).name() for i in range(out.size())]
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+@pytest.mark.parametrize("vocab_size", ["small", "zipf"])
+@pytest.mark.parametrize("scorer", ["nb", "nb_raw", "svm"])
+def test_scorers_are_one_in_row_projection(spark, sf_dir, scorer, vocab_size):
+    """Scoring reads each row once and never regroups it: no exchange
+    and no join. The optimized plan holds the shipped vocabulary table
+    exactly once and no Project outputs it — a table projected as a
+    column and read twice is copied into every row."""
+    from text_sentiment_classification_hadoop_spark_spark.functions import vocab
     from text_sentiment_classification_hadoop_spark_spark.operators import nb as NB
-    _, test = S.train_test(S.labeled_documents(spark, sf_dir))
-    model, stats = S._nb_trained(spark, sf_dir)
-    assert_broadcast_join(NB.nb_score(test, model, stats))
+    from text_sentiment_classification_hadoop_spark_spark.operators import svm as SVM
+    if vocab_size == "small":
+        train, test = S.train_test(S.labeled_documents(spark, sf_dir))
+    else:
+        train, test = _zipf_split(spark)
+    if scorer == "svm":
+        df = SVM.svm_score(test, SVM.svm_effective_train(train))
+    else:
+        model, stats = NB.nb_train(train)
+        score = NB.nb_score if scorer == "nb" else NB.nb_score_compat_raw
+        df = score(test, model, stats)
+    assert_no_exchange(df)
+    assert "Join" not in plan_string(df)
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    assert optimized.toString().count(f"LocalRelation [{vocab._T}#") == 1
+    assert optimized.toString().count("scalar-subquery#") == 1
+    assert vocab._T not in _project_outputs(optimized)
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_dir):
@@ -83,13 +128,6 @@ def test_multimodal_decode_is_arrow_batched(spark, sf_dir):
     plan = plan_string(MM.decode_image_features(MM.synth_multimodal(docs)))
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan
-
-
-def test_svm_score_join_is_broadcast(spark, sf_dir):
-    from text_sentiment_classification_hadoop_spark_spark.operators import svm as SVM
-    train, test = S.train_test(S.labeled_documents(spark, sf_dir))
-    w = SVM.svm_effective_train(train)
-    assert_broadcast_join(SVM.svm_score(test, w))
 
 
 def test_whole_stage_codegen_active(spark, sf_dir):

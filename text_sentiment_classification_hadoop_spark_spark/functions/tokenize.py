@@ -22,6 +22,14 @@ def tokens_array(col: Column, sep: str = " ") -> Column:
     return F.split(col, sep)
 
 
+def row_tokens(col: Column) -> Column:
+    """T1 with the empty-text guard of :func:`explode_tokens` (P5,
+    ``NB.java:90``), for scoring a row in place: the single-space split
+    of non-blank text, no tokens for blank or NULL text."""
+    return F.when(F.length(F.trim(col)) > 0, tokens_array(col)) \
+        .otherwise(F.array().cast("array<string>"))
+
+
 def token_count_quirk(col: Column) -> Column:
     """T2 counting semantics (``NB.java:80,85``): ``split("\\s+").length``.
 

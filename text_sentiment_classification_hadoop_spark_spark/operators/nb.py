@@ -1,4 +1,5 @@
-"""Multinomial Naive Bayes as pure DataFrame aggregation + broadcast join.
+"""Multinomial Naive Bayes: one DataFrame aggregation to train, one
+in-row projection to score.
 
 Semantics replicated from the reference (SURVEY.md §2.9 M2-M3):
 
@@ -20,17 +21,24 @@ Differences from the reference (deliberate, SURVEY.md §4.2):
   :func:`nb_score_compat_raw` provides the reference's raw-product
   scorer verbatim — underflow→0→tie→NEGATIVE quirk included — for
   bit-fidelity when a consumer needs the old behavior;
-- hash join instead of the reference's accidental O(tokens×|V|)
-  nested-loop probe (``NB.java:234-241``) — same semantics;
-- the model is a broadcast DataFrame, not a per-task HDFS re-read.
+- each token is found by an exact two-probe hash lookup
+  (:mod:`..functions.vocab`) instead of the reference's accidental
+  O(tokens×|V|) nested-loop probe (``NB.java:234-241``) — same
+  semantics;
+- the model ships once per query inside the plan, not as a per-task
+  HDFS re-read.
 
-Scale notes (100 TB story): training is one explode + one hash
-aggregation — partial (map-side) aggregation halves shuffle volume
-automatically; the model (vocabulary-sized, ~1e6 rows) broadcasts, so
-scoring is shuffle-free except the per-doc sum, which AQE coalesces.
-The six scalar stats are collected to the driver (tiny) and folded into
-literals — the Spark-native analog of the reference's Configuration
-scalars (J4, ``NB.java:305-316``).
+Scale notes: training is one explode + one hash aggregation — partial
+(map-side) aggregation halves shuffle volume automatically — whose
+vocabulary-sized result is checkpointed. Scoring reads the model to the
+driver through Arrow and is one projection over the documents: every row
+folds its own tokens against the model, bound once per row as one
+cuckoo-hashed table value, so scoring has no explode, join, exchange or
+regroup, and two rows that share an id keep their own scores. Each
+scoring stage ships the table in its task binary (about 60 bytes plus
+the word per vocabulary word). The six scalar stats are collected to
+the driver (tiny) and folded into literals — the Spark-native analog
+of the reference's Configuration scalars (J4, ``NB.java:305-316``).
 """
 
 from __future__ import annotations
@@ -40,8 +48,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vocab
 from ..functions.rounding import pround
-from ..functions.tokenize import explode_tokens, token_count_quirk
+from ..functions.tokenize import explode_tokens, row_tokens, token_count_quirk
 
 
 @dataclass(frozen=True)
@@ -93,16 +102,28 @@ def nb_train(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     """M2: model DF ``(word, pos_count, neg_count, log_p_pos, log_p_neg)``
     plus the scalar stats. Smoothed probabilities are derived once here
     (the reference recomputes them in every map task's ``setup()``,
-    ``NB.java:189-194`` — an anti-pattern we don't copy)."""
+    ``NB.java:189-194`` — an anti-pattern we don't copy).
+
+    The model reads a local checkpoint of the counts, which lives as
+    long as the caller keeps the model; the corpus cache this function
+    makes is released before it returns."""
     # The cleaned corpus feeds two jobs (token counts, scalar stats):
-    # cache it — the one-line in-memory reuse the reference's own report
-    # credits for Spark's 6.7x over MR (report §4.2 p.23). The counts
-    # table is vocabulary-sized: checkpoint it so the model/count()
-    # reads don't re-aggregate the corpus.
-    docs = docs.cache()
-    counts = nb_token_counts(docs, id_col, text_col, label_col) \
-        .localCheckpoint(eager=True)
-    stats = nb_stats(docs, counts, text_col, label_col)
+    # cache it for their duration — the one-line in-memory reuse the
+    # reference's own report credits for Spark's 6.7x over MR (report
+    # §4.2 p.23). A caller's cache is used as is and left in place.
+    # The counts table is vocabulary-sized: checkpoint it so the
+    # model/count() reads don't re-aggregate the corpus.
+    level = docs.storageLevel
+    owned = not (level.useMemory or level.useDisk)
+    if owned:
+        docs.cache()
+    try:
+        counts = nb_token_counts(docs, id_col, text_col, label_col) \
+            .localCheckpoint(eager=True)
+        stats = nb_stats(docs, counts, text_col, label_col)
+    finally:
+        if owned:
+            docs.unpersist()
     v = stats.features_size
     model = counts.select(
         "word", "pos_count", "neg_count",
@@ -112,33 +133,47 @@ def nb_train(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     return model, stats
 
 
+def _fold_classes(docs: DataFrame, probs: DataFrame, zero: float, op,
+                  text_col: str) -> DataFrame:
+    """docs + ``_s``, the struct ``(p, n)`` that folds the ``(_p, _n)``
+    values of each row's in-vocabulary tokens with ``op``, in token
+    order, starting from ``zero``; tokens outside the vocabulary leave
+    it unchanged (inner-join semantics, ``NB.java:232-243``)."""
+    table = vocab.from_frame(probs, "word", p="_p", n="_n")
+    tokens = row_tokens(F.col(text_col))
+
+    def fold(t):
+        def step(acc, s):
+            return F.when(s < 0, acc).otherwise(F.struct(
+                op(acc["p"], F.get(t["p"], s)).alias("p"),
+                op(acc["n"], F.get(t["n"], s)).alias("n")))
+        return F.aggregate(table.token_slots(t, tokens),
+                           F.struct(F.lit(zero).alias("p"), F.lit(zero).alias("n")),
+                           step)
+    return table.with_column(docs, "_s", fold)
+
+
 def nb_score(docs: DataFrame, model: DataFrame, stats: NBStats,
-             id_col: str = "doc_id", text_col: str = "text",
-             label_col: str = "label") -> DataFrame:
+             text_col: str = "text") -> DataFrame:
     """M3 (log-space): returns docs + ``score_pos/score_neg/prediction``.
 
     prediction: 1.0 iff ``score_pos > score_neg`` (tie → 0.0/NEGATIVE,
     ``NB.java:250``). Docs with empty cleaned text or all-unseen tokens
     score on priors alone (product stays 1.0 in the reference,
-    ``NB.java:125-128,244-247``).
+    ``NB.java:125-128,244-247``). Each row is scored on its own.
     """
     log_prior_pos = F.lit(float("-inf")) if stats.pos_tweets_size == 0 else \
         F.log(F.lit(stats.pos_tweets_size / stats.tweets_size))
     log_prior_neg = F.lit(float("-inf")) if stats.neg_tweets_size == 0 else \
         F.log(F.lit(stats.neg_tweets_size / stats.tweets_size))
 
-    tokens = explode_tokens(docs.select(id_col, text_col), text_col=text_col)
-    sums = (
-        tokens.join(F.broadcast(model.select("word", "log_p_pos", "log_p_neg")),
-                    "word", "inner")
-        .groupBy(id_col)
-        .agg(F.sum("log_p_pos").alias("_s_pos"), F.sum("log_p_neg").alias("_s_neg"))
-    )
+    probs = model.select("word", F.col("log_p_pos").alias("_p"),
+                         F.col("log_p_neg").alias("_n"))
     scored = (
-        docs.join(sums, id_col, "left")
-        .withColumn("score_pos", log_prior_pos + F.coalesce(F.col("_s_pos"), F.lit(0.0)))
-        .withColumn("score_neg", log_prior_neg + F.coalesce(F.col("_s_neg"), F.lit(0.0)))
-        .drop("_s_pos", "_s_neg")
+        _fold_classes(docs, probs, 0.0, lambda a, b: a + b, text_col)
+        .withColumn("score_pos", log_prior_pos + F.col("_s.p"))
+        .withColumn("score_neg", log_prior_neg + F.col("_s.n"))
+        .drop("_s")
     )
     # The margin is portably rounded to 6 dp before the sign test:
     # semantically a no-op (real margins are >> 1e-6) but it makes the
@@ -153,8 +188,7 @@ def nb_score(docs: DataFrame, model: DataFrame, stats: NBStats,
 
 
 def nb_score_compat_raw(docs: DataFrame, model: DataFrame, stats: NBStats,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        label_col: str = "label") -> DataFrame:
+                        text_col: str = "text") -> DataFrame:
     """M3 compat mode: the reference's RAW-probability scorer, underflow
     quirk included (``NB.java:224-247``) — probabilities multiply as
     plain doubles with no log-space, so on long documents BOTH products
@@ -173,22 +207,15 @@ def nb_score_compat_raw(docs: DataFrame, model: DataFrame, stats: NBStats,
     v = stats.features_size
     probs = model.select(
         "word",
-        ((F.col("pos_count") + 1) / F.lit(float(stats.pos_words_size + v))).alias("_p_pos"),
-        ((F.col("neg_count") + 1) / F.lit(float(stats.neg_words_size + v))).alias("_p_neg"),
+        ((F.col("pos_count") + 1) / F.lit(float(stats.pos_words_size + v))).alias("_p"),
+        ((F.col("neg_count") + 1) / F.lit(float(stats.neg_words_size + v))).alias("_n"),
     )
-    tokens = explode_tokens(docs.select(id_col, text_col), text_col=text_col)
-    prods = (
-        tokens.join(F.broadcast(probs), "word", "inner")
-        .groupBy(id_col)
-        .agg(F.product("_p_pos").alias("_pr_pos"),
-             F.product("_p_neg").alias("_pr_neg"))
-    )
+    # all-unseen/empty docs keep product 1.0 (NB.java:125-128,244-247)
     scored = (
-        docs.join(prods, id_col, "left")
-        # all-unseen/empty docs keep product 1.0 (NB.java:125-128,244-247)
-        .withColumn("prob_pos", F.lit(prior_pos) * F.coalesce(F.col("_pr_pos"), F.lit(1.0)))
-        .withColumn("prob_neg", F.lit(prior_neg) * F.coalesce(F.col("_pr_neg"), F.lit(1.0)))
-        .drop("_pr_pos", "_pr_neg")
+        _fold_classes(docs, probs, 1.0, lambda a, b: a * b, text_col)
+        .withColumn("prob_pos", F.lit(prior_pos) * F.col("_s.p"))
+        .withColumn("prob_neg", F.lit(prior_neg) * F.col("_s.n"))
+        .drop("_s")
     )
     return scored.withColumn(
         "prediction",

@@ -32,8 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vocab
 from ..functions.rounding import pround
-from ..functions.tokenize import explode_tokens, tokens_array
+from ..functions.tokenize import explode_tokens, row_tokens, tokens_array
 
 # Hinge margins are rounded here before the `< 1` test so the violation
 # set (and hence the whole epoch chain) is independent of fp summation
@@ -65,26 +66,31 @@ def svm_effective_train(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def svm_score(docs: DataFrame, weights: DataFrame, id_col: str = "doc_id",
+def svm_score(docs: DataFrame, weights: DataFrame,
               text_col: str = "text") -> DataFrame:
     """M6: docs + ``score`` + ``prediction`` (1.0 iff score ≥ 0;
-    tie → POSITIVE, ``SVM.java:144``). Broadcast join on ``word``;
-    unmatched tokens contribute 0 (``SVM.java:141``:
-    ``getOrDefault(w, 0.0)``)."""
-    tokens = explode_tokens(docs.select(id_col, text_col), text_col=text_col)
-    sums = (
-        tokens.join(F.broadcast(weights), "word", "inner")
-        .groupBy(id_col)
-        .agg(F.sum("weight").alias("_s"))
-    )
+    tie → POSITIVE, ``SVM.java:144``). One projection over docs, as the
+    reference's map-only test job (``SVM.java:195``): the driver reads
+    the weights through Arrow and ships them as one cuckoo-hashed table
+    (:mod:`..functions.vocab`; about 40 bytes plus the word per
+    vocabulary word in each stage's task binary), and every row sums
+    the weights of its own tokens in token order. Unmatched tokens
+    contribute 0 (``SVM.java:141``: ``getOrDefault(w, 0.0)``), blank or
+    NULL text scores 0, and rows that share an id keep their own
+    scores."""
+    table = vocab.from_frame(weights, "word", w="weight")
+    tokens = row_tokens(F.col(text_col))
+
+    def total(t):
+        return F.aggregate(table.token_slots(t, tokens), F.lit(0.0),
+                           lambda acc, s: F.when(s < 0, acc)
+                           .otherwise(acc + F.get(t["w"], s)))
     # Portably rounding the score to 6 dp before the sign test keeps
     # the prediction independent of fp summation order (cross-engine
     # stable; real scores are multiples of η ≈ 0.095); tie (rounded
     # score == 0) → POSITIVE via ``>= 0``, preserving ``SVM.java:144``.
     return (
-        docs.join(sums, id_col, "left")
-        .withColumn("score", F.coalesce(F.col("_s"), F.lit(0.0)))
-        .drop("_s")
+        table.with_column(docs, "score", total)
         .withColumn("prediction",
                     F.when(pround(F.col("score"), 6) >= 0, F.lit(1.0)).otherwise(F.lit(0.0)))
     )
@@ -109,31 +115,32 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
 
     - **Once per train.** Epoch 1 (w = 0: every sample violates, nothing
       decays) is one word-grouped aggregation; its collected result is
-      the vocabulary, and a word's id is its position in the sorted
-      vocabulary. The exploded tokens broadcast-join a ``(word, id)``
-      local frame and regroup by row into a cached ``(_y, _ids)`` frame
-      with the ids in token order — the only corpus shuffle outside the
-      epochs.
+      the vocabulary with the two hashes of each word. The driver places
+      the words in a cuckoo table (:mod:`..functions.vocab`), and a
+      word's id is its slot there. One projection over the cached token
+      arrays looks every token up in place, in token order, into a
+      cached ``(_y, _ids)`` frame: no join and no regroup.
     - **Each later epoch.** The driver holds the weights as a dense
-      list and ships them as one ``array<double>`` value ``_W`` (a
-      one-row local frame read as a scalar subquery, projected as a
-      column because lambdas reject subqueries); the margin is a
+      slot-indexed list and ships them as one ``array<double>`` value
+      ``_W`` (a one-row local frame read as a scalar subquery, projected
+      as a column because lambdas reject subqueries); the margin is a
       row-local ``aggregate`` of ``get(_W, id)`` over the row's ids.
       Violating rows explode their ids plus the sentinel id ``-1``, so
       the gradient and the violation count V come back in one
-      id-grouped shuffle and one collect.
+      id-grouped shuffle and one collect — the only shuffles of a train
+      besides the epoch-1 aggregation.
 
-    The driver therefore holds 8 bytes per vocabulary word and collects
-    a sparse gradient each epoch: ``epochs`` collects per train. The
-    former distributed fallback kept every model in DataFrames so that
-    nothing vocabulary-sized reached the driver, but it cost about 43
-    jobs per train and this path was still faster at V≈78k (SCALE.md
-    §2). Margins sum in token order and are rounded at ``MARGIN_DP``
-    before the ``< 1`` test, and the update keeps the association
-    ``v·(1 − η·λ·V) + η·Σy``, so the weights match the SQL oracle and
-    the pure-Python reference — the in-memory epoch iteration the
-    reference's own report credits for Spark's 21× speedup over MR
-    (report §4.2 p.23).
+    The driver therefore holds the vocabulary and about 20 bytes of
+    weights per word (the table has 2.5 slots per word); each epoch's
+    stages ship those weights, and the id lookup ships the table's
+    keys (about 20 bytes plus the word per word), in their task
+    binaries. It collects a sparse gradient each epoch: ``epochs``
+    collects per train. Margins sum in token order and are rounded at
+    ``MARGIN_DP`` before the ``< 1`` test, and the update keeps the
+    association ``v·(1 − η·λ·V) + η·Σy``, so the weights match the SQL
+    oracle and the pure-Python reference — the in-memory epoch
+    iteration the reference's own report credits for Spark's 21×
+    speedup over MR (report §4.2 p.23).
     """
     from pyspark.sql import types as T
 
@@ -142,15 +149,12 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
     spark = docs.sparkSession
     y_expr = F.when(F.col(label_col) == 1.0, F.lit(1.0)).otherwise(F.lit(-1.0))
     # row-level token arrays, cached once: the epoch-1 gradient and the
-    # id join both read this frame; the empty-text filter replicates
-    # explode_tokens' P5 guard. ``_rid`` keeps rows that share a doc id
-    # apart as separate samples; the id join scans this frame once, so
-    # the ids only need to be unique within one scan.
+    # id lookup both read this frame; the empty-text filter replicates
+    # explode_tokens' P5 guard. Each row is its own sample, also when
+    # rows share a doc id.
     base = (
         docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.monotonically_increasing_id().alias("_rid"),
-                y_expr.alias("_y"),
-                tokens_array(F.col(text_col)).alias("_words"))
+        .select(y_expr.alias("_y"), tokens_array(F.col(text_col)).alias("_words"))
         .cache()
     )
 
@@ -159,29 +163,28 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
     # words are the vocabulary.
     eta1 = epoch_lr(1)
     first = sorted(
-        (r["word"], r["weight"]) for r in
         base.select("_y", F.explode("_words").alias("word"))
         .groupBy("word")
         .agg((F.lit(eta1) * F.sum("_y")).alias("weight"))
+        .select("word", "weight", *vocab.hashes(F.col("word")))
         .collect())
-    vocab = [w for w, _ in first]
-    weights = [v for _, v in first]
+    words = [r["word"] for r in first]
+    table = vocab.build(spark, words, [r["_h1"] for r in first],
+                        [r["_h2"] for r in first])
+    weights = [0.0] * table.size
+    for r, s in zip(first, table.slots):
+        weights[s] = r["weight"]
 
-    word_ids = local_frame(spark, [(w, i) for i, w in enumerate(vocab)],
-                           "word string, _id int")
-    # sorting on the token position keeps each row's ids in token order,
-    # so margins sum in the same order as the reference's loop
+    # each row's ids in token order, so margins sum in the same order
+    # as the reference's loop
     rows = (
-        base.select("_rid", "_y", F.posexplode("_words").alias("_pos", "word"))
-        .join(F.broadcast(word_ids), "word")
-        .groupBy("_rid", "_y")
-        .agg(F.array_sort(F.collect_list(F.struct("_pos", "_id"))).alias("_p"))
-        .select("_y", F.transform("_p", lambda p: p["_id"]).alias("_ids"))
+        table.with_column(base, "_ids", lambda t: table.token_slots(t, F.col("_words")))
+        .select("_y", "_ids")
         .cache()
     )
     for epoch in range(2, epochs + 1):
         eta = epoch_lr(epoch)
-        w_col = local_frame(spark, [(weights,)], "_W array<double>").scalar()
+        w_col = vocab.one_row(spark, _W=weights).scalar()
         dot = F.expr("aggregate(_ids, 0.0D, (acc, i) -> acc + get(_W, i))")
         grads = (
             rows.withColumn("_W", w_col)
@@ -202,7 +205,7 @@ def svm_train_declared(docs: DataFrame, text_col: str = "text",
     rows.unpersist()
     base.unpersist()
     return local_frame(
-        spark, list(zip(vocab, weights)),
+        spark, [(w, weights[s]) for w, s in zip(words, table.slots)],
         T.StructType([T.StructField("word", T.StringType()),
                       T.StructField("weight", T.DoubleType())]))
 

@@ -40,6 +40,8 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from .session import persisted_rdd_ids, unpersist_rdds
+
 # Entries kept per kind: enough that a session alternating a few scale
 # dirs (the sf0.001 / sf0.01 test data, a rewritten table) keeps each
 # warm, while a long session over many inputs holds a bounded amount.
@@ -75,20 +77,6 @@ def fingerprint(spark: SparkSession, paths: Iterable[str]) -> tuple:
     return tuple(sorted(files))
 
 
-def _persisted_rdd_ids(spark: SparkSession) -> set[int]:
-    """Ids of the RDDs the SparkContext holds as persisted (one JVM call)."""
-    ids = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
-    return {int(i) for i in ids.split(",") if i}
-
-
-def _unpersist(spark: SparkSession, rdd_ids: Iterable[int]) -> None:
-    live = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    for i in rdd_ids:
-        rdd = live.get(i)
-        if rdd.isDefined():
-            rdd.get().unpersist(False)
-
-
 class ReuseContext:
     """Reused artifacts of one Spark application, with hit and miss
     counts per kind."""
@@ -110,13 +98,13 @@ class ReuseContext:
             entries.move_to_end(key)
         else:
             self.misses[kind] += 1
-            before = _persisted_rdd_ids(spark)
+            before = persisted_rdd_ids(spark)
             self._building.append((kind, key))
             try:
                 value = build()
             finally:
                 self._building.pop()
-            entry = _Entry(value, _persisted_rdd_ids(spark) - before
+            entry = _Entry(value, persisted_rdd_ids(spark) - before
                            - self.owned_rdd_ids())
             entries[key] = entry
             while len(entries) > PER_KIND:
@@ -129,7 +117,7 @@ class ReuseContext:
         entry = self._entries.get(kind, {}).pop(key, None)
         if entry is None:
             return
-        _unpersist(spark, entry.rdd_ids)
+        unpersist_rdds(spark, entry.rdd_ids)
         for dep_kind, dep_key in entry.dependents:
             self._evict(spark, dep_kind, dep_key)
 

@@ -66,6 +66,23 @@ def widen(df, min_parts: int | None = None):
     return df
 
 
+def persisted_rdd_ids(spark: SparkSession) -> set[int]:
+    """Ids of the RDDs the SparkContext holds as persisted — caches and
+    local checkpoints alike (one JVM call)."""
+    ids = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(i) for i in ids.split(",") if i}
+
+
+def unpersist_rdds(spark: SparkSession, rdd_ids) -> None:
+    """Release the given persisted RDDs through their JVM handles (ids
+    no longer persisted are skipped)."""
+    live = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    for i in rdd_ids:
+        rdd = live.get(i)
+        if rdd.isDefined():
+            rdd.get().unpersist(False)
+
+
 def local_frame(spark: SparkSession, rows, schema):
     """Driver-side rows → a single-batch JVM ``LocalRelation`` (via a
     ``pyarrow.Table``) instead of ``createDataFrame(list)``'s pickled

@@ -9,9 +9,9 @@ tables as Parquet with explicit schemas:
 - write is idempotent via ``mode("overwrite")`` — the declarative form
   of the reference's ``fs.exists → fs.delete`` dance (``NB.java:283-287``,
   S7);
-- reload is ``spark.read.parquet`` + ``F.broadcast`` at the join site —
-  one distributed read, not one read *per task* (the reference's
-  anti-pattern, SURVEY.md §4.2);
+- reload is ``spark.read.parquet``, and a scorer reads the model once
+  to the driver and ships it inside its plan — one read, not one read
+  *per task* (the reference's anti-pattern, SURVEY.md §4.2);
 - a `word`-sorted single-file text export reproduces the reference's
   on-disk format byte-for-byte for interop (S6).
 """
@@ -35,8 +35,8 @@ def save_model(model: DataFrame, path: str) -> None:
 
 
 def load_model(spark: SparkSession, path: str) -> DataFrame:
-    """Reload a persisted model (S5). Join it via ``F.broadcast(...)``:
-    one scan, replicated to executors by Spark's broadcast machinery —
+    """Reload a persisted model (S5). The scorers take it as is: they
+    read it once to the driver and ship it inside the scoring plan —
     never re-read per task."""
     return spark.read.parquet(path)
 
