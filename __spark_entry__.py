@@ -2157,13 +2157,10 @@ def _copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _copurchase_communities_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted synchronous LPA at rounds=6 — same contract as
-    ``copurchase_communities`` but deep enough to cross the operator's
-    every-4-rounds lineage checkpoint (``graph.lpa_communities``,
-    ``r % 4 == 3`` with rounds remaining): rounds
-    4-6 resume from the materialized round-3 label table, so the
-    checkpoint branch itself is driver-hash-verified against the
-    6-round unrolled-SQL oracle. Measured plan effect is in the
-    operator docstring (7 exchanges at rounds=6 vs 12 at rounds=4)."""
+    ``copurchase_communities`` at twice the depth: the deepest lazy
+    plan ``graph.lpa_communities`` builds for the registry (six rounds,
+    twelve shuffles, no barrier), hash-verified against the 6-round
+    unrolled-SQL oracle."""
     from text_sentiment_classification_hadoop_spark_spark.operators import graph as G
     labels = G.lpa_communities(
         G.edges_from_rel_weighted(_copurchase_rel(spark, sf_dir)),
@@ -9752,10 +9749,8 @@ FROM l{rounds} ORDER BY node
 """)
 
     out["copurchase_communities"] = _lpa_sql(3)
-    # rounds=6 crosses lpa_communities' every-4-rounds lineage
-    # checkpoint (graph.py) — the post-checkpoint
-    # rounds resume from a materialized label table, and THIS query
-    # puts that branch under the driver's hash gate, not just pytest
+    # rounds=6: the deepest lazy LPA plan in the registry (no barrier
+    # in graph.lpa_communities) under the driver's hash gate
     out["copurchase_communities_deep"] = _lpa_sql(6)
     # Sequential rules: the top_session_paths gap-session CTE, then a
     # session-keyed rn<rn self-join (gap-allowed A-then-B), DISTINCT

@@ -54,6 +54,34 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def loop_rounds(monkeypatch):
+    """``loop_rounds(build, setup, probe)`` calls ``build()`` and
+    returns ``(its result, rounds run)``. It asserts that the eager
+    DataFrame calls (``collect``, ``count``, ``localCheckpoint``) made
+    inside ``build`` are ``setup`` checkpoints, then per round exactly
+    one checkpoint followed by one ``probe`` call — so no probe runs
+    before round 1."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+    calls = []
+    for name in ("collect", "count", "localCheckpoint"):
+        def spy(self, *args, _orig=getattr(ClassicDF, name), _name=name,
+                **kwargs):
+            calls.append(_name)
+            return _orig(self, *args, **kwargs)
+        monkeypatch.setattr(ClassicDF, name, spy)
+
+    def run(build, setup, probe):
+        calls.clear()
+        out = build()
+        seen, ckpt = list(calls), "localCheckpoint"
+        assert seen[:setup] == [ckpt] * setup, seen
+        rest = seen[setup:]
+        assert rest and rest == [ckpt, probe] * (len(rest) // 2), seen
+        return out, len(rest) // 2
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -318,15 +318,19 @@ def test_connected_components_chain_and_islands(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
 
 
-def test_connected_components_long_chain_converges(spark):
-    # a 12-node path needs ~11 propagation rounds: exercises the
-    # fixpoint loop, not just the one-hop case
+def test_connected_components_long_chain_converges(spark, loop_rounds):
+    # a 12-node path needs 11 propagation rounds, and a 12th whose
+    # label-sum probe repeats the 11th's: exercises the fixpoint loop,
+    # not just the one-hop case. After the edge and label checkpoints,
+    # every round is one checkpoint and one probe.
     from text_sentiment_classification_hadoop_spark_spark.operators import dedup as D
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 12)],
                                   "id_a long, id_b long")
-    comp = {r["node"]: r["component"]
-            for r in D.connected_components(pairs).collect()}
-    assert comp == {i: 1 for i in range(1, 13)}
+    comp, rounds = loop_rounds(lambda: D.connected_components(pairs),
+                               2, "collect")
+    assert rounds == 12
+    assert {r["node"]: r["component"] for r in comp.collect()} == \
+        {i: 1 for i in range(1, 13)}
 
 
 def test_cc_alternating_matches_label_prop(spark):
@@ -377,17 +381,21 @@ def test_cc_alternating_matches_label_prop(spark):
         assert alt == want
 
 
-def test_cc_alternating_chain_round_count(spark):
+def test_cc_alternating_chain_round_count(spark, loop_rounds):
     """The alternating algorithm must collapse a 64-node path well
     inside max_iters (geometric contraction), where label propagation
-    would need ~63 rounds."""
+    would need ~63 rounds. After the node and edge checkpoints, every
+    round is one checkpoint and one fingerprint probe."""
     from text_sentiment_classification_hadoop_spark_spark.operators import dedup as D
     pairs = spark.createDataFrame([(i, i + 1) for i in range(64)],
                                   "id_a long, id_b long")
-    comp = {r["node"]: r["component"]
-            for r in D.connected_components(
-                pairs, max_iters=10, algorithm="alternating").collect()}
-    assert comp == {i: 0 for i in range(65)}
+    comp, rounds = loop_rounds(
+        lambda: D.connected_components(pairs, max_iters=10,
+                                       algorithm="alternating"),
+        2, "collect")
+    assert rounds < 10
+    assert {r["node"]: r["component"] for r in comp.collect()} == \
+        {i: 0 for i in range(65)}
 
 
 @pytest.mark.parametrize("algorithm,short,enough", [

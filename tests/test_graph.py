@@ -135,29 +135,38 @@ def test_weighted_pagerank_weights_shift_mass(spark):
     assert r[2] == RESET_MICRO + (c2 * DAMP_NUM) // DAMP_DEN
 
 
-def test_bfs_depths_chain_and_cap(spark):
-    """BFS on a directed chain 1→2→3→4→5→6: depths are hop counts,
-    the max_rounds cap truncates the walk, and an unreachable branch
-    (7→8) never appears."""
-    from text_sentiment_classification_hadoop_spark_spark.operators.graph import bfs_depths
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (7, 8)],
-        "src long, dst long")
-    got = {r["node"]: r["depth"] for r in bfs_depths(edges, 1, 4).collect()}
-    assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}
-    full = {r["node"]: r["depth"]
-            for r in bfs_depths(edges, 1, 10).collect()}
-    assert full == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4, 6: 5}
+def test_bfs_depths_chain_and_cap(spark, loop_rounds):
+    """BFS depths are minimum hop counts from the source, cut at the
+    ``max_rounds`` cap. Each round is one checkpoint and one row-count
+    probe; the walk stops at the first round that adds no node, or at
+    the cap."""
+    chain = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (7, 8)]
+    cases = [
+        # directed chain 1→2→…→6 plus an unreachable branch 7→8: the
+        # cap truncates the walk, and 7/8 never appear
+        (chain, 1, 4, {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}, 4),
+        (chain, 1, 10, {1: 0, 2: 1, 3: 2, 4: 3, 5: 4, 6: 5}, 6),
+        # directed cycle 1→2→3→1: the back edge to the source adds
+        # nothing
+        ([(1, 2), (2, 3), (3, 1)], 1, 10, {1: 0, 2: 1, 3: 2}, 3),
+        # a source with no out-edges reaches only itself
+        (chain, 6, 10, {6: 0}, 2),
+    ]
+    for pairs, source, cap, want, rounds in cases:
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+        depths, ran = loop_rounds(
+            lambda: G.bfs_depths(edges, source, cap), 0, "count")
+        assert ran == rounds, (pairs, source, cap)
+        assert {r["node"]: r["depth"] for r in depths.collect()} == want
 
 
 def test_bfs_depths_min_over_multiple_paths(spark):
     """Diamond 1→{2,3}→4 plus a long way round 1→5→6→4: node 4 takes
     the 2-hop depth, not the 3-hop one."""
-    from text_sentiment_classification_hadoop_spark_spark.operators.graph import bfs_depths
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 4), (3, 4), (1, 5), (5, 6), (6, 4)],
         "src long, dst long")
-    got = {r["node"]: r["depth"] for r in bfs_depths(edges, 1, 5).collect()}
+    got = {r["node"]: r["depth"] for r in G.bfs_depths(edges, 1, 5).collect()}
     assert got[4] == 2 and got[6] == 2 and got[5] == 1
 
 
@@ -299,11 +308,8 @@ def test_lpa_two_communities_with_weak_bridge(spark):
 def test_lpa_matches_python_simulation(spark):
     """Synchronous-update parity against a literal python simulation of
     the documented rule (Σw argmax, ties → smallest label) on a
-    pseudo-random weighted graph, at three round counts — rounds=6
-    crosses the every-4-rounds lineage checkpoint (``r % 4 == 3``
-    fires at r=3 with more rounds remaining), so the post-checkpoint
-    rounds are verified to resume from the materialized label table with
-    identical results."""
+    pseudo-random weighted graph, at three round counts — rounds=6 is
+    the deepest lazy plan a registry query builds."""
     import random
     rng = random.Random(13)
     triples = {(min(a, b), max(a, b)): w for a, b, w in
@@ -332,6 +338,18 @@ def test_lpa_matches_python_simulation(spark):
         got = {r["node"]: r["community"]
                for r in G.lpa_communities(edges, rounds=rounds).collect()}
         assert got == simulate(rounds), f"rounds={rounds}"
+
+
+def test_lpa_sync_two_cycle(spark):
+    """One weighted edge 1–2: each node takes the other's label every
+    round, so synchronous LPA never settles — the reason the operator
+    runs a fixed round count instead of probing for a fixpoint."""
+    edges = _sym(spark, [(1, 2, 1)])
+    swapped, own = {1: 2, 2: 1}, {1: 1, 2: 2}
+    for rounds, want in ((1, swapped), (2, own), (3, swapped)):
+        got = {r["node"]: r["community"]
+               for r in G.lpa_communities(edges, rounds=rounds).collect()}
+        assert got == want, f"rounds={rounds}"
 
 
 def test_lpa_tie_takes_smallest_label(spark):

@@ -181,8 +181,6 @@ def bpe_train(words: DataFrame, n_merges: int = 8,
         if not top:
             break
         selected = select_batch([(r["pair"], int(r["f"])) for r in top], k)
-        if not selected:  # unreachable (first ranked pair never conflicts)
-            selected = [(top[0]["pair"], int(top[0]["f"]))]
         if round_sizes is not None:
             round_sizes.append(len(selected))
         seq = F.col("seq")

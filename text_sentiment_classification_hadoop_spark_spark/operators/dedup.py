@@ -29,6 +29,7 @@ from ..functions.hashing import (
 )
 from ..functions.rounding import pround
 from ..session import widen
+from .graph import until_stable
 
 DEFAULT_NUM_PERM = 16
 DEFAULT_BANDS = 4  # 16 perms / 4 bands = 4 rows per band
@@ -303,7 +304,8 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
                          algorithm: str = "label_prop") -> DataFrame:
     """Connected components over a near-dup pair graph →
     ``(node, component)`` where ``component`` is the smallest id
-    reachable from ``node``.
+    reachable from ``node``. Graph-generic: any ``(id_a, id_b)`` edge
+    list works (the co-purchase and entity-resolution queries use it).
 
     ``algorithm="label_prop"`` (default): min-label propagation. Each
     round is one shuffle: propagate every node's current label across
@@ -312,25 +314,10 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     node duplicated a million times is absorbed before the exchange.
     Convergence in O(cluster diameter) rounds; near-dup clusters are
     shallow (a handful of mutually-similar docs), so this terminates in
-    2-4 rounds in practice.
-
-    Rounds run in LAZY BATCHES on a geometric 1, 1, 1, 2, 4, 4, ...
-    probe schedule (guide §2.4/§5, the PageRank lesson): each
-    batch is one AQE-fused multi-round plan, then
-    ONE ``localCheckpoint`` + ONE scalar convergence probe. The first
-    three batches keep the old round-exact exit — near-dup graphs are
-    shallow, and a fixed 4-round batch was measured to OVERSHOOT them
-    (8 edge joins instead of 3, +44% task time on dedup_canonical at
-    sf0.1) — so only loops that survive 3 rounds (deep/adversarial
-    components, the 100 TB case where the per-round barrier dominates)
-    escalate to fused multi-round batches. Results are identical:
-    min-label rounds are idempotent at the fixpoint (extra rounds
-    inside the converging batch are no-ops), the label-sum is strictly
-    decreasing until the fixpoint so "sum unchanged across a batch"
-    still certifies convergence exactly, and total rounds never exceed
-    ``max_iters`` (the last batch is truncated). USING-keyed joins
-    dodge the ambiguous-self-join check the old per-round checkpoints
-    masked (the pagerank_fixed_point discipline).
+    2-4 rounds in practice. The probe is the label sum, strictly
+    decreasing until the fixpoint. A deep graph (long chains, giant
+    components) pays one round per hop of diameter: use
+    ``algorithm="alternating"`` there.
 
     ``algorithm="alternating"``: the large-star/small-star algorithm
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -340,11 +327,13 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     label propagation needs O(diameter) full-edge-list rounds. Both
     star operations are min-aggregations + an equi-join on node id —
     no collect_list, no driver adjacency; skewed hubs partial-aggregate
-    map-side exactly like label_prop's min.
+    map-side exactly like label_prop's min. The probe is a fingerprint
+    of the edge set (count + sums, fixed at the star-forest fixpoint).
 
-    The driver-side loop reads ONE scalar fingerprint per round (count
-    + label sum, both monotone under contraction — same pattern as the
-    SVM epoch loop); every round ``localCheckpoint``s to cut lineage.
+    Both run through :func:`..graph.until_stable`: per round one step,
+    one eager ``localCheckpoint`` and one scalar probe, stopping when
+    the probe repeats. ``max_iters`` rounds without a fixpoint raise a
+    ``RuntimeWarning`` (the labels may split components).
     """
     if algorithm == "alternating":
         return _cc_alternating(pairs, max_iters)
@@ -363,42 +352,21 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
         .localCheckpoint(eager=True)
     )
     # self-loops folded into the edge list ONCE so each round is a
-    # SINGLE join + min-aggregate (label'(v) = min over N(v) ∪ {v}):
-    # the old per-round ``propagated.union(labels)`` kept each node's
-    # own label by referencing the lazy label plan twice per round,
-    # which doubles the fused batch's plan references per round (2^k
-    # logical growth); the self-loop form references it once (linear)
+    # SINGLE join + min-aggregate (label'(v) = min over N(v) ∪ {v})
     # (lazy: a narrow union over the two checkpointed frames — no
     # second edge-list materialization)
     edges = edges.union(labels.select(F.col("node").alias("src"),
                                       F.col("node").alias("dst")))
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    # GEOMETRIC probe schedule 1, 1, 1, 2, 4, 4, ...: near-dup graphs
-    # are shallow (converge in 2-3 rounds), so the first three batches
-    # keep the old round-exact exit — a fixed batch of 4 was measured
-    # to OVERSHOOT shallow graphs (8 rounds of edge joins instead of 3,
-    # +44% task time on dedup_canonical at sf0.1); only a loop that
-    # has already survived 3 rounds (deep components — the adversarial
-    # 100 TB case) escalates to fused 2- then 4-round batches, where
-    # the per-round checkpoint + probe barrier is the dominant cost.
-    batch_sizes = [1, 1, 1, 2]
-    done = 0
-    converged = False
-    while done < max_iters:
-        probe_every = batch_sizes.pop(0) if batch_sizes else 4
-        for _ in range(min(probe_every, max_iters - done)):
-            labels = (
-                edges.join(labels.withColumnRenamed("node", "src"), "src")
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        # USING-keyed join: dodges the ambiguous-self-join check
+        return (edges.join(labels.withColumnRenamed("node", "src"), "src")
                 .select(F.col("dst").alias("node"), F.col("label"))
-                .groupBy("node").agg(F.min("label").alias("label"))
-            )
-            done += 1
-        labels = labels.localCheckpoint(eager=True)
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
+                .groupBy("node").agg(F.min("label").alias("label")))
+
+    labels, converged = until_stable(
+        labels, step, lambda s: s.agg(F.sum("label")).collect()[0][0],
+        max_iters)
     if not converged:
         _warn_cc_truncated("label_prop", max_iters)
     return labels.select("node", F.col("label").alias("component"))
@@ -439,22 +407,7 @@ def _cc_alternating(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    def _fingerprint(e: DataFrame) -> tuple:
-        r = e.agg(F.count(F.lit(1)).alias("n"),
-                  F.sum("u").alias("su"), F.sum("v").alias("sv"),
-                  F.sum(F.hash("u", "v").cast("long")).alias("sh")
-                  ).collect()[0]
-        return (r["n"], r["su"], r["sv"], r["sh"])
-
-    prev = None
-    converged = False
-    # per-body probe kept deliberately (measured this round): batching
-    # the fingerprint to every 2nd body trades one ~0.1 s collect over
-    # an already-checkpointed RDD for up to one EXTRA large+small-star
-    # body (~6 shuffles) past the fixpoint — profiled at sf0.1 as +13
-    # stages on copurchase_components. The probe is the cheap side
-    # here, unlike the label_prop loop above.
-    for _ in range(max_iters):
+    def step(edges: DataFrame, _r: int) -> DataFrame:
         # large-star over the symmetric neighborhood
         sym = edges.union(edges.select(F.col("v").alias("u"),
                                        F.col("u").alias("v")))
@@ -471,19 +424,20 @@ def _cc_alternating(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
         dir_e = edges.select(F.greatest("u", "v").alias("u"),
                              F.least("u", "v").alias("v")).distinct()
         mins = (dir_e.groupBy("u").agg(F.min("v").alias("m")))
-        edges = (
+        return (
             dir_e.join(mins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins.select(F.col("u"), F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        cur = _fingerprint(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
+
+    def fingerprint(e: DataFrame) -> tuple:
+        return tuple(e.agg(F.count(F.lit(1)), F.sum("u"), F.sum("v"),
+                           F.sum(F.hash("u", "v").cast("long"))
+                           ).collect()[0])
+
+    edges, converged = until_stable(edges, step, fingerprint, max_iters)
     if not converged:
         _warn_cc_truncated("alternating", max_iters)
     # fixpoint edge set is (node → component-min) for every non-root;
@@ -524,8 +478,7 @@ def canonical_docs(df: DataFrame, pairs: DataFrame,
 
 
 def canonical_docs_best(df: DataFrame, pairs: DataFrame,
-                        score_col: str, id_col: str = "doc_id",
-                        cc_algorithm: str = "label_prop") -> DataFrame:
+                        score_col: str, id_col: str = "doc_id") -> DataFrame:
     """Keep-BEST dedup resolution: like :func:`canonical_docs`, but each
     cluster's canonical representative is its highest-``score_col``
     member (ties → lowest id) instead of the minimum id →
@@ -538,7 +491,7 @@ def canonical_docs_best(df: DataFrame, pairs: DataFrame,
     ``(-score, id)`` struct ordering — one aggregation over the
     component table, never the corpus; the corpus sees the same single
     left join as the keep-first form."""
-    comp = connected_components(pairs, algorithm=cc_algorithm)
+    comp = connected_components(pairs)
     scored = comp.join(
         df.select(F.col(id_col).alias("node"), F.col(score_col).alias("_s")),
         "node")

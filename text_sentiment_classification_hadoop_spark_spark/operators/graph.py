@@ -1,5 +1,9 @@
-"""Distributed graph analytics: fixed-point PageRank (Page et al. 1999)
-over DataFrame edge lists.
+"""Distributed graph analytics over DataFrame edge lists: fixed-point
+PageRank (Page et al. 1999), personalized PageRank, BFS, k-core,
+Bellman-Ford, triangle counts, co-occurrence, association rules and
+label-propagation communities — plus :func:`until_stable`, the one
+stop-when-stable loop that connected components (``dedup.py``) and BFS
+run through.
 
 The reference engine has no graph surface; this extends the rebuild's
 iterative-algorithm family (SVM epochs, Lloyd k-means, CC label
@@ -18,12 +22,23 @@ overflow headroom: node mass <= n * SCALE, safe to ~9e12 nodes.)
 Mass lost to floor division simply decays — the same effect as the
 standard dangling-mass approximation, and it is deterministic.
 
-Scale shape per iteration: one join of the edge list against the
-node-sized rank table on ``src`` (shuffle on the edge partitioning — at
-100 TB pre-partition both sides by ``src`` so the join is co-located),
-one groupBy ``dst``, one left join back to the node table.
-``localCheckpoint`` each round cuts lineage (same pattern as the dedup
-CC loop); the driver reads nothing until the caller materializes.
+Loops. Three kinds, by what a round reads:
+
+- convergence loops (connected components, BFS) go through
+  :func:`until_stable`: each round is one step, one eager
+  ``localCheckpoint`` and one driver-read probe, and the loop stops
+  when the probe repeats;
+- fixed-round loops that read their state ONCE per round (PageRank,
+  PPR, LPA) stay plain lazy ``for`` loops: the plan grows linearly
+  with the round count, which registry callers keep at <= 6;
+- fixed-round loops that read their state TWICE per round
+  (:func:`kcore_peel`, :func:`bellman_ford_costs`) checkpoint every
+  round, since an uncut lazy plan would double per round.
+
+Scale shape per PageRank iteration: one join of the edge list against
+the node-sized rank table on ``src`` (shuffle on the edge partitioning
+— at 100 TB pre-partition both sides by ``src`` so the join is
+co-located), one groupBy ``dst``, one left join back to the node table.
 """
 
 from __future__ import annotations
@@ -45,6 +60,30 @@ RESET_MICRO = SCALE * (DAMP_DEN - DAMP_NUM) // DAMP_DEN
 # customer key is below it (TPC-H SF <= ~6); copurchase_rel fails the
 # query above that instead of merging customer and supplier nodes.
 SUPP_OFFSET = 1_000_000
+
+
+def until_stable(state: DataFrame, step, probe,
+                 max_rounds: int) -> tuple[DataFrame, bool]:
+    """Run ``state = step(state, r)`` for rounds ``r = 1, 2, ...`` until
+    ``probe(state)`` equals the previous round's probe, or until
+    ``max_rounds`` rounds ran → ``(state, converged)``.
+
+    Each round is the step, ONE eager ``localCheckpoint`` (so every
+    round's plan starts from a materialized frame and lineage stays
+    flat) and ONE probe — a driver read of a scalar that stops changing
+    at the fixpoint. There is no probe before round 1: the first round
+    always runs, and a fixpoint is certified by two equal probes.
+    ``converged`` is False when the rounds ran out first; what that
+    means (a warning, or the caller's depth cap) is the caller's call.
+    """
+    prev = None
+    for r in range(1, max_rounds + 1):
+        state = step(state, r).localCheckpoint(eager=True)
+        cur = probe(state)
+        if r > 1 and cur == prev:
+            return state, True
+        prev = cur
+    return state, False
 
 
 def copurchase_rel(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -230,18 +269,22 @@ def _pagerank_loop(edges: DataFrame, deg: DataFrame, nodes: DataFrame,
     """The power iterations shared by both PageRank variants: start at
     ``seed·SCALE``, and each round reset to ``seed·RESET_MICRO`` plus
     the damped incoming mass. ``seed`` is a column of ``nodes`` (0/1)
-    or the literal 1 (every node a seed)."""
+    or the literal 1 (every node a seed).
+
+    A plain lazy loop with no barrier: each round reads ``ranks`` once,
+    so the returned plan grows linearly with ``iters`` and runs as one
+    AQE-fused job at collection time. Results are partitioning- and
+    lineage-independent (exact BIGINT arithmetic)."""
     ranks = nodes.select(
         "node", (seed * SCALE).cast("long").alias("rank_micro"))
-    for it in range(iters):
+    for _ in range(iters):
         # per-node (rank, sum_w) first (node-sized join), THEN the one
         # edge-sized join — the per-edge division needs the edge's own
         # weight, so it evaluates edge-side. String-key (USING) joins
         # throughout: the lazy multi-round lineage re-joins frames
         # derived from `deg`/`nodes` against themselves, and
         # dataset-qualified column refs (`deg["src"]`) trip Spark's
-        # ambiguous-self-join check the old per-round checkpoints were
-        # masking.
+        # ambiguous-self-join check a per-round checkpoint would mask.
         share = (
             ranks.join(deg.withColumnRenamed("src", "node"), "node")
             .select(F.col("node").alias("src"), "rank_micro", "sum_w")
@@ -261,15 +304,6 @@ def _pagerank_loop(edges: DataFrame, deg: DataFrame, nodes: DataFrame,
                  ).cast("long").alias("rank_micro"),
             )
         )
-        # lineage checkpoint every 4th round only (the lpa_communities
-        # lesson, measured ~2x at sf0.1: a lazy AQE-fused multi-round
-        # plan beats per-round eager materialization — each eager
-        # localCheckpoint pays row materialization + read-back and a
-        # driver job the fused plan never does). Results are
-        # partitioning/lineage-independent (exact BIGINT arithmetic),
-        # and the common iters=3 case runs fully fused.
-        if it % 4 == 3 and it != iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 
@@ -328,33 +362,32 @@ def bfs_depths(edges: DataFrame, source: int,
     for every node reachable from ``source`` within ``max_rounds``
     hops (minimum hop count; the source itself is depth 0).
 
-    The Pregel-style frontier loop, DataFrame-native: per round, the
-    CURRENT frontier equi-joins the edge list (src-keyed shuffle —
-    frontier-sized, not graph-sized), new nodes are anti-joined
-    against the visited set (node-keyed, co-partitions), and both
-    frames ``localCheckpoint`` so lineage stays flat. Rounds =
-    ``min(eccentricity(source), max_rounds)`` — the loop exits early
-    on an empty frontier, read as ONE driver scalar per round (the
-    same bounded-convergence-probe budget as connected components).
-    At 100 TB the per-round cost tracks the frontier × average degree;
-    on small-diameter graphs (social/co-purchase) the whole walk is a
-    handful of rounds. The depth cap bounds adversarial chains."""
-    sess = edges.sparkSession
-    visited = (local_frame(sess, [(int(source), 0)], "node long, depth int")
-               .localCheckpoint(eager=True))
-    frontier = visited.select("node")
+    The Pregel-style frontier loop, DataFrame-native, over ONE frame
+    ``(node, depth)`` of the nodes seen so far. Round ``r``'s frontier
+    is the rows at ``depth = r-1``: they equi-join the edge list
+    (src-keyed shuffle — frontier-sized, not graph-sized), and the
+    reached nodes not yet seen (node-keyed anti-join) join the frame at
+    depth ``r``. The loop runs through :func:`until_stable` with the
+    frame's row count as the probe, so it stops one round after the
+    frontier empties. The depth cap ``max_rounds`` is the contract: a
+    walk cut by it returns the nodes within ``max_rounds`` hops, with
+    no warning. At 100 TB the per-round cost tracks the frontier ×
+    average degree; on small-diameter graphs (social/co-purchase) the
+    whole walk is a handful of rounds."""
     e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
-    for r in range(1, max_rounds + 1):
-        nxt = (frontier.join(e, frontier.node == e._s)
-               .select(F.col("_d").alias("node")).distinct()
-               .join(visited, "node", "left_anti")
-               .select("node", F.lit(r).cast("int").alias("depth"))
-               .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:  # scalar convergence probe
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
-    return visited.orderBy("node")
+
+    def step(seen: DataFrame, r: int) -> DataFrame:
+        reached = (seen.filter(F.col("depth") == r - 1)
+                   .join(e, F.col("node") == F.col("_s"))
+                   .select(F.col("_d").alias("node")).distinct()
+                   .join(seen, "node", "left_anti")
+                   .select("node", F.lit(r).alias("depth")))
+        return seen.unionByName(reached)
+
+    start = local_frame(edges.sparkSession, [(int(source), 0)],
+                        "node long, depth int")
+    seen, _ = until_stable(start, step, lambda s: s.count(), max_rounds)
+    return seen.orderBy("node")
 
 
 def cooccurrence_topk(rel: DataFrame, k: int = 20) -> DataFrame:
@@ -506,8 +539,9 @@ def lpa_communities(edges: DataFrame, rounds: int = 3) -> DataFrame:
     visibility — the asynchronous variant is order-dependent and can't
     be oracled); integer weights summed in BIGINT; argmax by
     ``(Σw DESC, label ASC)``. A FIXED round count rather than a
-    convergence probe: sync LPA can 2-cycle on bipartite structure, so
-    "run r rounds" is the well-defined semantics (r=3 reaches the
+    convergence probe: sync LPA can 2-cycle on bipartite structure (one
+    weighted edge 1–2 swaps its two labels every round), so "run r
+    rounds" is the well-defined semantics (r=3 reaches the
     obvious partition on shallow community graphs; scale it with graph
     diameter, not size).
 
@@ -518,25 +552,20 @@ def lpa_communities(edges: DataFrame, rounds: int = 3) -> DataFrame:
     skew absorbed map-side exactly like PageRank's contribution sum.
     Nothing driver-sided; the label table never exceeds |V| rows.
 
-    Materialization discipline: the returned plan is LAZY — the
-    rounds' shuffles run at collection time under the session's
-    then-current confs, so a conf set around the call does not reach
-    them. Measured at sf0.1, the lazy AQE-fused plan at session
-    defaults beats any eager-barrier variant ~2x: eager
+    Materialization discipline: the returned plan is LAZY, a plain
+    ``for`` loop with no barrier — the rounds' shuffles run at
+    collection time under the session's then-current confs, so a conf
+    set around the call does not reach them. Each round reads the label
+    table once, so the plan grows linearly with ``rounds`` (registry
+    callers use at most 6). Measured at sf0.1, the lazy AQE-fused plan
+    at session defaults beats any eager-barrier variant ~2x: eager
     ``localCheckpoint`` pays row materialization + read-back that a
-    fused 6-shuffle count never does. For larger round counts an
-    intermediate checkpoint every 4 rounds bounds lineage depth while
-    keeping the common shallow case barrier-free. Measured plan effect:
-    at rounds=6 the checkpoint after round 3 truncates the final plan
-    to 7 exchanges over a materialized label RDD, vs 12 exchanges of un-truncated lineage at rounds=4 — the
-    post-checkpoint plan depth is per-residual-round, not per-total-
-    round (python-simulation parity at rounds=6 pinned in
-    ``tests/test_graph.py::test_lpa_matches_python_simulation``)."""
+    fused 6-shuffle count never does."""
     edges = (edges.select("src", "dst", F.col("w").cast("long").alias("w"))
              .localCheckpoint(eager=True))
     labels = (edges.select(F.col("dst").alias("node")).distinct()
               .select("node", F.col("node").alias("label")))
-    for r in range(rounds):
+    for _ in range(rounds):
         votes = (
             edges.join(labels, edges["src"] == labels["node"])
             .groupBy(F.col("dst").alias("n"), "label")
@@ -548,6 +577,4 @@ def lpa_communities(edges: DataFrame, rounds: int = 3) -> DataFrame:
             .agg(F.max(F.struct(F.col("ws"), (-F.col("label")).alias("_nl")))
                  .alias("_m"))
             .select("node", (-F.col("_m._nl")).alias("label")))
-        if r % 4 == 3 and r != rounds - 1:
-            labels = labels.localCheckpoint(eager=True)
     return labels.select("node", F.col("label").alias("community"))

@@ -12,7 +12,7 @@ Architecture (mirrors the BPE module's corpus/dictionary split):
    vocabulary-sized word table, exactly like production SentencePiece
    (which trains on a word-count table, not raw text).
 2. **Candidate lattice** (:func:`substring_edges`): every substring of
-   length ≤ ``max_piece_len`` of every dictionary word, as edges
+   length ≤ ``MAX_PIECE_LEN`` of every dictionary word, as edges
    ``(word, i, j, piece)`` of the per-word segmentation lattice.
    Built ONCE; EM iterations only re-join it against the shrinking
    vocab (broadcast — the vocab is bounded by ``seed/vocab`` sizes).
@@ -40,7 +40,7 @@ required-character set), so every word always has a finite-cost
 segmentation and the DP's ``array_min`` never sees an empty list.
 
 Scale: the corpus appears once (word_freqs); the lattice is
-``O(|vocab_words| · max_word_len · max_piece_len)`` rows; each EM
+``O(|vocab_words| · MAX_WORD_LEN · MAX_PIECE_LEN)`` rows; each EM
 iteration is one broadcast join + one projection (the DP) + one
 word-table-sized explode/aggregate. At 100 TB only stage 1 grows.
 """
@@ -83,14 +83,14 @@ _BWD = """aggregate(
       e -> element_at(acc, len - e.j + 1) + e.cost))))"""
 
 
-def substring_edges(wf: DataFrame, max_piece_len: int = MAX_PIECE_LEN,
-                    max_word_len: int = MAX_WORD_LEN) -> DataFrame:
+def substring_edges(wf: DataFrame) -> DataFrame:
     """Lattice edge table ``(word, freq, len, i, j, piece)``: every
-    substring of length 1..``max_piece_len`` of every dictionary word
-    (words longer than ``max_word_len`` are excluded from trainer
-    statistics — SentencePiece's max-sentencepiece-length analogue).
+    substring of length 1..:data:`MAX_PIECE_LEN` of every dictionary
+    word (words longer than :data:`MAX_WORD_LEN` are excluded from
+    trainer statistics — SentencePiece's max-sentencepiece-length
+    analogue).
     Two bounded explodes over the vocabulary-sized word table."""
-    w = (wf.filter(F.length("word") <= max_word_len)
+    w = (wf.filter(F.length("word") <= MAX_WORD_LEN)
          .select("word", "freq", F.length("word").alias("len")))
     i = w.select(
         "word", "freq", "len",
@@ -99,7 +99,7 @@ def substring_edges(wf: DataFrame, max_piece_len: int = MAX_PIECE_LEN,
         "word", "freq", "len", "i",
         F.explode(F.sequence(
             F.lit(1),
-            F.least(F.lit(int(max_piece_len)), F.col("len") - F.col("i"))))
+            F.least(F.lit(MAX_PIECE_LEN), F.col("len") - F.col("i"))))
         .alias("_l"))
         .select("word", "freq", "len", "i",
                 (F.col("i") + F.col("_l")).alias("j"),
@@ -137,8 +137,6 @@ def _select_vocab(counts: DataFrame, chars: DataFrame,
 
 
 def unigram_train_df(docs: DataFrame, text_col: str = "text",
-                     max_piece_len: int = MAX_PIECE_LEN,
-                     max_word_len: int = MAX_WORD_LEN,
                      seed_multi: int = SEED_MULTI,
                      vocab_multi: int = VOCAB_MULTI,
                      em_iters: int = EM_ITERS) -> DataFrame:
@@ -147,9 +145,7 @@ def unigram_train_df(docs: DataFrame, text_col: str = "text",
     — see the module docstring for the algorithm and determinism
     contract."""
     wf = word_freqs(docs, text_col=text_col)
-    edges = substring_edges(
-        wf, max_piece_len=max_piece_len,
-        max_word_len=max_word_len).localCheckpoint(eager=True)
+    edges = substring_edges(wf).localCheckpoint(eager=True)
     chars = (edges.filter(F.length("piece") == 1)
              .select("piece").distinct().localCheckpoint(eager=True))
 
@@ -196,7 +192,7 @@ def unigram_train_df(docs: DataFrame, text_col: str = "text",
 #: empty ``array_min``) rather than a NULL element — a NULL struct in
 #: the accumulator would sort below every real cost AND trips a
 #: codegen NPE on field access — and the sentinel propagates
-#: monotonically (INF + cost ≥ INF, no overflow: ≤ max_word_len
+#: monotonically (INF + cost ≥ INF, no overflow: ≤ MAX_WORD_LEN
 #: additions of 1e15 ≪ 2^63), so an unsegmentable word ends ≥ INF
 #: and is reported as NULL by the caller, never as a wrong number.
 _UNREACHABLE = 10 ** 15
@@ -214,9 +210,7 @@ _FWD_COUNT = f"""aggregate(
 
 
 def unigram_token_counts(docs: DataFrame, vocab: DataFrame,
-                         text_col: str = "text",
-                         max_piece_len: int = MAX_PIECE_LEN,
-                         max_word_len: int = MAX_WORD_LEN) -> DataFrame:
+                         text_col: str = "text") -> DataFrame:
     """APPLY a trained unigram vocab (:func:`unigram_train_df` output:
     ``(piece, exp_count, cost_micro)``) to a corpus → per-word token
     budgets ``(word, freq, n_pieces, cost_micro)`` ordered by word —
@@ -233,7 +227,7 @@ def unigram_token_counts(docs: DataFrame, vocab: DataFrame,
 
     NULL contract: ``n_pieces``/``cost_micro`` are NULL
     exactly when the word is NOT segmentable under this vocab — it is
-    longer than ``max_word_len`` (excluded from training statistics),
+    longer than ``MAX_WORD_LEN`` (excluded from training statistics),
     or the vocab does not char-cover it (possible when applying a
     vocab trained on a DIFFERENT corpus; a vocab from
     :func:`unigram_train_df` over the same corpus always covers — all
@@ -242,8 +236,7 @@ def unigram_token_counts(docs: DataFrame, vocab: DataFrame,
     as NULL rows, and partially-covered words get a NULL (not a
     wrong) DP result via the NULL-safe :data:`_FWD_COUNT` filter."""
     wf = word_freqs(docs, text_col=text_col)
-    edges = substring_edges(wf, max_piece_len=max_piece_len,
-                            max_word_len=max_word_len)
+    edges = substring_edges(wf)
     lat = (edges.join(F.broadcast(vocab.select("piece", "cost_micro")),
                       "piece")
            .groupBy("word", "freq", "len")
