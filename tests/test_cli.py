@@ -135,6 +135,22 @@ def test_compat_commands_release_their_storage(spark, capsys):
     assert "True Positives" in capsys.readouterr().out
 
 
+@pytest.mark.parametrize("cmd", ["nb-mllib", "svm-mllib"])
+def test_mllib_commands_reject_an_empty_corpus(spark, tmp_path, capsys, cmd):
+    """An empty input CSV fails with one line naming the empty corpus
+    and a non-zero exit, not a JVM stack trace from inside IDF.fit, and
+    releases the frames the pipeline cached."""
+    empty = tmp_path / "empty.csv"
+    empty.write_text("")
+    before = _stored_rdds(spark)
+    assert main([cmd, "--input", str(empty)], spark=spark) == 1
+    out = capsys.readouterr()
+    assert out.err.splitlines() == [
+        f"{cmd}: mllib_pipeline: empty corpus, no documents to fit"]
+    assert "Accuracy" not in out.out
+    assert _stored_rdds(spark) <= before
+
+
 @pytest.mark.parametrize("cmd", ["nb-compat", "svm-strict"])
 def test_compat_rows_sharing_an_id_are_scored_apart(spark, tmp_path, capsys, cmd):
     """A positive and a negative tweet that share a tweet id are two

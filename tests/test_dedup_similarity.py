@@ -937,9 +937,12 @@ def test_winnow_matches_python_reference(spark):
 def test_kmeans_quality_partitions_and_bounds(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from text_sentiment_classification_hadoop_spark_spark.operators.similarity import kmeans_quality
+    from text_sentiment_classification_hadoop_spark_spark.operators.similarity import (
+        kmeans_fit,
+        kmeans_quality,
+    )
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = kmeans_quality(emb, k=4, iters=1)
+    q = kmeans_quality(emb, kmeans_fit(emb, k=4, iters=1))
     rows = q.collect()
     total = emb.count()
     assert sum(r["n_members"] for r in rows) == total  # exact partition
@@ -1311,3 +1314,50 @@ def test_containment_pairs_df_guard_drops_boilerplate(spark):
     got = D.containment_pairs(docs, max_df=3, min_shared=1,
                               threshold_micro=100_000).collect()
     assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2), (1, 3), (2, 3)}
+
+
+def test_part_entity_resolution_merges_near_names(spark, tmp_path):
+    """The entity-resolution query on a hand-built ``part`` table whose
+    match graph is not empty: forms within ``max_dist`` merge, through a
+    chain as well (``steel boltsss`` is 3 edits from ``steel bolt`` but
+    2 from ``steel bolts``), while a far form in the same block, and the
+    same name under another brand, stay apart. The builder equals its
+    oracle under DuckDB."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    parts = [(10, "steel bolts", "Brand#1"), (11, "steel bolt", "Brand#1"),
+             (12, "steel washer", "Brand#1"), (13, "steel bolt", "Brand#2"),
+             (14, "steel bolt", "Brand#1"), (15, "steel boltsss", "Brand#1")]
+    keys, names, brands = zip(*parts)
+    path = tmp_path / "part.parquet"
+    pq.write_table(pa.table({"p_partkey": pa.array(keys, pa.int64()),
+                             "p_name": list(names), "p_brand": list(brands)}),
+                   path)
+
+    got = [tuple(r) for r in
+           E.queries()["part_entity_resolution"](spark, str(tmp_path)).collect()]
+    assert got == [(10, 10, "steel bolts"), (11, 10, "steel bolts"),
+                   (12, 12, "steel washer"), (13, 13, "steel bolt"),
+                   (14, 10, "steel bolts"), (15, 10, "steel bolts")]
+
+    # DuckDB in a subprocess: the suite's long-lived JVM can exhaust the
+    # process fd limit, which DuckDB reports as "Too many open files"
+    script = (
+        "import json, sys, duckdb\n"
+        f"sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})\n"
+        "import __spark_entry__ as entry\n"
+        "con = duckdb.connect()\n"
+        f"con.execute(\"CREATE VIEW part AS SELECT * FROM '{path}'\")\n"
+        "print(json.dumps(con.execute("
+        "entry.oracle_sql()['part_entity_resolution']).fetchall()))\n")
+    out = subprocess.run([sys.executable, "-c", script],
+                         capture_output=True, text=True, check=True)
+    assert [tuple(r) for r in json.loads(out.stdout)] == got

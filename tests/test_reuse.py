@@ -2,6 +2,7 @@
 per session, keys that follow the input files, and release of the
 blocks an entry owns."""
 
+import itertools
 import json
 import os
 import shutil
@@ -73,6 +74,90 @@ def test_rewritten_table_is_not_answered_from_the_old_one(spark, sf_dir, tmp_pat
     after = E.queries()["nb_stats"](spark, str(tmp_path)).collect()[0]
     assert after["tweets_size"] == fresh.filter("doc_id % 8 NOT IN (0, 5)").count()
     assert after["tweets_size"] < before["tweets_size"]
+
+
+# Registry queries that share one model fit per session, by reuse kind.
+MODEL_QUERIES = {
+    "mllib_confusion": ["mllib_nb_confusion", "mllib_svm_confusion"],
+    "kmeans_codebook": ["kmeans_cells", "kmeans_quality", "cluster_keywords"],
+}
+# Jobs a build starts besides the fit, so also on a warm call: Spark
+# reads a parquet table's footer in a job (kmeans_quality reads the
+# embeddings; cluster_keywords reads embeddings and documents), and
+# ctfidf_keywords' widen() runs the docs-cells broadcast to learn its
+# partition count.
+WARM_BUILD_JOBS = {"mllib_nb_confusion": 0, "mllib_svm_confusion": 0,
+                   "kmeans_cells": 0, "kmeans_quality": 1,
+                   "cluster_keywords": 3}
+_GROUPS = itertools.count(1)
+
+
+@pytest.fixture()
+def tables_copy(tmp_path, sf_dir):
+    """Private copies of the documents and embeddings tables."""
+    for name in ("documents", "embeddings"):
+        shutil.copy(table_path(name, sf_dir), table_path(name, str(tmp_path)))
+    return str(tmp_path)
+
+
+def _build(spark, name, sf):
+    """The registry builder's frame and the Spark jobs the build
+    started, counted by job group."""
+    sc = spark.sparkContext
+    group = f"test-reuse-{next(_GROUPS)}"
+    sc.setJobGroup(group, name)
+    try:
+        df = E.queries()[name](spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _no_fit(*_args, **_kwargs):
+    raise AssertionError("refit")
+
+
+@pytest.mark.parametrize("kind", sorted(MODEL_QUERIES))
+def test_model_queries_fit_once_per_session(spark, tables_copy, kind, monkeypatch):
+    """Called twice, each query fits at most on its first call: the
+    second call's build runs no fit and starts no job beyond the
+    build's table reads, and it returns the same rows. The kind counts
+    one miss per fit, then hits."""
+    from text_sentiment_classification_hadoop_spark_spark.operators import similarity, svm
+    before = reuse_context(spark).counts()
+    deltas = []
+    for name in MODEL_QUERIES[kind]:
+        first = _build(spark, name, tables_copy)[0].collect()
+        deltas.append(_delta(spark, before, kind))
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "kmeans_fit", _no_fit)
+            m.setattr(svm, "mllib_pipeline", _no_fit)
+            df, warm_jobs = _build(spark, name, tables_copy)
+        assert warm_jobs == WARM_BUILD_JOBS[name], name
+        assert df.collect() == first, name
+        deltas.append(_delta(spark, before, kind))
+    if kind == "mllib_confusion":   # one fit per algorithm
+        assert deltas == [(0, 1), (1, 1), (1, 2), (2, 2)]
+    else:                           # one fit for the three queries
+        assert deltas == [(0, 1)] + [(i, 1) for i in range(1, 6)]
+
+
+def test_rewritten_embeddings_refit_the_codebook(spark, sf_dir, tmp_path):
+    from text_sentiment_classification_hadoop_spark_spark.operators.similarity import kmeans_fit
+    path = table_path("embeddings", str(tmp_path))
+    shutil.copy(table_path("embeddings", sf_dir), path)
+    before = reuse_context(spark).counts()
+    first = E._kmeans_cells(spark, str(tmp_path)).collect()
+    assert E._kmeans_cells(spark, str(tmp_path)).collect() == first
+    assert _delta(spark, before, "kmeans_codebook") == (1, 1)
+
+    # without vector 0 the first-8 seed, and so the codebook, changes
+    (spark.read.parquet(table_path("embeddings", sf_dir)).filter("vec_id > 0")
+     .write.mode("overwrite").parquet(path))
+    after = E._kmeans_cells(spark, str(tmp_path)).collect()
+    assert _delta(spark, before, "kmeans_codebook") == (1, 2)
+    assert after != first
+    assert after == kmeans_fit(spark.read.parquet(path)).orderBy("cell_id", "d").collect()
 
 
 def _cached_rdd_ids(spark):

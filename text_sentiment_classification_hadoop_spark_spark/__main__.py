@@ -299,7 +299,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         from .operators.svm import mllib_pipeline
         algo = "nb" if args.command == "nb-mllib" else "svm"
         docs = _docs(spark, args.input, "nb", clean_chain_a)
-        preds, _model, cached_frames = mllib_pipeline(docs, algorithm=algo)
+        try:
+            preds, _model, cached_frames = mllib_pipeline(docs, algorithm=algo)
+        except ValueError as exc:
+            print(f"{args.command}: {exc}", file=sys.stderr)
+            _stop(spark, owns_spark)
+            return 1
         _print_metrics(preds, with_weighted=True)
         for cached in cached_frames:
             cached.unpersist()

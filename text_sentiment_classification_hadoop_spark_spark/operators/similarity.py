@@ -440,11 +440,23 @@ def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 2,
 def kmeans_books(fitted: DataFrame) -> DataFrame:
     """Reshape :func:`kmeans_fit`'s long-form ``(cell_id, d, centroid)``
     into the ``(cell_id, cell_vec)`` frame :func:`ivf_assign_cells` /
-    ``dedup.semdedup`` consume (dims restored in ``d`` order)."""
-    return (fitted.groupBy("cell_id")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "centroid"))),
-                lambda s: s["centroid"]).alias("cell_vec")))
+    ``dedup.semdedup`` consume (dims restored in ``d`` order). The
+    k×dims rows are reshaped on the driver: ``kmeans_fit`` returns a
+    local relation, so reading it runs no Spark job, and neither does
+    collecting the local frame this returns."""
+    return local_frame(fitted.sparkSession, _codebook(fitted),
+                       "cell_id long, cell_vec array<double>")
+
+
+def _codebook(fitted: DataFrame) -> list[tuple[int, list[float]]]:
+    """``[(cell_id, [centroid by d]), ...]`` in cell order, from the
+    long-form codebook."""
+    by_cell: dict[int, dict[int, float]] = {}
+    for r in fitted.collect():
+        by_cell.setdefault(int(r["cell_id"]), {})[int(r["d"])] = \
+            float(r["centroid"])
+    return [(c, [dv[d] for d in sorted(dv)])
+            for c, dv in sorted(by_cell.items())]
 
 
 def ivf_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
@@ -810,29 +822,23 @@ def sq8_dequantize(emb: DataFrame, bounds: list[tuple[float, float]],
     return emb.select(F.col(id_col), recon.alias(vec_col))
 
 
-def kmeans_quality(emb: DataFrame, k: int = 8, iters: int = 2,
-                   id_col: str = "vec_id",
+def kmeans_quality(emb: DataFrame, fitted: DataFrame,
                    vec_col: str = "embedding") -> DataFrame:
-    """Cluster-quality report for the trained k-means codebook →
+    """Cluster-quality report for a trained k-means codebook (the
+    long-form ``(cell_id, d, centroid)`` of :func:`kmeans_fit`) →
     ``(cell_id, n_members, sum_cos_micro)`` — membership count and the
     exact integer sum of 6-dp-rounded assigned cosines per cell (the
     cosine analogue of inertia; higher = tighter cell). The metric that
     closes the loop the ANN family's recall queries close for search:
     a codebook without a measured tightness number is a guess.
 
-    One corpus scan: the narrow literal-codebook argmax emits
+    The caller fits (or reuses) the codebook; this function only reads
+    its k×dims rows, which starts no job when the codebook is the local
+    relation :func:`kmeans_fit` returns. One corpus scan: the narrow literal-codebook argmax emits
     (cell, cos) per row, cosines quantize to BIGINT micro-units before
     the per-cell sum — order-independent across engines/partitionings,
     the repo's standard determinism discipline."""
-    cent_long = kmeans_fit(emb, k=k, iters=iters,
-                           id_col=id_col, vec_col=vec_col)
-    rows = cent_long.collect()
-    by_cell: dict[int, dict[int, float]] = {}
-    for r in rows:
-        by_cell.setdefault(int(r["cell_id"]), {})[int(r["d"])] = \
-            float(r["centroid"])
-    cents = [(c, [dv[d] for d in sorted(dv)])
-             for c, dv in sorted(by_cell.items())]
+    cents = _codebook(fitted)
     a = widen(emb).select(
         F.expr(X.nearest_cell_with_cos_txt(vec_col, cents)).alias("_a"))
     return (

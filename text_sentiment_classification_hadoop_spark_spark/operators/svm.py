@@ -226,13 +226,20 @@ def mllib_pipeline(docs: DataFrame, algorithm: str = "nb", text_col: str = "text
     transform), so ``featurized`` and ``rescaled`` are PERSISTED for
     the duration of the fit. The caller owns the release: the cached
     frames are returned EXPLICITLY as the third element — unpersist
-    each once the predictions have been consumed (the registry
-    wrappers aggregate the tiny confusion eagerly and release
-    immediately, so nothing stays pinned across a long session).
-    Callers that ignore the third element leak two MEMORY_AND_DISK
-    frames for the session — the explicit return makes that visible
-    at the call site instead of riding a private attribute that a
-    ``preds``-transforming caller would silently lose.
+    each once the predictions have been consumed. The registry
+    wrappers do it inside their reuse build: they checkpoint the
+    ≤ 4-row confusion eagerly, release both frames, and the session's
+    reuse context keeps only that checkpoint, so nothing corpus-sized
+    stays pinned across a long session. Callers that ignore the third
+    element leak two MEMORY_AND_DISK frames for the session — the
+    explicit return makes that visible at the call site instead of
+    riding a private attribute that a ``preds``-transforming caller
+    would silently lose.
+
+    An empty corpus raises ``ValueError`` before IDF is fit (IDF.fit
+    would fail inside the JVM). The check counts the persisted
+    ``featurized`` frame, which fills the cache IDF.fit reads next, so
+    it costs no extra pass over the input.
 
     Returns ``(predictions_df, model, cached_frames)``.
     """
@@ -246,6 +253,9 @@ def mllib_pipeline(docs: DataFrame, algorithm: str = "nb", text_col: str = "text
     words = tok.transform(base)
     tf = HashingTF(inputCol="words", outputCol="rawFeatures", numFeatures=num_features)
     featurized = tf.transform(words).persist(StorageLevel.MEMORY_AND_DISK)
+    if featurized.count() == 0:
+        featurized.unpersist()
+        raise ValueError("mllib_pipeline: empty corpus, no documents to fit")
     idf = IDF(inputCol="rawFeatures", outputCol="features").fit(featurized)
     rescaled = idf.transform(featurized).persist(StorageLevel.MEMORY_AND_DISK)
     train, test = rescaled.randomSplit([0.75, 0.25], seed=seed)

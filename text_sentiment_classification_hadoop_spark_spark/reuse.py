@@ -2,15 +2,22 @@
 
 Several registry queries start from the same intermediate: the cleaned,
 labeled corpus, the NB model, the default BPE merge list, the unigram
-vocab, the declared-SVM weights. Every query stays independently
-callable. The first call in a session builds the artifact, and later
-calls with the same inputs and parameters get the same object back.
-This is the in-memory reuse between jobs that the reference's report
-credits for Spark's gain over MapReduce (report §4.2 p.23), made
-explicit: one context per SparkContext instead of ad-hoc module globals.
+vocab, the declared-SVM weights, the MLlib confusions, the k-means
+codebook. Every query stays independently callable. The first call in
+a session builds the artifact, and later calls with the same inputs and
+parameters get the same object back. This is the in-memory reuse
+between jobs that the reference's report credits for Spark's gain over
+MapReduce (report §4.2 p.23), made explicit: one context per
+SparkContext instead of ad-hoc module globals.
 
 An entry's key is
-- its kind, one name per artifact (``"bpe_merges"``);
+- its kind, one name per artifact: ``"labeled_documents"``,
+  ``"nb_model"``, ``"nb_scored"``, ``"svm_scored"``, ``"bpe_merges"``,
+  ``"unigram_vocab"``, ``"svm_declared_weights"``,
+  ``"mllib_confusion"`` (the checkpointed confusion of one MLlib fit;
+  the fit's featurized frames are released inside the build),
+  ``"kmeans_codebook"`` (the k×dims local relation of one
+  ``kmeans_fit``), ``"minhash_signatures"``, ``"copurchase_rel"``;
 - the trainer's parameters (any hashable value);
 - a fingerprint of its input tables: ``(path, length, modification
   time)`` of every file under each input path, read from the Hadoop
