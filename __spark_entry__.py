@@ -2255,11 +2255,11 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BATCHED BPE training (``batch_k=4`` — the 100 TB job-count
-    lever): each round selects up to 4
+    """BATCHED BPE training (``batch_k=4``, the batched
+    approximation): each round selects up to 4
     symbol-disjoint pairs (over inputs AND merged outputs, so the
     round's rewrites commute) from one ranked pair count and applies
-    them in one rewrite — job count drops ~4-fold vs sequential BPE.
+    them in one rewrite — a quarter of sequential BPE's rounds.
     Oracle: ``_bpe_merges_batched_sql`` re-derives the greedy
     selection as a per-round recursive CTE."""
     from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
@@ -2281,7 +2281,7 @@ def _bpe_merges_headroom16(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (measured fills [8, 8, 15, 1] at sf0.01) while headroom 16
     fills from deeper candidates ([9, 9, 14]) — the selected merge
     LIST differs from headroom 4 at sf0.001, sf0.01 and sf0.1, so a
-    Spark-side regression in the window arithmetic cannot hash-match
+    regression in the window arithmetic cannot hash-match
     the oracle by accident. Oracle: ``_bpe_merges_batched_sql(32, 16,
     headroom=16)`` — the same recursive-CTE greedy selection with the
     candidate LIMIT parameterized identically."""

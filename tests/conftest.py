@@ -82,6 +82,25 @@ def loop_rounds(monkeypatch):
     return run
 
 
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(fn)`` calls ``fn()`` and returns ``(its result,
+    the number of Spark jobs it started)``, counted by a job group
+    unique to the call."""
+    import uuid
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

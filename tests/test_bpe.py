@@ -113,13 +113,16 @@ def test_bpe_doc_token_counts(spark):
     assert got2 == {0: got[0] - 1, 1: got[1] - 1}
 
 
-def _py_bpe_reference(word_freqs, n_merges, passes=3):
-    """Single-node reference of the exact distributed semantics:
-    pair counts weighted by word freq, argmax (freq desc, pair asc),
-    fixed-pass padded left-to-right replace."""
+def _py_bpe_reference(word_freqs, n_merges, batch_k=1, headroom=4,
+                      passes=3):
+    """Single-node reference of the exact semantics, recounting every
+    pair each round: pair counts weighted by word freq, ranking (freq
+    desc, pair asc), the top ``k`` (``k=1``) or ``headroom·k``
+    candidates, ``select_batch``, then each selected pair's fixed-pass
+    padded left-to-right replace over every word."""
     seqs = {w: " ".join(w) + " </w>" for w in word_freqs}
     merges = []
-    for _ in range(n_merges):
+    while len(merges) < n_merges:
         counts = {}
         for w, f in word_freqs.items():
             syms = seqs[w].split(" ")
@@ -127,39 +130,66 @@ def _py_bpe_reference(word_freqs, n_merges, passes=3):
                 counts[f"{a} {b}"] = counts.get(f"{a} {b}", 0) + f
         if not counts:
             break
-        pair = min(counts, key=lambda p: (-counts[p], p))
-        merges.append((pair, counts[pair]))
-        merged = pair.replace(" ", "")
-        for w in seqs:
-            s = f" {seqs[w]} "
-            for _ in range(passes):
-                s = s.replace(f" {pair} ", f" {merged} ")
-            seqs[w] = s.strip()
+        k = min(batch_k, n_merges - len(merges))
+        ranked = sorted(counts.items(), key=lambda pf: (-pf[1], pf[0]))
+        selected = BPE.select_batch(ranked[:k if k == 1 else headroom * k], k)
+        merges.extend(selected)
+        for pair, _ in selected:
+            merged = pair.replace(" ", "")
+            for w in seqs:
+                s = f" {seqs[w]} "
+                for _ in range(passes):
+                    s = s.replace(f" {pair} ", f" {merged} ")
+                seqs[w] = s.strip()
     return merges
 
 
 def test_bpe_matches_python_reference_random(spark):
-    import random
-
+    """Sequential and batched training, at narrow and wide candidate
+    windows, on words that include runs of 9+ repeats of one symbol
+    (where the fixed replace passes segment differently from greedy
+    left-to-right BPE)."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
+    run = st.builds(lambda c, n: c * n, st.sampled_from("ab"),
+                    st.integers(9, 14))
+
     @settings(deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
-    @given(st.lists(st.text(alphabet="ab", min_size=1, max_size=6),
+    @given(st.lists(st.one_of(st.text(alphabet="abc", min_size=1, max_size=6),
+                              run),
                     min_size=1, max_size=12),
-           st.integers(1, 4))
-    def check(words, n_merges):
+           st.integers(1, 8), st.sampled_from([1, 2, 4]),
+           st.sampled_from([1, 4, 16]))
+    def check(words, n_merges, batch_k, headroom):
         text = " ".join(words)
         wf = {}
         for w in words:
             wf[w] = wf.get(w, 0) + 1
-        want = _py_bpe_reference(wf, n_merges)
+        want = _py_bpe_reference(wf, n_merges, batch_k, headroom)
         got = BPE.bpe_train(
-            BPE.word_freqs(_docs(spark, [text])), n_merges=n_merges)
+            BPE.word_freqs(_docs(spark, [text])), n_merges=n_merges,
+            batch_k=batch_k, headroom=headroom)
         assert got == want
 
     check()
+
+
+def test_bpe_train_job_count_does_not_grow_with_merges(spark, jobs_started):
+    """The driver reads the dictionary once and learns every merge
+    itself: 16 merges start as many Spark jobs as one."""
+    docs = _docs(spark, ["the quick brown fox jumps over the lazy dog",
+                         "pack my box with five dozen liquor jugs"]).cache()
+    docs.count()
+    for batch_k in (1, 4):
+        def train(n_merges, batch_k=batch_k):
+            return jobs_started(lambda: BPE.bpe_train(
+                BPE.word_freqs(docs), n_merges, batch_k=batch_k))
+        (one, j1), (sixteen, j16) = train(1), train(16)
+        assert (len(one), len(sixteen)) == (1, 16)
+        assert j1 == j16, batch_k
+    docs.unpersist()
 
 
 def test_merge_table_save_load_roundtrip(spark, tmp_path):

@@ -2,7 +2,6 @@
 per session, keys that follow the input files, and release of the
 blocks an entry owns."""
 
-import itertools
 import json
 import os
 import shutil
@@ -83,13 +82,12 @@ MODEL_QUERIES = {
 }
 # Jobs a build starts besides the fit, so also on a warm call: Spark
 # reads a parquet table's footer in a job (kmeans_quality reads the
-# embeddings; cluster_keywords reads embeddings and documents), and
-# ctfidf_keywords' widen() runs the docs-cells broadcast to learn its
-# partition count.
+# embeddings; cluster_keywords reads embeddings and documents).
+# ctfidf_keywords' widen() reads the docs-cells join's partition count
+# off its plan, so building cluster_keywords runs no broadcast.
 WARM_BUILD_JOBS = {"mllib_nb_confusion": 0, "mllib_svm_confusion": 0,
                    "kmeans_cells": 0, "kmeans_quality": 1,
-                   "cluster_keywords": 3}
-_GROUPS = itertools.count(1)
+                   "cluster_keywords": 2}
 
 
 @pytest.fixture()
@@ -100,25 +98,13 @@ def tables_copy(tmp_path, sf_dir):
     return str(tmp_path)
 
 
-def _build(spark, name, sf):
-    """The registry builder's frame and the Spark jobs the build
-    started, counted by job group."""
-    sc = spark.sparkContext
-    group = f"test-reuse-{next(_GROUPS)}"
-    sc.setJobGroup(group, name)
-    try:
-        df = E.queries()[name](spark, sf)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _no_fit(*_args, **_kwargs):
     raise AssertionError("refit")
 
 
 @pytest.mark.parametrize("kind", sorted(MODEL_QUERIES))
-def test_model_queries_fit_once_per_session(spark, tables_copy, kind, monkeypatch):
+def test_model_queries_fit_once_per_session(spark, tables_copy, kind, monkeypatch,
+                                            jobs_started):
     """Called twice, each query fits at most on its first call: the
     second call's build runs no fit and starts no job beyond the
     build's table reads, and it returns the same rows. The kind counts
@@ -127,12 +113,14 @@ def test_model_queries_fit_once_per_session(spark, tables_copy, kind, monkeypatc
     before = reuse_context(spark).counts()
     deltas = []
     for name in MODEL_QUERIES[kind]:
-        first = _build(spark, name, tables_copy)[0].collect()
+        def build(name=name):
+            return E.queries()[name](spark, tables_copy)
+        first = build().collect()
         deltas.append(_delta(spark, before, kind))
         with monkeypatch.context() as m:
             m.setattr(similarity, "kmeans_fit", _no_fit)
             m.setattr(svm, "mllib_pipeline", _no_fit)
-            df, warm_jobs = _build(spark, name, tables_copy)
+            df, warm_jobs = jobs_started(build)
         assert warm_jobs == WARM_BUILD_JOBS[name], name
         assert df.collect() == first, name
         deltas.append(_delta(spark, before, kind))

@@ -1,6 +1,7 @@
 """Session-level behaviour of ``session.get_spark`` (the generated-class
 cache size and the dropped-conf warning on an already-live session) and
-of ``session.local_frame``'s Arrow and pickled paths."""
+of ``session.local_frame``'s Arrow and pickled paths, and
+``session.widen``'s partition read."""
 
 import datetime
 import decimal
@@ -96,3 +97,26 @@ def test_local_frame_zero_rows_keep_declared_schema(spark):
 def test_local_frame_rejects_a_bad_ddl(spark):
     with pytest.raises(ParseException):
         S.local_frame(spark, [(1,)], "a long,,")
+
+
+def test_widen_reads_a_broadcast_joins_partitions_without_running_it(
+        spark, tmp_path, jobs_started):
+    """Over a broadcast join whose streamed side is a one-file scan,
+    ``widen`` takes the scan's partition count from the plan: it starts
+    no job (the broadcast runs when the result is collected, not while
+    the query is built) and still spreads the join's output."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "scan.parquet")
+    spark.range(0, 64, 1, 1).selectExpr("id % 8 AS k", "id").write.parquet(path)
+    scan = spark.read.parquet(path)
+    small = spark.range(0, 8).selectExpr("id AS k", "id * 10 AS v")
+
+    def joined():
+        return scan.join(F.broadcast(small), "k")
+    target = max(2, spark.sparkContext.defaultParallelism)
+    wide, jobs = jobs_started(lambda: S.widen(joined(), min_parts=target))
+    assert jobs == 0
+    assert joined().rdd.getNumPartitions() == 1
+    assert wide.rdd.getNumPartitions() == target
+    assert sorted(wide.collect()) == sorted(joined().collect())

@@ -6,9 +6,15 @@ import math
 import re
 from collections import Counter
 
-from pyspark.sql import functions as F
+import pytest
 
+from text_sentiment_classification_hadoop_spark_spark.operators import bpe as BPE
 from text_sentiment_classification_hadoop_spark_spark.operators import unigram as U
+from text_sentiment_classification_hadoop_spark_spark.operators.bpe import word_freqs
+from text_sentiment_classification_hadoop_spark_spark.session import (
+    persisted_rdd_ids,
+    unpersist_rdds,
+)
 
 
 def _py_unigram(texts, max_piece_len, max_word_len, seed_multi,
@@ -116,9 +122,54 @@ def test_unigram_plan_has_no_python_udf(spark, sf_dir):
     """The DP is SQL higher-order functions — the whole E-step must
     stay JVM-side (no BatchEvalPython / PythonUDF in the plan)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    df = U.unigram_train_df(docs, em_iters=1)
+    vocab = U.unigram_train_df(docs, em_iters=0).select("piece", "cost_micro")
+    df = U._piece_counts(U.substring_edges(word_freqs(docs)), vocab)
     plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" in plan and "HashAggregate" in plan
     assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
+
+
+def test_unigram_em_iteration_is_one_collect(spark, jobs_started):
+    """An EM iteration starts the E-step's collect and nothing else:
+    the M-step runs on the driver, with no join, cross join or
+    checkpoint. The train holds no persisted RDD when it returns, so
+    the registry's ``unigram_vocab`` reuse entry owns none."""
+    docs = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)],
+                                 "doc_id long, text string").cache()
+    docs.count()
+    held = persisted_rdd_ids(spark)
+    _, one = jobs_started(lambda: U.unigram_train_df(docs, em_iters=1))
+    _, two = jobs_started(lambda: U.unigram_train_df(docs, em_iters=2))
+    assert persisted_rdd_ids(spark) == held
+
+    edges = U.substring_edges(word_freqs(docs)).localCheckpoint(eager=True)
+    vocab = U.unigram_train_df(docs, em_iters=0).select("piece", "cost_micro")
+    _, e_step = jobs_started(lambda: U._piece_counts(edges, vocab).collect())
+    assert 0 < two - one <= e_step
+    unpersist_rdds(spark, persisted_rdd_ids(spark) - held)
+    docs.unpersist()
+
+
+@pytest.mark.parametrize("texts, n_merges", [
+    ([], 0), (["123 456 !!", "?? 42"], 0),
+    (["abcdefghijklmnop qrstuvwxyzabcdefg"], 8)],
+    ids=["empty", "no_letters", "only_long_words"])
+def test_trainers_on_degenerate_corpora(spark, texts, n_merges):
+    """Neither trainer raises on a corpus with nothing to learn from.
+    The unigram trainer returns an empty three-column vocab: words
+    longer than MAX_WORD_LEN are outside its statistics. BPE has no
+    length limit, so it learns from long words and returns no merge
+    only when the dictionary is empty."""
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    assert all(len(w) > U.MAX_WORD_LEN for t in texts
+               for w in re.findall(r"[a-z]+", t))
+    vocab = U.unigram_train_df(docs)
+    assert vocab.columns == ["piece", "exp_count", "cost_micro"]
+    assert vocab.collect() == []
+    wf = word_freqs(docs)
+    for batch_k in (1, 4):
+        assert len(BPE.bpe_train(wf, n_merges=8, batch_k=batch_k)) == n_merges
 
 
 def test_unigram_token_counts_matches_python_viterbi(spark):

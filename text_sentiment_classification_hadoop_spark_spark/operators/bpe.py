@@ -13,14 +13,18 @@ Words with Subword Units" — the published BPE algorithm):
    the dictionary, never the corpus — exactly how production BPE
    trainers operate (they aggregate counts first, then learn merges on
    the count table).
-2. **Merge loop** (`bpe_train`): each iteration counts adjacent symbol
-   pairs weighted by word frequency (distributed groupBy over the
-   dictionary), picks the most frequent pair (deterministic tie-break:
-   frequency desc, pair asc), and rewrites the symbol sequences with
-   the pair merged. The driver reads ONE row per iteration (the winning
-   pair) — the same scalar-only driver/cluster split as the dedup CC
-   loop. Each iteration ``localCheckpoint``s the (vocabulary-sized)
-   dictionary to cut lineage, so plan depth stays O(1) per iteration.
+2. **Merge loop** (`bpe_train`): Spark computes each dictionary word's
+   symbol sequence (`symbol_seq`) and the driver reads
+   ``(freq, seq)`` once through Arrow; every merge is then learned on
+   the driver. Each round ranks the adjacent symbol pairs by their
+   word-frequency-weighted count (frequency desc, pair asc), picks the
+   most frequent pair (or a symbol-disjoint batch, `select_batch`) and
+   rewrites the sequences that hold it. Pair counts are incremental,
+   as in Sennrich et al.'s ``learn_bpe.py``: an index from each pair to
+   the words that contain it limits a round's recount to the words it
+   rewrote. The driver holds the whole dictionary (its measured size
+   is in `bpe_train`'s docstring); the training costs a fixed number
+   of Spark jobs whatever the number of merges.
 3. **Apply** (`bpe_segment_counts`): the learned merge list (driver-side,
    n_merges entries) is replayed as a chain of ``replace`` column
    expressions — pure narrow JVM string ops over the corpus, zero UDF,
@@ -28,16 +32,20 @@ Words with Subword Units" — the published BPE algorithm):
 
 Determinism / oracle parity: all arithmetic is BIGINT counts and all
 rewriting is plain left-to-right non-overlapping ``replace`` (identical
-semantics in Spark SQL and DuckDB). One ``replace`` pass can leave
-unmerged odd occurrences inside runs of repeats (" a a a a " merges to
-" aa a a " in one pass because the match consumes its boundary space);
-we apply ``REPLACE_PASSES`` fixed passes per merge on both engines, which
-fully merges runs of up to 2^REPLACE_PASSES repeats — beyond that both
-engines under-merge *identically*, so results stay bit-equal. Natural-
-language words essentially never repeat a symbol 8+ times.
+semantics in Spark SQL, DuckDB and Python's ``str.replace``, which the
+training loop uses). One ``replace`` pass can leave
+unmerged pairs inside runs of repeats (" a a a a " merges to
+" aa a a " in one pass because each match consumes its boundary space);
+we apply ``REPLACE_PASSES`` fixed passes per merge on every engine. A run
+of five or more repeats then segments differently from greedy
+left-to-right BPE (" a a a a a " becomes " aa a aa ", not " aa aa a "),
+identically on every engine, so results stay bit-equal.
 """
 
 from __future__ import annotations
+
+import heapq
+from collections import Counter, defaultdict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -79,22 +87,20 @@ def _merge_once(seq: Column, pair: str, merged: str) -> Column:
     return F.btrim(padded)
 
 
-def _pair_counts(dic: DataFrame) -> DataFrame:
-    """Adjacent-symbol pair counts over the dictionary:
-    ``(pair, f)`` where f = sum of word frequencies containing the pair
-    (counted once per occurrence). zip_with over two off-by-one slices —
-    zero UDF, one vocabulary-sized shuffle."""
-    syms = F.split(F.col("seq"), " ")
-    n = F.size(syms)
-    pairs = F.zip_with(
-        F.slice(syms, 1, n - 1),
-        F.slice(syms, 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    return (
-        dic.select(F.col("freq"), F.explode(pairs).alias("pair"))
-        .groupBy("pair").agg(F.sum("freq").alias("f"))
-    )
+def _merge_seq(seq: str, pair: str) -> str:
+    """:func:`_merge_once` on the driver: the same padded
+    REPLACE_PASSES ``str.replace`` passes, then the spaces stripped."""
+    padded, merged = f" {seq} ", pair.replace(" ", "")
+    for _ in range(REPLACE_PASSES):
+        padded = padded.replace(f" {pair} ", f" {merged} ")
+    return padded.strip(" ")
+
+
+def _pairs(seq: str) -> Counter:
+    """Occurrences of each adjacent symbol pair ``'a b'`` in one
+    space-separated symbol sequence."""
+    syms = seq.split(" ")
+    return Counter(f"{a} {b}" for a, b in zip(syms, syms[1:]))
 
 
 def select_batch(ranked: list[tuple[str, int]], k: int) -> list[tuple[str, int]]:
@@ -125,71 +131,100 @@ def bpe_train(words: DataFrame, n_merges: int = 8,
               headroom: int = 4) -> list[tuple[str, int]]:
     """Learn ``n_merges`` BPE merges from a ``(word, freq)`` dictionary.
 
-    Returns ``[(pair, pair_freq), ...]`` in merge order (driver-side —
-    merge lists are tokenizer-sized, 32-64k entries at production
-    scale). Each round: one distributed pair-count aggregation, one
-    bounded driver read, one narrow rewrite + localCheckpoint.
+    Returns ``[(pair, pair_freq), ...]`` in merge order. The driver
+    reads the dictionary's ``(freq, symbol_seq(word))`` rows once
+    through Arrow (Spark computes the symbols, so they match the apply
+    side exactly) and holds it, one entry per distinct word. Every
+    merge is then learned on the driver, so the Spark job count does
+    not grow with ``n_merges``. Measured with
+    ``tools/bpe_dictionary_probe.py`` (a synthesized Zipf dictionary,
+    ``local[2]`` on a 4-core VM): 10^6 distinct words of 2-12 letters
+    peak at ~0.8 GB of driver RSS and learn 64 merges in 51-69 s;
+    10^7 words was not measured.
 
-    ``batch_k`` is the 100 TB scale lever. With the
-    default ``batch_k=1`` every round selects exactly the single most
-    frequent pair — textbook sequential BPE, one job per merge: exact,
-    but a 30k-round driver loop at a production vocabulary. With
-    ``batch_k>1`` each round selects up to ``batch_k``
-    SYMBOL-DISJOINT pairs from one ranked pair count (greedy by
-    frequency desc / pair asc; a candidate is deferred to a later
-    round when any of its left symbol, right symbol, or merged OUTPUT
-    symbol collides with an already-selected pair's inputs or output)
-    and applies them all in one rewrite — the standard scalable
-    batched approximation (job count drops ~k-fold). Disjointness
-    over inputs AND outputs makes the within-round rewrites commute
-    (no selected rewrite can consume or produce a symbol another
-    selected rewrite touches, so each reported frequency is the true
-    pre-round count); the DIVERGENCE from sequential BPE
-    is that pairs ranked 2..k are chosen against counts that ignore
-    the round's earlier merges (e.g. after merging ``t h``, sequential
-    BPE would count ``th e`` — batched BPE never saw ``th`` this
-    round). ``batch_k=1`` never defers and reads one row, exactly the
-    sequential semantics (pytest-pinned bit-equal).
+    Each round ranks the pairs by count desc, pair asc, takes the top
+    ``k`` candidates (``k=1``) or ``headroom·k`` (``k>1``), lets
+    :func:`select_batch` pick from them, and rewrites each selected
+    pair in the sequences that hold it with REPLACE_PASSES
+    left-to-right passes (the module docstring's semantics). The loop
+    stops when no pair is left. Pair counts are kept incrementally
+    (Sennrich et al.'s ``learn_bpe.py``): an index from each pair to
+    the words that contain it limits a round's recount to the words it
+    rewrote. On the 10^6-word dictionary a full recount costs ~4.5 s
+    per merge and the index 0.5-0.8 s; on 10^5 words, 64 merges take
+    24.8 s with full recounts and 7-9 s with the index.
+
+    ``batch_k``: with the default ``batch_k=1`` every round merges
+    exactly the single most frequent pair — textbook sequential BPE.
+    With ``batch_k>1`` each round selects up to ``batch_k``
+    SYMBOL-DISJOINT pairs from one ranking (greedy by frequency desc /
+    pair asc; a candidate is deferred to a later round when any of its
+    left symbol, right symbol, or merged OUTPUT symbol collides with an
+    already-selected pair's inputs or output) and applies them all in
+    one rewrite — the standard batched approximation. Disjointness over
+    inputs AND outputs makes the within-round rewrites commute, so each
+    reported frequency is the true pre-round count; the DIVERGENCE from
+    sequential BPE is that pairs ranked 2..k are chosen against counts
+    that ignore the round's earlier merges (after merging ``t h``,
+    sequential BPE would count ``th e`` — batched BPE never saw ``th``
+    this round). ``batch_k=1`` is exactly the sequential semantics
+    (pytest-pinned bit-equal).
 
     ``round_sizes`` (optional, caller-owned list): appended with the
     number of merges selected each round — the batch-FILL trace, i.e.
     whether symbol-disjoint selection starves as the vocab saturates.
 
-    ``headroom``: the per-round driver read is ``headroom·k`` ranked
-    candidate rows (``k=1`` always reads exactly 1); greedy
-    symbol-disjoint selection then fills at most ``k`` from them. A
-    starved round (SCALE.md §22 measured fill 0.17 at 512/64 on the
-    real tweet corpus) can be candidate-LIMITED rather than
-    conflict-limited — more headroom trades driver-read rows for
-    fill. The default 4 is what every registry oracle pins; the knob
-    exists for the off-registry scale probe and
+    ``headroom``: the candidate window of a batched round is
+    ``headroom·k`` ranked pairs (``k=1`` always takes exactly 1);
+    greedy symbol-disjoint selection then fills at most ``k`` from
+    them. A starved round (SCALE.md §22 measured fill 0.17 at 512/64 on
+    the real tweet corpus) can be candidate-LIMITED rather than
+    conflict-limited — a wider window trades ranking depth for fill.
+    The default 4 is what every registry oracle pins; the window
     changes WHICH pairs are visible to selection, so promoting a
     non-default value into a registry query requires a new oracle.
+
+    ``batch_k`` and ``headroom`` define the batched variant that the
+    registry's ``bpe_merges_batched`` and ``bpe_merges_headroom16``
+    oracles pin; they no longer change how many Spark jobs a train
+    starts.
     """
     if batch_k < 1:
         raise ValueError(f"batch_k must be >= 1, got {batch_k}")
-    dic = words.select(
-        "word", "freq", symbol_seq(F.col("word")).alias("seq")
-    ).localCheckpoint(eager=True)
+    tbl = words.select(
+        "freq", symbol_seq(F.col("word")).alias("seq")).toArrow()
+    freqs = tbl.column("freq").to_pylist()
+    seqs = tbl.column("seq").to_pylist()
+    counts: Counter = Counter()
+    holders: defaultdict[str, set[int]] = defaultdict(set)
+    for w, seq in enumerate(seqs):
+        for pair, n in _pairs(seq).items():
+            counts[pair] += freqs[w] * n
+            holders[pair].add(w)
     merges: list[tuple[str, int]] = []
     while len(merges) < n_merges:
         k = min(batch_k, n_merges - len(merges))
-        # driver read bounded by the batch: k + deferral headroom rows
-        top = (_pair_counts(dic)
-               .orderBy(F.desc("f"), F.asc("pair"))
-               .limit(k if k == 1 else int(headroom) * k).collect())
+        top = heapq.nsmallest(k if k == 1 else int(headroom) * k,
+                              counts.items(), key=lambda pf: (-pf[1], pf[0]))
         if not top:
             break
-        selected = select_batch([(r["pair"], int(r["f"])) for r in top], k)
+        selected = select_batch(top, k)
         if round_sizes is not None:
             round_sizes.append(len(selected))
-        seq = F.col("seq")
-        for pair, f in selected:
-            merges.append((pair, f))
-            seq = _merge_once(seq, pair, pair.replace(" ", ""))
-        dic = dic.select(
-            "word", "freq", seq.alias("seq")
-        ).localCheckpoint(eager=True)
+        merges.extend(selected)
+        for w in set().union(*(holders[pair] for pair, _ in selected)):
+            old = _pairs(seqs[w])
+            for pair, _ in selected:
+                seqs[w] = _merge_seq(seqs[w], pair)
+            new = _pairs(seqs[w])
+            for pair in old.keys() | new.keys():
+                counts[pair] += freqs[w] * (new[pair] - old[pair])
+                if pair in new:
+                    holders[pair].add(w)
+                    continue
+                holders[pair].discard(w)
+                if not holders[pair]:
+                    del holders[pair], counts[pair]
     return merges
 
 

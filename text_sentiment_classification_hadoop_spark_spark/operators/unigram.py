@@ -24,14 +24,18 @@ Architecture (mirrors the BPE module's corpus/dictionary split):
    is COUNTED when one of its lattice edges lies on SOME minimum-cost
    segmentation (``f[i] + cost + b[j] == f[len]`` — the standard
    optimal-subpath membership test), weighted by word frequency.
-   The M-step re-ranks pieces by expected count, prunes multi-char
-   pieces to ``vocab_multi`` (count desc, piece asc — deterministic),
-   and re-quantizes costs.
+   The E-step's piece counts (at most one row per vocab piece) are
+   collected, and the M-step runs on the driver: it re-ranks pieces
+   by expected count, prunes multi-char pieces to ``vocab_multi``
+   (count desc, piece asc — deterministic), re-quantizes costs and
+   ships the vocab to the next E-step as a local frame.
 
 Determinism / oracle parity: piece costs are INTEGER MICRO-NATS, one
 value per vocab row per iteration (``floor(1e6·ln(total/cnt))`` — the
 c-TF-IDF idf_micro discipline: the only float op is a per-piece
-ln+floor, never per-occurrence), so every DP compare/add is exact
+ln+floor, never per-occurrence; the driver takes it with Python's
+``math.log``, which matched DuckDB's ``ln`` bit for bit on 200k random
+count ratios), so every DP compare/add is exact
 BIGINT and the learned vocab is bit-identical across engines and
 partitionings. Single-character pieces are NEVER pruned and carry +1
 Laplace smoothing (a char can sit on no optimal path yet must stay
@@ -40,16 +44,22 @@ required-character set), so every word always has a finite-cost
 segmentation and the DP's ``array_min`` never sees an empty list.
 
 Scale: the corpus appears once (word_freqs); the lattice is
-``O(|vocab_words| · MAX_WORD_LEN · MAX_PIECE_LEN)`` rows; each EM
-iteration is one broadcast join + one projection (the DP) + one
-word-table-sized explode/aggregate. At 100 TB only stage 1 grows.
+``O(|vocab_words| · MAX_WORD_LEN · MAX_PIECE_LEN)`` rows, checkpointed
+once because every iteration reads it; each EM iteration is one
+broadcast join + one projection (the DP) + one word-table-sized
+explode/aggregate, collected. The driver holds only the vocab
+(``seed_multi`` or ``vocab_multi`` pieces plus the chars). At 100 TB
+only stage 1 grows.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame, persisted_rdd_ids, unpersist_rdds
 from .bpe import word_freqs
 
 #: lattice / trainer defaults (shared with the registry oracle)
@@ -106,34 +116,44 @@ def substring_edges(wf: DataFrame) -> DataFrame:
                 F.expr("substr(word, i + 1, _l)").alias("piece")))
 
 
-def _cost_vocab(counted: DataFrame) -> DataFrame:
-    """``(piece, cnt_eff)`` -> ``(piece, exp_count, cost_micro)``:
-    normalize over the selected vocab and quantize to integer
-    micro-nats — ``floor(1e6 · ln(total/cnt))``, one float op per
-    vocab ROW (never per occurrence), identical in DuckDB."""
-    tot = counted.agg(F.sum("cnt_eff").alias("_tot"))
-    return (counted.crossJoin(F.broadcast(tot))
-            .select(
-                "piece", F.col("cnt_eff").cast("long").alias("exp_count"),
-                F.expr("CAST(floor(ln(CAST(_tot AS DOUBLE) "
-                       "/ CAST(cnt_eff AS DOUBLE)) * 1000000.0) AS BIGINT)")
-                .alias("cost_micro")))
+def _m_step(counts: dict[str, int], chars: list[str],
+            n_multi: int) -> dict[str, tuple[int, int]]:
+    """The M-step on the driver → ``{piece: (exp_count, cost_micro)}``.
+    ALL single chars are kept with Laplace +1 (never pruned, coverage
+    anchors; ``counts`` may lack zero-count chars), plus the top
+    ``n_multi`` multi-char pieces by (count desc, piece asc). Costs are
+    normalized over the kept vocab and quantized to integer micro-nats,
+    ``floor(1e6 · ln(total/cnt))`` — one float op per vocab piece,
+    never per occurrence, as the DuckDB oracle computes it."""
+    kept = {c: counts.get(c, 0) + 1 for c in chars}
+    kept.update(sorted(((p, c) for p, c in counts.items() if len(p) > 1),
+                       key=lambda pc: (-pc[1], pc[0]))[:int(n_multi)])
+    tot = float(sum(kept.values()))
+    return {p: (c, math.floor(math.log(tot / float(c)) * 1e6))
+            for p, c in kept.items()}
 
 
-def _select_vocab(counts: DataFrame, chars: DataFrame,
-                  n_multi: int) -> DataFrame:
-    """Prune to the retained vocab: ALL single chars (Laplace +1 —
-    never pruned, coverage anchors) plus the top ``n_multi``
-    multi-char pieces by (count desc, piece asc). ``counts`` may lack
-    zero-count chars; ``chars`` is the full char inventory."""
-    ch = (chars.join(counts, "piece", "left")
-          .select("piece",
-                  (F.coalesce(F.col("cnt"), F.lit(0)) + 1).alias("cnt_eff")))
-    multi = (counts.filter(F.length("piece") > 1)
-             .orderBy(F.col("cnt").desc(), F.col("piece"))
-             .limit(int(n_multi))
-             .select("piece", F.col("cnt").alias("cnt_eff")))
-    return ch.unionByName(multi)
+def _piece_counts(edges: DataFrame, vocab: DataFrame) -> DataFrame:
+    """The E-step → ``(piece, cnt)``: the hard-EM expected count of
+    every piece of ``vocab`` (``(piece, cost_micro)``) that lies on a
+    minimum-cost segmentation of some word, weighted by word freq."""
+    lat = (edges.join(F.broadcast(vocab), "piece")
+           .groupBy("word", "freq", "len")
+           .agg(F.collect_list(
+               F.struct(F.col("i"), F.col("j"),
+                        F.col("cost_micro").alias("cost"),
+                        F.col("piece"))).alias("ed")))
+    dp = lat.select(
+        "freq", "len", "ed",
+        F.expr(_FWD).alias("f"), F.expr(_BWD).alias("b"))
+    used = (dp.select(
+        "freq", "len", "f", "b", F.explode("ed").alias("e"))
+        .filter(F.expr(
+            "element_at(f, e.i + 1) + e.cost "
+            "+ element_at(b, len - e.j + 1) "
+            "= element_at(f, len + 1)")))
+    return (used.groupBy(F.col("e.piece").alias("piece"))
+            .agg(F.sum("freq").alias("cnt")))
 
 
 def unigram_train_df(docs: DataFrame, text_col: str = "text",
@@ -141,43 +161,41 @@ def unigram_train_df(docs: DataFrame, text_col: str = "text",
                      vocab_multi: int = VOCAB_MULTI,
                      em_iters: int = EM_ITERS) -> DataFrame:
     """Train the unigram LM vocab over ``docs`` → final
-    ``(piece, exp_count, cost_micro)`` ordered (exp_count desc, piece)
-    — see the module docstring for the algorithm and determinism
-    contract."""
-    wf = word_freqs(docs, text_col=text_col)
-    edges = substring_edges(wf).localCheckpoint(eager=True)
-    chars = (edges.filter(F.length("piece") == 1)
-             .select("piece").distinct().localCheckpoint(eager=True))
-
-    # seed: occurrence counts of every candidate substring (weighted by
-    # word freq, overlaps counted separately — the standard seed stats)
-    seed_counts = edges.groupBy("piece").agg(F.sum("freq").alias("cnt"))
-    vocab = _cost_vocab(_select_vocab(seed_counts, chars, seed_multi)) \
+    ``(piece, exp_count, cost_micro)`` local frame ordered (exp_count
+    desc, piece) — see the module docstring for the algorithm and
+    determinism contract. The lattice checkpoint is released before
+    returning, so the result holds no cached blocks."""
+    spark = docs.sparkSession
+    held = persisted_rdd_ids(spark)
+    edges = substring_edges(word_freqs(docs, text_col=text_col)) \
         .localCheckpoint(eager=True)
-
-    for _ in range(em_iters):
-        lat = (edges.join(F.broadcast(vocab.select("piece", "cost_micro")),
-                          "piece")
-               .groupBy("word", "freq", "len")
-               .agg(F.collect_list(
-                   F.struct(F.col("i"), F.col("j"),
-                            F.col("cost_micro").alias("cost"),
-                            F.col("piece"))).alias("ed")))
-        dp = lat.select(
-            "freq", "len", "ed",
-            F.expr(_FWD).alias("f"), F.expr(_BWD).alias("b"))
-        used = (dp.select(
-            "freq", "len", "f", "b", F.explode("ed").alias("e"))
-            .filter(F.expr(
-                "element_at(f, e.i + 1) + e.cost "
-                "+ element_at(b, len - e.j + 1) "
-                "= element_at(f, len + 1)")))
-        counts = (used.groupBy(F.col("e.piece").alias("piece"))
-                  .agg(F.sum("freq").alias("cnt")))
-        vocab = _cost_vocab(_select_vocab(counts, chars, vocab_multi)) \
-            .localCheckpoint(eager=True)
-
-    return vocab.orderBy(F.col("exp_count").desc(), F.col("piece"))
+    lattice = persisted_rdd_ids(spark) - held
+    try:
+        # seed: occurrence counts of every candidate substring (weighted
+        # by word freq, overlaps counted separately — the standard seed
+        # stats); one collect reads the chars and the top multi-char
+        # pieces
+        seed = edges.groupBy("piece").agg(F.sum("freq").alias("cnt"))
+        is_char = F.length("piece") == 1
+        seed_rows = seed.filter(is_char).unionByName(
+            seed.filter(~is_char).orderBy(F.col("cnt").desc(), F.col("piece"))
+            .limit(int(seed_multi))).collect()
+        chars = [r["piece"] for r in seed_rows if len(r["piece"]) == 1]
+        vocab = _m_step({r["piece"]: r["cnt"] for r in seed_rows},
+                        chars, seed_multi)
+        for _ in range(em_iters):
+            shipped = local_frame(
+                spark, [(p, cm) for p, (_, cm) in vocab.items()],
+                "piece string, cost_micro bigint")
+            counts = {r["piece"]: r["cnt"]
+                      for r in _piece_counts(edges, shipped).collect()}
+            vocab = _m_step(counts, chars, vocab_multi)
+    finally:
+        unpersist_rdds(spark, lattice)
+    return local_frame(
+        spark, sorted(((p, c, cm) for p, (c, cm) in vocab.items()),
+                      key=lambda r: (-r[1], r[0])),
+        "piece string, exp_count bigint, cost_micro bigint")
 
 
 #: apply-side DP: same forward recurrence as :data:`_FWD` but the

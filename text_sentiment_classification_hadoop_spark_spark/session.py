@@ -61,9 +61,27 @@ def widen(df, min_parts: int | None = None):
     ≥ defaultParallelism, so no shuffle is added.
     """
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if _num_partitions(df) < target:
         return df.repartition(target)
     return df
+
+
+def _num_partitions(df) -> int:
+    """``df``'s partition count. When its physical plan reaches a scan
+    through projections, filters and the streamed side of broadcast
+    joins, the count is the scan's, read without running anything;
+    ``df.rdd`` would run the frame's adaptive stages (a join's
+    broadcast) while the query is still being built. Where a shuffle
+    decides the count, ``df.rdd`` runs those stages to learn it."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    while plan.nodeName() in ("Project", "Filter", "BroadcastHashJoin"):
+        plan = (plan.streamedPlan() if plan.nodeName() == "BroadcastHashJoin"
+                else plan.child())
+    if plan.children().isEmpty():
+        return plan.execute().getNumPartitions()
+    return df.rdd.getNumPartitions()
 
 
 def persisted_rdd_ids(spark: SparkSession) -> set[int]:
